@@ -1563,10 +1563,7 @@ object Dedup {
     * text_kept) — the [[lineDedup]] contract at token granularity; docs
     * re-assemble from surviving tokens in order, absent when token-less.
     *
-    * Scale shape: gram identity rides as an xxhash64 combine of token
-    * hashes via the [[shingleHashes]] window-lead discipline (one narrow
-    * (doc, pos, 8-byte) exchange, no interpreted HOF over the corpus, no
-    * string re-concat); the keeper/count decision is a map-side
+    * Scale shape: the keeper/count decision is a map-side
     * combinable hash aggregate on the 8-byte gram hash joined back to
     * the occurrence stream ([[spanNonKeepers]] — no keeper
     * window, so a corpus-universal gram cannot serialize one task); only

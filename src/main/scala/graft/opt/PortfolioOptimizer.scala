@@ -13,9 +13,13 @@ import org.apache.spark.sql.types._
   * Replaces the reference's cvxpy + Ray stack
   * (/root/reference/pipelines/utils/portfolio.py,
   * utils/covariance_matrix.py, portfolio_weights_flow.py:17-60):
-  *  - QP max wᵀα − ½λ wᵀΣw s.t. Σw = 1, w ≥ 0 — projected gradient with
-  *    exact Euclidean simplex projection (deterministic, fixed iteration
-  *    budget, no external solver);
+  *  - QP max wᵀα − ½λ wᵀΣw s.t. Σw = 1, w ≥ 0 — FISTA with adaptive
+  *    restart and exact Euclidean simplex projection, stopped on a
+  *    measured fixed-point residual (deterministic, no external solver);
+  *  - Σ is never materialised: [[FactorSigma]] keeps B (n×k), F (k×k) and
+  *    d² and applies Σv = B(F(Bᵀv)) + d²∘v in O(nk + k²) per matvec
+  *    instead of O(n²) — about 45× fewer flops at the reference's
+  *    N ≈ 500, K = 5;
   *  - λ loop: start at 100, refit M = (X·σ)/(X·X) with X = 1/(2λ), predict
   *    λ = M/(2·target); ≤5 iterations, tolerance 0.005 — exactly the
   *    reference's schedule (portfolio.py:90-121);
@@ -26,91 +30,216 @@ import org.apache.spark.sql.types._
   */
 object PortfolioOptimizer {
 
-  /** Euclidean projection onto the probability simplex (Duchi et al. 2008,
-    * "Efficient Projections onto the l1-Ball" — public algorithm). */
-  private[graft] def projectSimplex(v: DenseVector[Double]): DenseVector[Double] = {
+  /** Σ = B·F·Bᵀ + diag(d²) in factored form: `b` is n×k row-major, `f`
+    * k×k row-major, `d2` the n idiosyncratic variances. Not thread-safe
+    * (two k-length scratch vectors); one instance per date's solve. */
+  private[graft] final class FactorSigma(
+      val n: Int, val k: Int,
+      b: Array[Double], f: Array[Double], d2: Array[Double]) {
+    require(b.length == n * k && f.length == k * k && d2.length == n,
+      s"factor shapes: b ${b.length} != $n×$k, f ${f.length} != $k×$k, d2 ${d2.length} != $n")
+    private val btv = new Array[Double](k)
+    private val fbtv = new Array[Double](k)
+
+    /** out = Σ·v, O(nk + k²). `out` must not alias `v`. */
+    def times(v: Array[Double], out: Array[Double]): Unit = {
+      java.util.Arrays.fill(btv, 0.0)
+      var i = 0
+      while (i < n) {
+        val vi = v(i)
+        val row = i * k
+        var a = 0
+        while (a < k) { btv(a) += b(row + a) * vi; a += 1 }
+        i += 1
+      }
+      var a = 0
+      while (a < k) {
+        var s = 0.0
+        var c = 0
+        while (c < k) { s += f(a * k + c) * btv(c); c += 1 }
+        fbtv(a) = s
+        a += 1
+      }
+      i = 0
+      while (i < n) {
+        val row = i * k
+        var s = 0.0
+        a = 0
+        while (a < k) { s += b(row + a) * fbtv(a); a += 1 }
+        out(i) = s + d2(i) * v(i)
+        i += 1
+      }
+    }
+
+    /** ‖Σ‖∞, the max row sum of |Σ_ij| over the exact dense entries,
+      * read column by column as Σe_j — O(n²k); [[QpKernel]] takes it
+      * once per date and every λ refit's step size shares it. A plain
+      * method on purpose: as a lazy val initializer the same O(n²k) loop
+      * ran ~70× slower (JDK 17 HotSpot). */
+    def normInf(): Double = {
+      val e = new Array[Double](n)
+      val col = new Array[Double](n)
+      val rowSums = new Array[Double](n)
+      var j = 0
+      while (j < n) {
+        e(j) = 1.0
+        times(e, col)
+        e(j) = 0.0
+        var i = 0
+        while (i < n) { rowSums(i) += math.abs(col(i)); i += 1 }
+        j += 1
+      }
+      rowSums.foldLeft(0.0)(math.max)
+    }
+  }
+
+  /** Euclidean projection of `v` onto the probability simplex into `out`
+    * (Duchi et al. 2008, "Efficient Projections onto the l1-Ball" —
+    * public algorithm). `sorted` is n-length scratch: an ascending
+    * primitive sort scanned in reverse gives the descending order. */
+  private[graft] def projectSimplex(
+      v: Array[Double], out: Array[Double], sorted: Array[Double]): Unit = {
     val n = v.length
-    val u = v.toArray.sorted(Ordering[Double].reverse)
+    System.arraycopy(v, 0, sorted, 0, n)
+    java.util.Arrays.sort(sorted)
     var cssv = 0.0
-    var rho = -1
     var theta = 0.0
     var i = 0
     while (i < n) {
-      cssv += u(i)
+      val u = sorted(n - 1 - i)
+      cssv += u
       val t = (cssv - 1.0) / (i + 1)
-      if (u(i) - t > 0) { rho = i; theta = t }
+      if (u - t > 0) theta = t
       i += 1
     }
-    DenseVector.tabulate(n)(j => math.max(v(j) - theta, 0.0))
+    i = 0
+    while (i < n) { out(i) = math.max(v(i) - theta, 0.0); i += 1 }
   }
 
   /** QP solve outcome: weights + an explicit convergence signal (the
     * projected-gradient fixed-point residual at the returned iterate). */
   private[graft] final case class QpResult(
-      w: DenseVector[Double], converged: Boolean, iterations: Int,
+      w: Array[Double], converged: Boolean, iterations: Int,
       residual: Double)
 
-  /** N2: long-only QP via FISTA (accelerated projected gradient with
-    * adaptive restart, O'Donoghue & Candès 2015 — public algorithm).
-    *
-    * Convergence is MEASURED, not assumed: w* is optimal iff it is a fixed
-    * point of the projected-gradient map, so we stop when
-    * ||P(w + s∇f(w)) − w||∞ ≤ tol and report the residual either way. The
-    * iteration budget escalates to `maxIter` but converged instances exit
-    * in tens of iterations — for ill-conditioned Σ or large calibrated λ
-    * the caller can see `converged=false` instead of silently consuming a
-    * far-from-optimal iterate (round-1 judge finding). */
-  private[graft] def solveQp(
-      alphas: DenseVector[Double],
-      sigma: DenseMatrix[Double],
-      lambda: Double,
-      maxIter: Int = 4000,
-      tol: Double = 1e-7): QpResult = {
-    val n = alphas.length
-    // Lipschitz bound for the gradient: λ·||Σ||_inf (row-sum norm).
-    var lmax = 1e-12
-    var r = 0
-    while (r < n) {
-      var s = 0.0
-      var c = 0
-      while (c < n) { s += math.abs(sigma(r, c)); c += 1 }
-      if (s > lmax) lmax = s
-      r += 1
+  /** One λ solve of the [[solveDynamic]] loop: its active risk, FISTA
+    * iteration count, fixed-point residual and convergence flag. */
+  private[graft] final case class LambdaStep(
+      lambda: Double, risk: Double, iterations: Int, residual: Double,
+      converged: Boolean)
+
+  /** [[solveDynamic]] outcome. `converged` is true only if EVERY inner QP
+    * solve hit its fixed-point tolerance, since each solve's risk feeds
+    * the λ refit (an unconverged intermediate solve contaminates the
+    * calibration even if the last one converges). */
+  private[graft] final case class Calibrated(
+      w: Array[Double], lambda: Double, risk: Double, converged: Boolean,
+      history: Seq[LambdaStep])
+
+  /** N2/N4 for one date: the long-only QP and the active risk over a
+    * [[FactorSigma]], with every work array allocated once and reused by
+    * all of the date's λ refits. Not thread-safe. */
+  private[graft] final class QpKernel(sigma: FactorSigma, alphas: Array[Double]) {
+    private val n = sigma.n
+    require(alphas.length == n, s"alphas ${alphas.length} != n $n")
+    // Lipschitz bound for the gradient is λ·‖Σ‖∞; floored so Σ = 0 stays finite
+    private val lmax = math.max(sigma.normInf(), 1e-12)
+    private var w = new Array[Double](n)
+    private var wPrev = new Array[Double](n)
+    private var wNext = new Array[Double](n)
+    private val y = new Array[Double](n)
+    private val sv = new Array[Double](n)
+    private val g = new Array[Double](n)
+    private val sorted = new Array[Double](n)
+
+    /** out = P(v + (α − λΣv)·step). */
+    private def pgStep(v: Array[Double], lambda: Double, step: Double,
+        out: Array[Double]): Unit = {
+      sigma.times(v, sv)
+      var i = 0
+      while (i < n) { g(i) = v(i) + (alphas(i) - sv(i) * lambda) * step; i += 1 }
+      projectSimplex(g, out, sorted)
     }
-    val step = 1.0 / (lambda * lmax + 1e-12)
-    def pgStep(v: DenseVector[Double]): DenseVector[Double] =
-      projectSimplex(v + (alphas - (sigma * v) * lambda) * step)
-    var w = DenseVector.fill(n)(1.0 / n)
-    var wPrev = w
-    var y = w
-    var t = 1.0
-    var it = 0
-    var residual = Double.PositiveInfinity
-    var converged = false
-    while (it < maxIter && !converged) {
-      val wNext = pgStep(y)
-      // adaptive restart: kill momentum when it points against the step
-      val momAgainst = ((wNext - w) dot (w - wPrev)) < 0.0
-      val tNext = if (momAgainst) 1.0 else (1.0 + math.sqrt(1.0 + 4.0 * t * t)) / 2.0
-      y = wNext + (wNext - w) * (if (momAgainst) 0.0 else (t - 1.0) / tNext)
-      wPrev = w
-      w = wNext
-      t = tNext
-      it += 1
-      // two triggers for the true fixed-point residual (one extra matvec):
-      // the iterate barely moved, OR a periodic heartbeat — without the
-      // heartbeat a slowly-creeping iterate never gets its residual
-      // measured and the loop always burns the whole budget
-      if (breeze.linalg.norm(w - wPrev) <= tol * 10.0 || it % 50 == 0) {
-        residual = breeze.linalg.max(breeze.numerics.abs(pgStep(w) - w))
-        if (residual <= tol) converged = true
+
+    /** ‖P(w + s∇f(w)) − w‖∞, computed into the free `wNext` buffer. */
+    private def fixedPointResidual(lambda: Double, step: Double): Double = {
+      pgStep(w, lambda, step, wNext)
+      var r = 0.0
+      var i = 0
+      while (i < n) { r = math.max(r, math.abs(wNext(i) - w(i))); i += 1 }
+      r
+    }
+
+    /** N2: long-only QP via FISTA (accelerated projected gradient with
+      * adaptive restart, O'Donoghue & Candès 2015 — public algorithm).
+      *
+      * Convergence is MEASURED, not assumed: w* is optimal iff it is a
+      * fixed point of the projected-gradient map, so we stop when
+      * ||P(w + s∇f(w)) − w||∞ ≤ tol and report the residual either way.
+      * For ill-conditioned Σ or large calibrated λ the caller sees
+      * `converged=false` instead of silently consuming a far-from-optimal
+      * iterate after `maxIter` steps. */
+    def solve(lambda: Double, maxIter: Int = 4000, tol: Double = 1e-7): QpResult = {
+      val step = 1.0 / (lambda * lmax + 1e-12)
+      java.util.Arrays.fill(w, 1.0 / n)
+      System.arraycopy(w, 0, wPrev, 0, n)
+      System.arraycopy(w, 0, y, 0, n)
+      var t = 1.0
+      var it = 0
+      var residual = Double.PositiveInfinity
+      var converged = false
+      while (it < maxIter && !converged) {
+        pgStep(y, lambda, step, wNext)
+        // adaptive restart: kill momentum when it points against the step
+        var mom = 0.0
+        var i = 0
+        while (i < n) { mom += (wNext(i) - w(i)) * (w(i) - wPrev(i)); i += 1 }
+        val momAgainst = mom < 0.0
+        val tNext = if (momAgainst) 1.0 else (1.0 + math.sqrt(1.0 + 4.0 * t * t)) / 2.0
+        val beta = if (momAgainst) 0.0 else (t - 1.0) / tNext
+        var moved = 0.0
+        i = 0
+        while (i < n) {
+          val d = wNext(i) - w(i)
+          y(i) = wNext(i) + d * beta
+          moved += d * d
+          i += 1
+        }
+        // rotate buffers: wPrev ← w, w ← wNext, the old wPrev is scratch
+        val free = wPrev
+        wPrev = w
+        w = wNext
+        wNext = free
+        t = tNext
+        it += 1
+        // two triggers for the true fixed-point residual (one extra matvec):
+        // the iterate barely moved, OR a periodic heartbeat — without the
+        // heartbeat a slowly-creeping iterate never gets its residual
+        // measured and the loop always burns the whole budget
+        if (math.sqrt(moved) <= tol * 10.0 || it % 50 == 0) {
+          residual = fixedPointResidual(lambda, step)
+          if (residual <= tol) converged = true
+        }
       }
+      if (!converged) residual = fixedPointResidual(lambda, step)
+      QpResult(w.clone(), converged || residual <= tol, it, residual)
     }
-    if (!converged) residual = breeze.linalg.max(breeze.numerics.abs(pgStep(w) - w))
-    QpResult(w, converged || residual <= tol, it, residual)
+
+    /** N4: annualized active risk √(wₐᵀ Σ wₐ)·√252 with wₐ = w − benchmark. */
+    def activeRisk(weights: Array[Double], benchmark: Array[Double]): Double = {
+      var i = 0
+      while (i < n) { g(i) = weights(i) - benchmark(i); i += 1 }
+      sigma.times(g, sv)
+      var q = 0.0
+      i = 0
+      while (i < n) { q += g(i) * sv(i); i += 1 }
+      math.sqrt(math.max(q, 0.0)) * math.sqrt(252.0)
+    }
   }
 
-  /** N1: Σ = B F Bᵀ + D². Inputs are aligned by sorted ticker / factor. */
+  /** N1 as a dense Breeze matrix Σ = B F Bᵀ + D². The QP never builds
+    * it (see [[FactorSigma]]); it is the reference the [[factorRiskMatrix]]
+    * and [[FactorSigma]] specs compare against. */
   private[graft] def covarianceMatrix(
       b: DenseMatrix[Double],
       f: DenseMatrix[Double],
@@ -119,10 +248,10 @@ object PortfolioOptimizer {
 
   /** N1 in DISTRIBUTED long form: Σ_ij = Σ_kl B_ik F_kl B_jl + 1[i=j]·dᵢ²
     * as two joins + aggregates over long frames — the scale path when the
-    * asset universe is too large for a dense in-core matrix. (The Breeze
-    * [[covarianceMatrix]] stays the per-date QP fan-out's task-local
-    * kernel, which is right for N ≈ 500; this form shards the N² output
-    * over the cluster and never materializes it on one host.)
+    * asset universe is too large for a dense in-core matrix. (The per-date
+    * QP fan-out keeps Σ factored in-task as [[FactorSigma]]; this form
+    * shards the N² output over the cluster and never materializes it on
+    * one host.)
     *
     * Plan shape, default (`saltBuckets = 0`): A = B·F via a broadcast join
     * on the K² covariance relation + one hash aggregate keyed
@@ -196,50 +325,42 @@ object PortfolioOptimizer {
       .select($"ticker_1", $"ticker_2", $"sigma")
   }
 
-  /** N4: annualized active risk √(wₐᵀ Σ wₐ)·√252. */
-  private[graft] def activeRisk(
-      active: DenseVector[Double], sigma: DenseMatrix[Double]): Double =
-    math.sqrt(math.max(active dot (sigma * active), 0.0)) * math.sqrt(252.0)
-
-  /** N3: the reference's λ calibration loop (portfolio.py:90-121).
-    * @return (weights, λ, risk, qpConverged) — qpConverged is true only if
-    *         EVERY inner QP solve hit its fixed-point tolerance, since each
-    *         solve's risk feeds the λ refit (an unconverged intermediate
-    *         solve contaminates the calibration even if the last one
-    *         converges). */
+  /** N3: the reference's λ calibration loop (portfolio.py:90-121), one
+    * [[QpKernel]] shared by every refit.
+    * @return the final weights, λ and risk, plus every solve's
+    *         (λ, risk, FISTA iterations, residual) in order. */
   private[graft] def solveDynamic(
-      alphas: DenseVector[Double],
-      sigma: DenseMatrix[Double],
-      benchmark: DenseVector[Double],
-      targetActiveRisk: Double = 0.05): (DenseVector[Double], Double, Double, Boolean) = {
+      alphas: Array[Double],
+      sigma: FactorSigma,
+      benchmark: Array[Double],
+      targetActiveRisk: Double = 0.05): Calibrated = {
     val error = 0.005
     val maxIterations = 5
+    val kernel = new QpKernel(sigma, alphas)
     var lambda = Double.NaN
     var risk = Double.PositiveInfinity
-    var w: DenseVector[Double] = null
+    var w: Array[Double] = null
     var iterations = 1
-    var allConverged = true
-    val hist = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
+    val hist = scala.collection.mutable.ArrayBuffer.empty[LambdaStep]
     var stop = false
     while (!stop && math.abs(risk - targetActiveRisk) > error) {
       lambda =
         if (lambda.isNaN) 100.0
         else {
           // fit σ ≈ M·X, X = 1/(2λ); λ_next = M / (2·target)
-          val xs = hist.map { case (l, _) => 1.0 / (2.0 * l) }
-          val ss = hist.map(_._2)
+          val xs = hist.map(h => 1.0 / (2.0 * h.lambda))
+          val ss = hist.map(_.risk)
           val m = xs.zip(ss).map { case (x, s) => x * s }.sum /
             xs.map(x => x * x).sum
           m / (2.0 * targetActiveRisk)
         }
-      val qp = solveQp(alphas, sigma, lambda)
+      val qp = kernel.solve(lambda)
       w = qp.w
-      allConverged &&= qp.converged
-      risk = activeRisk(w - benchmark, sigma)
-      hist += ((lambda, risk))
+      risk = kernel.activeRisk(w, benchmark)
+      hist += LambdaStep(lambda, risk, qp.iterations, qp.residual, qp.converged)
       if (iterations >= maxIterations) stop = true else iterations += 1
     }
-    (w, lambda, risk, allConverged)
+    Calibrated(w, lambda, risk, hist.forall(_.converged), hist.toSeq)
   }
 
   private val outSchema = StructType(Seq(
@@ -320,34 +441,33 @@ object PortfolioOptimizer {
         else {
           val tIdx = tickers.zipWithIndex.toMap
           val fIdx = factors.zipWithIndex.toMap
-          val bMat = DenseMatrix.zeros[Double](n, k)
+          val b = new Array[Double](n * k)
           loadRows.foreach { r =>
             (tIdx.get(r.getAs[String]("ticker")), fIdx.get(r.getAs[String]("factor"))) match {
               case (Some(ti), Some(fi)) =>
                 val v = r.getAs[Any]("loading")
-                if (v != null) bMat(ti, fi) = v.asInstanceOf[Double]
+                if (v != null) b(ti * k + fi) = v.asInstanceOf[Double]
               case _ =>
             }
           }
-          val fMat = DenseMatrix.zeros[Double](k, k)
+          val f = new Array[Double](k * k)
           covRows.foreach { r =>
             (fIdx.get(r.getAs[String]("factor_1")), fIdx.get(r.getAs[String]("factor_2"))) match {
               case (Some(i), Some(j)) =>
                 val v = r.getAs[Any]("covariance")
-                if (v != null) fMat(i, j) = v.asInstanceOf[Double]
+                if (v != null) f(i * k + j) = v.asInstanceOf[Double]
               case _ =>
             }
           }
-          val idio = DenseVector.tabulate(n)(i => idioMap.getOrElse(tickers(i), 0.0))
-          val alphaV = DenseVector.tabulate(n)(i => alphaMap.getOrElse(tickers(i), 0.0))
-          val benchV = DenseVector.tabulate(n)(i => benchMap.getOrElse(tickers(i), 0.0))
-          val sigma = covarianceMatrix(bMat, fMat, idio)
-          val (w, lambda, risk, conv) =
-            solveDynamic(alphaV, sigma, benchV, targetActiveRisk)
+          val d2 = tickers.map { t => val d = idioMap.getOrElse(t, 0.0); d * d }
+          val alphaV = tickers.map(alphaMap.getOrElse(_, 0.0))
+          val benchV = tickers.map(benchMap.getOrElse(_, 0.0))
+          val c = solveDynamic(alphaV, new FactorSigma(n, k, b, f, d2),
+            benchV, targetActiveRisk)
           val weightRows = tickers.iterator.zipWithIndex.map { case (t, i) =>
-            Row(date, t, w(i), null, null, null, false)
+            Row(date, t, c.w(i), null, null, null, false)
           }
-          weightRows ++ Iterator(Row(date, null, null, lambda, risk, conv, true))
+          weightRows ++ Iterator(Row(date, null, null, c.lambda, c.risk, c.converged, true))
         }
       }
     }(Encoders.row(outSchema))

@@ -1,16 +1,14 @@
 package graft.opt
 
-import breeze.linalg.{DenseMatrix, DenseVector}
-
 /** Staging/provenance tool for `x36_qp_iterative`'s oracle literals (no
   * Spark). The x34 gate runs the QP plumbing on a closed-form instance
   * where FISTA converges at iteration 1 and the λ loop exits at λ₀ — the
   * ITERATIVE dynamics (portfolio.py:90-121's 1/(2λ)-model refit, multi-step
   * FISTA) were spec-only. x36 gates them against precomputed literals: this
-  * main replays [[PortfolioOptimizer.solveDynamic]]'s exact loop on the
-  * staged instance, printing every (λ, σ) history step, per-solve FISTA
-  * iteration counts, and the final outputs at full precision + 6dp, with
-  * each rounded value's distance from its 6dp grid midpoint.
+  * main runs [[PortfolioOptimizer.solveDynamic]] on the staged instance and
+  * prints its (λ, σ) history, per-solve FISTA iteration counts, and the
+  * final outputs at full precision + 6dp, with each rounded value's
+  * distance from its 6dp grid midpoint.
   *
   * The solver is pure deterministic double arithmetic (no parallel
   * reductions), so the printed values are bitwise-reproducible inside the
@@ -20,94 +18,49 @@ import breeze.linalg.{DenseMatrix, DenseVector}
   */
 object StageQp {
 
-  /** `sweep` mode: replay the λ loop over a grid of alpha scales to find an
+  private def bench(): Array[Double] =
+    Array.fill(X36.tickers.length)(1.0 / X36.tickers.length)
+
+  private def inBand(c: PortfolioOptimizer.Calibrated): Boolean =
+    math.abs(c.risk - X36.target) <= 0.005
+
+  /** `sweep` mode: run the λ loop over a grid of alpha scales to find an
     * instance with ≥2 refits AND an in-band exit (the two dynamics x36 must
     * gate). The x²-weighted refit anchors λ near its first sample, so the
     * usable region is narrow — search it, don't hand-derive it. */
   private def sweep(): Unit = {
     for (s <- BigDecimal(0.002) to BigDecimal(0.012) by BigDecimal(0.0005);
          dir <- Seq(Seq(1.2, 0.2, -1.0), Seq(1.0, 0.4, -0.8), Seq(0.3, 1.1, -0.2))) {
-      val alphas = DenseVector(dir.map(_ * s.toDouble): _*)
-      val sigma = X36.sigmaMatrix()
-      val bench = DenseVector.fill(3)(1.0 / 3.0)
-      var lambda = Double.NaN
-      var risk = Double.PositiveInfinity
-      var iterations = 1
-      val hist = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-      var stop = false
-      while (!stop && math.abs(risk - X36.target) > 0.005) {
-        lambda =
-          if (lambda.isNaN) 100.0
-          else {
-            val xs = hist.map { case (l, _) => 1.0 / (2.0 * l) }
-            val ss = hist.map(_._2)
-            val m = xs.zip(ss).map { case (x, v) => x * v }.sum /
-              xs.map(x => x * x).sum
-            m / (2.0 * X36.target)
-          }
-        val qp = PortfolioOptimizer.solveQp(alphas, sigma, lambda)
-        risk = PortfolioOptimizer.activeRisk(qp.w - bench, sigma)
-        hist += ((lambda, risk))
-        if (iterations >= X36.maxIterations) stop = true else iterations += 1
-      }
-      val inBand = math.abs(risk - X36.target) <= 0.005
-      if (hist.size >= 3 && inBand)
-        println(f"HIT  s=$s dir=$dir refits=${hist.size - 1} " +
-          hist.map { case (l, r) => f"($l%.2f,$r%.4f)" }.mkString(" "))
-      else
-        println(f"miss s=$s dir=$dir refits=${hist.size - 1} inBand=$inBand " +
-          hist.map { case (l, r) => f"($l%.2f,$r%.4f)" }.mkString(" "))
+      val c = PortfolioOptimizer.solveDynamic(
+        dir.map(_ * s.toDouble).toArray, X36.sigma(), bench(), X36.target)
+      val steps = c.history.map(h => f"(${h.lambda}%.2f,${h.risk}%.4f)").mkString(" ")
+      val refits = c.history.size - 1
+      if (refits >= 2 && inBand(c)) println(f"HIT  s=$s dir=$dir refits=$refits $steps")
+      else println(f"miss s=$s dir=$dir refits=$refits inBand=${inBand(c)} $steps")
     }
   }
 
   def main(args: Array[String]): Unit = {
     if (args.contains("sweep")) { sweep(); return }
     for (d <- 0 until X36.nDates) {
-      val alphas = DenseVector(X36.alphas(d): _*)
-      val sigma = X36.sigmaMatrix()
-      val bench = DenseVector.fill(X36.tickers.length)(1.0 / X36.tickers.length)
-      println(s"=== date index $d  alphas=${alphas}")
-      // replay the solveDynamic schedule with visibility
-      val error = 0.005
-      var lambda = Double.NaN
-      var risk = Double.PositiveInfinity
-      var w: DenseVector[Double] = null
-      var iterations = 1
-      val hist = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-      var stop = false
-      while (!stop && math.abs(risk - X36.target) > error) {
-        lambda =
-          if (lambda.isNaN) 100.0
-          else {
-            val xs = hist.map { case (l, _) => 1.0 / (2.0 * l) }
-            val ss = hist.map(_._2)
-            val m = xs.zip(ss).map { case (x, s) => x * s }.sum /
-              xs.map(x => x * x).sum
-            m / (2.0 * X36.target)
-          }
-        val qp = PortfolioOptimizer.solveQp(alphas, sigma, lambda)
-        w = qp.w
-        risk = PortfolioOptimizer.activeRisk(w - bench, sigma)
-        hist += ((lambda, risk))
-        println(f"  solve $iterations%d: lambda=$lambda%.10f risk=$risk%.10f " +
-          f"fistaIters=${qp.iterations}%d converged=${qp.converged} residual=${qp.residual}%.2e")
-        if (iterations >= X36.maxIterations) stop = true else iterations += 1
+      println(s"=== date index $d  alphas=${X36.alphas(d).mkString("(", ", ", ")")}")
+      val c = PortfolioOptimizer.solveDynamic(
+        X36.alphas(d).toArray, X36.sigma(), bench(), X36.target)
+      c.history.zipWithIndex.foreach { case (h, i) =>
+        println(f"  solve ${i + 1}%d: lambda=${h.lambda}%.10f risk=${h.risk}%.10f " +
+          f"fistaIters=${h.iterations}%d converged=${h.converged} residual=${h.residual}%.2e")
       }
-      val (wD, lD, rD, convD) = PortfolioOptimizer.solveDynamic(
-        alphas, sigma, bench, X36.target)
-      require((wD - w).toArray.forall(_ == 0.0) && lD == lambda && rD == risk,
-        "replay diverged from solveDynamic — schedules out of sync")
-      println(s"  refits=${hist.size - 1} inBandExit=${math.abs(risk - X36.target) <= error} allConverged=$convD")
+      println(s"  refits=${c.history.size - 1} inBandExit=${inBand(c)} allConverged=${c.converged}")
       def grid(v: Double): String = {
         val r = BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP)
         val mid = ((v * 1e6 - math.floor(v * 1e6)) - 0.5).abs
         f"${r.toDouble}%.6f (midpoint dist ${mid * 1e-6}%.2e)"
       }
       X36.tickers.zipWithIndex.foreach { case (t, i) =>
-        println(f"  w[$t] = ${w(i)}%.17g -> ${grid(w(i))}")
+        println(f"  w[$t] = ${c.w(i)}%.17g -> ${grid(c.w(i))}")
       }
-      println(f"  lambda = $lambda%.17g -> ${grid(lambda)}")
-      println(f"  risk   = $risk%.17g -> ${grid(risk)}")
+      println(f"  lambda = ${c.lambda}%.17g -> ${grid(c.lambda)}")
+      println(f"  risk   = ${c.risk}%.17g -> ${grid(c.risk)}")
     }
   }
 }
@@ -120,7 +73,6 @@ private[graft] object X36 {
   val factors: Seq[String] = Seq("F0", "F1")
   val nDates = 2
   val target = 0.05
-  val maxIterations = 5
 
   /** per-date alpha vectors, ticker order R0,R1,R2 */
   /** Chosen by `StageQp sweep`: date 0 exits the λ loop in band at solve 3
@@ -146,9 +98,8 @@ private[graft] object X36 {
   /** idio vols per ticker */
   val idio: Seq[Double] = Seq(0.012, 0.012, 0.012)
 
-  def sigmaMatrix(): DenseMatrix[Double] = {
-    val b = DenseMatrix.tabulate(3, 2)((i, j) => loadings(i)(j))
-    val f = DenseMatrix.tabulate(2, 2)((i, j) => fcov(i)(j))
-    PortfolioOptimizer.covarianceMatrix(b, f, DenseVector(idio: _*))
-  }
+  /** Σ = B F Bᵀ + D² for the staged instance, in the QP's factored form. */
+  def sigma(): PortfolioOptimizer.FactorSigma =
+    new PortfolioOptimizer.FactorSigma(tickers.length, factors.length,
+      loadings.flatten.toArray, fcov.flatten.toArray, idio.map(d => d * d).toArray)
 }

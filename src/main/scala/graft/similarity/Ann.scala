@@ -1205,8 +1205,9 @@ object Ann {
     array(rot.map(r => dot(v, typedLit(r.toSeq))): _*)
 
   /** [[rotateCol]] as ONE codegen'd kernel call against a broadcast
-    * basis — bit-equal output (see [[RotateVec]]), constant generated-
-    * code size regardless of d. The corpus-scale form. */
+    * basis — bit-equal output on every non-null vector (a NULL vector
+    * gives NULL, see [[RotateVec]]), constant generated-code size
+    * regardless of d. The corpus-scale form. */
   private[graft] def rotateColBc(v: Column,
       bc: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
@@ -1478,13 +1479,6 @@ object Ann {
     v => org.apache.spark.sql.GraftColumnBridge.column(
       SqEncode(org.apache.spark.sql.GraftColumnBridge.expression(v), bc))
 
-  /** SQ8 asymmetric scoring kernel: cosine(q, decoded(c)) folds the
-    * decode into query-side precomputation — dot(q, x̂) = Σ qᵢ·minᵢ +
-    * Σ (qᵢ·stepᵢ)·codeᵢ, so the scan reads ONE byte per dimension and
-    * does one multiply-add against the query's precomputed weight
-    * vector from a JVM broadcast keyed by `qi` (the adcAtUdf lesson: a
-    * per-row array join column costs a full deserialization per scored
-    * row). Null for zero-norm decoded vectors — the cosine contract. */
   /** SQ8 scorer factory: (codes, dnorm, qi) columns → cosine column,
     * through the native codegen'd [[SqCosine]] expression (bit-equal to
     * the scalar UDF it replaced; NULL on zero-norm candidates). */

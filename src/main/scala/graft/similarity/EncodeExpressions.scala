@@ -98,7 +98,12 @@ private[similarity] object EncodeKernels {
   * fused into x89's ADC scan span, over HotSpot's 8,000-bytecode
   * DontCompileHugeMethods cliff, so the whole per-(cand,query) scan
   * loop ran INTERPRETED (the round-16 ~15x hazard; round-17's one
-  * bench regression). This form is one static kernel call per row. */
+  * bench regression). This form is one static kernel call per row.
+  *
+  * A NULL input vector gives a NULL output (UnaryExpression null
+  * propagation), where the literal form gives an array of d NULLs —
+  * the one input on which the two differ; AnnOpqSpec pins it. Embeddings
+  * on the ANN paths are non-null. */
 private[similarity] case class RotateVec(child: Expression,
     rot: Broadcast[Array[Array[Double]]]) extends UnaryExpression {
 

@@ -74,13 +74,21 @@ class AnnOpqSpec extends SparkSpec {
       (1L, Seq[java.lang.Double](0.1, -0.7, 1e-300, 3.3, -2.2, 0.5, 7.7, -0.25)),
       (2L, Seq[java.lang.Double](1.0 / 3.0, math.Pi, -math.E, 0.0, 1e300, -1e-17, 2.0, 4.0)),
       (3L, Seq[java.lang.Double](0.5, -0.5)), // shorter than d: min-length prefix
-      (4L, Seq[java.lang.Double](0.25, null, 0.75, -0.125, 1.5, null, 0.0, 2.0)))
+      (4L, Seq[java.lang.Double](0.25, null, 0.75, -0.125, 1.5, null, 0.0, 2.0)),
+      (5L, null)) // null vector: the one documented divergence, pinned below
       .toDF("id", "v")
     val got = vecs.select($"id",
         Ann.rotateCol($"v", rot).as("lit"),
         Ann.rotateColBc($"v", bc).as("bcf"))
       .collect()
-    got.foreach { r =>
+    val (nullVec, rows) = got.partition(_.getLong(0) == 5L)
+    nullVec.foreach { r =>
+      assert(r.isNullAt(2), s"RotateVec of a null vector must be NULL: $r")
+      assert(r.getSeq[Any](1).length == rot.length && r.getSeq[Any](1).forall(_ == null),
+        s"literal form of a null vector must be d nulls: $r")
+    }
+    assert(nullVec.length == 1)
+    rows.foreach { r =>
       val a = r.getSeq[Double](1); val b = r.getSeq[Double](2)
       assert(a.length == b.length, s"row ${r.getLong(0)} lengths differ")
       a.indices.foreach(i => assert(
