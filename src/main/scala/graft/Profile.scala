@@ -391,7 +391,8 @@ object Profile {
     val tmp = java.nio.file.Files.createTempDirectory("prof-x45").toString
     val e = graft.queries.Tables.t(spark, sfDir, "embeddings")
     val idx = new graft.similarity.IvfIndex(
-      new graft.lake.Lake(spark, tmp), nLists = 8)
+      new graft.lake.Lake(spark, tmp), graft.similarity.CellCodec.Flat,
+      nLists = 8)
     step(spark, "build")(idx.build(e, "vec_id", "embedding", 1L))
     step(spark, "append")(
       idx.append(e.filter($"vec_id" < 50), "vec_id", "embedding", 2L))

@@ -759,7 +759,7 @@ object ScaleBench {
     }
 
     // arg-17: IVFADC persisted-index stress — the arg-15 vector corpus
-    // through IvfPqIndex: build (train both quantizers + one assign+
+    // through IvfIndex(Pq): build (train both quantizers + one assign+
     // encode pass + cell-partitioned write), O(batch) append, then a
     // served 8-probe search that reads codes of probed cells only and
     // must return each planted direction-identical copy at rank 1 with
@@ -779,8 +779,9 @@ object ScaleBench {
       vecs.count()
       val tmp = java.nio.file.Files.createTempDirectory("graft-scale-ivfpq")
       try {
-        val idx = new graft.similarity.IvfPqIndex(
-          new graft.lake.Lake(spark, tmp.toString), nLists = 32, m = 8, ksub = 64)
+        val idx = new graft.similarity.IvfIndex(
+          new graft.lake.Lake(spark, tmp.toString),
+          graft.similarity.CellCodec.Pq(m = 8, ksub = 64), nLists = 32)
         time(s"IVFADC index build ($nIvfPq vecs)", nIvfPq.toLong) {
           idx.build(vecs, "vec_id", "embedding", version = 1L); nIvfPq.toLong
         }
@@ -1830,7 +1831,7 @@ object ScaleBench {
     val nIvfIdx = args.lift(31).map(_.toInt).getOrElse(0)
     if (nIvfIdx > 0) {
       import graft.lake.Lake
-      import graft.similarity.IvfIndex
+      import graft.similarity.{CellCodec, IvfIndex}
       val madX = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val dimsX = (0 until 64).map(i =>
         (pmod(xxhash64($"id", lit(i)), lit(2001)).cast("double")
@@ -1840,7 +1841,8 @@ object ScaleBench {
         .persist(madX)
       baseX.count()
       val tmpX = Files.createTempDirectory("ivfidxbench").toString
-      val idxX = new IvfIndex(new Lake(spark, tmpX), nLists = 4096)
+      val idxX = new IvfIndex(new Lake(spark, tmpX), CellCodec.Flat,
+        nLists = 4096)
       time(s"routed IVF-index build (4096 cells, $nIvfIdx vecs)",
           nIvfIdx.toLong) {
         idxX.build(baseX, "vec_id", "embedding", 1L)
@@ -1936,7 +1938,7 @@ object ScaleBench {
     val nDel = args.lift(33).map(_.toInt).getOrElse(0)
     if (nDel > 0) {
       import graft.lake.Lake
-      import graft.similarity.IvfIndex
+      import graft.similarity.{CellCodec, IvfIndex}
       val madD = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val dimsD = (0 until 64).map(i =>
         (pmod(xxhash64($"id", lit(i)), lit(2001)).cast("double")
@@ -1947,7 +1949,7 @@ object ScaleBench {
       baseD.count()
       val tmpD = Files.createTempDirectory("ivfdelbench").toString
       val lakeD = new Lake(spark, tmpD)
-      val idxD = new IvfIndex(lakeD, nLists = 64)
+      val idxD = new IvfIndex(lakeD, CellCodec.Flat, nLists = 64)
       time(s"delete-receipt build (64 cells, $nDel vecs)", nDel.toLong) {
         idxD.build(baseD, "vec_id", "embedding", 1L); nDel.toLong
       }
@@ -3194,7 +3196,7 @@ object ScaleBench {
     //     post-compact byte-parity, store shrink arithmetic.
     val nAnr = args.lift(47).map(_.toInt).getOrElse(0)
     if (nAnr > 0) {
-      import graft.similarity.{Ann, IvfPqIndex, QuantizerStore}
+      import graft.similarity.{Ann, CellCodec, IvfIndex, QuantizerStore}
       import org.apache.spark.sql.DataFrame
       val madA = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       def corpusA(lo: Long, hi: Long): DataFrame = {
@@ -3210,7 +3212,8 @@ object ScaleBench {
       }
       val tmpA = Files.createTempDirectory("graft-annserve").toString
       val lakeA = new graft.lake.Lake(spark, tmpA)
-      val idxA = new IvfPqIndex(lakeA, nLists = 4096, m = 8, ksub = 16)
+      val idxA = new IvfIndex(lakeA, CellCodec.Pq(m = 8, ksub = 16),
+        nLists = 4096)
       time(s"ann-serve build ($nAnr vecs, 4096 cells)", nAnr.toLong) {
         val (_, st) = graft.JobProfile.profile(spark) {
           idxA.build(corpusA(0L, nAnr.toLong), "vec_id", "embedding", 1L)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.DateType
 import graft.dedup.Dedup
 import graft.functions.{Bpe, TextFunctions}
 import graft.pipelines.Universe
-import graft.similarity.{Ann, IvfIndex, IvfPqIndex}
+import graft.similarity.{Ann, CellCodec, IvfIndex}
 import Tables.t
 
 /** Training-data pipeline operators (SURVEY.md §7.5 / builder brief):
@@ -1419,28 +1419,17 @@ object ExtraQueries {
           ("ivf_ma", () =>
             Ann.ivfTopKAdaptive(q, e, "vec_id", "embedding", k = 5,
               nLists = 8, nProbeMin = 4, nProbeMax = 4, assign = 2)))
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          armDefs.length)
-        val recs =
-          try {
-            implicit val ec: scala.concurrent.ExecutionContext =
-              scala.concurrent.ExecutionContext.fromExecutorService(pool)
-            val futs = armDefs.map { case (m, mk) =>
-              scala.concurrent.Future {
-                val f = rec(m, mk()).persist()
-                f.count()
-                f
-              }
-            }
-            // overlaps with arm training on the pool; arms that reach
-            // `exact` early block on the per-partition cache write lock
-            // rather than recomputing (A/B receipts in
-            // OPTIMIZATION_r18.md §2: same cpu either way, best wall
-            // with the overlap)
-            exact.count()
-            futs.map(f => scala.concurrent.Await.result(
-              f, scala.concurrent.duration.Duration.Inf))
-          } finally pool.shutdown()
+        // `exact.count()` overlaps with arm training; arms that reach
+        // `exact` early block on the per-partition cache write lock
+        // rather than recomputing (A/B receipts in OPTIMIZATION_r18.md
+        // §2: same cpu either way, best wall with the overlap)
+        val recs = GateArms.run(armDefs.map { case (m, mk) =>
+          m -> (() => {
+            val f = rec(m, mk()).persist()
+            f.count()
+            f
+          })
+        }, meanwhile = exact.count())
         val out = recs.reduce(_.unionAll(_))
           .orderBy($"method").persist()
         val got = out.collect()
@@ -1667,7 +1656,8 @@ object ExtraQueries {
         import s.implicits._
         val e = t(s, dir, "embeddings")
         val (a, schema) = withTempDir(s, "graft-ivfidx") { tmp =>
-          val idx = new IvfIndex(new graft.lake.Lake(s, tmp), nLists = 8)
+          val idx = new IvfIndex(new graft.lake.Lake(s, tmp), CellCodec.Flat,
+            nLists = 8)
           idx.build(e, "vec_id", "embedding", version = 1L)
           // round-16 slim (judge item 1, the x59 precedent): the
           // append + compact byte-parity replays moved to IvfIndexSpec
@@ -2348,7 +2338,7 @@ object ExtraQueries {
     // The structural replays that used to run here — one-shot ivfPqTopK
     // byte-parity + the ROUTED arm (r14 slim) and the re-ingest append
     // → compact supersede store-count arithmetic (r16 slim) — are
-    // replay-derivable and live in IvfPqIndexSpec ("append encodes
+    // replay-derivable and live in the IVF-PQ index spec ("append encodes
     // against frozen codebooks; compact supersedes re-ingests" pins the
     // count arithmetic AND the superseded vector bytes). The r16 slim
     // leaves the searches on the build-only store — byte-identical
@@ -2362,8 +2352,8 @@ object ExtraQueries {
         import s.implicits._
         val e = t(s, dir, "embeddings")
         val (a, schema) = withTempDir(s, "graft-ivfpqidx") { tmp =>
-          val idx = new IvfPqIndex(new graft.lake.Lake(s, tmp),
-            nLists = 8, m = 8, ksub = 64)
+          val idx = new IvfIndex(new graft.lake.Lake(s, tmp),
+            CellCodec.Pq(m = 8, ksub = 64), nLists = 8)
           idx.build(e, "vec_id", "embedding", version = 1L)
           val q = e.filter($"vec_id" < 10)
           val got = idx.search(q, "vec_id", "embedding", k = 5,
@@ -2371,7 +2361,7 @@ object ExtraQueries {
           val rows = got.collect()
           // recall floors vs in-gate brute-force truth (ONE corpus pass
           // for 10 probes). The one-shot ivfPqTopK byte-parity and the
-          // ROUTED (nLists = 300) arm moved to IvfPqIndexSpec (round-14
+          // ROUTED (nLists = 300) arm moved to the IVF-PQ index spec (r14
           // slim — the x45 discipline: they re-trained and re-scanned
           // the corpus twice per bench run for no extra gate power;
           // both remain spec-pinned after build AND append).
@@ -2475,24 +2465,17 @@ object ExtraQueries {
         // deterministic count, so values are identical to the serial
         // form, and concurrent first-use of the caches blocks on the
         // per-partition write lock rather than recomputing
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-        val got =
-          try {
-            implicit val ec: scala.concurrent.ExecutionContext =
-              scala.concurrent.ExecutionContext.fromExecutorService(pool)
-            val futs = Seq(
-              "minhash" -> scala.concurrent.Future(plantedRecall(
-                Dedup.minhashNearDuplicatesFromShingles(
-                  sh, bands = 4, rowsPerBand = 4, threshold = 0.5))),
-              "simhash" -> scala.concurrent.Future(plantedRecall(
-                Dedup.simhashNearDuplicates(
-                  corpus, "doc_id", "text", maxHamming = 6))),
-              "ngram" -> scala.concurrent.Future(plantedRecall(
-                Dedup.ngramJaccardNearDuplicatesFromShingles(
-                  sh, threshold = 0.5))))
-            futs.map { case (m, f) => m -> scala.concurrent.Await.result(
-              f, scala.concurrent.duration.Duration.Inf) }.toMap
-          } finally pool.shutdown()
+        val arms: Seq[(String, () => Double)] = Seq(
+          "minhash" -> (() => plantedRecall(
+            Dedup.minhashNearDuplicatesFromShingles(
+              sh, bands = 4, rowsPerBand = 4, threshold = 0.5))),
+          "simhash" -> (() => plantedRecall(
+            Dedup.simhashNearDuplicates(
+              corpus, "doc_id", "text", maxHamming = 6))),
+          "ngram" -> (() => plantedRecall(
+            Dedup.ngramJaccardNearDuplicatesFromShingles(
+              sh, threshold = 0.5))))
+        val got = arms.map(_._1).zip(GateArms.run(arms)).toMap
         sh.unpersist()
         corpus.unpersist()
         val floors = Map("minhash" -> 0.95, "simhash" -> 0.75, "ngram" -> 0.9)
@@ -3386,25 +3369,22 @@ object ExtraQueries {
         // the one-shot arm and the index lifecycle are independent —
         // concurrent job groups (the x88 discipline): the gate pays the
         // index path's wall, the one-shot rides along on idle cores
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
         val augM = aug.localCheckpoint()
-        val fOne = Future {
-          val oneShot = Dedup.semanticDedup(augM, "vec_id", "embedding",
-            nClusters = 8, threshold = 0.95)
-          (oneShot.orderBy($"doc_id").collect(), oneShot.schema)
-        }
-        val fIdx = Future(withTempDir(s, "graft-semidx-b") { tmp =>
-          val b = new graft.dedup.SemDeDupIndex(
-            new graft.lake.Lake(s, tmp), nClusters = 8)
-          b.build(augM, "vec_id", "embedding", 1L)
-          b.append(augM.filter($"vec_id" < 1000000L), "vec_id", "embedding", 2L)
-          b.append(augM.filter($"vec_id" >= 1000000L), "vec_id", "embedding", 3L)
-          b.assignments().orderBy($"doc_id").collect()
-        })
-        val (ro, schema) = Await.result(fOne, Duration.Inf)
-        val rb = Await.result(fIdx, Duration.Inf)
+        val Seq((ro, schema), (rb, _)) = GateArms.run(Seq(
+          "one-shot" -> (() => {
+            val oneShot = Dedup.semanticDedup(augM, "vec_id", "embedding",
+              nClusters = 8, threshold = 0.95)
+            (oneShot.orderBy($"doc_id").collect(), oneShot.schema)
+          }),
+          "index" -> (() => withTempDir(s, "graft-semidx-b") { tmp =>
+            val b = new graft.dedup.SemDeDupIndex(
+              new graft.lake.Lake(s, tmp), nClusters = 8)
+            b.build(augM, "vec_id", "embedding", 1L)
+            b.append(augM.filter($"vec_id" < 1000000L), "vec_id", "embedding", 2L)
+            b.append(augM.filter($"vec_id" >= 1000000L), "vec_id", "embedding", 3L)
+            val a = b.assignments()
+            (a.orderBy($"doc_id").collect(), a.schema)
+          })))
         require(rb.sameElements(ro),
           s"two-batch index composition != one-shot semanticDedup " +
             s"(${rb.length} vs ${ro.length} rows — frozen-quantizer " +
@@ -3559,7 +3539,7 @@ object ExtraQueries {
         val aug = e.unionByName(twins)
         val (a, schema) = withTempDir(s, "graft-ivfdel") { tmp =>
           val lake = new graft.lake.Lake(s, tmp)
-          val idx = new IvfIndex(lake, nLists = 8)
+          val idx = new IvfIndex(lake, CellCodec.Flat, nLists = 8)
           idx.build(aug, "vec_id", "embedding", 1L)
           def top1(): Map[Long, (Long, Double)] =
             idx.search(probes, "vec_id", "embedding", k = 1, nProbe = 8)
@@ -3698,12 +3678,10 @@ object ExtraQueries {
         val ((eA, mA, cA, stA, schema), (eB, mB, cB, stB, _)) =
           withTempDir(s, "graft-takedownA") { ta =>
             withTempDir(s, "graft-takedownB") { tb =>
-              import scala.concurrent.{Await, Future}
-              import scala.concurrent.ExecutionContext.Implicits.global
-              import scala.concurrent.duration.Duration
-              val fA = Future(lifecycle(ta, takedown = true))
-              val fB = Future(lifecycle(tb, takedown = false))
-              (Await.result(fA, Duration.Inf), Await.result(fB, Duration.Inf))
+              GateArms.run(Seq(
+                "takedown" -> (() => lifecycle(ta, takedown = true)),
+                "never-ingested" -> (() => lifecycle(tb, takedown = false))
+              )) match { case Seq(a, b) => (a, b) }
             }
           }
         require(eA == eB, s"exact takedown != never-ingested " +
@@ -4152,8 +4130,8 @@ object ExtraQueries {
         e.count()
         val q = e.filter($"vec_id" < 96)
         val (rows, schema) = withTempDir(s, "graft-ivfsq") { tmp =>
-          val idx = new graft.similarity.IvfSqIndex(
-            new graft.lake.Lake(s, tmp), nLists = 8)
+          val idx = new IvfIndex(new graft.lake.Lake(s, tmp),
+            CellCodec.Sq8, nLists = 8)
           idx.build(e, "vec_id", "embedding", 1L)
           val full = idx.search(q, "vec_id", "embedding", k = 5, nProbe = 8)
             .orderBy($"query_id", $"rank")
@@ -4173,7 +4151,7 @@ object ExtraQueries {
           // ADAPTIVE serving arm: the documented budget (min 2 / cap 6
           // of 8) clears the production floor (measured .93/.96/.93
           // across SFs vs the fixed-nProbe-2 .63/.62/.58). The full-cap
-          // decoded-space soundness certificate is IvfSqIndexSpec's
+          // decoded-space soundness certificate is the IVF-SQ index spec's
           // (after build AND append) — not re-paid here
           val adRecall = Ann.recallAtK(
             idx.searchAdaptive(q, "vec_id", "embedding", k = 5,
@@ -4354,12 +4332,10 @@ object ExtraQueries {
         val ((oA, gA, _), (oB, gB, _)) =
           withTempDir(s, "graft-spantakeA") { ta =>
             withTempDir(s, "graft-spantakeB") { tb =>
-              import scala.concurrent.{Await, Future}
-              import scala.concurrent.ExecutionContext.Implicits.global
-              import scala.concurrent.duration.Duration
-              val fA = Future(run(ta, takedown = true))
-              val fB = Future(run(tb, takedown = false))
-              (Await.result(fA, Duration.Inf), Await.result(fB, Duration.Inf))
+              GateArms.run(Seq(
+                "takedown" -> (() => run(ta, takedown = true)),
+                "never-ingested" -> (() => run(tb, takedown = false))
+              )) match { case Seq(a, b) => (a, b) }
             }
           }
         require(oA == oB, s"span takedown batch output != never-ingested " +
@@ -4447,12 +4423,10 @@ object ExtraQueries {
         val ((o2A, stA), (o2B, stB)) =
           withTempDir(s, "graft-linetakeA") { ta =>
             withTempDir(s, "graft-linetakeB") { tb =>
-              import scala.concurrent.{Await, Future}
-              import scala.concurrent.ExecutionContext.Implicits.global
-              import scala.concurrent.duration.Duration
-              val fA = Future(lifecycle(ta, takedown = true))
-              val fB = Future(lifecycle(tb, takedown = false))
-              (Await.result(fA, Duration.Inf), Await.result(fB, Duration.Inf))
+              GateArms.run(Seq(
+                "takedown" -> (() => lifecycle(ta, takedown = true)),
+                "never-ingested" -> (() => lifecycle(tb, takedown = false))
+              )) match { case Seq(a, b) => (a, b) }
             }
           }
         require(o2A == o2B, s"line takedown batch-2 output != " +

@@ -9,7 +9,8 @@ import org.apache.spark.sql.types._
 
 /** The PQ asymmetric-distance (ADC) scorer as a native codegen'd
   * expression — the per-candidate inner loop of every PQ/IVFADC scan
-  * ([[Ann.pqTopK]], [[Ann.ivfPqTopK]], [[IvfPqIndex.search]]).
+  * ([[Ann.pqTopK]], [[Ann.ivfPqTopK]], [[IvfIndex.search]] over
+  * [[CellCodec.Pq]]).
   *
   * Why an Expression and not the scalar UDF it replaces: the scorer
   * runs once per (candidate, query) row of the scan — the single
@@ -20,7 +21,7 @@ import org.apache.spark.sql.types._
   * code array directly (no conversion), resolves the broadcast
   * distance-table matrix once per generated class, and mirrors the
   * retired kernel statement for statement — scores bit-equal (the
-  * x58/x59 byte-parity gates and AnnOpqSpec/IvfPqIndexSpec pin it).
+  * x58/x59 byte-parity gates and the OPQ and IVF-PQ index specs pin it).
   *
   * `dtabs(qi)` is the flattened m×ksub table of query `qi` (the
   * [[Ann.indexedDtabs]] layout; kk = len/m recovers ksub). */
@@ -80,7 +81,7 @@ private[similarity] case class AdcScore(left: Expression, right: Expression,
 
 /** The SQ8 query-weight dot scorer as a native codegen'd expression —
   * the per-candidate inner loop of the SQ8 scans ([[Ann.sqTopK]],
-  * [[IvfSqIndex.search]]). Same rationale as [[AdcScore]]; the kernel
+  * [[IvfIndex.search]] over [[CellCodec.Sq8]]). Same rationale as [[AdcScore]]; the kernel
   * is d byte-unmask-multiply-adds against the query's weight vector
   * (wⱼ = qⱼ·stepⱼ, constant k_q = Σ qⱼ·minⱼ — the
   * [[Ann.indexedSqWeights]] layout), and the score divides by the
@@ -88,7 +89,7 @@ private[similarity] case class AdcScore(left: Expression, right: Expression,
   * candidates — the engine-wide zero-norm rule; the tuple array
   * unpacks once per generated class into parallel weight/constant
   * arrays. Scores bit-equal to the retired UDF (x96's byte-parity
-  * gate, AnnSq8Spec, IvfSqIndexSpec). */
+  * gate, AnnSq8Spec, the IVF-SQ index spec). */
 private[similarity] case class SqCosine(first: Expression,
     second: Expression, third: Expression,
     weights: Broadcast[Array[(Array[Double], Double)]])

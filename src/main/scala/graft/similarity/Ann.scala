@@ -394,7 +394,7 @@ object Ann {
 
   /** Flat-or-hierarchical dispatch with the training sample supplied —
     * the entry for callers that already ran the sampling job once and
-    * feed several trainers from it ([[ivfPqTopK]], [[IvfPqIndex]]). */
+    * feed several trainers from it ([[ivfPqTopK]], [[IvfIndex]]). */
   private[graft] def trainQuantizer(c: DataFrame,
       sample: Array[Array[Double]], nLists: Int): Array[Array[Double]] =
     if (nLists <= FlatQuantizerMax) trainCentroidsFrom(sample, nLists)
@@ -572,13 +572,13 @@ object Ann {
 
   /** The deterministic bottom-4096-by-hash NORMALIZED sample both
     * quantizer trainers draw from. Exposed separately so IVFADC builds
-    * ([[ivfPqTopK]], [[IvfPqIndex.build]]) run the sampling job ONCE and
+    * ([[ivfPqTopK]], [[IvfIndex.build]]) run the sampling job ONCE and
     * feed both trainers — the two-trainer composition was otherwise
     * scanning the (persisted) corpus twice for byte-identical samples. */
   private[graft] def hashSample(c: DataFrame): Array[Array[Double]] = {
     // hash the id at LongType regardless of the caller's integral width:
     // xxhash64(int) != xxhash64(long) for the same value, and the persisted
-    // index paths (IvfIndex/IvfPqIndex) store cand_id as long — widening
+    // index path (IvfIndex, every codec) stores cand_id as long — widening
     // HERE makes the one-shot and index paths draw the byte-identical
     // training sample for byte/short/int id corpora too (long ids hash the
     // same bytes as before, so long-id results are unchanged)
@@ -1215,7 +1215,7 @@ object Ann {
         asDouble(v)), bc))
 
   /** Refine stage shared by [[pqTopK]], [[ivfPqTopK]] and
-    * [[IvfPqIndex.search]] — structural, so the byte-parity contract
+    * [[IvfIndex.search]] — structural, so the byte-parity contract
     * between the three paths cannot drift copy by copy. With
     * `rerank <= k` the ADC ordering is final; otherwise only the
     * |Q|·rerank shortlisted rows' float vectors are re-read (broadcast
@@ -1253,8 +1253,9 @@ object Ann {
     * repartition-invariance, and the x39 gate pins recall.
     *
     * Composed with IVF in [[ivfPqTopK]] (classic IVFADC: probed cells
-    * only) and served from disk by [[IvfPqIndex]]; kept flat here so the
-    * recall/compression dial is measurable in isolation.
+    * only) and served from disk by [[IvfIndex]] over [[CellCodec.Pq]];
+    * kept flat here so the recall/compression dial is measurable in
+    * isolation.
     *
     * `rerank` > k turns on the standard refine stage: the compressed
     * scan keeps an ADC shortlist of `rerank` per query, then ONLY those
@@ -1341,7 +1342,7 @@ object Ann {
     * in-register, zero vectors pass through — the withNorm contract;
     * codes bit-equal to the scalar UDF it replaced). The one-sweep
     * corpus encode shared by [[pqTopK]], [[ivfPqTopK]] and
-    * [[IvfPqIndex]] — it runs once per corpus row of every build/
+    * [[IvfIndex]] — it runs once per corpus row of every build/
     * append/compact pass, where the UDF's per-row Seq conversion was
     * pure overhead on a kernel-dominated loop. */
   private[graft] def pqEncodeUdf(
@@ -1401,7 +1402,7 @@ object Ann {
     * query_id order (|Q|·m·ksub doubles — tiny) for the [[adcAtUdf]]
     * broadcast, plus the (query_id, qi) relation that carries each row's
     * table index through the scoring join. Shared by [[pqTopK]],
-    * [[ivfPqTopK]] and [[IvfPqIndex]] so every path scores through the
+    * [[ivfPqTopK]] and [[IvfIndex]] so every path scores through the
     * same kernel (byte-parity across them depends on it).
     *
     * ONE collect feeds both sides: the dtab broadcast AND the
@@ -1522,7 +1523,7 @@ object Ann {
     * [[sqDotUdf]] broadcast, plus the (query_id, qi) index relation —
     * the [[indexedDtabs]] discipline: ONE collect feeds both sides so
     * qi→weights can never diverge, and duplicate query ids fail loudly.
-    * Shared by [[sqTopK]] and [[IvfSqIndex.search]] (their byte-parity
+    * Shared by [[sqTopK]] and [[IvfIndex.search]] (their byte-parity
     * contract depends on scoring through the same kernel). */
   private[similarity] def indexedSqWeights(queries: DataFrame,
       idCol: String, vecCol: String,
@@ -1558,7 +1559,7 @@ object Ann {
   }
 
   /** Per-cell angular radii over the DECODED SQ8 vectors — the
-    * [[cellRadii]] twin for [[IvfSqIndex]]: the SQ scan ranks
+    * [[cellRadii]] twin for [[CellCodec.Sq8]]: the SQ scan ranks
     * cosine(q̂, decoded(codes)), so the adaptive bound is sound iff the
     * radius is the max angle of the DECODED members to the centroid
     * (a radius on the raw floats would bound scores the scan never
@@ -1618,8 +1619,9 @@ object Ann {
     * accuracy moot while plain coding keeps one codebook set shared
     * across cells and the encode independent of assignment).
     *
-    * The persisted serving form is [[IvfPqIndex]]; right after its build
-    * the two are byte-equal (the x59 gate). Recall floor pinned in x39.
+    * The persisted serving form is [[IvfIndex]] over [[CellCodec.Pq]];
+    * right after its build the two are byte-equal (the x59 gate). Recall
+    * floor pinned in x39.
     */
   def ivfPqTopK(
       queries: DataFrame, candidates: DataFrame,

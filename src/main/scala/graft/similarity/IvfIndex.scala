@@ -7,43 +7,47 @@ import org.apache.spark.sql.types._
 import graft.functions.VectorFunctions.asDouble
 import graft.lake.{Lake, TableDef}
 
-/** Persisted IVF index: train the coarse quantizer ONCE, keep the
-  * cell-assigned corpus in a lake table PARTITIONED BY CELL, and serve
-  * every later search from the index — the production shape of
-  * [[Ann.ivfTopK]], which re-trains and re-assigns per call.
+/** Persisted IVF index: train the coarse quantizer (and the codec's
+  * quantizer — [[CellCodec]]) ONCE, keep the cell-assigned corpus in a
+  * lake table PARTITIONED BY CELL, and serve every later search from the
+  * index — the production shape of the one-shot [[Ann.ivfTopK]] /
+  * [[Ann.ivfPqTopK]] / [[Ann.sqTopK]], which re-train and re-assign per
+  * call.
   *
   * Why this matters at 100 TB:
-  *   - the corpus-assignment pass (the only full scan in the IVF path)
-  *     runs once at [[build]] and O(batch) at [[append]] — new embeddings
-  *     are assigned to the FROZEN centroids with one broadcast argmin
-  *     pass and plainly appended; stored vectors are never read or
-  *     rewritten on the daily path;
+  *   - the corpus-assignment (and encode) pass — the only full scan —
+  *     runs once at [[build]] and O(batch) at [[append]]: new embeddings
+  *     are assigned to the FROZEN centroids with one broadcast argmin pass
+  *     and plainly appended; stored vectors are never read or rewritten on
+  *     the daily path;
   *   - re-ingested ids are superseded by VERSION at the next [[compact]]
-  *     (the lake's primary-key compaction — the same machinery the price
-  *     tables use), not by rewriting the store inside append. Between a
-  *     re-ingest and the next compact a search may return the superseded
-  *     row — the standard staleness window of every delta-architecture
-  *     vector store; [[compact]] closes it.
+  *     (the lake's primary-key compaction — the machinery the price tables
+  *     use), not by rewriting the store inside append. Between a re-ingest
+  *     and the next compact a search may return the superseded row — the
+  *     standard staleness window of every delta-architecture vector store;
   *   - [[search]] collects each query batch's probed cell ids (≤ nLists
   *     ints) and filters the vector table with them as LITERALS, so
   *     Catalyst prunes cell partitions STATICALLY — a search reads
-  *     ~nProbe/nLists of the index from disk, no dynamic-pruning
-  *     machinery required.
+  *     ~nProbe/nLists of the index (and of a compressed codec, only the
+  *     codes column until refine).
   *
-  * Centroids are deterministic ([[Ann.trainCentroids]]: hash-sampled,
-  * seeded farthest-point Lloyd), so IvfIndexSpec can pin search-after-
-  * build byte-equal to the one-shot [[Ann.ivfTopK]] on the same corpus.
-  * The byte-parity contract covers every integral id width ([[vecs]]
-  * rejects non-integral ids): [[Ann.hashSample]] widens the id to long
-  * before hashing, so a narrow id column draws the identical training
-  * sample as the stored LongType `cand_id` (IvfPqIndexSpec pins int and
-  * short parity through the richer IVFADC composition).
-  * Drift note: appended batches shift the data distribution the frozen
-  * centroids were trained on — recall decays gradually, and the recovery
-  * is a [[build]] re-run (cheap relative to the daily path; the x39-style
-  * recall gate is the drift detector).
+  * Quantizers are deterministic (hash-sampled, seeded farthest-point
+  * Lloyd), so right after [[build]] a search is byte-equal to the codec's
+  * one-shot path at the same parameters (Flat and Pq at the same nProbe,
+  * Sq8 at a full probe — the x45/x59/x96 gates). The contract covers
+  * every integral id width ([[vecs]] rejects non-integral ids):
+  * [[Ann.hashSample]] widens the id to long before hashing, so a narrow id
+  * column draws the sample the stored LongType `cand_id` does.
+  * Drift note: appended batches shift the distribution the frozen
+  * quantizers were trained on — recall decays gradually; [[rebuild]] is
+  * the recovery (the x39-style recall gate is the drift detector).
+  *
+  * `prefix` defaults to the codec's (ivf / ivfpq / ivfsq).
   */
-class IvfIndex(lake: Lake, prefix: String = "ivf", nLists: Int = 16) {
+class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
+
+  def this(lake: Lake, codec: CellCodec, nLists: Int = 16) =
+    this(lake, codec, nLists, codec.defaultPrefix)
 
   val centroidTable: TableDef = TableDef(s"${prefix}_centroids",
     StructType(Seq(StructField("cell", IntegerType),
@@ -51,13 +55,13 @@ class IvfIndex(lake: Lake, prefix: String = "ivf", nLists: Int = 16) {
   /** Top-router table, non-empty ONLY for large-k builds (nLists past
     * [[Ann.FlatQuantizerMax]]): its presence switches append/search to
     * the routed O(√k) assignment and routed probes — matching the
-    * one-shot [[Ann.ivfTopK]]'s large-k arm, so the x45 byte-parity
-    * contract holds in BOTH regimes. */
+    * one-shot paths' large-k arm, so the byte-parity contracts hold in
+    * BOTH regimes (codec payloads are cell-independent). */
   val topTable: TableDef = QuantizerStore.topTableDef(prefix)
   val vectorTable: TableDef = TableDef(s"${prefix}_vectors",
     StructType(Seq(StructField("cand_id", LongType),
       StructField("cv", ArrayType(DoubleType)),
-      StructField("cell", IntegerType))),
+      StructField("cell", IntegerType)) ++ codec.columns),
     partitionKeys = Seq("cell"),
     primaryKeys = Seq("cand_id"),
     clusterWrites = true)
@@ -65,8 +69,11 @@ class IvfIndex(lake: Lake, prefix: String = "ivf", nLists: Int = 16) {
     * version-aware semantics in [[TombstoneStore]]. */
   val tombTable: TableDef = TombstoneStore.tableDef(prefix)
   /** Per-cell angular radii for [[searchAdaptive]]'s sound cell bound
-    * ([[QuantizerStore.radiiTableDef]] contract). */
+    * ([[QuantizerStore.radiiTableDef]] contract), in the space the codec's
+    * bound lives in ([[CellCodec.Frozen.radii]]). */
   val radiiTable: TableDef = QuantizerStore.radiiTableDef(prefix)
+  /** The codec's trained parameters (codebooks, SQ bounds); None for Flat. */
+  val auxTable: Option[TableDef] = codec.auxTable(prefix)
 
   private def vecs(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val t = df.schema(idCol).dataType
@@ -76,43 +83,47 @@ class IvfIndex(lake: Lake, prefix: String = "ivf", nLists: Int = 16) {
       asDouble(col(vecCol)).as("cv"))
   }
 
-  /** Train the quantizer on `corpus` and write the tables, each via the
+  /** Train the quantizers on `corpus` and write the tables, each via the
     * lake's temp-write + swap ([[Lake.replace]]): a mid-build failure
-    * leaves the previous index intact and serving — old data is never
-    * deleted before its replacement is fully materialized. The swaps
-    * are not jointly atomic: a crash BETWEEN them leaves new vectors with
-    * old centroids (searches are wrong, not lost) and a build re-run
-    * converges it. One full pass over the corpus.
+    * leaves the previous index intact and serving. The swaps are not
+    * jointly atomic: a crash BETWEEN them leaves new vectors with old
+    * quantizers (searches are wrong, not lost) and a build re-run
+    * converges it. One full pass over the corpus assigns cells AND
+    * encodes.
     *
-    * nLists ≤ [[Ann.FlatQuantizerMax]] trains the flat driver quantizer
-    * (bytes unchanged from every prior round; the router table is written
-    * EMPTY to mark "flat on purpose"). Larger nLists trains the two-level
-    * quantizer and persists its router rows, so every later [[append]]/
-    * [[search]] serves the routed large-k shape from disk. */
+    * ONE sampling job feeds every trainer (the same sample bytes the
+    * one-shot paths draw). nLists ≤ [[Ann.FlatQuantizerMax]] trains the
+    * flat driver quantizer (the router table is written EMPTY to mark
+    * "flat on purpose"); larger nLists trains the two-level quantizer and
+    * persists its router rows, so every later [[append]]/[[search]]
+    * serves the routed large-k shape from disk. */
   def build(corpus: DataFrame, idCol: String, vecCol: String,
       version: Long): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val c = vecs(corpus, idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sample = Ann.hashSample(c)
     val (flat, router) =
       if (nLists <= Ann.FlatQuantizerMax)
-        (Ann.trainCentroids(c, nLists), None)
+        (Ann.trainQuantizer(c, sample, nLists), None)
       else {
-        val q2 = Ann.trainTwoLevel(c, nLists, Ann.hashSample(c))
+        val q2 = Ann.trainTwoLevel(c, nLists, sample)
         (q2.flat, Some(q2))
       }
-    val assigned = QuantizerStore.assigner(flat, router)(c)
-    lake.replace(vectorTable, assigned, version)
+    val frozen = codec.train(sample)
+    val encoded = frozen.encode(QuantizerStore.assigner(flat, router)(c))
+    lake.replace(vectorTable, encoded, version)
+    // radii re-derive assign (+ encode) from the cached corpus — a
+    // broadcast pass, no disk read-back; one aggregate, ≤ nLists rows
+    QuantizerStore.writeRadii(lake, radiiTable,
+      frozen.radii(encoded, flat), version, spark)
     lake.replace(centroidTable,
       flat.toIndexedSeq.zipWithIndex
         .map { case (cen, i) => (i, cen.toSeq) }
         .toDF("cell", "centroid"), version)
     QuantizerStore.writeTop(lake, topTable, router, version, spark)
-    // radii re-derive the assignment from the cached corpus (a broadcast
-    // argmin pass, no disk read-back) — one aggregate, ≤ nLists rows
-    QuantizerStore.writeRadii(lake, radiiTable,
-      Ann.cellRadii(assigned, flat), version, spark)
+    auxTable.foreach(lake.replace(_, frozen.auxRows(spark), version))
     c.unpersist()
   }
 
@@ -124,17 +135,18 @@ class IvfIndex(lake: Lake, prefix: String = "ivf", nLists: Int = 16) {
     QuantizerStore.load(lake, prefix, centroidTable, topTable,
       expectRouted = nLists > Ann.FlatQuantizerMax)
 
-  /** Assign a new batch to the FROZEN centroids and append it — O(batch)
-    * work, touching no stored data. Duplicate ids WITHIN the batch are
-    * collapsed here (same survivor rule as [[Lake.optimize]]'s tie-break:
-    * remaining columns descending) so append-then-compact and a direct
-    * compact agree on the surviving row. A re-ingested id's OLD stored row
-    * remains until [[compact]] supersedes it by version. */
+  /** Assign + encode a new batch against the FROZEN quantizers and append
+    * it — O(batch) work, touching no stored data. Duplicate ids WITHIN the
+    * batch are collapsed here (same survivor rule as [[Lake.optimize]]'s
+    * tie-break: remaining columns descending) so append-then-compact and a
+    * direct compact agree on the surviving row. A re-ingested id's OLD
+    * stored row remains until [[compact]] supersedes it by version. */
   def append(newVecs: DataFrame, idCol: String, vecCol: String,
       version: Long): Unit = {
     val (flat, router) = loadQuantizer()
-    val assigned = QuantizerStore.assigner(flat, router)(
-      vecs(newVecs, idCol, vecCol))
+    val frozen = codec.load(lake, prefix)
+    val assigned = frozen.encode(QuantizerStore.assigner(flat, router)(
+      vecs(newVecs, idCol, vecCol)))
     val w = Window.partitionBy(col("cand_id"))
       .orderBy(col("cell").desc, col("cv").desc)
     val deduped = assigned.withColumn("__rn", row_number().over(w))
@@ -144,17 +156,16 @@ class IvfIndex(lake: Lake, prefix: String = "ivf", nLists: Int = 16) {
     // widen touched cells' radii so the adaptive bound stays sound for
     // appended members — O(batch) aggregate, tiny table rewrite
     QuantizerStore.mergeRadii(lake, radiiTable,
-      Ann.cellRadii(deduped, flat), version, newVecs.sparkSession)
+      frozen.radii(deduped, flat), version, newVecs.sparkSession)
     deduped.unpersist()
   }
 
-  /** Drift recovery in one call: retrain the quantizer on the STORED
-    * corpus and rebuild the index in place — the documented recovery
-    * for append drift (frozen centroids decaying as batches shift the
-    * distribution). Compacts FIRST so superseded re-ingested rows do
-    * not re-enter, then materializes the snapshot (localCheckpoint)
-    * because [[build]] swaps the very table it reads. Inherently
-    * O(corpus) — the cost of a fresh build, by design. */
+  /** Drift recovery in one call: retrain the quantizers on the STORED
+    * corpus and rebuild the index in place (payloads re-encode against the
+    * fresh codec state during the build pass). Compacts FIRST so
+    * superseded re-ingested rows do not re-enter, then materializes the
+    * snapshot (localCheckpoint) because [[build]] swaps the very table it
+    * reads. Inherently O(corpus) — the cost of a fresh build, by design. */
   def rebuild(version: Long): Unit = {
     compact()
     val snap = lake.table(vectorTable)
@@ -165,10 +176,11 @@ class IvfIndex(lake: Lake, prefix: String = "ivf", nLists: Int = 16) {
   }
 
   /** O(batch) delete: append the ids as tombstones — stored rows at
-    * version ≤ `version` stop being served from the next [[search]] on,
-    * and are physically removed at the next [[compact]]. A later
-    * [[append]] of the same id at a HIGHER version revives it (the
-    * lake's supersede rule). No stored data is read or rewritten here. */
+    * version ≤ `version` stop being served from the next search on (in
+    * the scored scan AND the refine float re-read), and are physically
+    * removed at the next [[compact]]. A later [[append]] of the same id at
+    * a HIGHER version revives it (the lake's supersede rule). No stored
+    * data is read or rewritten here. */
   def delete(ids: DataFrame, idCol: String, version: Long): Unit =
     TombstoneStore.delete(lake, tombTable, ids, idCol, version)
 
@@ -184,31 +196,42 @@ class IvfIndex(lake: Lake, prefix: String = "ivf", nLists: Int = 16) {
     TombstoneStore.applyTo(lake, tombTable, vectorTable, version)
 
   /** Approximate top-k for a query batch, reading only the probed cells'
-    * partitions. Identical semantics (and, right after [[build]],
-    * identical bytes) to [[Ann.ivfTopK]] at the same nLists/nProbe. */
+    * partitions. With `rerank` > k (compressed codecs only — Flat scores
+    * are already exact) the refine stage re-reads floats for the
+    * |Q|·rerank shortlist through broadcast joins against the same pruned
+    * partitions ([[Ann.refine]]). */
   def search(queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      nProbe: Int = 2): DataFrame = {
+      nProbe: Int = 2, rerank: Int = 0): DataFrame = {
+    requireRerank(rerank)
     val (flat, router) = loadQuantizer()
+    val score = codec.load(lake, prefix).scorer(queries, idCol, vecCol)
     // q is NOT cached: it is evaluated twice (the cell collect below and
     // the score join), but it is a |Q|-row frame against broadcast
     // centroids — recomputing it is cheaper than leaking one pinned cache
     // entry per search call from a long-lived serving process.
     val q = QuantizerStore.prober(flat, router, nProbe)(queries, idCol, vecCol)
-    // literal cell list → the read RESOLVES only the probed cells'
-    // partition directories (tableSlice — the listing itself is
-    // O(probed), which planner-side pruning alone can't deliver at
-    // 2^16 cells), and the isin filter keeps the literal partition
-    // pruning visible in the plan. The probe relation is tiny (|Q| rows
-    // pre-explode), so this collect is a driver round-trip over
-    // ≤ nLists ints, not a corpus job.
-    val cells = q.select(col("cell")).distinct().collect().map(_.getInt(0))
-    Ann.scoreCells(liveSlice(cells), q, k)
+    val pruned = liveSlice(probedCells(q))
+    Ann.refine(score(pruned, q), pruned.select(col("cand_id"), col("cv")),
+      queries, idCol, vecCol, k, rerank)
   }
 
+  private def requireRerank(rerank: Int): Unit =
+    require(rerank == 0 || codec != CellCodec.Flat,
+      s"$prefix: Flat scores are exact cosines — rerank has nothing to refine")
+
+  // The probe relation is tiny (|Q| rows pre-explode), so this collect is
+  // a driver round-trip over ≤ nLists ints, not a corpus job.
+  private def probedCells(q: DataFrame): Array[Int] =
+    q.select(col("cell")).distinct().collect().map(_.getInt(0))
+
   /** Probed cells' partitions, pending deletes filtered version-aware
-    * before scoring; the no-tombstone path (the normal case) reads
-    * version-less and adds no join node — plan-identical to the
-    * pre-delete serving shape. */
+    * before scoring (and before any refine float re-read — a deleted row
+    * must not resurface via the shortlist). The literal cell list makes
+    * the read RESOLVE only the probed partition directories (tableSlice —
+    * the listing itself is O(probed), which planner-side pruning alone
+    * can't deliver at 2^16 cells), and the isin filter keeps the literal
+    * partition pruning visible in the plan. The no-tombstone path (the
+    * normal case) reads version-less and adds no join node. */
   private def liveSlice(cells: Array[Int]): DataFrame = {
     val tombs = TombstoneStore.pending(lake, tombTable)
     val slice = lake.tableSlice(vectorTable,
@@ -219,71 +242,94 @@ class IvfIndex(lake: Lake, prefix: String = "ivf", nLists: Int = 16) {
     else slice
   }
 
-  /** Query-adaptive search (the [[Ann.ivfTopKAdaptive]] rule served
-    * from disk): phase A reads the nProbeMin nearest cells' partitions;
-    * phase B reads ONLY the extra cells whose stored-radius bound
-    * ([[radiiTable]]) can still beat the query's current k-th hit,
-    * capped at nProbeMax. Clustered corpora stop at nProbeMin
-    * partitions; adversarial ones cap at nProbeMax — IO is bounded
-    * either way, and with nProbeMax = nLists the result is byte-equal
-    * to a full-probe [[search]] (the bound only prunes cells provably
-    * below the k-th hit — IvfIndexSpec pins it). Phase A is reduced to
-    * its per-query top-k and localCheckpointed (|Q|·k rows) before
-    * reuse — evaluate-once without the pinned-cache-entry-per-call
-    * leak a persist would be; top-k distributes over the phase union
-    * because the ranking order is total, so the parity certificate is
-    * untouched.
-    * In the routed large-k regime phase A probes through the persisted
-    * two-level quantizer and phase B prunes whole BRANCHES first
-    * ([[Ann.branchAngles]] / [[Ann.extraProbeFrameRouted]]) — probe
-    * selection is O(√k · surviving branches) per query, so adaptive
-    * serving stays viable at 2^14+ cells where ranking every cell
-    * bound would itself cost O(k). Both regimes keep the full-cap
-    * byte-parity certificate. */
+  /** Query-adaptive search (the [[Ann.ivfTopKAdaptive]] rule served from
+    * disk): phase A reads the nProbeMin nearest cells' partitions; phase B
+    * reads ONLY the extra cells whose stored-radius bound ([[radiiTable]])
+    * can still beat the query's current threshold hit, capped at
+    * nProbeMax. Clustered corpora stop at nProbeMin partitions;
+    * adversarial ones cap at nProbeMax. nProbeMin = nProbeMax degenerates
+    * to [[search]] exactly.
+    *
+    * Where the threshold comes from is the codec's one fact
+    * ([[CellCodec.boundOnScores]]):
+    *   - bound on the codec's own scores (Flat, Sq8): phase A keeps its
+    *     top max(k, rerank) scores and thresholds at that depth — with
+    *     rerank > k a full probe refines the top `rerank` scores, so a
+    *     pruned member ranked in (k, rerank] could still refine into the
+    *     exact top-k — and the merged phases refine ONCE. With nProbeMax =
+    *     nLists the result is byte-equal to a full-probe [[search]] (the
+    *     bound only prunes cells provably below the threshold).
+    *   - bound on refined exact cosines only (Pq): each phase is refined
+    *     to exact cosines before thresholding at the k-th, so the raw-space
+    *     radius bound is sound. Within a probed cell recall is still bounded
+    *     by the ADC shortlist (`rerank`), so run with rerank > k. Full-cap
+    *     adaptive is byte-equal to a full probe when `rerank` EXHAUSTS the
+    *     scanned candidates; at partial rerank adaptive refines per-phase
+    *     shortlists, i.e. MORE candidates — recall ≥ the full probe's, not
+    *     byte-equal (spec-pinned both ways).
+    *
+    * Phase A is reduced to its per-query top rows and localCheckpointed
+    * before reuse (the threshold, the empty-phase-B return and the merge
+    * all need it): the partition scan runs ONCE per serving call, and the
+    * |Q|·depth narrow rows are ContextCleaner-freed — not the pinned
+    * cache entry per call a persist would be. Top-k distributes over the
+    * phase union because the ranking order is total, so the parity
+    * certificates are untouched. In the routed large-k regime phase A
+    * probes through the persisted two-level quantizer and phase B prunes
+    * whole BRANCHES first ([[Ann.branchAngles]] /
+    * [[Ann.extraProbeFrameRouted]]) — probe selection is O(√k · surviving
+    * branches) per query, so adaptive serving stays viable at 2^14+ cells. */
   def searchAdaptive(queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, nProbeMin: Int = 2, nProbeMax: Int = 8): DataFrame = {
+      k: Int, nProbeMin: Int = 2, nProbeMax: Int = 8,
+      rerank: Int = 0): DataFrame = {
     require(nProbeMin >= 1 && nProbeMin <= nProbeMax,
       s"need 1 <= nProbeMin <= nProbeMax, got ($nProbeMin, $nProbeMax)")
+    requireRerank(rerank)
     val (flat, router) = loadQuantizer()
     val radii = QuantizerStore.loadRadii(lake, radiiTable, flat.length)
+    val score = codec.load(lake, prefix).scorer(queries, idCol, vecCol)
+    val refineEach = !codec.boundOnScores
+    val depth = if (refineEach) k else math.max(k, rerank)
+    val hit = Seq(col("query_id"), col("cand_id"), col("cosine"))
+    def scan(q: DataFrame, cells: Array[Int]): DataFrame = {
+      val pruned = liveSlice(cells)
+      val scored = score(pruned, q)
+      if (!refineEach) scored
+      else Ann.refine(scored, pruned.select(col("cand_id"), col("cv")),
+        queries, idCol, vecCol, k, rerank)
+    }
     val qA = QuantizerStore.prober(flat, router,
       math.min(nProbeMin, flat.length))(queries, idCol, vecCol)
-    val cellsA = qA.select(col("cell")).distinct().collect().map(_.getInt(0))
-    // phase A is REDUCED to its per-query top-k before anything reuses
-    // it: the ranked ordering (cosine desc nulls last, cand_id) is total
-    // per query, so top-k(top-k(A) ∪ B) ≡ top-k(A ∪ B) byte-exactly —
-    // the |Q|·k frame is what the k-th-hit threshold, the empty-phase-B
-    // return, AND the merge all need, and localCheckpointing it
-    // evaluates the phase-A partition scan ONCE instead of the three
-    // times the lazy form paid per serving call (cellsB collect, the
-    // kth subplan, the final ranked plan — ~10 jobs of re-read at
-    // cadence). The checkpointed blocks are |Q|·k narrow rows, freed by
-    // the ContextCleaner when the returned frame is dropped — not the
-    // pinned-cache-entry-per-call leak the scoredA persist would be.
-    val topA = Ann.ranked(Ann.scoredCells(liveSlice(cellsA), qA)
-        .select(col("query_id"), col("cand_id"), col("cosine")), k)
+    val cellsA = probedCells(qA)
+    val sA = scan(qA, cellsA)
+    val top = (if (refineEach) sA else Ann.ranked(sA.select(hit: _*), depth))
       .localCheckpoint()
-    if (nProbeMax <= nProbeMin) topA
-    else {
-      // ranked's rank-k row IS kthCosine's k-th hit: nulls sort last,
-      // so whenever a query has k non-null hits the two agree, and
-      // when it has fewer this filter emits nothing — the no-threshold
-      // probe-to-cap contract, unchanged
-      val kth = topA.filter(col("rank") === k && col("cosine").isNotNull)
-        .select(col("query_id"), col("cosine").as("kth"))
-      val qB = router match {
-        case Some(q2) => Ann.extraProbeFrameRouted(queries, idCol,
-          vecCol, q2, radii, kth, nProbeMin, nProbeMax)
-        case None => Ann.extraProbeFrame(queries, idCol, vecCol, flat,
-          radii, kth, nProbeMin, nProbeMax)
+    val phaseB =
+      if (nProbeMax <= nProbeMin) None
+      else {
+        // ranked's rank-depth row IS kthCosine(·, depth)'s output: nulls
+        // sort last, and a query with fewer than depth non-null hits gets
+        // NO threshold — it probes to the cap
+        val kth = top.filter(col("rank") === depth && col("cosine").isNotNull)
+          .select(col("query_id"), col("cosine").as("kth"))
+        val qB = router match {
+          case Some(q2) => Ann.extraProbeFrameRouted(queries, idCol,
+            vecCol, q2, radii, kth, nProbeMin, nProbeMax)
+          case None => Ann.extraProbeFrame(queries, idCol, vecCol, flat,
+            radii, kth, nProbeMin, nProbeMax)
+        }
+        Some((qB, probedCells(qB))).filter(_._2.nonEmpty)
       }
-      val cellsB = qB.select(col("cell")).distinct().collect()
-        .map(_.getInt(0))
-      if (cellsB.isEmpty) topA
-      else Ann.ranked(
-        topA.select(col("query_id"), col("cand_id"), col("cosine"))
-          .unionAll(Ann.scoredCells(liveSlice(cellsB), qB)
-            .select(col("query_id"), col("cand_id"), col("cosine"))), k)
+    val (merged, cells) = phaseB match {
+      case None => (top.select(hit: _*), cellsA)
+      case Some((qB, cellsB)) =>
+        (top.select(hit: _*).unionAll(scan(qB, cellsB).select(hit: _*)),
+          (cellsA ++ cellsB).distinct)
     }
+    if (!refineEach && rerank > k)
+      Ann.refine(merged, liveSlice(cells).select(col("cand_id"), col("cv")),
+        queries, idCol, vecCol, k, rerank)
+    else if (phaseB.isEmpty) top
+    else Ann.ranked(merged, k)
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 
 /** The flat IVF nearest-cell argmin as a native codegen'd expression —
   * the ONE full-corpus pass of every cell-partitioned operation
-  * (semanticDedup, IvfIndex/IvfPqIndex/IvfSqIndex build·append·search,
+  * (semanticDedup, IvfIndex build·append·search under every codec,
   * SemDeDupIndex, embedding-centroid assignment).
   *
   * Why an Expression and not the scalar `Seq[Double] => Int` UDF it

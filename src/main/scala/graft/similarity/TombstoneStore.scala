@@ -6,8 +6,8 @@ import org.apache.spark.sql.types._
 import graft.lake.{Lake, TableDef}
 
 /** Version-aware tombstone deletes for the persisted vector indexes —
-  * the delta-architecture delete path ([[IvfIndex.delete]] /
-  * [[IvfPqIndex.delete]]):
+  * the delta-architecture delete path ([[IvfIndex.delete]] under every
+  * [[CellCodec]]):
   *
   *   - '''delete''' is O(batch): the ids are appended to a side table;
   *     no stored vector is read or rewritten (a physical delete would be

@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
-import graft.lake.Lake
-import graft.similarity.{Ann, IvfIndex}
+import org.apache.spark.sql.types._
+import graft.lake.{Lake, TableDef}
+import graft.similarity.{Ann, CellCodec, IvfIndex}
 
 /** Persisted IVF index ≡ the one-shot IVF search, plus the index-only
   * behaviors: cell-partitioned layout, O(batch) append, re-ingest
@@ -29,7 +30,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("search right after build is byte-equal to one-shot ivfTopK") {
     val dir = Files.createTempDirectory("ivfidx").toString
-    val idx = new IvfIndex(new Lake(spark, dir), nLists = 4)
+    val idx = new IvfIndex(new Lake(spark, dir), CellCodec.Flat, nLists = 4)
     val c = corpus(0 until 400)
     val q = corpus(0 until 6)
     idx.build(c, "vec_id", "embedding", version = 1L)
@@ -46,7 +47,7 @@ class IvfIndexSpec extends SparkSpec {
   test("append assigns to frozen centroids; search sees old and new vectors") {
     val dir = Files.createTempDirectory("ivfidx2").toString
     val lake = new Lake(spark, dir)
-    val idx = new IvfIndex(lake, nLists = 4)
+    val idx = new IvfIndex(lake, CellCodec.Flat, nLists = 4)
     idx.build(corpus(0 until 300), "vec_id", "embedding", 1L)
     idx.append(corpus(300 until 400), "vec_id", "embedding", 2L)
     val q = corpus(0 until 6)
@@ -72,7 +73,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("rebuild retrains on the stored corpus: search equals a fresh one-shot") {
     val dir = Files.createTempDirectory("ivfidxRB").toString
-    val idx = new IvfIndex(new Lake(spark, dir), nLists = 4)
+    val idx = new IvfIndex(new Lake(spark, dir), CellCodec.Flat, nLists = 4)
     // quantizer trained on 3/4 of the corpus, the rest appended against
     // the frozen (drifting) centroids — rebuild retrains on all 400
     idx.build(corpus(0 until 300), "vec_id", "embedding", 1L)
@@ -88,7 +89,7 @@ class IvfIndexSpec extends SparkSpec {
   test("pre-build search/append fail loudly; intra-batch dups collapse") {
     val dir = Files.createTempDirectory("ivfidx4").toString
     val lake = new Lake(spark, dir)
-    val idx = new IvfIndex(lake, nLists = 4)
+    val idx = new IvfIndex(lake, CellCodec.Flat, nLists = 4)
     val q = corpus(0 until 2)
     // Lake.table maps a missing table to an empty frame — the index must
     // not turn that into silent empty results or cell-0 assignments
@@ -112,11 +113,11 @@ class IvfIndexSpec extends SparkSpec {
     val dir = Files.createTempDirectory("ivfidx5").toString
     val lake = new Lake(spark, dir)
     // nLists past FlatQuantizerMax: build writes the two-level router table
-    new IvfIndex(lake, nLists = 300)
+    new IvfIndex(lake, CellCodec.Flat, nLists = 300)
       .build(corpus(0 until 400), "vec_id", "embedding", 1L)
     // a FRESH instance reconstructs the quantizer purely from the lake —
     // the router must round-trip through disk, not live in-process
-    val idx = new IvfIndex(lake, nLists = 300)
+    val idx = new IvfIndex(lake, CellCodec.Flat, nLists = 300)
     assert(lake.table(idx.topTable).count() > 0,
       "large-k build must persist non-empty router rows")
     val got = rows(idx.search(corpus(0 until 6), "vec_id", "embedding",
@@ -139,7 +140,7 @@ class IvfIndexSpec extends SparkSpec {
     // ROUTED store would probe flat over route-assigned cells — probes
     // would silently miss; the load guard rejects it instead
     val e = intercept[IllegalArgumentException] {
-      new IvfIndex(lake, nLists = 4)
+      new IvfIndex(lake, CellCodec.Flat, nLists = 4)
         .search(corpus(0 until 1), "vec_id", "embedding", k = 1)
     }
     assert(e.getMessage.contains("regime mismatch"))
@@ -148,7 +149,7 @@ class IvfIndexSpec extends SparkSpec {
   test("delete hides ids at serve time; compact applies; re-append revives") {
     val dir = Files.createTempDirectory("ivfidxDel").toString
     val lake = new Lake(spark, dir)
-    val idx = new IvfIndex(lake, nLists = 4)
+    val idx = new IvfIndex(lake, CellCodec.Flat, nLists = 4)
     idx.build(corpus(0 until 400), "vec_id", "embedding", 1L)
     val q = corpus(0 until 4)
     val before = rows(idx.search(q, "vec_id", "embedding", k = 3, nProbe = 4))
@@ -183,7 +184,7 @@ class IvfIndexSpec extends SparkSpec {
   test("adaptive search at the full cap is byte-equal to a full probe, " +
       "after build AND after append (radii stay sound across merges)") {
     val dir = Files.createTempDirectory("ivfidx_ad").toString
-    val idx = new IvfIndex(new Lake(spark, dir), nLists = 4)
+    val idx = new IvfIndex(new Lake(spark, dir), CellCodec.Flat, nLists = 4)
     idx.build(corpus(0 until 300), "vec_id", "embedding", 1L)
     val q = corpus(0 until 6)
     def full() = rows(idx.search(q, "vec_id", "embedding", k = 5, nProbe = 4))
@@ -203,7 +204,7 @@ class IvfIndexSpec extends SparkSpec {
   test("ROUTED adaptive search (nLists past the flat bound) keeps the " +
       "full-cap byte-parity certificate, after build AND after append") {
     val dir = Files.createTempDirectory("ivfidx_adR").toString
-    val idx = new IvfIndex(new Lake(spark, dir), nLists = 300)
+    val idx = new IvfIndex(new Lake(spark, dir), CellCodec.Flat, nLists = 300)
     idx.build(corpus(0 until 300), "vec_id", "embedding", 1L)
     val q = corpus(0 until 6)
     // nProbe/nProbeMax = 1000 ≥ nCells — both paths cap at "all cells"
@@ -227,7 +228,7 @@ class IvfIndexSpec extends SparkSpec {
       "demanding a rebuild (round-13 review)") {
     val dir = Files.createTempDirectory("ivfidx_legacy").toString
     val lake = new Lake(spark, dir)
-    val idx = new IvfIndex(lake, nLists = 4)
+    val idx = new IvfIndex(lake, CellCodec.Flat, nLists = 4)
     idx.build(corpus(0 until 300), "vec_id", "embedding", 1L)
     // simulate a pre-radii legacy store
     lake.drop(idx.radiiTable.name)
@@ -242,7 +243,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("search reads only the probed cells (static partition pruning)") {
     val dir = Files.createTempDirectory("ivfidx3").toString
-    val idx = new IvfIndex(new Lake(spark, dir), nLists = 4)
+    val idx = new IvfIndex(new Lake(spark, dir), CellCodec.Flat, nLists = 4)
     idx.build(corpus(0 until 400), "vec_id", "embedding", 1L)
     val one = corpus(0 until 1)
     val res = idx.search(one, "vec_id", "embedding", k = 3, nProbe = 1)
@@ -253,5 +254,75 @@ class IvfIndexSpec extends SparkSpec {
         .findFirstIn(plan).isDefined,
       s"expected a literal cell partition filter in:\n$plan")
     assert(res.count() == 3)
+  }
+
+  test("on-disk layout is pinned per codec: table names, schemas, " +
+      "partition and primary keys") {
+    // literals, not the code's own definitions: a lake written before the
+    // codec fold must keep opening, so no table may drift
+    val lake = new Lake(spark, Files.createTempDirectory("ivfidxLayout").toString)
+    val vec = Seq(StructField("cand_id", LongType),
+      StructField("cv", ArrayType(DoubleType)), StructField("cell", IntegerType))
+    val layouts = Seq(
+      (CellCodec.Flat, "ivf", Seq.empty[StructField], None),
+      (CellCodec.Pq(), "ivfpq", Seq(StructField("codes", ArrayType(IntegerType))),
+        Some(TableDef("ivfpq_codebooks", StructType(Seq(
+          StructField("subspace", IntegerType), StructField("ci", IntegerType),
+          StructField("centroid", ArrayType(DoubleType))))))),
+      (CellCodec.Sq8, "ivfsq", Seq(StructField("codes", BinaryType),
+          StructField("dnorm", DoubleType)),
+        Some(TableDef("ivfsq_sq", StructType(Seq(
+          StructField("dim", IntegerType), StructField("minv", DoubleType),
+          StructField("step", DoubleType)))))))
+    for ((codec, p, payload, aux) <- layouts) {
+      val idx = new IvfIndex(lake, codec, nLists = 4)
+      assert(idx.vectorTable == TableDef(s"${p}_vectors",
+        StructType(vec ++ payload), partitionKeys = Seq("cell"),
+        primaryKeys = Seq("cand_id"), clusterWrites = true), p)
+      assert(idx.centroidTable == TableDef(s"${p}_centroids", StructType(Seq(
+        StructField("cell", IntegerType),
+        StructField("centroid", ArrayType(DoubleType))))), p)
+      assert(idx.topTable == TableDef(s"${p}_top", StructType(Seq(
+        StructField("branch", IntegerType), StructField("offset", IntegerType),
+        StructField("centroid", ArrayType(DoubleType))))), p)
+      assert(idx.tombTable == TableDef(s"${p}_tombstones",
+        StructType(Seq(StructField("cand_id", LongType))),
+        primaryKeys = Seq("cand_id")), p)
+      assert(idx.radiiTable == TableDef(s"${p}_radii", StructType(Seq(
+        StructField("cell", IntegerType), StructField("rcos", DoubleType)))), p)
+      assert(idx.auxTable == aux, p)
+    }
+    // an explicit prefix renames every table and nothing else
+    val named = new IvfIndex(lake, CellCodec.Sq8, 4, "emb")
+    assert(Seq(named.vectorTable, named.centroidTable, named.topTable,
+        named.tombTable, named.radiiTable, named.auxTable.get).map(_.name)
+      == Seq("emb_vectors", "emb_centroids", "emb_top", "emb_tombstones",
+        "emb_radii", "emb_sq"))
+  }
+
+  test("build rejects a non-integral id column under every codec") {
+    val c = corpus(0 until 20)
+    for (codec <- Seq(CellCodec.Flat, CellCodec.Pq(), CellCodec.Sq8);
+         t <- Seq("string", "double")) {
+      val idx = new IvfIndex(new Lake(spark,
+        Files.createTempDirectory("ivfidxId").toString), codec, nLists = 4)
+      val e = intercept[IllegalArgumentException] {
+        idx.build(c.select($"vec_id".cast(t).as("vec_id"), $"embedding"),
+          "vec_id", "embedding", 1L)
+      }
+      assert(e.getMessage.contains("must be integral"), s"$codec/$t: ${e.getMessage}")
+    }
+  }
+
+  test("Flat rejects rerank: exact cosines leave nothing to refine") {
+    val idx = new IvfIndex(new Lake(spark,
+      Files.createTempDirectory("ivfidxRr").toString), CellCodec.Flat, nLists = 4)
+    val q = corpus(0 until 2)
+    for (search <- Seq(
+        () => idx.search(q, "vec_id", "embedding", k = 3, rerank = 10),
+        () => idx.searchAdaptive(q, "vec_id", "embedding", k = 3, rerank = 10))) {
+      val e = intercept[IllegalArgumentException](search())
+      assert(e.getMessage.contains("rerank"))
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import graft.lake.Lake
-import graft.similarity.{Ann, IvfPqIndex}
+import graft.similarity.{Ann, CellCodec, IvfIndex}
 
 /** Persisted IVFADC index ≡ the one-shot ivfPqTopK, plus the serving
   * properties the composition exists for: the ADC scan's parquet read is
@@ -29,7 +29,8 @@ class IvfPqIndexSpec extends SparkSpec {
 
   test("search after build is byte-equal to one-shot ivfPqTopK; refine recovers ivf") {
     val dir = Files.createTempDirectory("ivfpqidx").toString
-    val idx = new IvfPqIndex(new Lake(spark, dir), nLists = 4, m = 4, ksub = 16)
+    val idx = new IvfIndex(new Lake(spark, dir),
+      CellCodec.Pq(m = 4, ksub = 16), nLists = 4)
     val c = corpus(0 until 400)
     val q = corpus(0 until 6)
     idx.build(c, "vec_id", "embedding", version = 1L)
@@ -63,7 +64,8 @@ class IvfPqIndexSpec extends SparkSpec {
       val qN = corpus(0 until 6)
         .select($"vec_id".cast(cast).as("vec_id"), $"embedding")
       val dir = Files.createTempDirectory(s"ivfpqidx-$tag").toString
-      val idx = new IvfPqIndex(new Lake(spark, dir), nLists = 4, m = 4, ksub = 16)
+      val idx = new IvfIndex(new Lake(spark, dir),
+        CellCodec.Pq(m = 4, ksub = 16), nLists = 4)
       idx.build(cN, "vec_id", "embedding", version = 1L)
       val got = coerce(idx.search(qN, "vec_id", "embedding", k = 5,
         nProbe = 2, rerank = 50))
@@ -82,10 +84,10 @@ class IvfPqIndexSpec extends SparkSpec {
   test("large-k build persists the router; fresh-instance search ≡ one-shot") {
     val dir = Files.createTempDirectory("ivfpqidx5").toString
     val lake = new Lake(spark, dir)
-    new IvfPqIndex(lake, nLists = 300, m = 4, ksub = 16)
+    new IvfIndex(lake, CellCodec.Pq(m = 4, ksub = 16), nLists = 300)
       .build(corpus(0 until 400), "vec_id", "embedding", 1L)
     // fresh instance: quantizer + router reconstructed from the lake only
-    val idx = new IvfPqIndex(lake, nLists = 300, m = 4, ksub = 16)
+    val idx = new IvfIndex(lake, CellCodec.Pq(m = 4, ksub = 16), nLists = 300)
     assert(lake.table(idx.topTable).count() > 0,
       "large-k build must persist non-empty router rows")
     val q = corpus(0 until 6)
@@ -99,7 +101,8 @@ class IvfPqIndexSpec extends SparkSpec {
 
   test("ADC scan is codes-only over probed partitions; refine reads cv") {
     val dir = Files.createTempDirectory("ivfpqidx2").toString
-    val idx = new IvfPqIndex(new Lake(spark, dir), nLists = 4, m = 4, ksub = 16)
+    val idx = new IvfIndex(new Lake(spark, dir),
+      CellCodec.Pq(m = 4, ksub = 16), nLists = 4)
     idx.build(corpus(0 until 400), "vec_id", "embedding", 1L)
     val one = corpus(0 until 1)
     // rerank off: the whole search is the ADC scan — its one parquet read
@@ -127,7 +130,7 @@ class IvfPqIndexSpec extends SparkSpec {
   test("append encodes against frozen codebooks; compact supersedes re-ingests") {
     val dir = Files.createTempDirectory("ivfpqidx3").toString
     val lake = new Lake(spark, dir)
-    val idx = new IvfPqIndex(lake, nLists = 4, m = 4, ksub = 16)
+    val idx = new IvfIndex(lake, CellCodec.Pq(m = 4, ksub = 16), nLists = 4)
     idx.build(corpus(0 until 300), "vec_id", "embedding", 1L)
     idx.append(corpus(300 until 400), "vec_id", "embedding", 2L)
     val q = corpus(0 until 6)
@@ -147,8 +150,9 @@ class IvfPqIndexSpec extends SparkSpec {
     assert(after.head.getSeq[Double](1) == vec(301L).map(_.toDouble))
     assert(lake.table(idx.vectorTable).count() == 400L)
     // pre-build guards fire for both missing tables
-    val fresh = new IvfPqIndex(new Lake(spark,
-      Files.createTempDirectory("ivfpqidx4").toString), nLists = 4)
+    val fresh = new IvfIndex(new Lake(spark,
+      Files.createTempDirectory("ivfpqidx4").toString), CellCodec.Pq(),
+      nLists = 4)
     val e = intercept[IllegalArgumentException] {
       fresh.search(q, "vec_id", "embedding", k = 3)
     }
@@ -170,7 +174,7 @@ class IvfPqIndexSpec extends SparkSpec {
   test("delete hides ids through the ADC and refine paths; compact applies") {
     val dir = Files.createTempDirectory("ivfpqidxDel").toString
     val lake = new Lake(spark, dir)
-    val idx = new IvfPqIndex(lake, nLists = 4, m = 4, ksub = 16)
+    val idx = new IvfIndex(lake, CellCodec.Pq(m = 4, ksub = 16), nLists = 4)
     idx.build(corpus(0 until 400), "vec_id", "embedding", 1L)
     // plant an exact 2×-scaled twin of query 0: cosine 1.0 and rank 1
     // once refine re-ranks exactly (all cells probed)
@@ -196,7 +200,7 @@ class IvfPqIndexSpec extends SparkSpec {
       "search, and the refined-threshold rule never loses recall vs " +
       "its own phase-A budget") {
     val dir = Files.createTempDirectory("ivfpqidx_ad").toString
-    val idx = new IvfPqIndex(new Lake(spark, dir), nLists = 4)
+    val idx = new IvfIndex(new Lake(spark, dir), CellCodec.Pq(), nLists = 4)
     val c = corpus(0 until 400)
     val q = corpus(0 until 6)
     idx.build(c, "vec_id", "embedding", 1L)
@@ -221,7 +225,7 @@ class IvfPqIndexSpec extends SparkSpec {
       "degenerates to the fixed routed probe, and the full cap matches " +
       "the full routed probe at rerank > k") {
     val dir = Files.createTempDirectory("ivfpqidx_adR").toString
-    val idx = new IvfPqIndex(new Lake(spark, dir), nLists = 300)
+    val idx = new IvfIndex(new Lake(spark, dir), CellCodec.Pq(), nLists = 300)
     idx.build(corpus(0 until 400), "vec_id", "embedding", 1L)
     val q = corpus(0 until 6)
     assert(rows(idx.searchAdaptive(q, "vec_id", "embedding", k = 5,

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import graft.lake.Lake
-import graft.similarity.{Ann, IvfSqIndex}
+import graft.similarity.{Ann, CellCodec, IvfIndex}
 
 /** Persisted IVF+SQ8 index: full-probe search right after build is
   * byte-equal to the one-shot sqTopK; the scored scan is codes-only
@@ -29,7 +29,7 @@ class IvfSqIndexSpec extends SparkSpec {
 
   test("full-probe search after build is byte-equal to one-shot sqTopK") {
     val dir = Files.createTempDirectory("ivfsqidx").toString
-    val idx = new IvfSqIndex(new Lake(spark, dir), nLists = 4)
+    val idx = new IvfIndex(new Lake(spark, dir), CellCodec.Sq8, nLists = 4)
     val c = corpus(0 until 400)
     val q = corpus(0 until 6)
     idx.build(c, "vec_id", "embedding", version = 1L)
@@ -43,7 +43,7 @@ class IvfSqIndexSpec extends SparkSpec {
 
   test("scored scan is codes-only over probed partitions; refine reads cv") {
     val dir = Files.createTempDirectory("ivfsqidx2").toString
-    val idx = new IvfSqIndex(new Lake(spark, dir), nLists = 4)
+    val idx = new IvfIndex(new Lake(spark, dir), CellCodec.Sq8, nLists = 4)
     idx.build(corpus(0 until 400), "vec_id", "embedding", 1L)
     val one = corpus(0 until 1)
     val sqOnly = idx.search(one, "vec_id", "embedding", k = 3, nProbe = 1)
@@ -67,7 +67,7 @@ class IvfSqIndexSpec extends SparkSpec {
 
   test("append encodes against frozen bounds; planted copies rank-1 via refine") {
     val dir = Files.createTempDirectory("ivfsqidx3").toString
-    val idx = new IvfSqIndex(new Lake(spark, dir), nLists = 4)
+    val idx = new IvfIndex(new Lake(spark, dir), CellCodec.Sq8, nLists = 4)
     idx.build(corpus(0 until 300), "vec_id", "embedding", 1L)
     // appended 0.5-scaled copies of stored vectors: identical normalized
     // form -> identical codes under the FROZEN bounds -> the refine
@@ -87,7 +87,7 @@ class IvfSqIndexSpec extends SparkSpec {
   test("delete hides rows immediately; compact is byte-equal; re-append revives") {
     val dir = Files.createTempDirectory("ivfsqidx4").toString
     val lake = new Lake(spark, dir)
-    val idx = new IvfSqIndex(lake, nLists = 4)
+    val idx = new IvfIndex(lake, CellCodec.Sq8, nLists = 4)
     val c = corpus(0 until 300)
     val q = corpus(0 until 4)
     idx.build(c, "vec_id", "embedding", 1L)
@@ -111,7 +111,7 @@ class IvfSqIndexSpec extends SparkSpec {
       "(decoded-space radii keep the bound sound for the quantized " +
       "ranking), after build AND after append") {
     val dir = Files.createTempDirectory("ivfsqidx_ad").toString
-    val idx = new IvfSqIndex(new Lake(spark, dir), nLists = 4)
+    val idx = new IvfIndex(new Lake(spark, dir), CellCodec.Sq8, nLists = 4)
     idx.build(corpus(0 until 300), "vec_id", "embedding", 1L)
     val q = corpus(0 until 6)
     def full() = rows(idx.search(q, "vec_id", "embedding", k = 5, nProbe = 4))
@@ -141,7 +141,7 @@ class IvfSqIndexSpec extends SparkSpec {
       "full-cap byte-parity certificate over byte codes, after build " +
       "AND append, incl. rerank > k") {
     val dir = Files.createTempDirectory("ivfsqidx_adR").toString
-    val idx = new IvfSqIndex(new Lake(spark, dir), nLists = 300)
+    val idx = new IvfIndex(new Lake(spark, dir), CellCodec.Sq8, nLists = 300)
     idx.build(corpus(0 until 300), "vec_id", "embedding", 1L)
     val q = corpus(0 until 6)
     // nProbe/cap 1000 ≥ nCells — both paths cap at "all cells"

@@ -7,7 +7,7 @@ import graft.similarity.TombstoneStore
 
 /** The shared version-aware tombstone side table: the no-op-delete and
   * crash-ordering guards that every persisted index's delete path
-  * inherits (IvfIndex / IvfPqIndex / SemDeDupIndex / IncrementalDedup). */
+  * inherits (IvfIndex under every codec / SemDeDupIndex / IncrementalDedup). */
 class TombstoneStoreSpec extends SparkSpec {
   import spark.implicits._
 
