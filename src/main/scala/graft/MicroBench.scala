@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * corpus with the noop sink (guide §1.4) — used to measure candidate
   * expression-layer rewrites in isolation before integrating them.
   *
-  * args: <nDocs> [arm ...]  (default: all arms, 2 passes each)
+  * args: <nDocs> [arm ...]  (arms: old, new, tc, kernels; default old new)
   */
 object MicroBench {
   def main(args: Array[String]): Unit = {
@@ -102,6 +102,7 @@ object MicroBench {
         .head().getLong(0)
       println(s"[microbench] tokenCount parity sum-of-diffs = $tcDiff (want 0)")
     }
+    if (arms("kernels")) kernelArm(spark, n)
     if (arms("old")) time("docShingles-HOF", oldShingles($"text"))
     if (arms("new")) time("docShingles-expr", newShingles($"text"))
     if (arms("old")) time("spanGrams-HOF", oldGrams($"text"))
@@ -113,8 +114,88 @@ object MicroBench {
       array_sort(oldShingles($"text")).as("hs"))
     val b = docs.limit(2000).select($"doc_id",
       array_sort(newShingles($"text")).as("hs"))
-    val diff = a.except(b).count() + b.except(a).count()
-    println(s"[microbench] parity diff rows = $diff (want 0)")
+    if (arms("old") || arms("new")) {
+      val diff = a.except(b).count() + b.except(a).count()
+      println(s"[microbench] parity diff rows = $diff (want 0)")
+    }
     spark.stop()
+  }
+
+  /** Per-row cost of the kernels whose loop the generated code used to
+    * inline (array_dot, array_cosine, pack_sign_bits, adc_score,
+    * sq_cosine, nearest_cell). Each input group (two 64-d vectors, 64
+    * counters, 8 PQ codes, 64 SQ8 bytes) is built for `n` seeded rows and
+    * checkpointed outside the timed region; each kernel is reduced into
+    * the noop sink over 4 unioned scans of it (so job start-up is a small
+    * share of a pass), 9 times, and the median wall and ns/row are
+    * printed. Kernels are reached only through their constructors,
+    * so the same source times any build that has them. */
+  private def kernelArm(spark: SparkSession, n: Long): Unit = {
+    import spark.implicits._
+    def vec(salt: Int): Column =
+      array((0 until 64).map(j => sin($"id" * lit(0.37 + salt) + lit(j * 1.3))): _*)
+    val sc = spark.sparkContext
+    val rnd = new scala.util.Random(7)
+    val cents = Array.fill(16, 64)(rnd.nextGaussian())
+    val bcCents = sc.broadcast(cents)
+    val bcCn2 = sc.broadcast(cents.map(_.map(x => x * x).sum))
+    val bcDtabs = sc.broadcast(Array.fill(32, 8 * 16)(rnd.nextDouble()))
+    val bcQuant = sc.broadcast((Array.fill(64)(-1.0), Array.fill(64)(2.0 / 255)))
+    val bcWeights = sc.broadcast(Array.fill(32)((Array.fill(64)(rnd.nextGaussian()),
+      rnd.nextGaussian())))
+    val qi = pmod($"id", lit(32L)).cast("int").as("qi")
+    val groups = Seq(
+      Seq(vec(0).as("a"), vec(1).as("b")) -> Seq(
+        "array_dot" -> expr(graft.functions.ArrayDot(e($"a"), e($"b"))),
+        "array_cosine" -> expr(graft.functions.ArrayCosine(e($"a"), e($"b"))),
+        "nearest_cell" -> similarity.MicroKernels.nearestCell($"a", bcCents, bcCn2)),
+      Seq(array((0 until 64).map(j =>
+          pmod(xxhash64($"id", lit(j)), lit(7L)) - lit(3L)): _*).as("counts")) -> Seq(
+        "pack_sign_bits" -> expr(graft.functions.PackSignBits(e($"counts")))),
+      Seq(array((0 until 8).map(j =>
+          pmod(xxhash64($"id", lit(j)), lit(16L)).cast("int")): _*).as("codes"), qi) -> Seq(
+        "adc_score" -> similarity.MicroKernels.adcScore($"codes", $"qi", bcDtabs)),
+      Seq(similarity.MicroKernels.sqEncode(vec(0), bcQuant).as("sq"), qi) -> Seq(
+        "sq_cosine" -> similarity.MicroKernels.sqCosine($"sq._1", $"sq._2", $"qi",
+          bcWeights)))
+    val (passes, scans) = (9, 4)
+    groups.foreach { case (inputs, kernels) =>
+      val rows = spark.range(n).select(inputs: _*).localCheckpoint()
+      val scanned = Seq.fill(scans)(rows).reduce(_ union _)
+      kernels.foreach { case (name, k) =>
+        val walls = (1 to passes).map { _ =>
+          val t0 = System.nanoTime()
+          scanned.select(max(k)).write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        }.sorted
+        val med = walls(passes / 2)
+        println(f"[microbench] kernel $name rows=${n * scans} median=$med%.3fs " +
+          f"ns_per_row=${med * 1e9 / (n * scans)}%.1f " +
+          f"walls=${walls.map(w => f"$w%.3f").mkString(",")}")
+      }
+      rows.unpersist(blocking = true)
+    }
+  }
+
+  private def e(c: Column) = org.apache.spark.sql.GraftColumnBridge.expression(c)
+  private def expr(x: org.apache.spark.sql.catalyst.expressions.Expression) =
+    org.apache.spark.sql.GraftColumnBridge.column(x)
+}
+
+package similarity {
+  /** Column forms of the similarity-private kernels [[MicroBench]] times. */
+  private[graft] object MicroKernels {
+    import org.apache.spark.broadcast.Broadcast
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    def sqEncode(v: Column, q: Broadcast[(Array[Double], Array[Double])]): Column =
+      column(SqEncode(expression(v), q))
+    def adcScore(codes: Column, qi: Column, d: Broadcast[Array[Array[Double]]]): Column =
+      column(AdcScore(expression(codes), expression(qi), d))
+    def sqCosine(codes: Column, dnorm: Column, qi: Column,
+        w: Broadcast[Array[(Array[Double], Double)]]): Column =
+      column(SqCosine(expression(codes), expression(dnorm), expression(qi), w))
+    def nearestCell(v: Column, cents: Broadcast[Array[Array[Double]]],
+        cn2: Broadcast[Array[Double]]): Column =
+      column(NearestCell(expression(v), cents, cn2))
   }
 }

@@ -222,16 +222,16 @@ object Profile {
     val bcPlain = spark.sparkContext.broadcast(booksPlain)
     step(spark, "encode rotated (noop)") {
       c.select($"cand_id",
-          Ann.pqEncodeUdf(bc)(Ann.rotateCol($"cv", rot)).as("codes"))
+          Ann.pqEncoder(bc)(Ann.rotateCol($"cv", rot)).as("codes"))
         .write.format("noop").mode("overwrite").save()
     }
     step(spark, "encode rotated 2nd (jit)") {
       c.select($"cand_id",
-          Ann.pqEncodeUdf(bc)(Ann.rotateCol($"cv", rot)).as("codes"))
+          Ann.pqEncoder(bc)(Ann.rotateCol($"cv", rot)).as("codes"))
         .write.format("noop").mode("overwrite").save()
     }
     step(spark, "encode plain (noop)") {
-      c.select($"cand_id", Ann.pqEncodeUdf(bcPlain)($"cv").as("codes"))
+      c.select($"cand_id", Ann.pqEncoder(bcPlain)($"cv").as("codes"))
         .write.format("noop").mode("overwrite").save()
     }
     step(spark, "rotate only (noop)") {

@@ -1,46 +1,31 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Fused codegen'd cosine similarity over two `array<double>` columns:
   * ONE traversal accumulates Σab, Σa², Σb² (vs three separate dot-product
-  * passes), then cos = Σab / (√Σa²·√Σb²). Null when either norm is zero
-  * (matches the relational zero-norm guard) or either array is null.
-  * Skips null elements pairwise, mirroring [[ArrayDot]]. The accumulation
-  * order and the final formula are exactly the decomposed form's, so
-  * results are bitwise-identical to dot/norm composition (and to the
-  * DuckDB oracle's list_dot_product formula). */
-case class ArrayCosine(left: Expression, right: Expression)
-    extends BinaryExpression {
+  * passes), then cos = Σab / (√Σa²·√Σb²). NULL when the denominator is
+  * not positive (zero norm — the relational zero-norm guard — or a NaN
+  * element) or either array is null; an `Inf` element gives NaN, a value,
+  * not NULL. Skips null elements pairwise, mirroring [[ArrayDot]]. The
+  * accumulation order and the final formula are exactly the decomposed
+  * form's, so results are bitwise-identical to dot/norm composition (and
+  * to the DuckDB oracle's list_dot_product formula). */
+object ArrayCosine extends Kernel("array_cosine", Seq(Kernel.Doubles, Kernel.Doubles),
+    "two array<double> inputs", DoubleType, NullRule.Flagged) {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType): Boolean = t match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"array_cosine needs two array<double> inputs, got ${left.dataType} / ${right.dataType}")
-  }
+  def apply(left: Expression, right: Expression): Expression =
+    KernelExpression(this, Seq(left, right))
 
-  override def dataType: DataType = DoubleType
+  def eval(in: Array[Any], st: Array[AnyRef]): Any =
+    kernel(in(0).asInstanceOf[ArrayData], in(1).asInstanceOf[ArrayData],
+      st(0).asInstanceOf[Array[Boolean]])
 
-  // null also for zero-norm inputs, not only null inputs
-  override def nullable: Boolean = true
-
-  override def prettyName: String = "array_cosine"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def kernel(x: ArrayData, y: ArrayData, isNull: Array[Boolean]): Double = {
     val n = math.min(x.numElements(), y.numElements())
-    var sab = 0.0
-    var saa = 0.0
-    var sbb = 0.0
+    var sab = 0.0; var saa = 0.0; var sbb = 0.0
     var i = 0
     while (i < n) {
       if (!x.isNullAt(i) && !y.isNullAt(i)) {
@@ -53,36 +38,7 @@ case class ArrayCosine(left: Expression, right: Expression)
       i += 1
     }
     val denom = math.sqrt(saa) * math.sqrt(sbb)
-    if (denom > 0.0) sab / denom else null
+    isNull(0) = !(denom > 0.0)
+    sab / denom
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val sab = ctx.freshName("sab")
-      val saa = ctx.freshName("saa")
-      val sbb = ctx.freshName("sbb")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      val denom = ctx.freshName("denom")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $sab = 0.0; double $saa = 0.0; double $sbb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    double $xi = $a.getDouble($i);
-         |    double $yi = $b.getDouble($i);
-         |    $sab += $xi * $yi; $saa += $xi * $xi; $sbb += $yi * $yi;
-         |  }
-         |}
-         |double $denom = java.lang.Math.sqrt($saa) * java.lang.Math.sqrt($sbb);
-         |if ($denom > 0.0) { ${ev.value} = $sab / $denom; }
-         |else { ${ev.isNull} = true; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ArrayCosine =
-    copy(left = newLeft, right = newRight)
 }

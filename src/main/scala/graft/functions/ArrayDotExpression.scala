@@ -1,79 +1,42 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
-/** Native codegen'd dot product over two `array<double>` columns — the hot
-  * inner loop of every cosine-similarity scan (brute-force ANN, LSH/IVF
-  * verification, embedding near-dup).
+/** Native codegen'd dot product over two `array<double>` columns — the
+  * hot inner loop of every cosine-similarity scan (brute-force ANN,
+  * LSH/IVF verification, embedding near-dup).
   *
   * Why an Expression and not `aggregate(zip_with(...))`: Spark's
   * higher-order-function lambdas are INTERPRETED — each element pays
-  * per-element closure dispatch and boxing. This expression participates
-  * in whole-stage codegen and compiles to a primitive `for` loop over the
-  * unsafe array words (one multiply-add per dimension, no allocation).
+  * per-element closure dispatch and boxing. This kernel participates in
+  * whole-stage codegen as one static call per row into a primitive loop
+  * over the unsafe array words (one multiply-add per dimension, no
+  * allocation).
   *
   * Semantics: Σ aᵢ·bᵢ over the common prefix length; null ELEMENTS are
-  * skipped (contribute 0); a null ARRAY yields null (standard
-  * BinaryExpression null propagation). Embedding pipelines produce equal-
-  * length, null-free vectors — the guards are for robustness, not a
-  * semantic contract.
-  */
-case class ArrayDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+  * skipped (contribute 0); a null ARRAY yields null. Embedding pipelines
+  * produce equal-length, null-free vectors — the guards are for
+  * robustness, not a semantic contract. */
+object ArrayDot extends Kernel("array_dot", Seq(Kernel.Doubles, Kernel.Doubles),
+    "two array<double> inputs", DoubleType) {
 
   // callers (VectorFunctions.dot) cast both sides to array<double>; the
-  // check guards direct construction (AbstractDataType is private[sql],
-  // so ExpectsInputTypes is not available to third-party expressions)
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType): Boolean = t match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"array_dot needs two array<double> inputs, got ${left.dataType} / ${right.dataType}")
-  }
+  // type check guards direct construction
+  def apply(left: Expression, right: Expression): Expression =
+    KernelExpression(this, Seq(left, right))
 
-  override def dataType: DataType = DoubleType
+  def eval(in: Array[Any], st: Array[AnyRef]): Any =
+    kernel(in(0).asInstanceOf[ArrayData], in(1).asInstanceOf[ArrayData])
 
-  override def prettyName: String = "array_dot"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def kernel(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
+    var s = 0.0; var i = 0
     while (i < n) {
       if (!x.isNullAt(i) && !y.isNullAt(i)) s += x.getDouble(i) * y.getDouble(i)
       i += 1
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    $s += $a.getDouble($i) * $b.getDouble($i);
-         |  }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ArrayDot =
-    copy(left = newLeft, right = newRight)
 }

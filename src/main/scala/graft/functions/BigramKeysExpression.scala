@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -12,7 +9,7 @@ import org.apache.spark.sql.types._
   * the corpus-facing front of [[TextFunctions.bigramLogScore]] (x56) as
   * ONE codegen'd pass.
   *
-  * Why an Expression: the retired form built the bigram stream with a
+  * Why a kernel: the retired form built the bigram stream with a
   * higher-order `transform(sequence(...), i -> struct(element_at...))`
   * — Spark's higher-order array functions are CodegenFallback, so every
   * corpus document paid a per-row interpreted eval inside the generated
@@ -21,7 +18,7 @@ import org.apache.spark.sql.types._
   * And because the three key hashes were taken AFTER
   * the explode, every position hashed w1 twice (once as k1, once as the
   * first chain step of bk) and the exploded rows carried raw token
-  * strings. This expression walks the token array once: n token hashes,
+  * strings. This kernel walks the token array once: n token hashes,
   * then one chained hash per bigram — 2n-1 string hashes total instead
   * of 4(n-1) — and emits fixed-width longs, so nothing downstream of
   * the tokenizer moves strings at all.
@@ -37,41 +34,18 @@ import org.apache.spark.sql.types._
   *
   * NULL for arrays with fewer than 2 tokens — the retired
   * `when(size >= 2, ...)` contract (explode then drops the doc). */
-case class BigramKeys(child: Expression) extends UnaryExpression {
+object BigramKeys extends Kernel("bigram_keys", Seq(ArrayType(StringType)),
+    "array<string>", ArrayType(StructType(Seq(
+      StructField("bk", LongType, nullable = false),
+      StructField("k1", LongType, nullable = false),
+      StructField("k2", LongType, nullable = false))), containsNull = false),
+    NullRule.Returned) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bigram_keys needs array<string>, got $t")
-  }
+  def eval(in: Array[Any], st: Array[AnyRef]): Any = kernel(in(0).asInstanceOf[ArrayData])
 
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("bk", LongType, nullable = false),
-    StructField("k1", LongType, nullable = false),
-    StructField("k2", LongType, nullable = false))), containsNull = false)
-
-  // null for sub-bigram docs, not only null inputs
-  override def nullable: Boolean = true
-
-  override def prettyName: String = "bigram_keys"
-
-  override protected def nullSafeEval(toksAny: Any): Any =
-    BigramKeys.kernel(toksAny.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, toks => s"""
-       |${ev.value} = graft.functions.BigramKeys.kernel($toks);
-       |if (${ev.value} == null) { ${ev.isNull} = true; }
-     """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object BigramKeys {
   private val Seed = 42L
 
-  /** One pass over the token array; see the class scaladoc for the
+  /** One pass over the token array; see the scaladoc above for the
     * parity argument. Returns null below 2 tokens. */
   def kernel(toks: ArrayData): ArrayData = {
     val n = toks.numElements()
@@ -88,8 +62,7 @@ object BigramKeys {
     while (i < n - 1) {
       val t2 = toks.getUTF8String(i + 1)
       val bk = if (t2 == null) th(i) else XXH64.hashUTF8String(t2, th(i))
-      out(i) = new GenericInternalRow(
-        Array[Any](bk, th(i), th(i + 1))): InternalRow
+      out(i) = new GenericInternalRow(Array[Any](bk, th(i), th(i + 1)))
       i += 1
     }
     new GenericArrayData(out)
@@ -97,6 +70,6 @@ object BigramKeys {
 
   /** Column form. */
   def bigramKeys(tokens: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      BigramKeys(org.apache.spark.sql.GraftColumnBridge.expression(tokens)))
+    org.apache.spark.sql.GraftColumnBridge.column(KernelExpression(this,
+      Seq(org.apache.spark.sql.GraftColumnBridge.expression(tokens))))
 }

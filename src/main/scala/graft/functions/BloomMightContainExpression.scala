@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
+import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.types.{BooleanType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Codegen'd Bloom-filter membership probe over a broadcast sketch:
@@ -13,56 +10,30 @@ import org.apache.spark.util.sketch.BloomFilter
   * pre-filter of [[graft.dedup.Dedup.decontaminateBloom]] and its
   * streaming twin [[graft.streaming.DocStream.streamingDecontaminateBloom]].
   *
-  * Why an Expression and not a scalar UDF: the probe sits on the
-  * per-shingle hot path (every shingle of every corpus document passes
-  * through it exactly once), and a Scala UDF there breaks whole-stage
-  * codegen around the projection AND pays boxing + closure dispatch per
-  * hash — the same interpreted-lambda class the batch minhash band keys
-  * eliminated (README scale notes). Spark's own
-  * `BloomFilterMightContain` is internal (runtime row-level filtering
-  * only), so the engine carries its own: the expression holds the
-  * BROADCAST handle (the bits ship once per executor, never per task
-  * binary), resolves it to the filter object once per generated class
-  * via an immutable member, and probes inline inside the fused stage.
+  * Why a kernel and not a scalar UDF: the probe sits on the per-shingle
+  * hot path (every shingle of every corpus document passes through it
+  * exactly once), and a Scala UDF there breaks whole-stage codegen
+  * around the projection AND pays boxing + closure dispatch per hash —
+  * the same interpreted-lambda class the batch minhash band keys
+  * eliminated (README scale notes). Spark's own `BloomFilterMightContain`
+  * is internal (runtime row-level filtering only), so the engine carries
+  * its own: the expression holds the BROADCAST handle (the bits ship
+  * once per executor, never per task binary), resolves it to the filter
+  * object once per generated class, and probes inside the fused stage.
   *
   * Determinism: the probe is a pure function of (filter bits, hash) —
-  * same broadcast, same answer, on driver and executors alike. Null
-  * hashes yield null (standard unary null semantics). */
-case class BloomMightContain(child: Expression, bloom: Broadcast[BloomFilter])
-    extends UnaryExpression {
+  * same broadcast, same answer, on driver and executors alike. */
+object BloomMightContain extends Kernel("bloom_might_contain", Seq(LongType),
+    "a long hash input", BooleanType,
+    stateTypes = Seq(classOf[BloomFilter].getName)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bloom_might_contain needs a long hash input, got $t")
-  }
-
-  override def dataType: DataType = BooleanType
-
-  override def prettyName: String = "bloom_might_contain"
-
-  override protected def nullSafeEval(h: Any): Any =
-    bloom.value.mightContainLong(h.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcName = classOf[Broadcast[_]].getName
-    val filterName = classOf[BloomFilter].getName
-    val bcRef = ctx.addReferenceObj("bloomBc", bloom, bcName)
-    // one .value() resolution per generated class, not per row
-    val filterVar = ctx.addMutableState(filterName, "bloomFilter",
-      v => s"$v = ($filterName) $bcRef.value();")
-    nullSafeCodeGen(ctx, ev, h =>
-      s"${ev.value} = $filterVar.mightContainLong($h);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object BloomMightContain {
-  /** Column wrapper: true iff `hash` might be in the broadcast filter. */
+  /** Column form: true iff `hash` might be in the broadcast filter. */
   def apply(hash: Column, bloom: Broadcast[BloomFilter]): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      BloomMightContain(
-        org.apache.spark.sql.GraftColumnBridge.expression(hash), bloom))
+    GraftColumnBridge.column(KernelExpression(this,
+      Seq(GraftColumnBridge.expression(hash)), Seq(bloom)))
+
+  def eval(in: Array[Any], st: Array[AnyRef]): Any =
+    kernel(in(0).asInstanceOf[Long], st(0).asInstanceOf[BloomFilter])
+
+  def kernel(h: Long, bloom: BloomFilter): Boolean = bloom.mightContainLong(h)
 }

@@ -1,57 +1,32 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode NFC composition of a string column via the JDK's
   * `java.text.Normalizer` — the first stage of
   * [[TextFunctions.normalizeText]].
   *
-  * Why an Expression and not the scalar UDF it replaces: normalizeText
-  * runs once per corpus document in every content-keying and curation
-  * query (x1's md5 keying, x63/x79/x95), and a Scala UDF there pays
-  * closure dispatch + boxing per row and breaks whole-stage codegen
-  * fusion around the projection. The normalization itself is one static
-  * JDK call; the expression inlines it (~20 generated bytecodes) and
-  * keeps the surrounding regexp_replace chain inside one fused stage.
-  * Deterministic: Normalizer.normalize is a pure function of the
+  * Why a kernel and not the scalar UDF it replaces: normalizeText runs
+  * once per corpus document in every content-keying and curation query
+  * (x1's md5 keying, x63/x79/x95), and a Scala UDF there pays closure
+  * dispatch + boxing per row and breaks whole-stage codegen fusion around
+  * the projection. The normalization itself is one static JDK call; the
+  * kernel keeps the surrounding regexp_replace chain inside one fused
+  * stage. Deterministic: Normalizer.normalize is a pure function of the
   * codepoint sequence (Unicode normalization is version-stable for
   * assigned codepoints; the JDK pin is the same one x41/x71's
   * literal-oracle discipline documents). */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
+object NfcNormalize extends Kernel("nfc_normalize", Seq(StringType),
+    "a string input", StringType) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"nfc_normalize needs a string input, got $t")
-  }
+  /** Column form: NFC-composed form of `text`. */
+  def apply(text: Column): Column = GraftColumnBridge.column(
+    KernelExpression(this, Seq(GraftColumnBridge.expression(text))))
 
-  override def dataType: DataType = StringType
+  def eval(in: Array[Any], st: Array[AnyRef]): Any = kernel(in(0).asInstanceOf[UTF8String])
 
-  override def prettyName: String = "nfc_normalize"
-
-  override protected def nullSafeEval(s: Any): Any =
-    UTF8String.fromString(java.text.Normalizer.normalize(
-      s.asInstanceOf[UTF8String].toString, java.text.Normalizer.Form.NFC))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"""${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(
-         |  java.text.Normalizer.normalize($s.toString(),
-         |    java.text.Normalizer.Form.NFC));
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object NfcNormalize {
-  /** Column wrapper: NFC-composed form of `text`. */
-  def apply(text: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      NfcNormalize(org.apache.spark.sql.GraftColumnBridge.expression(text)))
+  def kernel(s: UTF8String): UTF8String = UTF8String.fromString(
+    java.text.Normalizer.normalize(s.toString, java.text.Normalizer.Form.NFC))
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -12,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * TF-IDF, BM25, NB, chunking and shingle paths all start here, once
   * per corpus document).
   *
-  * Why an Expression and not `filter(split(text, "\\s+"), ...)` or
+  * Why a kernel and not `filter(split(text, "\\s+"), ...)` or
   * `regexp_extract_all(text, "\\S+")`: Java's `\s` is the five ASCII
   * delimiters + space (0x09-0x0D, 0x20) and nothing else, and in UTF-8
   * a multi-byte code point never contains an ASCII-range byte — so the
@@ -31,34 +29,29 @@ import org.apache.spark.unsafe.types.UTF8String
   * of non-\s bytes, in order; empty/blank → empty array; null → null) —
   * spec-pinned in DedupAnnSpec against the filter(split) form on
   * whitespace/unicode edges. */
-case class WhitespaceTokens(child: Expression) extends UnaryExpression {
+object WhitespaceTokens extends Kernel("whitespace_tokens", Seq(StringType),
+    "string", ArrayType(StringType, containsNull = false)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"whitespace_tokens needs string, got $t")
-  }
+  def apply(child: Expression): Expression = KernelExpression(this, Seq(child))
 
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
+  def eval(in: Array[Any], st: Array[AnyRef]): Any = kernel(in(0).asInstanceOf[UTF8String])
 
-  override def prettyName: String = "whitespace_tokens"
-
-  override protected def nullSafeEval(sAny: Any): Any =
-    WhitespaceTokens.kernel(sAny.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.WhitespaceTokens.kernel($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object WhitespaceTokens {
   /** Java-regex `\s` byte set: HT VT LF FF CR (0x09-0x0D) and space. */
-  @inline private def isWs(b: Byte): Boolean =
+  @inline private[functions] def isWs(b: Byte): Boolean =
     b == 0x20 || (b >= 0x09 && b <= 0x0D)
+
+  /** Maximal runs of non-`\s` bytes: the exact size of the output array,
+    * so neither token pass grows a buffer. */
+  private[functions] def countTokens(bytes: Array[Byte]): Int = {
+    var count = 0; var i = 0; var inTok = false
+    while (i < bytes.length) {
+      val ws = isWs(bytes(i))
+      if (!ws && !inTok) { count += 1; inTok = true }
+      else if (ws) inTok = false
+      i += 1
+    }
+    count
+  }
 
   def kernel(s: UTF8String): ArrayData = {
     // one defensive copy of the document (getBytes is the backing array
@@ -66,20 +59,11 @@ object WhitespaceTokens {
     // token below is a zero-copy slice of it
     val bytes = s.getBytes
     val n = bytes.length
-    // count tokens first: exact-sized output array, no growth copies
-    var count = 0
-    var i = 0
-    var inTok = false
-    while (i < n) {
-      val ws = isWs(bytes(i))
-      if (!ws && !inTok) { count += 1; inTok = true }
-      else if (ws) inTok = false
-      i += 1
-    }
+    val count = countTokens(bytes)
     if (count == 0) return new GenericArrayData(new Array[Any](0))
     val out = new Array[Any](count)
     var k = 0
-    i = 0
+    var i = 0
     while (i < n) {
       if (!isWs(bytes(i))) {
         val start = i

@@ -4116,7 +4116,7 @@ object ExtraQueries {
     // Persisted IVF+SQ8 index gate (quarter subset — the x87 discipline):
     // a full-probe search right after build must be BYTE-EQUAL to the
     // one-shot sqTopK (same hash sample trains both the coarse quantizer
-    // and the SQ bounds; scoring shares the indexedSqWeights/sqDotUdf
+    // and the SQ bounds; scoring shares the indexedSqWeights/sqScorer
     // kernel), and pruned probes must clear a recall floor vs brute
     // force. Rows-only (k-means + byte codes have no DuckDB twin); the
     // sq MATH is value-oracled through x39's arm and AnnSq8Spec.

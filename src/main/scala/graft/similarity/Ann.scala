@@ -607,7 +607,7 @@ object Ann {
     // ||cen||² − 2·(v·cen)/||v|| (≡ L2 distance of the normalized vector),
     // computed on the RAW vector — no sort, no index array, no normalized
     // copy. This is the one full-corpus pass — it runs as the native
-    // codegen'd [[NearestCell]] expression (bit-identical arithmetic to
+    // [[NearestCell]] kernel (bit-identical arithmetic to
     // the scalar UDF it replaced; no per-row Seq conversion, no fusion
     // break).
     c.withColumn("cell", org.apache.spark.sql.GraftColumnBridge.column(
@@ -1301,7 +1301,7 @@ object Ann {
     // anything: sample, encode, and query dtabs all live in the rotated
     // space (normalization commutes — the rotation preserves norms, and
     // hashSample's output is already normalized, so the rotated sample
-    // stays on the sphere and pqEncodeUdf's in-register normalize of a
+    // stays on the sphere and pqEncoder's in-register normalize of a
     // rotated RAW vector equals rotating its normalized form). The
     // refine stage reads the ORIGINAL floats — exact cosine is
     // rotation-invariant, so refined scores are byte-identical between
@@ -1327,25 +1327,25 @@ object Ann {
           "__qrot")
       }
     val bc = sc.broadcast(books)
-    val cCodes = c.select(col("cand_id"), pqEncodeUdf(bc)(encodeInput).as("codes"))
+    val cCodes = c.select(col("cand_id"), pqEncoder(bc)(encodeInput).as("codes"))
     val (qIdx, bcD) = indexedDtabs(qFrame, idCol, qVecCol, bc)
     val scored = cCodes.crossJoin(broadcast(qIdx))
       .filter(col("query_id") =!= col("cand_id"))
       .withColumn("cosine",
-        round(lit(1.0) - adcAtUdf(bcD)(col("codes"), col("qi")) / lit(2.0), 6))
+        round(lit(1.0) - adcScorer(bcD)(col("codes"), col("qi")) / lit(2.0), 6))
       .drop("codes", "qi")
     refine(scored, c, queries, idCol, vecCol, k, rerank)
   }
 
   /** PQ encoder factory: vector column → array<int> codes column,
-    * through the native codegen'd [[PqEncode]] expression (normalize
-    * in-register, zero vectors pass through — the withNorm contract;
-    * codes bit-equal to the scalar UDF it replaced). The one-sweep
+    * through the [[PqEncode]] kernel (normalize in-register, zero vectors
+    * pass through — the withNorm contract; codes bit-equal to the scalar
+    * UDF it replaced). The one-sweep
     * corpus encode shared by [[pqTopK]], [[ivfPqTopK]] and
     * [[IvfIndex]] — it runs once per corpus row of every build/
     * append/compact pass, where the UDF's per-row Seq conversion was
     * pure overhead on a kernel-dominated loop. */
-  private[graft] def pqEncodeUdf(
+  private[graft] def pqEncoder(
       bc: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]])
       : Column => Column =
     v => org.apache.spark.sql.GraftColumnBridge.column(
@@ -1379,18 +1379,11 @@ object Ann {
       out
     }
 
-  /** m table lookups per candidate — the whole ADC scoring kernel. The
-    * query's distance table comes out of a JVM broadcast indexed by the
-    * row's `qi`, NOT a join column: a dtab is m·ksub doubles (512 at the
-    * defaults), and carrying it as an array column costs a full Catalyst
-    * array deserialization per SCORED row — measured 13.5 s for an
-    * 8-probe search over 2M vectors, vs ~1 s with the broadcast lookup.
-    * Only the 8-int codes array crosses the UDF boundary per row. */
   /** ADC scorer factory: (codes, qi) columns → score column, through
-    * the native codegen'd [[AdcScore]] expression (bit-equal to the
-    * scalar UDF it replaced — the per-candidate scan kernel must not
-    * pay a Seq conversion per row). */
-  private[similarity] def adcAtUdf(
+    * the [[AdcScore]] kernel (bit-equal to the scalar UDF it replaced —
+    * the per-candidate scan kernel must not pay a Seq conversion per
+    * row). */
+  private[similarity] def adcScorer(
       bc: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]])
       : (Column, Column) => Column =
     (codes, qi) => org.apache.spark.sql.GraftColumnBridge.column(
@@ -1399,7 +1392,7 @@ object Ann {
         org.apache.spark.sql.GraftColumnBridge.expression(qi), bc))
 
   /** The query batch's ADC distance tables, driver-collected in
-    * query_id order (|Q|·m·ksub doubles — tiny) for the [[adcAtUdf]]
+    * query_id order (|Q|·m·ksub doubles — tiny) for the [[adcScorer]]
     * broadcast, plus the (query_id, qi) relation that carries each row's
     * table index through the scoring join. Shared by [[pqTopK]],
     * [[ivfPqTopK]] and [[IvfIndex]] so every path scores through the
@@ -1469,21 +1462,21 @@ object Ann {
 
   /** SQ8 encoder factory: vector column → struct<_1: binary codes,
     * _2: double decoded norm> column, through the native codegen'd
-    * [[SqEncode]] expression (normalize in-register — the pqEncodeUdf
+    * [[SqEncode]] kernel (normalize in-register — the [[pqEncoder]]
     * contract; quantize each dimension to one byte against the trained
     * (min, step); carry the DECODED norm so scoring stays codes-only;
     * bit-equal to the scalar UDF it replaced). 4 bytes/dim →
     * 1 byte/dim. */
-  private[graft] def sqEncodeUdf(
+  private[graft] def sqEncoder(
       bc: org.apache.spark.broadcast.Broadcast[(Array[Double], Array[Double])])
       : Column => Column =
     v => org.apache.spark.sql.GraftColumnBridge.column(
       SqEncode(org.apache.spark.sql.GraftColumnBridge.expression(v), bc))
 
   /** SQ8 scorer factory: (codes, dnorm, qi) columns → cosine column,
-    * through the native codegen'd [[SqCosine]] expression (bit-equal to
-    * the scalar UDF it replaced; NULL on zero-norm candidates). */
-  private[similarity] def sqDotUdf(
+    * through the [[SqCosine]] kernel (bit-equal to the scalar UDF it
+    * replaced; NULL on zero-norm candidates). */
+  private[similarity] def sqScorer(
       bc: org.apache.spark.broadcast.Broadcast[Array[(Array[Double], Double)]])
       : (Column, Column, Column) => Column =
     (codes, dnorm, qi) => org.apache.spark.sql.GraftColumnBridge.column(
@@ -1508,19 +1501,19 @@ object Ann {
         asDouble(col(vecCol)).as("cv"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bcQ = spark.sparkContext.broadcast(trainSq(hashSample(c)))
-    val cCodes = c.select(col("cand_id"), sqEncodeUdf(bcQ)(col("cv")).as("sq"))
+    val cCodes = c.select(col("cand_id"), sqEncoder(bcQ)(col("cv")).as("sq"))
     val (qIdx, bcW) = indexedSqWeights(queries, idCol, vecCol, bcQ.value)
     val scored = cCodes.crossJoin(broadcast(qIdx))
       .filter(col("query_id") =!= col("cand_id"))
       .withColumn("cosine",
-        round(sqDotUdf(bcW)(col("sq._1"), col("sq._2"), col("qi")), 6))
+        round(sqScorer(bcW)(col("sq._1"), col("sq._2"), col("qi")), 6))
       .drop("sq", "qi")
     refine(scored, c, queries, idCol, vecCol, k, rerank)
   }
 
   /** The query batch's SQ8 weight vectors (wⱼ = qⱼ·stepⱼ) and constants
     * (k_q = Σ qⱼ·minⱼ), driver-collected in query_id order for the
-    * [[sqDotUdf]] broadcast, plus the (query_id, qi) index relation —
+    * [[sqScorer]] broadcast, plus the (query_id, qi) index relation —
     * the [[indexedDtabs]] discipline: ONE collect feeds both sides so
     * qi→weights can never diverge, and duplicate query ids fail loudly.
     * Shared by [[sqTopK]] and [[IvfIndex.search]] (their byte-parity
@@ -1563,7 +1556,7 @@ object Ann {
     * cosine(q̂, decoded(codes)), so the adaptive bound is sound iff the
     * radius is the max angle of the DECODED members to the centroid
     * (a radius on the raw floats would bound scores the scan never
-    * computes). Same query-side fold as [[sqDotUdf]] with the
+    * computes). Same query-side fold as [[sqScorer]] with the
     * normalized centroids as the "queries"; zero-norm decodes score
     * null everywhere and are excluded (they cannot beat a threshold).
     * One aggregate over (cell, codes, dnorm); ≤ nCells rows collect. */
@@ -1653,7 +1646,7 @@ object Ann {
           probeQueriesTwoLevel(queries, idCol, vecCol, q2, nProbe))
       }
     val enc = assignedCells
-      .select(col("cand_id"), col("cell"), pqEncodeUdf(bc)(col("cv")).as("codes"))
+      .select(col("cand_id"), col("cell"), pqEncoder(bc)(col("cv")).as("codes"))
     val (qIdx, bcD) = indexedDtabs(queries, idCol, vecCol, bc)
     val qd = probed
       .select(col("query_id"), col("cell"))
@@ -1661,7 +1654,7 @@ object Ann {
     val scored = enc.join(broadcast(qd), Seq("cell"))
       .filter(col("query_id") =!= col("cand_id"))
       .withColumn("cosine",
-        round(lit(1.0) - adcAtUdf(bcD)(col("codes"), col("qi")) / lit(2.0), 6))
+        round(lit(1.0) - adcScorer(bcD)(col("codes"), col("qi")) / lit(2.0), 6))
       .drop("codes", "qi")
     refine(scored, c, queries, idCol, vecCol, k, rerank)
   }

@@ -24,7 +24,7 @@ import graft.lake.{Lake, TableDef}
   * Every codec trains from the index's ONE [[Ann.hashSample]], the
   * sample the one-shot paths draw, and scores through the one-shot
   * paths' kernels ([[Ann.scoredCells]], [[Ann.indexedDtabs]] +
-  * [[Ann.adcAtUdf]], [[Ann.indexedSqWeights]] + [[Ann.sqDotUdf]]) — the
+  * [[Ann.adcScorer]], [[Ann.indexedSqWeights]] + [[Ann.sqScorer]]) — the
   * x45/x59/x96 byte-parity contracts depend on both. */
 sealed trait CellCodec {
   /** Default table prefix of an index over this codec. */
@@ -110,7 +110,7 @@ object CellCodec {
       }.toDF("subspace", "ci", "centroid")
     }
     override def encode(assigned: DataFrame): DataFrame =
-      assigned.withColumn("codes", Ann.pqEncodeUdf(
+      assigned.withColumn("codes", Ann.pqEncoder(
         assigned.sparkSession.sparkContext.broadcast(books))(col("cv")))
     def scorer(queries: DataFrame, idCol: String, vecCol: String)
       : (DataFrame, DataFrame) => DataFrame = {
@@ -118,7 +118,7 @@ object CellCodec {
         queries.sparkSession.sparkContext.broadcast(books))
       (slice, probes) => probedCodes(slice, probes, qIdx, "codes")
         .withColumn("cosine",
-          round(lit(1.0) - Ann.adcAtUdf(bcD)(col("codes"), col("qi")) / lit(2.0), 6))
+          round(lit(1.0) - Ann.adcScorer(bcD)(col("codes"), col("qi")) / lit(2.0), 6))
         .drop("codes", "qi")
     }
   }
@@ -154,7 +154,7 @@ object CellCodec {
         .toDF("dim", "minv", "step")
     }
     override def encode(assigned: DataFrame): DataFrame =
-      assigned.withColumn("__sq", Ann.sqEncodeUdf(
+      assigned.withColumn("__sq", Ann.sqEncoder(
           assigned.sparkSession.sparkContext.broadcast(quant))(col("cv")))
         .select(col("cand_id"), col("cv"), col("cell"),
           col("__sq._1").as("codes"), col("__sq._2").as("dnorm"))
@@ -168,7 +168,7 @@ object CellCodec {
       val (qIdx, bcW) = Ann.indexedSqWeights(queries, idCol, vecCol, quant)
       (slice, probes) => probedCodes(slice, probes, qIdx, "codes", "dnorm")
         .withColumn("cosine",
-          round(Ann.sqDotUdf(bcW)(col("codes"), col("dnorm"), col("qi")), 6))
+          round(Ann.sqScorer(bcW)(col("codes"), col("dnorm"), col("qi")), 6))
         .drop("codes", "dnorm", "qi")
     }
   }

@@ -29,7 +29,7 @@ class AnnSq8Spec extends SparkSpec {
     val enc = Seq((1L, Seq(3.0, 4.0)), (2L, Seq(-3.0, 4.0)),
         (3L, Seq(-1.0, 0.0)))
       .toDF("id", "v")
-      .select($"id", Ann.sqEncodeUdf(bc)($"v").as("sq"))
+      .select($"id", Ann.sqEncoder(bc)($"v").as("sq"))
       .orderBy($"id").collect()
       .map(r => (r.getLong(0),
         r.getStruct(1).getAs[Array[Byte]](0).map(_ & 0xFF).toSeq,

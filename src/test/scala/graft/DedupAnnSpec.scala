@@ -1248,8 +1248,8 @@ class DedupAnnSpec extends SparkSpec {
     val bcP = spark2.sparkContext.broadcast(books)
     val bcS = spark2.sparkContext.broadcast((mins, steps))
     val got = df.select($"id",
-        Ann.pqEncodeUdf(bcP)($"v").as("codes"),
-        Ann.sqEncodeUdf(bcS)($"v").as("sq"))
+        Ann.pqEncoder(bcP)($"v").as("codes"),
+        Ann.sqEncoder(bcS)($"v").as("sq"))
       .orderBy($"id").collect()
     got.foreach { r =>
       val raw = vecs.find(_._1 == r.getLong(0)).get._2
