@@ -34,9 +34,7 @@ import graft.pipelines.Quant
   *  19 conditional-broadcast cand bound
   *  20 full-curation-pipeline docs     21 span-dedup docs
   *  22 quality-signal sweep docs
-  *  23 span formulation race docs      24 line formulation race docs
-  *  25 budget-sample skew race docs
-  *  26 hot-key keeper race docs (1 gram at 391·N + 1 line at 400·N occ)
+  *  23-26 retired (settled formulation races — [[RetiredSlots]])
   *  27 large-k quantizer vecs (k=16384 hierarchical train + cell dist)
   *  28 SemDeDup mega-group vecs (N/2 identical; collapse + cap receipts)
   *  29 SemDeDup incremental store vecs (N store + N/512 batch append race)
@@ -53,9 +51,7 @@ import graft.pipelines.Quant
   *     adversarial corpora: fixed / adaptive / multi-assign arms)
   *  40 chunked-OLS keys (1M+-key panel + hot key: chunked ≡ unchunked
   *     hash-sum parity with O(#partitions) driver state)
-  *  41 SQ8-rotation sweep vecs (PCA pre-rotation vs plain SQ8 on
-  *     axis-aligned / misaligned / isotropic spectra — the measured
-  *     basis for the default-OFF decision)
+  *  41 retired (SQ8-rotation sweep — [[RetiredSlots]])
   *  42 curation dress-rehearsal docs (the x95 composition at 10M:
   *     trim → DSIR select → chunk → pack, planted exact accounting at
   *     EVERY stage + per-stage walls + docs/s headline)
@@ -119,17 +115,34 @@ object ScaleBench {
     "cluster-prop" -> 13, "line-dedup" -> 14, "flat-pq" -> 15,
     "bloom-decontam" -> 16, "ivfadc" -> 17, "bigram-lm" -> 18,
     "broadcast-bound" -> 19, "curation" -> 20, "span-dedup" -> 21,
-    "quality-sweep" -> 22, "span-race" -> 23, "line-race" -> 24,
-    "budget-race" -> 25, "hot-key-race" -> 26, "large-k" -> 27,
+    "quality-sweep" -> 22, "large-k" -> 27,
     "sem-mega-group" -> 28, "sem-incr-store" -> 29, "routed-ivf" -> 30,
     "ivf-index" -> 31, "pca" -> 32, "tombstone-delete" -> 33,
     "sem-takedown" -> 34, "minhash-takedown" -> 35, "opq" -> 36,
     "dsir" -> 37, "sq8" -> 38, "adaptive-probe" -> 39,
-    "chunked-ols" -> 40, "sq8-rotation" -> 41,
+    "chunked-ols" -> 40,
     "curation-rehearsal" -> 42, "sem-append-jobs" -> 43,
     "routed-adaptive" -> 44, "minhash-serve" -> 45, "lex-serve" -> 46,
     "ann-serve" -> 47, "ssd-stream" -> 48, "minhash-decade" -> 49,
     "takedown-decade" -> 50, "minhash-takedown-decade" -> 51)
+
+  /** Slots whose stages were deleted once their decision settled: slot →
+    * (stage name, the BASELINE.md section holding the final receipt).
+    * Live slot numbers never move, so a retired name or a non-zero
+    * positional value at a retired slot fails loudly instead of running
+    * nothing or the wrong stage. */
+  private[graft] val RetiredSlots: Map[Int, (String, String)] = Map(
+    23 -> ("span-race", "Round-9 addendum 4 / Round-10"),
+    24 -> ("line-race", "Round-9 addendum 5 / Round-10"),
+    25 -> ("budget-race", "Round-9 addendum 7"),
+    26 -> ("hot-key-race", "Round-10: de-skewed dedup keepers"),
+    41 -> ("sq8-rotation", "Round-13 addendum 6"))
+
+  private def retired(slot: Int): IllegalArgumentException = {
+    val (name, section) = RetiredSlots(slot)
+    new IllegalArgumentException(s"stage $name (slot $slot) is retired; " +
+      s"its final receipt is BASELINE.md \"$section\"")
+  }
 
   /** Resolve a `--stage=<name> n=<value>` command line to the positional
     * slot array (pure; ScaleBenchArgsSpec pins parity with the recorded
@@ -137,15 +150,21 @@ object ScaleBench {
     * receipt convention `10 10 32` (override with tickers=/dates=/
     * cores=); several `--stage` flags compose one run, each taking the
     * `n=` that follows it. Positional invocations pass through
-    * untouched. */
+    * untouched unless they set a retired slot. */
   private[graft] def resolveArgs(raw: Array[String]): Array[String] = {
-    if (!raw.exists(_.startsWith("--stage="))) return raw
+    if (!raw.exists(_.startsWith("--stage="))) {
+      RetiredSlots.keys.find(i => raw.lift(i).exists(!_.toLongOption.contains(0L)))
+        .foreach(i => throw retired(i))
+      return raw
+    }
     var tickers = "10"; var dates = "10"; var cores = "32"
     val slots = scala.collection.mutable.Map.empty[Int, String]
     var cur = -1
     raw.foreach {
       case s if s.startsWith("--stage=") =>
         val name = s.stripPrefix("--stage=")
+        RetiredSlots.collectFirst { case (i, (n, _)) if n == name => i }
+          .foreach(i => throw retired(i))
         cur = StageSlots.getOrElse(name, throw new IllegalArgumentException(
           s"unknown stage '$name'; known: " +
             StageSlots.keys.toSeq.sorted.mkString(", ")))
@@ -1267,284 +1286,6 @@ object ScaleBench {
         .select($"id".as("doc_id"), array_join(toksCol, " ").as("text"))
     }
 
-    // arg-23: span-dedup formulation race at the arg-21 corpus. History:
-    // round 9 adopted the keeper WINDOW after it beat the then-current
-    // agg + join-back (which re-evaluated the gram subtree on both join
-    // sides) 8.8 s vs 19.6 s at 20M tokens; round 10 adopted the
-    // CHECKPOINTED agg + join-back (keeper aggregate combines map-side,
-    // join-back bounded by duplicated grams) because the window
-    // serializes a corpus-universal gram into one task (arg-26 is that
-    // receipt). The inline arm below IS the round-9 window form — now a
-    // genuinely independent derivation again, so this is a LIVE race:
-    // both arms must agree on totals, and the wall pair RECORDS the
-    // no-skew price of the bounded keeper (~1.1x measured same-run;
-    // BASELINE round-10 addendum) against arg-26's hot-key win.
-    val nSpanRace = args.lift(23).map(_.toInt).getOrElse(0)
-    if (nSpanRace > 0) {
-      import graft.dedup.Dedup
-      val docs = spanCorpus(nSpanRace.toLong)
-      val expectKept = 40L * nSpanRace - 12L * (nSpanRace - 1)
-      time(s"span dedup CURRENT ($nSpanRace docs)", nSpanRace.toLong * 40) {
-        val r = Dedup.exactSubstringDedup(docs, "doc_id", "text", n = 10)
-          .agg(sum($"n_kept")).collect().head.getLong(0)
-        require(r == expectKept, s"current kept $r != $expectKept")
-        r
-      }
-      time(s"span dedup WINDOW-VARIANT ($nSpanRace docs)", nSpanRace.toLong * 40) {
-        val n = 10
-        val base = docs.select($"doc_id",
-            graft.functions.TextFunctions.tokens($"text").as("tk"))
-          .filter(size($"tk") > 0)
-        val toks = base
-          .select($"doc_id", posexplode($"tk").as(Seq("p0", "t")))
-          .select($"doc_id", ($"p0" + 1).as("p"), xxhash64($"t").as("th"))
-        val wd = org.apache.spark.sql.expressions.Window
-          .partitionBy($"doc_id").orderBy($"p")
-        val leads = (1 until n).map(i => lead($"th", i).over(wd))
-        val grams = toks
-          .select($"doc_id", $"p", xxhash64(($"th" +: leads): _*).as("h"),
-            leads.last.isNotNull.as("__full"))
-          .filter($"__full").select($"doc_id", $"p", $"h")
-        val wh = org.apache.spark.sql.expressions.Window.partitionBy($"h")
-        val nonKeep = grams
-          .select($"doc_id", $"p", $"h",
-            count(lit(1)).over(wh).as("cnt"),
-            min(struct($"doc_id", $"p")).over(wh).as("keep"))
-          .filter($"cnt" > 1 &&
-            !($"doc_id" === $"keep.doc_id" && $"p" === $"keep.p"))
-          .select($"doc_id", $"p")
-        val removed = nonKeep
-          .select($"doc_id", explode(sequence($"p", $"p" + lit(n - 1))).as("q"))
-          .groupBy($"doc_id").agg(collect_set($"q").as("rm"))
-        val r = base.join(removed, Seq("doc_id"), "left")
-          .select(
-            when($"rm".isNull, size($"tk"))
-              .otherwise(size(filter($"tk",
-                (_, i) => !array_contains($"rm", i + 1)))).as("n_kept"))
-          .agg(sum($"n_kept".cast("long"))).collect().head.getLong(0)
-        require(r == expectKept, s"window-variant kept $r != $expectKept")
-        r
-      }
-    }
-
-    // arg-24: line-dedup formulation race on the arg-14 corpus. History:
-    // round 9 adopted the keeper window over the then-current
-    // three-aggregate + join-back (7.3 s vs 11.1 s at 4M lines); round
-    // 10 adopted the duplicated-line aggregate + pruned join-back for
-    // the same hot-key reason as arg-23 (a corpus-universal line
-    // serializes the window; arg-26 is that receipt). The inline arm
-    // below IS the round-9 window form — an independent derivation, so
-    // this is a LIVE race that must agree on totals AND reassembled
-    // bytes, and the operator must hold near the window's wall on this
-    // no-skew corpus.
-    val nLineRace = args.lift(24).map(_.toInt).getOrElse(0)
-    if (nLineRace > 0) {
-      import graft.dedup.Dedup
-      val lineCols = (0 until 20).map { j =>
-        if (j % 4 == 0) lit(s"boiler b$j z")
-        else concat(lit("u"), $"id", lit(s"_$j x y"))
-      }
-      val docs = spark.range(nLineRace.toLong).select($"id".as("doc_id"),
-        concat_ws(" ", lineCols: _*).as("text"))
-      var cur: (Long, Long) = null
-      time(s"line dedup CURRENT ($nLineRace docs)", nLineRace.toLong * 20) {
-        val r = Dedup.lineDedup(docs, "doc_id", "text")
-          .agg(sum($"n_kept"), sum(pmod(xxhash64($"doc_id", $"text_kept"), lit(1000000007L))))
-          .collect().head
-        cur = (r.getLong(0), r.getLong(1)); cur._1
-      }
-      time(s"line dedup WINDOW-VARIANT ($nLineRace docs)", nLineRace.toLong * 20) {
-        val lines = docs
-          .select($"doc_id", explode(Dedup.chunkLines($"text", 3)).as("ln"))
-          .select($"doc_id", $"ln.line_no".as("line_no"),
-            $"ln.line".as("line"), md5($"ln.line").as("line_h"))
-        val wl = org.apache.spark.sql.expressions.Window.partitionBy($"line_h")
-        val flagged = lines.select($"doc_id", $"line_no", $"line",
-          (min(struct($"doc_id", $"line_no")).over(wl) ===
-            struct($"doc_id", $"line_no")).as("kept"))
-        val out = flagged.groupBy($"doc_id").agg(
-          count(lit(1)).as("n_lines"),
-          count(when($"kept", 1)).as("n_kept"),
-          array_join(transform(array_sort(
-              collect_list(when($"kept", struct($"line_no", $"line")))),
-            s => s.getField("line")), " ").as("text_kept"))
-        val r = out.agg(sum($"n_kept"), sum(pmod(xxhash64($"doc_id", $"text_kept"), lit(1000000007L))))
-          .collect().head
-        require((r.getLong(0), r.getLong(1)) == cur,
-          s"window-variant diverged: ${(r.getLong(0), r.getLong(1))} vs $cur")
-        r.getLong(0)
-      }
-    }
-
-    // arg-25: budget-sample skew stress — 95% of docs in ONE domain (the
-    // realistic web-corpus shape), racing the adopted two-level sharded
-    // running sum against an inline single-window reference (whose
-    // per-domain window serializes the mega-domain into one task). Both
-    // must agree on every kept row; the sharded form must also beat the
-    // reference's wall on the skewed corpus.
-    val nBudget = args.lift(25).map(_.toInt).getOrElse(0)
-    if (nBudget > 0) {
-      import graft.sampling.Sampling
-      import graft.functions.TextFunctions
-      val dom = when(pmod($"id", lit(20)) === 0,
-        concat(lit("small"), pmod($"id", lit(3)))).otherwise(lit("mega"))
-      val docs = spark.range(nBudget.toLong)
-        .select($"id".as("doc_id"), dom.as("source"),
-          concat(lit("w"), pmod(xxhash64($"id"), lit(1000)), lit(" x y z ")
-            ).as("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      docs.count()
-      val toks = TextFunctions.tokenCount($"text").cast("long")
-      val budget = nBudget.toLong * 2 // ~half the ~4-token corpus
-      var shardedChk: (Long, Long) = null
-      time(s"budget sample SHARDED ($nBudget docs, 95% one domain)",
-          nBudget.toLong) {
-        val r = Sampling.budgetSample(docs, "doc_id", "source", toks, budget)
-          .agg(count(lit(1)), sum(pmod(xxhash64($"doc_id", $"cum_tokens"),
-            lit(1000000007L)))).collect().head
-        shardedChk = (r.getLong(0), r.getLong(1)); shardedChk._1
-      }
-      time(s"budget sample SINGLE-WINDOW reference ($nBudget docs)",
-          nBudget.toLong) {
-        val alloc = Sampling.domainMixtureWeights(docs, "source", toks, 0.5)
-          .select($"domain".as("source"),
-            floor($"weight" * lit(budget.toDouble)).as("alloc"))
-        val w = org.apache.spark.sql.expressions.Window.partitionBy($"source")
-          .orderBy(md5($"doc_id".cast("string")), $"doc_id")
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-        val r = docs.withColumn("n_tokens", toks)
-          .withColumn("cb", coalesce(sum($"n_tokens").over(w), lit(0L)))
-          .join(broadcast(alloc), Seq("source"))
-          .filter($"cb" < $"alloc")
-          .select($"doc_id", ($"cb" + $"n_tokens").as("cum_tokens"))
-          .agg(count(lit(1)), sum(pmod(xxhash64($"doc_id", $"cum_tokens"),
-            lit(1000000007L)))).collect().head
-        require((r.getLong(0), r.getLong(1)) == shardedChk,
-          s"sharded diverged: $shardedChk vs ${(r.getLong(0), r.getLong(1))}")
-        r.getLong(0)
-      }
-      docs.unpersist()
-    }
-
-    // arg-26: HOT-KEY keeper race (the round-9 weak component's receipt):
-    // ONE gram / ONE line at ≥10⁷ occurrences — the corpus-universal
-    // boilerplate shape (license headers, navigation chrome) where the
-    // round-9 keeper window serializes the whole key group into a single
-    // task. Both arms race over the SAME persisted occurrence relation,
-    // isolating the keeper stage (the removal back-end is shared
-    // byte-identical code in both formulations); the adopted
-    // aggregate + join-back must beat the round-9 window form ≥2×.
-    // Exact accounting: span — N docs × 400 copies of one token ⇒ one
-    // 10-gram hash at 391·N occurrences, non-keepers = 391·N − 1, and
-    // the full operator keeps exactly ONE token corpus-wide; line —
-    // 20·N docs × 20 identical 3-token lines ⇒ one line_h at 400·N
-    // occurrences, and exactly ONE line survives corpus-wide.
-    val nHot = args.lift(26).map(_.toInt).getOrElse(0)
-    if (nHot > 0) {
-      import graft.dedup.Dedup
-      val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      // ---- span arm: one gram hash at 391*nHot occurrences ----
-      val hotDocs = spark.range(nHot.toLong)
-        .select($"id".as("doc_id"),
-          array_join(array_repeat(lit("bb"), 400), " ").as("text"))
-      val n = 10
-      val toks = hotDocs
-        .select($"doc_id", posexplode(
-          graft.functions.TextFunctions.tokens($"text")).as(Seq("p0", "t")))
-        .select($"doc_id", ($"p0" + 1).as("p"), xxhash64($"t").as("th"))
-      val wd = org.apache.spark.sql.expressions.Window
-        .partitionBy($"doc_id").orderBy($"p")
-      val leads = (1 until n).map(i => lead($"th", i).over(wd))
-      val grams = toks
-        .select($"doc_id", $"p", xxhash64(($"th" +: leads): _*).as("h"),
-          leads.last.isNotNull.as("__full"))
-        .filter($"__full").select($"doc_id", $"p", $"h")
-        .persist(mad)
-      val nOcc = grams.count() // materialize once for a fair stage race
-      require(nOcc == 391L * nHot, s"gram occurrences $nOcc != ${391L * nHot}")
-      time(s"span keeper AGG+JOIN-BACK (1 gram x $nOcc occurrences)", nOcc) {
-        val dup = grams.groupBy($"h")
-          .agg(count(lit(1)).as("cnt"), min(struct($"doc_id", $"p")).as("keep"))
-          .filter($"cnt" > 1).select($"h", $"keep")
-        val r = grams.join(dup, Seq("h"))
-          .filter(!($"doc_id" === $"keep.doc_id" && $"p" === $"keep.p"))
-          .count()
-        require(r == nOcc - 1, s"agg non-keepers $r != ${nOcc - 1}")
-        r
-      }
-      time(s"span keeper WINDOW round-9 form (1 gram x $nOcc occurrences)", nOcc) {
-        val wh = org.apache.spark.sql.expressions.Window.partitionBy($"h")
-        val r = grams
-          .select($"doc_id", $"p",
-            count(lit(1)).over(wh).as("cnt"),
-            min(struct($"doc_id", $"p")).over(wh).as("keep"))
-          .filter($"cnt" > 1 &&
-            !($"doc_id" === $"keep.doc_id" && $"p" === $"keep.p"))
-          .count()
-        require(r == nOcc - 1, s"window non-keepers $r != ${nOcc - 1}")
-        r
-      }
-      grams.unpersist()
-      // full operator on the hot corpus at a tenth of the race scale
-      // (the removal back-end's covered-position explode is shared by
-      // both formulations; accounting is scale-invariant)
-      val nFull = math.max(nHot / 10, 1)
-      val fullDocs = spark.range(nFull.toLong)
-        .select($"id".as("doc_id"),
-          array_join(array_repeat(lit("bb"), 400), " ").as("text"))
-      time(s"span dedup FULL on hot corpus ($nFull docs)", nFull.toLong * 400) {
-        val r = Dedup.exactSubstringDedup(fullDocs, "doc_id", "text", n = 10)
-          .agg(sum($"n_tokens"), sum($"n_kept")).collect().head
-        require(r.getLong(0) == 400L * nFull, s"tokens ${r.getLong(0)}")
-        require(r.getLong(1) == 1L, s"kept ${r.getLong(1)} != 1")
-        r.getLong(1)
-      }
-      // ---- line arm: one line_h at 400*nHot occurrences ----
-      val lineDocs = spark.range(nHot.toLong * 20)
-        .select($"id".as("doc_id"),
-          array_join(array_repeat(lit("boiler b z"), 20), " ").as("text"))
-      val lines = lineDocs
-        .select($"doc_id", explode(Dedup.chunkLines($"text", 3)).as("ln"))
-        .select($"doc_id", $"ln.line_no".as("line_no"),
-          md5($"ln.line").as("line_h"))
-        .persist(mad)
-      val nLn = lines.count()
-      require(nLn == 400L * nHot, s"line occurrences $nLn != ${400L * nHot}")
-      time(s"line keeper AGG+JOIN-BACK (1 line x $nLn occurrences)", nLn) {
-        val dup = lines.groupBy($"line_h")
-          .agg(count(lit(1)).as("cnt"),
-            min(struct($"doc_id", $"line_no")).as("keep"))
-          .filter($"cnt" > 1).select($"line_h", $"keep")
-        val r = lines.join(dup, Seq("line_h"), "left")
-          .filter($"keep".isNull ||
-            struct($"doc_id", $"line_no") === $"keep")
-          .count()
-        require(r == 1L, s"agg kept $r != 1")
-        r
-      }
-      time(s"line keeper WINDOW round-9 form (1 line x $nLn occurrences)", nLn) {
-        val wl = org.apache.spark.sql.expressions.Window.partitionBy($"line_h")
-        val r = lines
-          .select((min(struct($"doc_id", $"line_no")).over(wl) ===
-            struct($"doc_id", $"line_no")).as("kept"))
-          .filter($"kept").count()
-        require(r == 1L, s"window kept $r != 1")
-        r
-      }
-      lines.unpersist()
-      time(s"line dedup FULL on hot corpus (${nFull * 20} docs)",
-          nFull.toLong * 400) {
-        val r = Dedup.lineDedup(
-            spark.range(nFull.toLong * 20).select($"id".as("doc_id"),
-              array_join(array_repeat(lit("boiler b z"), 20), " ").as("text")),
-            "doc_id", "text")
-          .agg(sum($"n_lines"), sum($"n_kept")).collect().head
-        require(r.getLong(0) == 400L * nFull, s"lines ${r.getLong(0)}")
-        require(r.getLong(1) == 1L, s"kept ${r.getLong(1)} != 1")
-        r.getLong(1)
-      }
-    }
-
     // arg-27: large-k coarse-quantizer receipt (round-11 judge #1) —
     // the flat driver trainer is structurally capped at its 4096-point
     // sample (k-means cannot emit more centroids than sample points),
@@ -1556,7 +1297,7 @@ object ScaleBench {
     // near the n/k expectation instead of n/4096.
     val nQuant = args.lift(27).map(_.toInt).getOrElse(0)
     if (nQuant > 0) {
-      import graft.similarity.Ann
+      import graft.similarity.{Ann, Quantizer}
       val madQ = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       // every 101st vector is a NEAR-TWIN of its predecessor (+0.02 on
       // dim 0, cosine ≈ 0.99998): the co-cell rate of these pairs — not
@@ -1575,27 +1316,27 @@ object ScaleBench {
       vecsQ.count()
       val bigK = 16384
       val sampleQ = Ann.hashSample(vecsQ)
-      var q2: Ann.TwoLevelQuantizer = null
+      var q2: Quantizer.Routed = null
       time(s"hierarchical quantizer train (k=$bigK, $nQuant vecs)",
           nQuant.toLong) {
-        q2 = Ann.trainTwoLevel(vecsQ, bigK, sampleQ)
+        q2 = Quantizer.Routed.train(vecsQ, sampleQ, bigK)
         q2.nCells.toLong
       }
       require(q2.nCells == bigK,
         s"hierarchical trainer returned ${q2.nCells} cells != $bigK")
       // flat-ceiling contrast: the old path tops out at its sample size
-      val flatCeiling = Ann.trainCentroidsFrom(sampleQ, bigK)
+      val flatCeiling = Quantizer.Flat.train(sampleQ, bigK).cells
       require(flatCeiling.length <= 4096,
         s"flat sample trainer expected to cap at 4096, got ${flatCeiling.length}")
       // race: flat O(k)-per-row argmin vs the routed O(sqrt k) assignment,
-      // over the SAME centroid set (q2.flat); both persisted for the
+      // over the SAME centroid set (q2.cells); both persisted for the
       // agreement join
-      val flatAssigned = Ann.assignCells(vecsQ, q2.flat)
+      val flatAssigned = Quantizer.Flat(q2.cells).assign(vecsQ)
         .select($"cand_id", $"cell").persist(madQ)
       time(s"flat argmin assign O(k)/row ($nQuant vecs)", nQuant.toLong) {
         flatAssigned.count()
       }
-      val routedAssigned = Ann.assignCellsTwoLevel(vecsQ, q2)
+      val routedAssigned = q2.assign(vecsQ)
         .select($"cand_id", $"cell".as("cell2")).persist(madQ)
       time(s"routed assign O(sqrt k)/row ($nQuant vecs)", nQuant.toLong) {
         routedAssigned.count()
@@ -2408,7 +2149,7 @@ object ScaleBench {
     // 2× storage to halve the probes at equal scanned bytes.
     val nAd = args.lift(39).map(_.toInt).getOrElse(0)
     if (nAd > 0) {
-      import graft.similarity.Ann
+      import graft.similarity.{Ann, Quantizer}
       import org.apache.spark.sql.DataFrame
       val madA = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       def corpusOf(clustered: Boolean): DataFrame = {
@@ -2439,10 +2180,9 @@ object ScaleBench {
         }
         val cA = corpusA.select($"vec_id".as("cand_id"),
           $"embedding".cast("array<double>").as("cv")).persist(madA)
-        val centroidsA = Ann.trainCentroids(cA, 64)
-        val assignedA = Ann.assignCellsMulti(cA, centroidsA, 1)
-          .persist(madA)
-        val radiiA = Ann.cellRadii(assignedA, centroidsA)
+        val quantA = Quantizer.train(cA, 64)
+        val assignedA = quantA.assign(cA).persist(madA)
+        val radiiA = Ann.cellRadii(assignedA, quantA.cells)
         val sizesA = assignedA.groupBy($"cell").count().persist()
         sizesA.count()
         def scanRows(probe: DataFrame): Long =
@@ -2453,8 +2193,7 @@ object ScaleBench {
         val bruteRows = 24L * nAd
         // fixed-probe reference arms
         for (np <- Seq(2, 8)) {
-          val qF = Ann.probeQueries(queriesA, "vec_id", "embedding",
-            centroidsA, np)
+          val qF = quantA.probe(queriesA, "vec_id", "embedding", np)
           var r = 0.0
           time(s"ad-$shape fixed-$np", nAd.toLong) {
             r = recallOf(Ann.scoreCells(assignedA, qF, 5)); nAd.toLong
@@ -2463,13 +2202,12 @@ object ScaleBench {
             f"scan ${scanRows(qF).toDouble / bruteRows}%.4f")
         }
         // adaptive arm: min 2, cap 8 — phase accounting split out
-        val qA = Ann.probeQueries(queriesA, "vec_id", "embedding",
-          centroidsA, 2)
+        val qA = quantA.probe(queriesA, "vec_id", "embedding", 2)
         val scoredA = Ann.scoredCells(assignedA, qA)
           .select($"query_id", $"cand_id", $"cosine")
         val kthA = Ann.kthCosine(scoredA, 5)
-        val qB = Ann.extraProbeFrame(queriesA, "vec_id", "embedding",
-          centroidsA, radiiA, kthA, 2, 8).persist()
+        val qB = quantA.extraProbe(queriesA, "vec_id", "embedding",
+          radiiA, kthA, 2, 8).persist()
         var rAd = 0.0
         time(s"ad-$shape adaptive-2/8", nAd.toLong) {
           rAd = recallOf(Ann.ranked(scoredA.unionAll(
@@ -2491,11 +2229,9 @@ object ScaleBench {
         qB.unpersist()
         // multi-assign arm: A=2 at fixed 4 probes — 2x storage, equal
         // scanned bytes to fixed-8 single-assign
-        val assigned2 = Ann.assignCellsMulti(cA, centroidsA, 2)
-          .persist(madA)
+        val assigned2 = quantA.assign(cA, 2).persist(madA)
         val sizes2 = assigned2.groupBy($"cell").count().persist()
-        val qM = Ann.probeQueries(queriesA, "vec_id", "embedding",
-          centroidsA, 4)
+        val qM = quantA.probe(queriesA, "vec_id", "embedding", 4)
         var rMa = 0.0
         time(s"ad-$shape multi2-4", nAd.toLong) {
           rMa = recallOf(Ann.ranked(Ann.scoredCells(assigned2, qM)
@@ -2558,99 +2294,6 @@ object ScaleBench {
         s"chunked OLS hash-sum $hChunked != unchunked $hPlain at " +
           s"$nOls keys — the distributed row index diverged")
       panel.unpersist()
-    }
-
-    // arg-41: OPQ-for-SQ sweep (r12 review item 7) — does a PCA
-    // pre-rotation help SQ8 the way it helps PQ? Measured answer: NO
-    // worthwhile margin. SQ8 trains PER-DIMENSION (min, step) bounds,
-    // so an axis-aligned stretched spectrum is already served with a
-    // per-dim-adapted step — the failure mode OPQ fixes for PQ (fixed
-    // contiguous blocks quantizing mismatched variance) does not exist
-    // here. The sweep measures three shapes at the same N; the rotation
-    // is the UNCENTERED PCA basis (opqRotation at m = 1 — descending-λ
-    // order, norm/cosine invariant, so recall vs the unrotated truth is
-    // directly comparable). Recorded, not gated on a winner: both arms
-    // must clear an absolute floor so a real SQ8 regression still
-    // trips. BASELINE r13 records the numbers and the default-OFF call.
-    val nSqRot = args.lift(41).map(_.toInt).getOrElse(0)
-    if (nSqRot > 0) {
-      import graft.similarity.Ann
-      import org.apache.spark.sql.DataFrame
-      val madR = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      // one shared 16x16 deterministic mixing rotation for the
-      // misaligned shape (Gram-Schmidt over hash noise, seeded)
-      val mixRot: Array[Array[Double]] = {
-        val rnd = new scala.util.Random(7L)
-        val m = Array.fill(16, 16)(rnd.nextGaussian())
-        var i = 0
-        while (i < 16) {
-          var j = 0
-          while (j < i) {
-            var dp = 0.0; var t = 0
-            while (t < 16) { dp += m(i)(t) * m(j)(t); t += 1 }
-            t = 0
-            while (t < 16) { m(i)(t) -= dp * m(j)(t); t += 1 }
-            j += 1
-          }
-          var n2 = 0.0; var t = 0
-          while (t < 16) { n2 += m(i)(t) * m(i)(t); t += 1 }
-          val inv = 1.0 / math.sqrt(n2); t = 0
-          while (t < 16) { m(i)(t) *= inv; t += 1 }
-          i += 1
-        }
-        m
-      }
-      def shapeOf(kind: String): DataFrame = {
-        val stretched = (0 until 16).map(j =>
-          ((pmod(xxhash64($"id", lit(j)), lit(2001)).cast("double") / 1000.0
-            - 1.0) * math.pow(2.0, -j / 2.0)).cast("double"))
-        val iso = (0 until 16).map(j =>
-          (pmod(xxhash64($"id", lit(j)), lit(2001)).cast("double") / 1000.0
-            - 1.0))
-        val dims = kind match {
-          case "axis-stretched" => stretched
-          case "isotropic" => iso
-          case "misaligned" =>
-            // stretched spectrum mixed through the fixed rotation
-            (0 until 16).map(r => (0 until 16).map(j =>
-              stretched(j) * lit(mixRot(r)(j))).reduce(_ + _))
-        }
-        spark.range(nSqRot.toLong)
-          .select($"id".as("vec_id"), array(dims: _*).as("embedding"))
-      }
-      for (kind <- Seq("axis-stretched", "misaligned", "isotropic")) {
-        val corpusR = shapeOf(kind).persist(madR)
-        corpusR.count()
-        val queriesR = corpusR.filter($"vec_id" < 24)
-          .select(($"vec_id" + nSqRot.toLong).as("vec_id"),
-            transform($"embedding", x => x * lit(0.5)).as("embedding"))
-        val truthR = Ann.bruteForceTopK(queriesR, corpusR, "vec_id",
-          "embedding", k = 5).persist()
-        truthR.count()
-        def rec(q: DataFrame, c: DataFrame): Double = Ann.recallAtK(
-          Ann.sqTopK(q, c, "vec_id", "embedding", k = 5), truthR)
-          .head().getDouble(0)
-        var rPlain = 0.0; var rRot = 0.0
-        time(s"sqrot-$kind plain", nSqRot.toLong) {
-          rPlain = rec(queriesR, corpusR); nSqRot.toLong
-        }
-        val rot = Ann.opqRotation(Ann.hashSample(
-          corpusR.select($"vec_id".as("cand_id"),
-            $"embedding".cast("array<double>").as("cv"))), m = 1)
-        val bcRotR = spark.sparkContext.broadcast(rot)
-        def rotated(df: DataFrame): DataFrame = df.select($"vec_id",
-          Ann.rotateColBc($"embedding".cast("array<double>"), bcRotR)
-            .as("embedding"))
-        time(s"sqrot-$kind rotated", nSqRot.toLong) {
-          rRot = rec(rotated(queriesR), rotated(corpusR)); nSqRot.toLong
-        }
-        println(f"[scale] sqrot-$kind%-16s plain $rPlain%.4f rotated " +
-          f"$rRot%.4f delta ${rRot - rPlain}%+.4f")
-        require(rPlain >= 0.85 && rRot >= 0.85,
-          s"SQ8 recall regression on $kind: plain $rPlain rotated $rRot")
-        truthR.unpersist(); corpusR.unpersist()
-        spark.catalog.clearCache()
-      }
     }
 
     // arg-42: 100 TB dress rehearsal of the x95 curation flagship —
@@ -2862,8 +2505,8 @@ object ScaleBench {
     // arg-44: ROUTED adaptive probing receipt (round-14 judge #7) — at
     // 2^12+ cells the flat adaptive path would rank EVERY cell bound per
     // query (O(k) probe selection); the routed path gates whole BRANCHES
-    // through the branch envelope first (Ann.branchAngles /
-    // extraProbeFrameRouted), so probe selection is O(√k · surviving
+    // through the branch envelope first (Quantizer.Routed.extraProbe),
+    // so probe selection is O(√k · surviving
     // branches). Receipt at nLists = 4096 (64 routers × 64 subs) over
     // 64-dim vectors, both corpus shapes:
     //   - scan-fraction table: fixed-8 / fixed-32 / adaptive-8→32;
@@ -2879,7 +2522,7 @@ object ScaleBench {
     //     phase-A exclusion differs by construction).
     val nAdr = args.lift(44).map(_.toInt).getOrElse(0)
     if (nAdr > 0) {
-      import graft.similarity.Ann
+      import graft.similarity.{Ann, Quantizer}
       import org.apache.spark.sql.DataFrame
       val madR = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       def corpusR(clustered: Boolean): DataFrame = {
@@ -2910,13 +2553,13 @@ object ScaleBench {
         }
         val cR = corpus0.select($"vec_id".as("cand_id"),
           $"embedding".cast("array<double>").as("cv")).persist(madR)
-        var q2R: Ann.TwoLevelQuantizer = null
+        var q2R: Quantizer.Routed = null
         time(s"adr-$shape train 4096", nAdr.toLong) {
-          q2R = Ann.trainTwoLevel(cR, 4096, Ann.hashSample(cR))
+          q2R = Quantizer.Routed.train(cR, Ann.hashSample(cR), 4096)
           q2R.nCells.toLong
         }
-        val assignedR = Ann.assignCellsTwoLevel(cR, q2R).persist(madR)
-        val radiiR = Ann.cellRadii(assignedR, q2R.flat)
+        val assignedR = q2R.assign(cR).persist(madR)
+        val radiiR = Ann.cellRadii(assignedR, q2R.cells)
         val sizesR = assignedR.groupBy($"cell").count().persist()
         sizesR.count()
         def scanRowsR(probe: DataFrame): Long =
@@ -2927,8 +2570,7 @@ object ScaleBench {
         val bruteRowsR = 24L * nAdr
         var scanF8 = 0.0
         for (np <- Seq(8, 32)) {
-          val qF = Ann.probeQueriesTwoLevel(queriesR, "vec_id",
-            "embedding", q2R, np)
+          val qF = q2R.probe(queriesR, "vec_id", "embedding", np)
           var r = 0.0
           time(s"adr-$shape fixed-$np", nAdr.toLong) {
             r = recallOfR(Ann.scoreCells(assignedR, qF, 5)); nAdr.toLong
@@ -2939,13 +2581,12 @@ object ScaleBench {
             f"recall $r%.4f scan $sc%.5f of ${q2R.nCells} cells")
         }
         // adaptive arm: min 8, cap 32
-        val qAr = Ann.probeQueriesTwoLevel(queriesR, "vec_id",
-          "embedding", q2R, 8)
+        val qAr = q2R.probe(queriesR, "vec_id", "embedding", 8)
         val scoredAr = Ann.scoredCells(assignedR, qAr)
           .select($"query_id", $"cand_id", $"cosine")
         val kthR = Ann.kthCosine(scoredAr, 5)
-        val qBr = Ann.extraProbeFrameRouted(queriesR, "vec_id",
-          "embedding", q2R, radiiR, kthR, 8, 32).persist()
+        val qBr = q2R.extraProbe(queriesR, "vec_id", "embedding",
+          radiiR, kthR, 8, 32).persist()
         var rAdr = 0.0
         time(s"adr-$shape adaptive-8/32", nAdr.toLong) {
           rAdr = recallOfR(Ann.ranked(scoredAr.unionAll(
@@ -2964,16 +2605,15 @@ object ScaleBench {
             s"routed adaptive scanned $scanAdr vs fixed-8 $scanF8 — the " +
               "branch envelope failed to prune planted-cluster phase B")
           // full-cap certificate at scale: cap = nCells ≡ full probe
-          val qBfull = Ann.extraProbeFrameRouted(queriesR, "vec_id",
-            "embedding", q2R, radiiR, kthR, 8, q2R.nCells)
+          val qBfull = q2R.extraProbe(queriesR, "vec_id", "embedding",
+            radiiR, kthR, 8, q2R.nCells)
           val adFull = Ann.ranked(scoredAr.unionAll(
               Ann.scoredCells(assignedR,
                   qBfull.select($"query_id", $"qv", $"cell"))
                 .select($"query_id", $"cand_id", $"cosine")), 5)
             .collect().map(_.toSeq).toSeq
           val fullProbe = Ann.scoreCells(assignedR,
-              Ann.probeQueriesTwoLevel(queriesR, "vec_id", "embedding",
-                q2R, q2R.nCells), 5)
+              q2R.probe(queriesR, "vec_id", "embedding", q2R.nCells), 5)
             .collect().map(_.toSeq).toSeq
           require(adFull == fullProbe && adFull.nonEmpty,
             "routed full-cap adaptive diverged from the full routed " +
@@ -2982,18 +2622,17 @@ object ScaleBench {
             s"byte-equal over ${adFull.size} result rows")
           // probe-SELECTION cost: 10k queries, branch-gated vs rank-all
           val q10 = corpus0.filter($"vec_id" < 10000)
-          val qA10 = Ann.probeQueriesTwoLevel(q10, "vec_id", "embedding",
-            q2R, 8)
+          val qA10 = q2R.probe(q10, "vec_id", "embedding", 8)
           val kth10 = Ann.kthCosine(Ann.scoredCells(assignedR, qA10)
             .select($"query_id", $"cand_id", $"cosine"), 5)
             .persist()
           kth10.count()
           time("adr probe-sel routed 10k", 10000L) {
-            Ann.extraProbeFrameRouted(q10, "vec_id", "embedding", q2R,
-              radiiR, kth10, 8, 32).count()
+            q2R.extraProbe(q10, "vec_id", "embedding", radiiR, kth10, 8, 32)
+              .count()
           }
           time("adr probe-sel flat 10k", 10000L) {
-            Ann.extraProbeFrame(q10, "vec_id", "embedding", q2R.flat,
+            Quantizer.Flat(q2R.cells).extraProbe(q10, "vec_id", "embedding",
               radiiR, kth10, 8, 32).count()
           }
           kth10.unpersist()
@@ -3273,10 +2912,9 @@ object ScaleBench {
           nProbeMin = 8, nProbeMax = 32, rerank = 100).count()
       }
       // scan-fraction accounting from the persisted serving artifacts
-      val (flatA, routerA) = QuantizerStore.load(lakeA, "ivfpq",
-        idxA.centroidTable, idxA.topTable, expectRouted = true)
+      val quantA = QuantizerStore.load(lakeA, "ivfpq", 4096)
       val radiiA = QuantizerStore.loadRadii(lakeA, idxA.radiiTable,
-        flatA.length)
+        quantA.cells.length)
       val sizesA = lakeA.table(idxA.vectorTable)
         .groupBy($"cell").count().persist()
       sizesA.count()
@@ -3284,15 +2922,14 @@ object ScaleBench {
         probe.join(sizesA, Seq("cell"))
           .agg(coalesce(sum($"count"), lit(0L))).head().getLong(0)
       val storeN = nAnr.toLong + 6000L
-      val qPa = QuantizerStore.prober(flatA, routerA, 8)(
-          q10A, "vec_id", "embedding")
+      val qPa = quantA.probe(q10A, "vec_id", "embedding", 8)
         .select($"query_id", $"cell").persist(madA)
       val kthA = idxA.search(q10A, "vec_id", "embedding", k = 5,
           nProbe = 8, rerank = 100)
         .filter($"rank" === 5 && $"cosine".isNotNull)
         .select($"query_id", $"cosine".as("kth"))
-      val qPb = Ann.extraProbeFrameRouted(q10A, "vec_id", "embedding",
-          routerA.get, radiiA, kthA, 8, 32)
+      val qPb = quantA.extraProbe(q10A, "vec_id", "embedding",
+          radiiA, kthA, 8, 32)
         .select($"query_id", $"cell").persist(madA)
       val rowsPhaseA = scanRowsA(qPa)
       val fracAd = (rowsPhaseA + scanRowsA(qPb)).toDouble / (10000.0 * storeN)

@@ -970,23 +970,12 @@ object Dedup {
     }
     val c = df.select(col(idCol).cast("long").as("cand_id"),
       VectorFunctions.asDouble(col(vecCol)).as("cv"))
-    // ≤ FlatQuantizerMax cells: flat driver trainer + O(k)-per-row
-    // argmin (bytes unchanged from every prior round). Past it: the
-    // two-level trainer AND the route-then-refine assignment — O(√k)
-    // comparisons per row, the large-k serving shape (a 16,384-cell
-    // flat argmin costs 64× the routed one on every corpus row).
-    val ann = graft.similarity.Ann
-    val (assignFn, scoredFn) =
-      if (nClusters <= ann.FlatQuantizerMax) {
-        val cents = ann.trainCentroids(c, nClusters)
-        ((d: DataFrame) => ann.assignCells(d, cents),
-          (d: DataFrame) => ann.assignCellsScored(d, cents))
-      } else {
-        val q = ann.trainTwoLevel(c, nClusters, ann.hashSample(c))
-        ((d: DataFrame) => ann.assignCellsTwoLevel(d, q),
-          (d: DataFrame) => ann.assignCellsTwoLevelScored(d, q))
-      }
-    val pairs = semanticPairs(c, assignFn, threshold, maxCell)
+    // flat driver trainer + O(k)-per-row argmin at contract cell counts;
+    // past the flat bound the two-level trainer and O(√k) routed
+    // assignment (a 16,384-cell flat argmin costs 64× the routed one on
+    // every corpus row) — the regime is the Quantizer's one decision
+    val q = graft.similarity.Quantizer.train(c, nClusters)
+    val pairs = semanticPairs(c, q.assign(_), threshold, maxCell)
     val labels = clusterAssignments(
       df.select(col(idCol).cast("long").as("doc_id")), "doc_id",
       pairs, maxRounds)
@@ -997,7 +986,7 @@ object Dedup {
       // of identically-normalized vectors are bit-equal for
       // power-of-two scales, so ties resolve to the smaller id
       // deterministically), then per cluster keep the max-score member
-      val scored = scoredFn(c)
+      val scored = q.assignScored(c)
         .select(col("cand_id").as("doc_id"), col("score"))
       val keep = labels.join(scored, Seq("doc_id"))
         .groupBy(col("cluster_id"))

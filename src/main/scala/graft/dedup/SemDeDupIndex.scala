@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.VectorFunctions.asDouble
 import graft.lake.{Lake, TableDef}
+import graft.similarity.{Quantizer, QuantizerStore}
 
 /** Persisted/incremental SemDeDup: train the coarse quantizer ONCE,
   * keep cell-assigned embeddings and converged cluster labels in lake
@@ -56,16 +57,11 @@ class SemDeDupIndex(lake: Lake, prefix: String = "semdedup",
     nClusters: Int = 64, threshold: Double = 0.95,
     maxRounds: Int = 20, maxCell: Int = 16384) {
 
-  val centroidTable: TableDef = TableDef(s"${prefix}_centroids",
-    StructType(Seq(StructField("cell", IntegerType),
-      StructField("centroid", ArrayType(DoubleType)))))
-  /** Top-router table, written ONLY when nClusters exceeds
-    * [[graft.similarity.Ann.FlatQuantizerMax]]: (branch, offset into
-    * the flat cell table, router centroid). Its presence switches
-    * [[append]] to the routed O(√k)-per-row assignment — the same
-    * auto-dispatch [[Dedup.semanticDedup]] does in-process. */
-  val topTable: TableDef =
-    graft.similarity.QuantizerStore.topTableDef(prefix)
+  val centroidTable: TableDef = QuantizerStore.centroidTableDef(prefix)
+  /** Top-router table, non-empty ONLY for routed (large-k) builds:
+    * (branch, offset into the flat cell table, router centroid) — the
+    * quantizer [[Dedup.semanticDedup]] trains in-process, persisted. */
+  val topTable: TableDef = QuantizerStore.topTableDef(prefix)
   /** `score` is the frozen assignment's squared-distance-to-centroid
     * (the argmin's own byproduct — no extra pass): what the 'farthest'
     * survivor policy ranks on at serve time ([[assignments]]). Stored
@@ -140,23 +136,10 @@ class SemDeDupIndex(lake: Lake, prefix: String = "semdedup",
       version: Long): Unit = {
     invalidateQuantizer()
     val spark = trainCorpus.sparkSession
-    import spark.implicits._
-    val ann = graft.similarity.Ann
     val c = vecs(trainCorpus, idCol, vecCol)
       .select(col("doc_id").as("cand_id"), col("cv"))
-    val (flat, router) =
-      if (nClusters <= ann.FlatQuantizerMax)
-        (ann.trainCentroids(c, nClusters), None)
-      else {
-        val q = ann.trainTwoLevel(c, nClusters, ann.hashSample(c))
-        (q.flat, Some(q))
-      }
-    lake.replace(centroidTable,
-      flat.toIndexedSeq.zipWithIndex
-        .map { case (cen, i) => (i, cen.toSeq) }
-        .toDF("cell", "centroid"), version)
-    graft.similarity.QuantizerStore.writeTop(
-      lake, topTable, router, version, spark)
+    QuantizerStore.write(lake, prefix, Quantizer.train(c, nClusters),
+      version, spark)
     lake.replace(vectorTable,
       spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
@@ -167,11 +150,9 @@ class SemDeDupIndex(lake: Lake, prefix: String = "semdedup",
         labelTable.schema), version)
   }
 
-  /** The frozen assignment function: routed two-level when the top
-    * table is present (large-k builds), flat argmin otherwise. The
-    * SCORED variant — cells bit-identical to the plain assigners
-    * (shared argmin kernel), with the squared-distance score kept for
-    * [[vectorTable]]'s `score` column.
+  /** The frozen quantizer [[append]] assigns with — its SCORED
+    * assignment, whose squared-distance score fills [[vectorTable]]'s
+    * `score` column.
     *
     * The loaded quantizer is MEMOIZED per instance (the DsirStore
     * rule): it is frozen by contract between builds, and re-collecting
@@ -179,19 +160,15 @@ class SemDeDupIndex(lake: Lake, prefix: String = "semdedup",
     * cadence (round-14 job profile). [[build]]/[[rebuild]] invalidate;
     * out-of-band writes to the same lake path are outside the store's
     * contract (the persisted indexes' standing rule). */
-  private var cachedQuantizer
-      : Option[(Array[Array[Double]], Option[graft.similarity.Ann.TwoLevelQuantizer])] = None
+  private var cachedQuantizer: Option[Quantizer] = None
   private def invalidateQuantizer(): Unit =
     synchronized { cachedQuantizer = None }
-  private def loadAssigner(): DataFrame => DataFrame = synchronized {
-    val qs = graft.similarity.QuantizerStore
-    val (flat, router) = cachedQuantizer.getOrElse {
-      val loaded = qs.load(lake, prefix, centroidTable, topTable,
-        expectRouted = nClusters > graft.similarity.Ann.FlatQuantizerMax)
+  private def quantizer(): Quantizer = synchronized {
+    cachedQuantizer.getOrElse {
+      val loaded = QuantizerStore.load(lake, prefix, nClusters)
       cachedQuantizer = Some(loaded)
       loaded
     }
-    qs.scoredAssigner(flat, router)
   }
 
   /** Fold a batch in: assign to frozen cells, pair batch↔batch and
@@ -207,8 +184,7 @@ class SemDeDupIndex(lake: Lake, prefix: String = "semdedup",
     *         label table */
   def append(newDocs: DataFrame, idCol: String, vecCol: String,
       version: Long): DataFrame = {
-    val assign = loadAssigner()
-    val batch = assign(
+    val batch = quantizer().assignScored(
       vecs(newDocs, idCol, vecCol)
         .select(col("doc_id").as("cand_id"), col("cv")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -1691,7 +1691,7 @@ object ExtraQueries {
             exact).head().getDouble(0)
           require(adRecall >= 0.8,
             s"adaptive-serving recall $adRecall under the pinned floor 0.8")
-          // ROUTED-regime parity (nLists past FlatQuantizerMax) moved to
+          // ROUTED-regime parity (Quantizer.Routed, large nLists) moved to
           // IvfIndexSpec per the x59/x84 gate-cost discipline: the
           // persisted-router round-trip ("large-k build persists the
           // router; fresh-instance search ≡ one-shot") and the routed

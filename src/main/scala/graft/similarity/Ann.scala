@@ -276,80 +276,8 @@ object Ann {
     val c = candidates.select(col(idCol).as("cand_id"),
         asDouble(col(vecCol)).as("cv"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (nLists <= FlatQuantizerMax) {
-      val centroids = trainCentroids(c, nLists)
-      val cAssigned = assignCells(c, centroids)
-      val q = probeQueries(queries, idCol, vecCol, centroids, nProbe)
-      scoreCells(cAssigned, q, k)
-    } else {
-      // large-k serving shape: two-level training, O(√k) routed
-      // assignment, and queries probe the ROUTED space (top branches by
-      // router distance, their subs by true distance) so probes look
-      // where candidates actually landed
-      val q2 = trainTwoLevel(c, nLists, hashSample(c))
-      val cAssigned = assignCellsTwoLevel(c, q2)
-      val qd = probeQueriesTwoLevel(queries, idCol, vecCol, q2, nProbe)
-      scoreCells(cAssigned, qd, k)
-    }
-  }
-
-  /** Query-side probe expansion against a [[TwoLevelQuantizer]]: the
-    * query's OWN ROUTED CELL always probes first — computed with the
-    * bit-identical arithmetic of [[assignCellsTwoLevel]] (raw vector,
-    * cn2 − 2·dot·inv scores), so a candidate with the query's exact
-    * direction is ALWAYS found (the branch-first routed cell need not
-    * be globally sub-nearest, which is why forcing it is load-bearing,
-    * not a nicety). The remaining nProbe − 1 cells rank the top
-    * max(2, nProbe) branches' subs by the same score. One row per
-    * (query, probed cell) — the [[probeQueries]] contract; per-query
-    * cost O(√k · nProbe) score evaluations instead of O(k). Ties break
-    * on (score, cell id) — deterministic on any layout. */
-  private[graft] def probeQueriesTwoLevel(queries: DataFrame,
-      idCol: String, vecCol: String, q2: TwoLevelQuantizer,
-      nProbe: Int): DataFrame = {
-    val sc = queries.sparkSession.sparkContext
-    val bq = sc.broadcast(q2)
-    val bTopN2 = sc.broadcast(q2.top.map(cen => cen.map(x => x * x).sum))
-    val bSubN2 = sc.broadcast(q2.subs.map(_.map(cen => cen.map(x => x * x).sum)))
-    val np = nProbe
-    val probeUdf = org.apache.spark.sql.functions.udf { (v: Seq[Double]) =>
-      val qq = bq.value
-      val a = v.toArray
-      var d = 0.0
-      var i = 0
-      while (i < a.length) { d += a(i) * a(i); i += 1 }
-      val inv = if (d > 0.0) 1.0 / math.sqrt(d) else 1.0
-      def scores(cents: Array[Array[Double]],
-          cn2: Array[Double]): Array[Double] =
-        Array.tabulate(cents.length) { ci =>
-          val cen = cents(ci)
-          var dp = 0.0; var j = 0
-          while (j < cen.length) { dp += a(j) * cen(j); j += 1 }
-          cn2(ci) - 2.0 * dp * inv
-        }
-      val topScores = scores(qq.top, bTopN2.value)
-      def argmin(s: Array[Double]): Int = {
-        var best = 0; var bs = Double.MaxValue; var ci = 0
-        while (ci < s.length) {
-          if (s(ci) < bs) { bs = s(ci); best = ci }; ci += 1
-        }
-        best
-      }
-      val rb = argmin(topScores)
-      val routed = qq.offsets(rb) + argmin(scores(qq.subs(rb), bSubN2.value(rb)))
-      val bp = math.min(qq.top.length, math.max(2, np))
-      val ranked = qq.top.indices
-        .sortBy(bi => (topScores(bi), bi)).take(bp)
-        .flatMap { bi =>
-          val ss = scores(qq.subs(bi), bSubN2.value(bi))
-          ss.indices.map(si => (ss(si), qq.offsets(bi) + si))
-        }
-        .sortBy(identity).map(_._2)
-      (routed +: ranked.filterNot(_ == routed)).take(np)
-    }
-    queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("cells", probeUdf(col("qv")))
-      .select(col("query_id"), col("qv"), explode(col("cells")).as("cell"))
+    val q = Quantizer.train(c, nLists)
+    scoreCells(q.assign(c), q.probe(queries, idCol, vecCol, nProbe), k)
   }
 
   /** L2-normalize an array column: cosine search ⇒ cluster on NORMALIZED
@@ -357,224 +285,23 @@ object Ann {
     * magnitude. Norm computed ONCE per vector (a lambda-internal dot()
     * would re-evaluate per element); zero vectors pass through
     * unnormalized instead of emitting NaN. */
-  private def withNorm(df: DataFrame, vc: String, out: String): DataFrame = df
+  private[similarity] def withNorm(df: DataFrame, vc: String, out: String): DataFrame = df
     .withColumn("__nrm", sqrt(dot(col(vc), col(vc))))
     .withColumn(out, when(col("__nrm") > 0.0,
       transform(col(vc), x => x / col("__nrm"))).otherwise(col(vc)))
     .drop("__nrm")
 
-  /** Largest centroid count the FLAT driver-side trainer serves. The
-    * flat path Lloyd-trains on a fixed bottom-4096-by-hash sample, so
-    * (a) k beyond 4096 is structurally meaningless (k-means cannot emit
-    * more centroids than sample points) and (b) well before that the
-    * sample stops covering the centroids (≥16 points per centroid at
-    * 256). Past this bound [[trainCentroids]] switches to the two-level
-    * distributed trainer ([[trainCentroidsHierarchical]]) — web-scale
-    * SemDeDup configs and billion-vector IVF want 2^14–2^16 cells, which
-    * no driver-sample Lloyd can produce. 256 is also ≥ every
-    * configuration the contract queries pin byte-parity on, so the flat
-    * path (and its bytes) is untouched for them. */
-  private[graft] val FlatQuantizerMax = 256
-
-  /** Deterministic coarse-quantizer training over a (cand_id, cv) frame.
-    * The quantizer only needs a representative SAMPLE — training k-means
-    * on the full corpus is wasted work at any scale (and the k-means||
-    * init alone is several full passes). Bottom-4096-by-hash is a
-    * deterministic uniform sample that needs NO corpus-size knowledge:
+  /** The deterministic bottom-4096-by-hash NORMALIZED sample every
+    * quantizer trainer draws from. The coarse quantizer only needs a
+    * representative SAMPLE — training k-means on the full corpus is
+    * wasted work at any scale. Bottom-4096-by-hash is a deterministic
+    * uniform sample that needs NO corpus-size knowledge:
     * orderBy(hash).limit(k) plans as TakeOrderedAndProject (per-partition
     * heaps, only 4096 rows per partition reach the driver), so sampling
-    * costs one pass — no standalone sizing count() job, and the same
-    * cells come out of the same data on any cluster layout.
-    *
-    * nLists ≤ [[FlatQuantizerMax]] trains flat on the driver (bytes
-    * unchanged from every prior round); larger k dispatches to the
-    * two-level distributed trainer. */
-  private[graft] def trainCentroids(c: DataFrame, nLists: Int): Array[Array[Double]] =
-    trainQuantizer(c, hashSample(c), nLists)
-
-  /** Flat-or-hierarchical dispatch with the training sample supplied —
-    * the entry for callers that already ran the sampling job once and
-    * feed several trainers from it ([[ivfPqTopK]], [[IvfIndex]]). */
-  private[graft] def trainQuantizer(c: DataFrame,
-      sample: Array[Array[Double]], nLists: Int): Array[Array[Double]] =
-    if (nLists <= FlatQuantizerMax) trainCentroidsFrom(sample, nLists)
-    else trainCentroidsHierarchical(c, nLists, sample)
-
-  /** Two-level coarse quantizer: √k TOP router centroids plus each top
-    * cell's SUB-centroids, kept structured so assignment can ROUTE
-    * (argmin over tops, then argmin within the routed top's subs —
-    * O(√k) comparisons per row instead of O(k)). `flat` concatenates
-    * subs in top-cell order; a row's global cell id is
-    * `offsets(top) + subIdx`, i.e. its index into `flat`. */
-  private[graft] final case class TwoLevelQuantizer(
-      top: Array[Array[Double]], subs: Array[Array[Array[Double]]]) {
-    val offsets: Array[Int] = subs.scanLeft(0)(_ + _.length).init
-    def nCells: Int = offsets.last + subs.last.length
-    def flat: Array[Array[Double]] = subs.flatten
-  }
-
-  /** Two-level distributed Lloyd for large k (the standard hierarchical
-    * coarse-quantizer construction): √k TOP cells train flat on the
-    * driver sample, the corpus takes one broadcast-argmin pass onto
-    * them, each top cell draws its own deterministic bottom-N-by-hash
-    * sub-sample, and √k SUB-centroids per cell train IN THE EXECUTORS
-    * (one `mapGroups` task per top cell, seeded per cell) — k total
-    * centroids from bounded driver state, with training parallelism
-    * that grows with k instead of a driver Lloyd whose cost is
-    * O(k · sample · dim) single-threaded.
-    *
-    * Scale shape: the only full-corpus work is the one argmin
-    * assignment pass; per-cell sampling is a SALTED two-stage bottom-N
-    * (row_number over (cell, hash-salt) then over cell), so no single
-    * window task ever owns a whole cell's population — group size is
-    * bounded by salt count × subSampleMax regardless of corpus size,
-    * the keeper-window discipline applied to sampling. Everything is
-    * deterministic on any layout: salts and order keys are id hashes,
-    * per-cell Lloyd seeds with 42+cell, output concatenates in cell
-    * order.
-    *
-    * Empty top cells (corpus smaller than k) contribute no subs,
-    * mirroring [[lloyd]]'s kk = min(k, points) cap — `nCells` may fall
-    * short of k on tiny corpora. */
-  private[graft] def trainTwoLevel(c: DataFrame, k: Int,
-      topSample: Array[Array[Double]],
-      subSampleMax: Int = 4096): TwoLevelQuantizer = {
-    val k1 = math.max(1, math.round(math.sqrt(k.toDouble)).toInt)
-    val k2 = (k + k1 - 1) / k1 // ceil — k1·k2 ≥ k
-    val top = trainCentroidsFrom(topSample, k1)
-    val assigned = assignCells(c, top)
-    val hk = xxhash64(col("cand_id").cast("long"))
-    // salted two-stage bottom-N per cell: each salt class's bottom-N is a
-    // superset of its contribution to the cell's global bottom-N, so the
-    // second stage over ≤ 64·subSampleMax rows per cell is exact — and no
-    // window group exceeds that bound at any corpus size
-    val w1 = Window.partitionBy(col("cell"), col("__salt"))
-      .orderBy(hk, col("cand_id"))
-    val w2 = Window.partitionBy(col("cell")).orderBy(hk, col("cand_id"))
-    val sampled = assigned
-      .withColumn("__salt", pmod(hk, lit(64)))
-      .withColumn("__r1", row_number().over(w1))
-      .filter(col("__r1") <= subSampleMax)
-      .withColumn("__r2", row_number().over(w2))
-      .filter(col("__r2") <= subSampleMax)
-    val spark = c.sparkSession
-    import spark.implicits._
-    val kk2 = k2
-    val subTrained = withNorm(sampled, "cv", "cnorm")
-      .select(col("cell"), col("cand_id").cast("long").as("cand_id"),
-        col("cnorm"))
-      .as[(Int, Long, Seq[Double])]
-      .groupByKey(_._1)
-      .mapGroups { (cell, it) =>
-        val pts = it.toArray.sortBy(_._2).map(_._3.toArray)
-        cell -> lloyd(pts, kk2, iters = 8, seed = 42L + cell)
-          .map(_.toSeq).toSeq
-      }
-      .collect()
-      .sortBy(_._1)
-    // occupied top cells only — keep top routers aligned with their subs
-    TwoLevelQuantizer(
-      subTrained.map { case (cell, _) => top(cell) },
-      subTrained.map { case (_, ss) => ss.map(_.toArray).toArray })
-  }
-
-  /** Flat-array view of [[trainTwoLevel]] for callers that only need
-    * centroids ([[trainCentroids]]' large-k arm). */
-  private[graft] def trainCentroidsHierarchical(c: DataFrame, k: Int,
-      topSample: Array[Array[Double]],
-      subSampleMax: Int = 4096): Array[Array[Double]] =
-    trainTwoLevel(c, k, topSample, subSampleMax).flat.take(k)
-
-  /** Route-then-refine assignment against a [[TwoLevelQuantizer]]:
-    * argmin over the √k top routers picks the branch, argmin within
-    * that branch's subs picks the cell — O(√k) comparisons per row
-    * where [[assignCells]] against the flat array pays O(k). The
-    * routing is APPROXIMATE at branch boundaries (a vector whose true
-    * nearest sub-centroid lives under a different top router resolves
-    * to its own branch's best sub) — the standard hierarchical-routing
-    * trade (inverted multi-index lineage); for cell-bucketing
-    * consumers (SemDeDup candidate generation, IVF at matching probe
-    * routing) what matters is that IDENTICAL normalized vectors route
-    * identically, which holds exactly (pure function of the
-    * normalized vector). Output column contract = [[assignCells]]:
-    * input columns + `cell` (global id = offsets(top) + subIdx, i.e.
-    * the index into `q.flat`). */
-  private[graft] def assignCellsTwoLevel(c: DataFrame,
-      q: TwoLevelQuantizer): DataFrame = {
-    val sc = c.sparkSession.sparkContext
-    val bq = sc.broadcast(q)
-    val bTopN2 = sc.broadcast(q.top.map(cen => cen.map(x => x * x).sum))
-    val bSubN2 = sc.broadcast(q.subs.map(_.map(cen => cen.map(x => x * x).sum)))
-    val routed = org.apache.spark.sql.functions.udf { (v: Seq[Double]) =>
-      val qq = bq.value
-      val a = v.toArray
-      var d = 0.0
-      var i = 0
-      while (i < a.length) { d += a(i) * a(i); i += 1 }
-      val inv = if (d > 0.0) 1.0 / math.sqrt(d) else 1.0
-      val branch = argminAt(a, inv, qq.top, bTopN2.value)
-      val sub = argminAt(a, inv, qq.subs(branch), bSubN2.value(branch))
-      qq.offsets(branch) + sub
-    }
-    c.withColumn("cell", routed(col("cv")))
-  }
-
-  /** [[assignCellsTwoLevel]] plus the chosen cell's squared-distance
-    * score — the [[assignCellsScored]] contract on the routed path
-    * (the 'farthest' survivor policy at large k). */
-  private[graft] def assignCellsTwoLevelScored(c: DataFrame,
-      q: TwoLevelQuantizer): DataFrame = {
-    val sc = c.sparkSession.sparkContext
-    val bq = sc.broadcast(q)
-    val bTopN2 = sc.broadcast(q.top.map(cen => cen.map(x => x * x).sum))
-    val bSubN2 = sc.broadcast(q.subs.map(_.map(cen => cen.map(x => x * x).sum)))
-    val routed = org.apache.spark.sql.functions.udf { (v: Seq[Double]) =>
-      val qq = bq.value
-      val a = v.toArray
-      var d = 0.0
-      var i = 0
-      while (i < a.length) { d += a(i) * a(i); i += 1 }
-      val inv = if (d > 0.0) 1.0 / math.sqrt(d) else 1.0
-      val branch = argminAt(a, inv, qq.top, bTopN2.value)
-      val subs = qq.subs(branch)
-      val sub = argminAt(a, inv, subs, bSubN2.value(branch))
-      val cen = subs(sub)
-      var dp = 0.0; var j = 0
-      while (j < cen.length) { dp += a(j) * cen(j); j += 1 }
-      (qq.offsets(branch) + sub, bSubN2.value(branch)(sub) - 2.0 * dp * inv)
-    }
-    c.withColumn("__a", routed(col("cv")))
-      .withColumn("cell", col("__a._1"))
-      .withColumn("score", col("__a._2"))
-      .drop("__a")
-  }
-
-  /** Argmin of ||cen||² − 2·(v·cen)·inv over a centroid set — the
-    * [[NearestCell.kernel]] comparison loop with the norm factor
-    * precomputed (the two-level router runs it twice per row). */
-  private def argminAt(a: Array[Double], inv: Double,
-      cents: Array[Array[Double]], cn2: Array[Double]): Int = {
-    var best = 0; var bs = Double.MaxValue; var ci = 0
-    while (ci < cents.length) {
-      val cen = cents(ci)
-      var dp = 0.0; var j = 0
-      while (j < cen.length) { dp += a(j) * cen(j); j += 1 }
-      val s = cn2(ci) - 2.0 * dp * inv
-      if (s < bs) { bs = s; best = ci }
-      ci += 1
-    }
-    best
-  }
-
-  private[graft] def trainCentroidsFrom(sample: Array[Array[Double]],
-      nLists: Int): Array[Array[Double]] =
-    lloyd(sample, nLists, iters = 8, seed = 42L)
-
-  /** The deterministic bottom-4096-by-hash NORMALIZED sample both
-    * quantizer trainers draw from. Exposed separately so IVFADC builds
-    * ([[ivfPqTopK]], [[IvfIndex.build]]) run the sampling job ONCE and
-    * feed both trainers — the two-trainer composition was otherwise
-    * scanning the (persisted) corpus twice for byte-identical samples. */
+    * costs one pass and the same cells come out of the same data on any
+    * cluster layout. Exposed separately so IVFADC builds ([[ivfPqTopK]],
+    * [[IvfIndex.build]]) run the sampling job ONCE and feed the coarse
+    * and codec trainers from it. */
   private[graft] def hashSample(c: DataFrame): Array[Array[Double]] = {
     // hash the id at LongType regardless of the caller's integral width:
     // xxhash64(int) != xxhash64(long) for the same value, and the persisted
@@ -591,71 +318,6 @@ object Ann {
       .collect().map(r => r.getSeq[Double](1).toArray)
     require(sample.nonEmpty, "quantizer training needs a non-empty corpus")
     sample
-  }
-
-  /** Assign each (cand_id, cv) row its nearest cell — the one full-corpus
-    * pass of the IVF path, kept argmin-only and broadcast-driven. */
-  private[graft] def assignCells(c: DataFrame,
-      centroids: Array[Array[Double]]): DataFrame = {
-    val bc = c.sparkSession.sparkContext.broadcast(centroids)
-    // per-centroid ||c||², precomputed once: lets the corpus assignment use
-    // argmin(||c||² − 2·(v·cen)/||v||) ≡ argmin |v/||v|| − cen|² without
-    // materializing normalized vectors
-    val bcNorm2 = c.sparkSession.sparkContext.broadcast(
-      centroids.map(cen => cen.map(x => x * x).sum))
-    // corpus-side assignment needs only the nearest cell: argmin over
-    // ||cen||² − 2·(v·cen)/||v|| (≡ L2 distance of the normalized vector),
-    // computed on the RAW vector — no sort, no index array, no normalized
-    // copy. This is the one full-corpus pass — it runs as the native
-    // [[NearestCell]] kernel (bit-identical arithmetic to
-    // the scalar UDF it replaced; no per-row Seq conversion, no fusion
-    // break).
-    c.withColumn("cell", org.apache.spark.sql.GraftColumnBridge.column(
-      NearestCell(org.apache.spark.sql.GraftColumnBridge.expression(
-        col("cv")), bc, bcNorm2)))
-  }
-
-  /** [[assignCells]] plus the winning cell's squared-distance score
-    * (||cen||² − 2·(v·cen)/||v|| — the assignment argmin's own key, =
-    * L2²(normalized v, cen) − 1). The 'farthest-from-centroid' survivor
-    * policy ranks on it: monotone in the true distance, bit-equal for
-    * power-of-two-scaled copies of a vector (dot, 1/√d and the products
-    * all commute with exponent shifts), so ties resolve identically on
-    * any engine layout. */
-  private[graft] def assignCellsScored(c: DataFrame,
-      centroids: Array[Array[Double]]): DataFrame = {
-    val bc = c.sparkSession.sparkContext.broadcast(centroids)
-    val bcNorm2 = c.sparkSession.sparkContext.broadcast(
-      centroids.map(cen => cen.map(x => x * x).sum))
-    c.withColumn("__a", org.apache.spark.sql.GraftColumnBridge.column(
-        NearestCellScored(org.apache.spark.sql.GraftColumnBridge.expression(
-          col("cv")), bc, bcNorm2)))
-      .withColumn("cell", col("__a.cell"))
-      .withColumn("score", col("__a.score"))
-      .drop("__a")
-  }
-
-  /** Query-side probe expansion: one row per (query, probed cell), the
-    * query's nProbe nearest cells by L2 on the normalized vector. The
-    * query relation is tiny — the full cell ranking runs there, never on
-    * the corpus side. */
-  private[graft] def probeQueries(queries: DataFrame, idCol: String,
-      vecCol: String, centroids: Array[Array[Double]],
-      nProbe: Int): DataFrame = {
-    val bc = queries.sparkSession.sparkContext.broadcast(centroids)
-    val dist2 = org.apache.spark.sql.functions.udf { (v: Seq[Double]) =>
-      val a = v.toArray
-      bc.value.indices.sortBy { ci =>
-        val cen = bc.value(ci)
-        var s = 0.0; var i = 0
-        while (i < cen.length) { val d = a(i) - cen(i); s += d * d; i += 1 }
-        s
-      }
-    }
-    withNorm(queries.select(col(idCol).as("query_id"),
-        asDouble(col(vecCol)).as("qv")), "qv", "qnorm")
-      .withColumn("cells", slice(dist2(col("qnorm")), 1, nProbe)).drop("qnorm")
-      .select(col("query_id"), col("qv"), explode(col("cells")).as("cell"))
   }
 
   /** Join assigned corpus rows with probe rows on the cell id — scored
@@ -688,59 +350,6 @@ object Ann {
       .select(col("query_id"), col("cosine").as("kth"))
   }
 
-  /** Multi-assignment: each corpus row lands in its `assign` nearest
-    * cells (FAISS-style "multiple assignment") — an indexing-time
-    * storage-premium dial (assign× rows) that raises pruned-probe
-    * recall: a boundary vector missed because its NEAREST cell went
-    * unprobed is still found through its 2nd-nearest. Ranking by the
-    * same ||cen||² − 2·(v·cen)/||v|| score as [[assignCells]] (ties on
-    * cell id), so assign = 1 reproduces assignCells' cells exactly. */
-  private[graft] def assignCellsMulti(c: DataFrame,
-      centroids: Array[Array[Double]], assign: Int): DataFrame = {
-    require(assign >= 1 && assign <= centroids.length,
-      s"assign must be in [1, ${centroids.length}], got $assign")
-    if (assign == 1) assignCells(c, centroids)
-    else {
-      val bc = c.sparkSession.sparkContext.broadcast(centroids)
-      val bcNorm2 = c.sparkSession.sparkContext.broadcast(
-        centroids.map(cen => cen.map(x => x * x).sum))
-      val a = assign
-      val topCells = org.apache.spark.sql.functions.udf { (v: Seq[Double]) =>
-        val x = v.toArray
-        var d = 0.0; var i = 0
-        while (i < x.length) { d += x(i) * x(i); i += 1 }
-        val inv = if (d > 0.0) 1.0 / math.sqrt(d) else 1.0
-        val cents = bc.value; val cn2 = bcNorm2.value
-        val scores = new Array[Double](cents.length)
-        var ci = 0
-        while (ci < cents.length) {
-          val cen = cents(ci)
-          var dp = 0.0; var j = 0
-          while (j < cen.length) { dp += x(j) * cen(j); j += 1 }
-          scores(ci) = cn2(ci) - 2.0 * dp * inv
-          ci += 1
-        }
-        // top-a by repeated argmin (a ≤ a few): no sort, no boxing —
-        // this runs once per corpus row, keep it allocation-lean
-        val out = new Array[Int](a)
-        var s = 0
-        while (s < a) {
-          var best = -1; var bs = Double.MaxValue
-          var cj = 0
-          while (cj < scores.length) {
-            if (scores(cj) < bs) { bs = scores(cj); best = cj }
-            cj += 1
-          }
-          out(s) = best
-          scores(best) = Double.MaxValue
-          s += 1
-        }
-        out
-      }
-      c.withColumn("cell", explode(topCells(col("cv"))))
-    }
-  }
-
   /** Per-cell angular radius, stored as the MINIMUM member-to-centroid
     * cosine (min cos ⇔ max angle): one aggregate over the assigned
     * corpus, collected as ≤ nLists rows. Cells with no members read
@@ -767,8 +376,8 @@ object Ann {
         val den = math.sqrt(vn) * math.sqrt(cn)
         // den == 0 (zero-norm member OR degenerate centroid): the angle
         // is undefined, so the only SOUND radius is the maximal one —
-        // return cos = -1 (radius π), matching the branchAngles /
-        // extraProbeFrame convention below. Returning 1.0 here would
+        // return cos = -1 (radius π), matching the phase-B bound
+        // convention of Quantizer.extraProbe. Returning 1.0 here would
         // give a populated degenerate-centroid cell a ZERO radius while
         // the phase-B cell bound scores its cosQC as -1, making the
         // cell maximally prunable despite possibly holding true top-k
@@ -782,220 +391,6 @@ object Ann {
     val out = Array.fill(centroids.length)(1.0)
     rows.foreach(r => out(r.getInt(0)) = r.getDouble(1))
     out
-  }
-
-  /** Phase-B probe expansion of the adaptive search: per query, rank
-    * the UNPROBED cells (everything past the nProbeMin nearest — the
-    * exact skip set [[probeQueries]] probed, same metric, same stable
-    * sort) by their cosine UPPER BOUND cos(max(0, θ(q̂, ĉ) − radius))
-    * and keep cells while the bound can still beat the query's current
-    * k-th hit, capped at nProbeMax − nProbeMin. Queries absent from
-    * `kth` (fewer than k phase-A hits) probe up to the cap
-    * unconditionally. The 1e-6 slack absorbs the 6dp score rounding —
-    * pruning errs toward probing, never away, which is what makes
-    * adaptive-with-full-cap byte-equal to a full probe (AnnAdaptiveSpec
-    * pins it). */
-  private[graft] def extraProbeFrame(queries: DataFrame, idCol: String,
-      vecCol: String, centroids: Array[Array[Double]],
-      radii: Array[Double], kth: DataFrame,
-      nProbeMin: Int, nProbeMax: Int): DataFrame = {
-    val sc = queries.sparkSession.sparkContext
-    val bc = sc.broadcast(centroids)
-    val br = sc.broadcast(radii)
-    val (pMin, pMax) = (nProbeMin, nProbeMax)
-    val extraUdf = org.apache.spark.sql.functions.udf {
-      (qn: Seq[Double], kthCos: Double) =>
-        val a = qn.toArray
-        val cents = bc.value
-        def d2(ci: Int): Double = {
-          val cen = cents(ci)
-          var s = 0.0; var i = 0
-          while (i < cen.length) { val d = a(i) - cen(i); s += d * d; i += 1 }
-          s
-        }
-        // the EXACT probe order of probeQueries: stable sort on d2 over
-        // the normalized query — cells [0, pMin) are already scored
-        val order = cents.indices.sortBy(d2)
-        val rest = order.drop(pMin)
-        def bound(ci: Int): Double = {
-          val cen = cents(ci)
-          var dp = 0.0; var cn = 0.0; var i = 0
-          while (i < cen.length) { dp += a(i) * cen(i); cn += cen(i) * cen(i); i += 1 }
-          val cnorm = math.sqrt(cn)
-          val cosQC = if (cnorm > 0.0) math.max(-1.0, math.min(1.0, dp / cnorm)) else -1.0
-          val rc = math.acos(math.max(-1.0, math.min(1.0, br.value(ci))))
-          math.cos(math.max(0.0, math.acos(cosQC) - rc))
-        }
-        // stable sort on -bound alone: rest is already in probe (d2)
-        // order, so SATURATED bounds (big radii clipping to cos 0 = 1.0)
-        // tie-break to the fixed-probe cell choice rather than cell id —
-        // on radius-vacuous corpora adaptive then spends its cap on the
-        // same cells a fixed probe would, instead of id-ordered picks
-        rest.map(ci => (bound(ci), ci))
-          .sortBy { case (b, _) => -b }
-          .filter { case (b, _) => b >= kthCos - 1e-6 }
-          .take(pMax - pMin)
-          .map(_._2)
-    }
-    withNorm(queries.select(col(idCol).as("query_id"),
-        asDouble(col(vecCol)).as("qv")), "qv", "qnorm")
-      .join(broadcast(kth), Seq("query_id"), "left")
-      .withColumn("cells",
-        extraUdf(col("qnorm"), coalesce(col("kth"), lit(-2.0))))
-      .drop("qnorm", "kth")
-      .select(col("query_id"), col("qv"), explode(col("cells")).as("cell"))
-  }
-
-  /** Per-branch angular envelope of a [[TwoLevelQuantizer]]: branch b's
-    * angle is max over its cells i of θ(router_b, ĉᵢ) + radiusᵢ, so for
-    * any member v of any cell under router r,
-    * θ(q̂, v̂) ≥ θ(q̂, r̂) − envelope (two chained spherical triangle
-    * inequalities), and cos(max(0, θ(q̂, r̂) − envelope)) upper-bounds
-    * every member cosine in the WHOLE BRANCH. This is what lets the
-    * routed adaptive probe prune at the branch level — O(√k) envelope
-    * checks decide which branches even get their sub-centroids scored.
-    * Driver-side O(k·dim) precompute, reused across the query batch. */
-  private[graft] def branchAngles(q2: TwoLevelQuantizer,
-      radii: Array[Double]): Array[Double] =
-    Array.tabulate(q2.top.length) { b =>
-      val r = q2.top(b)
-      var rn = 0.0; var i = 0
-      while (i < r.length) { rn += r(i) * r(i); i += 1 }
-      val rnorm = math.sqrt(rn)
-      val subs = q2.subs(b)
-      var worst = 0.0
-      var si = 0
-      while (si < subs.length) {
-        val cen = subs(si)
-        var dp = 0.0; var cn = 0.0; var j = 0
-        while (j < cen.length) {
-          dp += r(j) * cen(j); cn += cen(j) * cen(j); j += 1
-        }
-        val den = rnorm * math.sqrt(cn)
-        // degenerate (zero-norm) router/sub-centroid: angle is
-        // undefined, so contribute π (cos −1, unprunable) — the
-        // CONSERVATIVE convention angTo/extraProbeFrame use. cos +1
-        // here would shrink the branch envelope and could prune a
-        // branch holding true top-k hits, breaking the full-cap
-        // byte-parity certificate.
-        val cosRC =
-          if (den > 0.0) math.max(-1.0, math.min(1.0, dp / den)) else -1.0
-        val cellAng = math.acos(math.max(-1.0,
-          math.min(1.0, radii(q2.offsets(b) + si))))
-        val a = math.acos(cosRC) + cellAng
-        if (a > worst) worst = a
-        si += 1
-      }
-      worst
-    }
-
-  /** Routed-regime phase-B expansion: the per-query work is
-    * O(√k + √k · surviving branches) instead of the flat path's O(k) —
-    * the [[branchAngles]] envelope is checked per BRANCH first, and only
-    * branches whose envelope bound can still beat the query's k-th hit
-    * get their sub-centroids scored against the per-cell radius bound.
-    * The phase-A exclusion set is recomputed with the bit-identical
-    * arithmetic of [[probeQueriesTwoLevel]] (raw vector, cn2 − 2·dot·inv
-    * scores, routed-cell-first), the same discipline that makes the flat
-    * [[extraProbeFrame]] sound. Queries absent from `kth` probe up to
-    * the cap; the 1e-6 slack errs toward probing, so full cap remains
-    * byte-equal to a full probe (AnnAdaptiveSpec pins the routed
-    * certificate too). */
-  private[graft] def extraProbeFrameRouted(queries: DataFrame,
-      idCol: String, vecCol: String, q2: TwoLevelQuantizer,
-      radii: Array[Double], kth: DataFrame,
-      nProbeMin: Int, nProbeMax: Int): DataFrame = {
-    val sc = queries.sparkSession.sparkContext
-    val bq = sc.broadcast(q2)
-    val br = sc.broadcast(radii)
-    val bEnv = sc.broadcast(branchAngles(q2, radii))
-    val bTopN2 = sc.broadcast(q2.top.map(cen => cen.map(x => x * x).sum))
-    val bSubN2 = sc.broadcast(q2.subs.map(_.map(cen => cen.map(x => x * x).sum)))
-    val (pMin, pMax) = (nProbeMin, nProbeMax)
-    val extraUdf = org.apache.spark.sql.functions.udf {
-      (v: Seq[Double], kthCos: Double) =>
-        val qq = bq.value
-        val a = v.toArray
-        var d = 0.0; var i = 0
-        while (i < a.length) { d += a(i) * a(i); i += 1 }
-        val inv = if (d > 0.0) 1.0 / math.sqrt(d) else 1.0
-        // --- the EXACT phase-A probe set of probeQueriesTwoLevel ---
-        def scores(cents: Array[Array[Double]],
-            cn2: Array[Double]): Array[Double] =
-          Array.tabulate(cents.length) { ci =>
-            val cen = cents(ci)
-            var dp = 0.0; var j = 0
-            while (j < cen.length) { dp += a(j) * cen(j); j += 1 }
-            cn2(ci) - 2.0 * dp * inv
-          }
-        val topScores = scores(qq.top, bTopN2.value)
-        def argmin(s: Array[Double]): Int = {
-          var best = 0; var bs = Double.MaxValue; var ci = 0
-          while (ci < s.length) {
-            if (s(ci) < bs) { bs = s(ci); best = ci }; ci += 1
-          }
-          best
-        }
-        val rb = argmin(topScores)
-        val routed = qq.offsets(rb) + argmin(scores(qq.subs(rb), bSubN2.value(rb)))
-        val bp = math.min(qq.top.length, math.max(2, pMin))
-        val rankedA = qq.top.indices
-          .sortBy(bi => (topScores(bi), bi)).take(bp)
-          .flatMap { bi =>
-            val ss = scores(qq.subs(bi), bSubN2.value(bi))
-            ss.indices.map(si => (ss(si), qq.offsets(bi) + si))
-          }
-          .sortBy(identity).map(_._2)
-        val probedA = (routed +: rankedA.filterNot(_ == routed)).take(pMin)
-        val probedSet = probedA.toSet
-        // --- phase B: branch envelope gate, then surviving subs ---
-        def angTo(cen: Array[Double], cn2: Double): Double = {
-          var dp = 0.0; var j = 0
-          while (j < cen.length) { dp += a(j) * cen(j); j += 1 }
-          val cnorm = math.sqrt(cn2)
-          val c = if (cnorm > 0.0)
-            math.max(-1.0, math.min(1.0, dp * inv / cnorm)) else -1.0
-          math.acos(c)
-        }
-        val out =
-          scala.collection.mutable.ArrayBuffer.empty[(Double, Double, Int)]
-        var bi = 0
-        while (bi < qq.top.length) {
-          val angQR = angTo(qq.top(bi), bTopN2.value(bi))
-          val bBound = math.cos(math.max(0.0, angQR - bEnv.value(bi)))
-          if (bBound >= kthCos - 1e-6) {
-            val subs = qq.subs(bi)
-            var si = 0
-            while (si < subs.length) {
-              val ci = qq.offsets(bi) + si
-              if (!probedSet.contains(ci)) {
-                val rc = math.acos(math.max(-1.0,
-                  math.min(1.0, br.value(ci))))
-                val ang = angTo(subs(si), bSubN2.value(bi)(si))
-                val bound = math.cos(math.max(0.0, ang - rc))
-                if (bound >= kthCos - 1e-6) out += ((bound, ang, ci))
-              }
-              si += 1
-            }
-          }
-          bi += 1
-        }
-        // ties on the bound (saturated big-radius cells all clipping to
-        // 1.0) break by query angle — the fixed-probe choice — so on
-        // radius-vacuous corpora the cap buys the same cells fixed
-        // probing would read, not id-ordered picks
-        out.sortBy { case (b, ang, ci) => (-b, ang, ci) }
-          .take(math.max(0, pMax - probedA.length))
-          .map(_._3)
-          .toSeq
-    }
-    queries.select(col(idCol).as("query_id"),
-        asDouble(col(vecCol)).as("qv"))
-      .join(broadcast(kth), Seq("query_id"), "left")
-      .withColumn("cells",
-        extraUdf(col("qv"), coalesce(col("kth"), lit(-2.0))))
-      .drop("kth")
-      .select(col("query_id"), col("qv"), explode(col("cells")).as("cell"))
   }
 
   /** Query-adaptive IVF top-k (the 100 TB serving dial): phase A scores
@@ -1013,19 +408,18 @@ object Ann {
     * spec-pinned soundness certificate.
     *
     * `assign` > 1 additionally stores each candidate in its `assign`
-    * nearest cells ([[assignCellsMulti]] — assign× scan/storage premium)
-    * so boundary vectors survive pruned probes; duplicate (query, cand)
-    * scores collapse before ranking. nProbeMin = nProbeMax degenerates
-    * to the fixed-probe [[ivfTopK]] plan plus the multi-assign option.
+    * nearest cells ([[Quantizer.Flat.assign]] — assign× scan/storage
+    * premium) so boundary vectors survive pruned probes; duplicate
+    * (query, cand) scores collapse before ranking. nProbeMin = nProbeMax
+    * degenerates to the fixed-probe [[ivfTopK]] plan plus the
+    * multi-assign option.
     *
-    * Past [[FlatQuantizerMax]] the search runs the ROUTED adaptive
-    * shape: phase A probes through the two-level quantizer
-    * ([[probeQueriesTwoLevel]]) and phase B prunes at the BRANCH level
-    * first ([[branchAngles]] / [[extraProbeFrameRouted]]) — per-query
-    * probe selection stays O(√k · survivors) instead of ranking 2^14+
-    * cell bounds, which is what keeps adaptive serving viable at
-    * billion-vector cell counts. Multi-assignment stays a flat-regime
-    * dial (routed assignment is single-cell by construction). */
+    * In the routed large-k regime phase B prunes at the BRANCH level
+    * first ([[Quantizer.Routed.extraProbe]]) — per-query probe selection
+    * stays O(√k · survivors) instead of ranking 2^14+ cell bounds, which
+    * is what keeps adaptive serving viable at billion-vector cell
+    * counts. Multi-assignment stays a flat-regime dial (routed
+    * assignment is single-cell by construction). */
   def ivfTopKAdaptive(
       queries: DataFrame, candidates: DataFrame,
       idCol: String, vecCol: String, k: Int,
@@ -1036,34 +430,11 @@ object Ann {
     val c = candidates.select(col(idCol).as("cand_id"),
         asDouble(col(vecCol)).as("cv"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (nLists > FlatQuantizerMax) {
-      require(assign == 1,
-        "multi-assignment serves the flat regime; routed assignment is " +
-          "single-cell by construction")
-      val q2 = trainTwoLevel(c, nLists, hashSample(c))
-      val cAssigned = assignCellsTwoLevel(c, q2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val radii = cellRadii(cAssigned, q2.flat)
-      val qA = probeQueriesTwoLevel(queries, idCol, vecCol, q2, nProbeMin)
-      val scoredA = scoredCells(cAssigned, qA)
-        .select(col("query_id"), col("cand_id"), col("cosine"))
-      val merged =
-        if (nProbeMax <= nProbeMin) scoredA
-        else {
-          val kth = kthCosine(scoredA, k)
-          val qB = extraProbeFrameRouted(queries, idCol, vecCol, q2,
-            radii, kth, nProbeMin, nProbeMax)
-          scoredA.unionAll(scoredCells(cAssigned, qB)
-            .select(col("query_id"), col("cand_id"), col("cosine")))
-        }
-      return ranked(merged, k)
-    }
-    val centroids = trainCentroids(c, nLists)
-    val cAssigned = assignCellsMulti(c, centroids, assign)
+    val q = Quantizer.train(c, nLists)
+    val cAssigned = q.assign(c, assign)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val radii = cellRadii(cAssigned, centroids)
-    val qA = probeQueries(queries, idCol, vecCol, centroids,
-      math.min(nProbeMin, nLists))
+    val radii = cellRadii(cAssigned, q.cells)
+    val qA = q.probe(queries, idCol, vecCol, nProbeMin)
     val scoredA = scoredCells(cAssigned, qA)
       .select(col("query_id"), col("cand_id"), col("cosine"))
     val merged =
@@ -1080,8 +451,8 @@ object Ann {
           if (assign > 1) scoredA.dropDuplicates("query_id", "cand_id")
           else scoredA
         val kth = kthCosine(kthInput, k)
-        val qB = extraProbeFrame(queries, idCol, vecCol, centroids, radii,
-          kth, nProbeMin, nProbeMax)
+        val qB = q.extraProbe(queries, idCol, vecCol, radii, kth,
+          nProbeMin, nProbeMax)
         scoredA.unionAll(scoredCells(cAssigned, qB)
           .select(col("query_id"), col("cand_id"), col("cosine")))
       }
@@ -1107,7 +478,7 @@ object Ann {
   /** Product-quantization codebooks (one per subspace) trained on the
     * same deterministic bottom-4096-by-hash sample as the IVF coarse
     * quantizer, in NORMALIZED space (cosine ranking ⇒ spherical
-    * quantization, the [[trainCentroids]] argument). Subspace j trains
+    * quantization, the [[Quantizer]] argument). Subspace j trains
     * on dims [j·dsub, (j+1)·dsub) with its own seed — m driver-side
     * Lloyd runs over a few thousand short vectors, milliseconds, zero
     * extra Spark jobs beyond the one sample pass. */
@@ -1631,22 +1002,11 @@ object Ann {
     val sample = hashSample(c)
     val books = trainPqCodebooksFrom(sample, m, ksub)
     val bc = sc.broadcast(books)
-    // ONE corpus pass: nearest cell + PQ codes, floats dropped after.
-    // Past FlatQuantizerMax the cell stage routes two-level (assignment
-    // AND probes — the ivfTopK large-k arm's shape); the ADC stage is
-    // identical either way.
-    val (assignedCells, probed) =
-      if (nLists <= FlatQuantizerMax) {
-        val centroids = trainCentroidsFrom(sample, nLists)
-        (assignCells(c, centroids),
-          probeQueries(queries, idCol, vecCol, centroids, nProbe))
-      } else {
-        val q2 = trainTwoLevel(c, nLists, sample)
-        (assignCellsTwoLevel(c, q2),
-          probeQueriesTwoLevel(queries, idCol, vecCol, q2, nProbe))
-      }
-    val enc = assignedCells
+    // ONE corpus pass: nearest cell + PQ codes, floats dropped after
+    val q = Quantizer.train(c, sample, nLists)
+    val enc = q.assign(c)
       .select(col("cand_id"), col("cell"), pqEncoder(bc)(col("cv")).as("codes"))
+    val probed = q.probe(queries, idCol, vecCol, nProbe)
     val (qIdx, bcD) = indexedDtabs(queries, idCol, vecCol, bc)
     val qd = probed
       .select(col("query_id"), col("cell"))

@@ -49,14 +49,11 @@ class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
   def this(lake: Lake, codec: CellCodec, nLists: Int = 16) =
     this(lake, codec, nLists, codec.defaultPrefix)
 
-  val centroidTable: TableDef = TableDef(s"${prefix}_centroids",
-    StructType(Seq(StructField("cell", IntegerType),
-      StructField("centroid", ArrayType(DoubleType)))))
-  /** Top-router table, non-empty ONLY for large-k builds (nLists past
-    * [[Ann.FlatQuantizerMax]]): its presence switches append/search to
-    * the routed O(√k) assignment and routed probes — matching the
-    * one-shot paths' large-k arm, so the byte-parity contracts hold in
-    * BOTH regimes (codec payloads are cell-independent). */
+  val centroidTable: TableDef = QuantizerStore.centroidTableDef(prefix)
+  /** Top-router table, non-empty ONLY for routed builds: append/search
+    * then serve the routed O(√k) assignment and routed probes — matching
+    * the one-shot paths' large-k regime, so the byte-parity contracts
+    * hold in BOTH regimes (codec payloads are cell-independent). */
   val topTable: TableDef = QuantizerStore.topTableDef(prefix)
   val vectorTable: TableDef = TableDef(s"${prefix}_vectors",
     StructType(Seq(StructField("cand_id", LongType),
@@ -92,37 +89,24 @@ class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
     * encodes.
     *
     * ONE sampling job feeds every trainer (the same sample bytes the
-    * one-shot paths draw). nLists ≤ [[Ann.FlatQuantizerMax]] trains the
-    * flat driver quantizer (the router table is written EMPTY to mark
-    * "flat on purpose"); larger nLists trains the two-level quantizer and
-    * persists its router rows, so every later [[append]]/[[search]]
-    * serves the routed large-k shape from disk. */
+    * one-shot paths draw); [[QuantizerStore.write]] persists the coarse
+    * quantizer in either regime, so every later [[append]]/[[search]]
+    * serves it from disk. */
   def build(corpus: DataFrame, idCol: String, vecCol: String,
       version: Long): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     val c = vecs(corpus, idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sample = Ann.hashSample(c)
-    val (flat, router) =
-      if (nLists <= Ann.FlatQuantizerMax)
-        (Ann.trainQuantizer(c, sample, nLists), None)
-      else {
-        val q2 = Ann.trainTwoLevel(c, nLists, sample)
-        (q2.flat, Some(q2))
-      }
+    val quant = Quantizer.train(c, sample, nLists)
     val frozen = codec.train(sample)
-    val encoded = frozen.encode(QuantizerStore.assigner(flat, router)(c))
+    val encoded = frozen.encode(quant.assign(c))
     lake.replace(vectorTable, encoded, version)
     // radii re-derive assign (+ encode) from the cached corpus — a
     // broadcast pass, no disk read-back; one aggregate, ≤ nLists rows
     QuantizerStore.writeRadii(lake, radiiTable,
-      frozen.radii(encoded, flat), version, spark)
-    lake.replace(centroidTable,
-      flat.toIndexedSeq.zipWithIndex
-        .map { case (cen, i) => (i, cen.toSeq) }
-        .toDF("cell", "centroid"), version)
-    QuantizerStore.writeTop(lake, topTable, router, version, spark)
+      frozen.radii(encoded, quant.cells), version, spark)
+    QuantizerStore.write(lake, prefix, quant, version, spark)
     auxTable.foreach(lake.replace(_, frozen.auxRows(spark), version))
     c.unpersist()
   }
@@ -131,9 +115,8 @@ class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
   // .load's requires turn that into loud pre-build / regime-mismatch /
   // partial-build failures instead of silently-empty searches or
   // everything-in-cell-0 appends.
-  private def loadQuantizer(): (Array[Array[Double]], Option[Ann.TwoLevelQuantizer]) =
-    QuantizerStore.load(lake, prefix, centroidTable, topTable,
-      expectRouted = nLists > Ann.FlatQuantizerMax)
+  private def loadQuantizer(): Quantizer =
+    QuantizerStore.load(lake, prefix, nLists)
 
   /** Assign + encode a new batch against the FROZEN quantizers and append
     * it — O(batch) work, touching no stored data. Duplicate ids WITHIN the
@@ -143,10 +126,9 @@ class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
     * stored row remains until [[compact]] supersedes it by version. */
   def append(newVecs: DataFrame, idCol: String, vecCol: String,
       version: Long): Unit = {
-    val (flat, router) = loadQuantizer()
+    val quant = loadQuantizer()
     val frozen = codec.load(lake, prefix)
-    val assigned = frozen.encode(QuantizerStore.assigner(flat, router)(
-      vecs(newVecs, idCol, vecCol)))
+    val assigned = frozen.encode(quant.assign(vecs(newVecs, idCol, vecCol)))
     val w = Window.partitionBy(col("cand_id"))
       .orderBy(col("cell").desc, col("cv").desc)
     val deduped = assigned.withColumn("__rn", row_number().over(w))
@@ -156,7 +138,7 @@ class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
     // widen touched cells' radii so the adaptive bound stays sound for
     // appended members — O(batch) aggregate, tiny table rewrite
     QuantizerStore.mergeRadii(lake, radiiTable,
-      frozen.radii(deduped, flat), version, newVecs.sparkSession)
+      frozen.radii(deduped, quant.cells), version, newVecs.sparkSession)
     deduped.unpersist()
   }
 
@@ -203,13 +185,13 @@ class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
   def search(queries: DataFrame, idCol: String, vecCol: String, k: Int,
       nProbe: Int = 2, rerank: Int = 0): DataFrame = {
     requireRerank(rerank)
-    val (flat, router) = loadQuantizer()
+    val quant = loadQuantizer()
     val score = codec.load(lake, prefix).scorer(queries, idCol, vecCol)
     // q is NOT cached: it is evaluated twice (the cell collect below and
     // the score join), but it is a |Q|-row frame against broadcast
     // centroids — recomputing it is cheaper than leaking one pinned cache
     // entry per search call from a long-lived serving process.
-    val q = QuantizerStore.prober(flat, router, nProbe)(queries, idCol, vecCol)
+    val q = quant.probe(queries, idCol, vecCol, nProbe)
     val pruned = liveSlice(probedCells(q))
     Ann.refine(score(pruned, q), pruned.select(col("cand_id"), col("cv")),
       queries, idCol, vecCol, k, rerank)
@@ -274,19 +256,18 @@ class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
     * |Q|·depth narrow rows are ContextCleaner-freed — not the pinned
     * cache entry per call a persist would be. Top-k distributes over the
     * phase union because the ranking order is total, so the parity
-    * certificates are untouched. In the routed large-k regime phase A
-    * probes through the persisted two-level quantizer and phase B prunes
-    * whole BRANCHES first ([[Ann.branchAngles]] /
-    * [[Ann.extraProbeFrameRouted]]) — probe selection is O(√k · surviving
-    * branches) per query, so adaptive serving stays viable at 2^14+ cells. */
+    * certificates are untouched. In the routed large-k regime phase B
+    * prunes whole BRANCHES first ([[Quantizer.Routed.extraProbe]]) —
+    * probe selection is O(√k · surviving branches) per query, so adaptive
+    * serving stays viable at 2^14+ cells. */
   def searchAdaptive(queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nProbeMin: Int = 2, nProbeMax: Int = 8,
       rerank: Int = 0): DataFrame = {
     require(nProbeMin >= 1 && nProbeMin <= nProbeMax,
       s"need 1 <= nProbeMin <= nProbeMax, got ($nProbeMin, $nProbeMax)")
     requireRerank(rerank)
-    val (flat, router) = loadQuantizer()
-    val radii = QuantizerStore.loadRadii(lake, radiiTable, flat.length)
+    val quant = loadQuantizer()
+    val radii = QuantizerStore.loadRadii(lake, radiiTable, quant.cells.length)
     val score = codec.load(lake, prefix).scorer(queries, idCol, vecCol)
     val refineEach = !codec.boundOnScores
     val depth = if (refineEach) k else math.max(k, rerank)
@@ -298,8 +279,7 @@ class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
       else Ann.refine(scored, pruned.select(col("cand_id"), col("cv")),
         queries, idCol, vecCol, k, rerank)
     }
-    val qA = QuantizerStore.prober(flat, router,
-      math.min(nProbeMin, flat.length))(queries, idCol, vecCol)
+    val qA = quant.probe(queries, idCol, vecCol, nProbeMin)
     val cellsA = probedCells(qA)
     val sA = scan(qA, cellsA)
     val top = (if (refineEach) sA else Ann.ranked(sA.select(hit: _*), depth))
@@ -312,12 +292,8 @@ class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
         // NO threshold — it probes to the cap
         val kth = top.filter(col("rank") === depth && col("cosine").isNotNull)
           .select(col("query_id"), col("cosine").as("kth"))
-        val qB = router match {
-          case Some(q2) => Ann.extraProbeFrameRouted(queries, idCol,
-            vecCol, q2, radii, kth, nProbeMin, nProbeMax)
-          case None => Ann.extraProbeFrame(queries, idCol, vecCol, flat,
-            radii, kth, nProbeMin, nProbeMax)
-        }
+        val qB = quant.extraProbe(queries, idCol, vecCol, radii, kth,
+          nProbeMin, nProbeMax)
         Some((qB, probedCells(qB))).filter(_._2.nonEmpty)
       }
     val (merged, cells) = phaseB match {

@@ -1,73 +1,80 @@
 package graft.similarity
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.lake.{Lake, TableDef}
 
-/** Lake persistence for coarse quantizers, shared by the persisted ANN
-  * indexes and [[graft.dedup.SemDeDupIndex]]: the flat cell table is
-  * always written (cell, centroid — the serving layout every search
-  * path reads), and large-k builds additionally persist the TOP-ROUTER
-  * table (branch, offset into the flat table, router centroid). A
-  * loaded index routes when the router is present and stays flat
-  * otherwise, so one serving code path covers both regimes and the
-  * flat regime's bytes never change. */
+/** Lake persistence for coarse quantizers ([[Quantizer]]), shared by
+  * [[IvfIndex]] and [[graft.dedup.SemDeDupIndex]]: the flat cell table
+  * is always written (cell, centroid — the serving layout every search
+  * path reads), and routed builds additionally persist the TOP-ROUTER
+  * table (branch, offset into the cell table, router centroid), empty
+  * for a flat build. Plus the per-cell radii table the adaptive search
+  * reads. */
 private[graft] object QuantizerStore {
+
+  def centroidTableDef(prefix: String): TableDef = TableDef(s"${prefix}_centroids",
+    StructType(Seq(StructField("cell", IntegerType),
+      StructField("centroid", ArrayType(DoubleType)))))
 
   def topTableDef(prefix: String): TableDef = TableDef(s"${prefix}_top",
     StructType(Seq(StructField("branch", IntegerType),
       StructField("offset", IntegerType),
       StructField("centroid", ArrayType(DoubleType)))))
 
-  /** Write the router rows (empty frame for a flat build, so the table
-    * always exists after a build — [[load]] judges the REGIME from the
-    * caller's configured k, not from table presence). */
-  def writeTop(lake: Lake, t: TableDef, q: Option[Ann.TwoLevelQuantizer],
-      version: Long, spark: SparkSession): Unit = {
+  /** Write the cell table, then the router rows (an empty table for a
+    * flat build, so the table always exists after a build — [[load]]
+    * judges the REGIME from the caller's configured k, not from table
+    * presence). Each is a temp-write + swap; the pair is not jointly
+    * atomic, which [[load]]'s partial-build guard covers. */
+  def write(lake: Lake, prefix: String, q: Quantizer, version: Long,
+      spark: SparkSession): Unit = {
     import spark.implicits._
+    lake.replace(centroidTableDef(prefix),
+      q.cells.toIndexedSeq.zipWithIndex
+        .map { case (cen, i) => (i, cen.toSeq) }
+        .toDF("cell", "centroid"), version)
+    val t = topTableDef(prefix)
     q match {
-      case Some(q2) =>
+      case r: Quantizer.Routed =>
         lake.replace(t,
-          q2.top.toIndexedSeq.zipWithIndex
-            .map { case (cen, b) => (b, q2.offsets(b), cen.toSeq) }
+          r.top.toIndexedSeq.zipWithIndex
+            .map { case (cen, b) => (b, r.offsets(b), cen.toSeq) }
             .toDF("branch", "offset", "centroid"), version)
-      case None =>
+      case _: Quantizer.Flat =>
         lake.replace(t, spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](),
           t.schema), version)
     }
   }
 
-  /** Rebuild the quantizer from the flat cell table plus (optionally)
-    * the router table: (flat centroid array, router if persisted).
-    *
-    * `expectRouted` is the index's OWN configured regime (nLists/
-    * nClusters past [[Ann.FlatQuantizerMax]]) and must match the store:
-    * a large-k config over a router-less store would probe FLAT while
-    * the stored rows were ROUTE-assigned (a row's routed cell need not
-    * be its flat-argmin cell — probes silently miss), and a flat config
-    * over a routed store is the same corruption mirrored. Both fail
-    * loudly here instead. The router rows are also structurally
-    * validated against the flat table (offsets start at 0, strictly
-    * increase, stay in bounds): a crash BETWEEN the two table swaps of
-    * a re-build at a different k would otherwise reconstruct a
-    * misaligned quantizer that probes the wrong cells without error. */
-  def load(lake: Lake, prefix: String, centroidTable: TableDef,
-      topTable: TableDef, expectRouted: Boolean)
-      : (Array[Array[Double]], Option[Ann.TwoLevelQuantizer]) = {
-    val flat = lake.table(centroidTable).orderBy(col("cell")).collect()
+  /** Rebuild the quantizer of a store whose index is configured for `k`
+    * cells. The configured regime must match the store: a large-k config
+    * over a router-less store would probe FLAT while the stored rows were
+    * ROUTE-assigned (a row's routed cell need not be its flat-argmin cell
+    * — probes silently miss), and a flat config over a routed store is
+    * the same corruption mirrored. Both fail loudly here instead. The
+    * router rows are also structurally validated against the cell table
+    * (offsets start at 0, strictly increase, stay in bounds): a crash
+    * BETWEEN the two table swaps of a re-build at a different k would
+    * otherwise reconstruct a misaligned quantizer that probes the wrong
+    * cells without error. A missing table reads as empty (Lake.table),
+    * so a never-built store fails here too. */
+  def load(lake: Lake, prefix: String, k: Int): Quantizer = {
+    val flat = lake.table(centroidTableDef(prefix)).orderBy(col("cell")).collect()
       .map(_.getSeq[Double](1).toArray)
     require(flat.nonEmpty,
       s"$prefix: no centroids found — build() the index first")
-    val tops = lake.table(topTable).orderBy(col("branch")).collect()
+    val tops = lake.table(topTableDef(prefix)).orderBy(col("branch")).collect()
       .map(r => (r.getInt(1), r.getSeq[Double](2).toArray))
+    val expectRouted = Quantizer.routes(k)
     require(tops.nonEmpty == expectRouted,
       s"$prefix: quantizer regime mismatch — the index is configured " +
         s"${if (expectRouted) "large-k (routed)" else "flat"} but the store " +
         s"holds ${if (tops.isEmpty) "no" else tops.length.toString} router " +
         "rows; re-run build() at this configuration")
-    if (tops.isEmpty) (flat, None)
+    if (tops.isEmpty) Quantizer.Flat(flat)
     else {
       val offsets = tops.map(_._1)
       require(offsets.head == 0 &&
@@ -77,33 +84,10 @@ private[graft] object QuantizerStore {
           s"(${offsets.length} branches over ${flat.length} cells) — " +
           "partial build detected, re-run build()")
       val bounds = offsets :+ flat.length
-      (flat, Some(Ann.TwoLevelQuantizer(
-        tops.map(_._2),
-        Array.tabulate(tops.length)(b =>
-          flat.slice(bounds(b), bounds(b + 1))))))
+      Quantizer.Routed(tops.map(_._2),
+        Array.tabulate(tops.length)(b => flat.slice(bounds(b), bounds(b + 1))))
     }
   }
-
-  /** The frozen assignment function for a loaded quantizer: routed
-    * O(√k) when the router is present, flat argmin otherwise — ONE
-    * dispatch shared by every index's build/append path. */
-  def assigner(flat: Array[Array[Double]],
-      router: Option[Ann.TwoLevelQuantizer]): DataFrame => DataFrame =
-    router match {
-      case Some(q) => d => Ann.assignCellsTwoLevel(d, q)
-      case None => d => Ann.assignCells(d, flat)
-    }
-
-  /** [[assigner]] with the squared-distance score kept beside the cell
-    * (both variants share the plain assigners' argmin arithmetic, so
-    * CELLS are bit-identical — only the extra column differs). The
-    * score is what the 'farthest' survivor policy ranks on. */
-  def scoredAssigner(flat: Array[Array[Double]],
-      router: Option[Ann.TwoLevelQuantizer]): DataFrame => DataFrame =
-    router match {
-      case Some(q) => d => Ann.assignCellsTwoLevelScored(d, q)
-      case None => d => Ann.assignCellsScored(d, flat)
-    }
 
   /** Per-cell angular-radius table (cell, rcos = min member-to-centroid
     * cosine — [[Ann.cellRadii]]'s layout): what the adaptive search's
@@ -157,16 +141,4 @@ private[graft] object QuantizerStore {
     }
     out
   }
-
-  /** The matching probe-expansion function for search paths: one row
-    * per (query, probed cell), routed or flat to MATCH [[assigner]] —
-    * probes must look where assignment put the candidates. */
-  def prober(flat: Array[Array[Double]],
-      router: Option[Ann.TwoLevelQuantizer], nProbe: Int)
-      : (DataFrame, String, String) => DataFrame =
-    router match {
-      case Some(q) =>
-        (qs, id, vc) => Ann.probeQueriesTwoLevel(qs, id, vc, q, nProbe)
-      case None => (qs, id, vc) => Ann.probeQueries(qs, id, vc, flat, nProbe)
-    }
 }

@@ -309,10 +309,9 @@ object DocStream {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = docs.sparkSession
     import spark.implicits._
-    val assigned = graft.similarity.Ann.assignCells(
+    val assigned = graft.similarity.Quantizer.Flat(centroids).assign(
       docs.select(col("doc_id").as("cand_id"),
-        graft.functions.VectorFunctions.asDouble(col("embedding")).as("cv")),
-      centroids)
+        graft.functions.VectorFunctions.asDouble(col("embedding")).as("cv")))
     assigned
       .select(col("cand_id").as("doc_id"), col("cv"), col("cell"))
       .as[(Long, Seq[Double], Int)]
@@ -372,10 +371,9 @@ object DocStream {
       localVectorMax: Int = ReconcileLocalVectorMax): DataFrame = {
     import org.apache.spark.sql.functions._
     val spark = docs.sparkSession
-    val assigned = graft.similarity.Ann.assignCells(
+    val assigned = graft.similarity.Quantizer.Flat(centroids).assign(
       docs.select(col("doc_id").as("cand_id"),
-        graft.functions.VectorFunctions.asDouble(col("embedding")).as("cv")),
-      centroids)
+        graft.functions.VectorFunctions.asDouble(col("embedding")).as("cv")))
     // Bounded-corpus driver path (the SemDeDupIndex.append / DriverBatch
     // discipline): at gate/spec/small-store scale the distributed pair +
     // propagation machinery costs DRIVER JOBS (checkpoints + one action

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import graft.similarity.Ann
+import graft.similarity.{Ann, Quantizer}
 
 /** Query-adaptive IVF probing ([[Ann.ivfTopKAdaptive]]): the cell bound
   * cos(max(0, θ(q̂, ĉ) − radius)) may only prune cells that provably
@@ -9,7 +9,7 @@ import graft.similarity.Ann
   * nLists must be BYTE-EQUAL to a full probe on ANY corpus (the
   * soundness certificate), while on clustered corpora the bound must
   * actually fire (fewer cells probed than the cap — the 100 TB IO win).
-  * Multi-assignment ([[Ann.assignCellsMulti]]) is the storage-premium
+  * Multi-assignment ([[Quantizer.Flat.assign]]) is the storage-premium
   * recall dial: assign = 1 reproduces single assignment exactly, and
   * assign = 2 at fixed probes can only add candidate coverage. */
 class AnnAdaptiveSpec extends SparkSpec {
@@ -71,17 +71,16 @@ class AnnAdaptiveSpec extends SparkSpec {
     val q = clustered(0 until 8)
     val cc = c.select($"vec_id".as("cand_id"),
       $"embedding".cast("array<double>").as("cv")).persist()
-    val centroids = Ann.trainCentroids(cc, 8)
-    val assigned = Ann.assignCellsMulti(cc, centroids, 1)
-    val radii = Ann.cellRadii(assigned, centroids)
+    val quant = Quantizer.train(cc, 8)
+    val assigned = quant.assign(cc, 1)
+    val radii = Ann.cellRadii(assigned, quant.cells)
     // tight clusters ⇒ every cell's min member-cos is high
     assert(radii.forall(_ > 0.9), s"radii not tight: ${radii.mkString(",")}")
-    val qA = Ann.probeQueries(q, "vec_id", "embedding", centroids, 1)
+    val qA = quant.probe(q, "vec_id", "embedding", 1)
     val scoredA = Ann.scoredCells(assigned, qA)
       .select($"query_id", $"cand_id", $"cosine")
     val kth = Ann.kthCosine(scoredA, 5)
-    val qB = Ann.extraProbeFrame(q, "vec_id", "embedding", centroids,
-      radii, kth, 1, 8)
+    val qB = quant.extraProbe(q, "vec_id", "embedding", radii, kth, 1, 8)
     // cap allows 7 extra cells per query; the bound must cut that hard
     val extra = qB.groupBy($"query_id").count().collect()
       .map(_.getLong(1)).toSeq
@@ -102,15 +101,15 @@ class AnnAdaptiveSpec extends SparkSpec {
     val c = gaussian(0 until 200)
     val cc = c.select($"vec_id".as("cand_id"),
       $"embedding".cast("array<double>").as("cv")).persist()
-    val centroids = Ann.trainCentroids(cc, 8)
-    val one = Ann.assignCellsMulti(cc, centroids, 1)
+    val quant = Quantizer.train(cc, 8)
+    val one = quant.assign(cc, 1)
       .select($"cand_id", $"cell").collect()
       .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
-    val plain = Ann.assignCells(cc, centroids)
+    val plain = Quantizer.Flat(quant.cells).assign(cc)
       .select($"cand_id", $"cell").collect()
       .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
     assert(one == plain)
-    val two = Ann.assignCellsMulti(cc, centroids, 2)
+    val two = quant.assign(cc, 2)
       .select($"cand_id", $"cell").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSeq
     assert(two.size == 2 * plain.size && two.distinct.size == two.size)
@@ -164,7 +163,7 @@ class AnnAdaptiveSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  // ---- routed regime (nLists > FlatQuantizerMax): branch-envelope ----
+  // ---- routed regime (nLists past the flat bound): branch-envelope ----
   // ---- pruning must keep the same soundness certificate          ----
 
   test("ROUTED full-cap adaptive is byte-equal to a full probe on both " +
@@ -206,18 +205,17 @@ class AnnAdaptiveSpec extends SparkSpec {
     val q = clustered(0 until 8)
     val cc = c.select($"vec_id".as("cand_id"),
       $"embedding".cast("array<double>").as("cv")).persist()
-    val q2 = Ann.trainTwoLevel(cc, 300, Ann.hashSample(cc))
-    val assigned = Ann.assignCellsTwoLevel(cc, q2).persist()
-    val radii = Ann.cellRadii(assigned, q2.flat)
-    val qA = Ann.probeQueriesTwoLevel(q, "vec_id", "embedding", q2, 4)
+    val q2 = Quantizer.Routed.train(cc, Ann.hashSample(cc), 300)
+    val assigned = q2.assign(cc).persist()
+    val radii = Ann.cellRadii(assigned, q2.cells)
+    val qA = q2.probe(q, "vec_id", "embedding", 4)
     val scoredA = Ann.scoredCells(assigned, qA)
       .select($"query_id", $"cand_id", $"cosine")
     val kth = Ann.kthCosine(scoredA, 5)
     assert(kth.count() == 8,
       "test premise broke: some query has < k phase-A hits, so its " +
         "phase B probes to the cap and the pruning assertion is vacuous")
-    val qB = Ann.extraProbeFrameRouted(q, "vec_id", "embedding", q2,
-      radii, kth, 4, 1000)
+    val qB = q2.extraProbe(q, "vec_id", "embedding", radii, kth, 4, 1000)
     // the cap allows every remaining cell (~q2.nCells − 4); tight
     // orthogonal clusters must cut that to a small neighborhood
     val extra = qB.groupBy($"query_id").count().collect()

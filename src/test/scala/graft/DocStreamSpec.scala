@@ -464,9 +464,9 @@ class DocStreamSpec extends SparkSpec {
     val all = batch1 ++ batch2
     // frozen quantizer, trained once on the full corpus (what a
     // SemDeDupIndex.build would hand the stream)
-    val centroids = graft.similarity.Ann.trainCentroids(
+    val centroids = graft.similarity.Quantizer.train(
       all.toDF("cand_id", "cv").select($"cand_id",
-        $"cv".cast("array<double>").as("cv")), 2)
+        $"cv".cast("array<double>").as("cv")), 2).cells
     batch1.toDF("doc_id", "embedding").write.mode("append").parquet(docDir)
     val collected = java.util.Collections.synchronizedList(
       new java.util.ArrayList[(Long, Long, Int)]())
@@ -520,9 +520,9 @@ class DocStreamSpec extends SparkSpec {
       6L -> Seq(1.0f, -5.0f, 1.0f))
     // nClusters = 1: pairing is within-cell (the round-11 bridge-fixture
     // rule), and the chain must not be split by a cell boundary
-    val centroids = graft.similarity.Ann.trainCentroids(
+    val centroids = graft.similarity.Quantizer.train(
       docs.toDF("cand_id", "cv").select($"cand_id",
-        $"cv".cast("array<double>").as("cv")), 1)
+        $"cv".cast("array<double>").as("cv")), 1).cells
     docs.toDF("doc_id", "embedding").write.mode("append").parquet(docDir)
     val collected = java.util.Collections.synchronizedList(
       new java.util.ArrayList[(Long, Long, Int)]())
@@ -571,7 +571,7 @@ class DocStreamSpec extends SparkSpec {
     // round-17 slim (x45/x87 precedent): K-MEANS-TRAINED centroids (not
     // the gate's analytic axes), a hashed-plane multi-chain corpus,
     // stream → reconcile, byte equality with the one-shot batch
-    // operator. trainCentroids is deterministic on identical input, so
+    // operator. Quantizer.train is deterministic on identical input, so
     // the gate's old equality claim — reconcile under the frozen
     // quantizer ≡ semanticDedup retraining the same quantizer — holds
     // bit-for-bit; the x97 gate keeps served-label exactness vs the
@@ -599,9 +599,9 @@ class DocStreamSpec extends SparkSpec {
     val docs = spark.range(3L * nChains)
       .select(col("id").as("doc_id"), array(dims: _*).as("embedding"))
       .localCheckpoint()
-    val centroids = graft.similarity.Ann.trainCentroids(
+    val centroids = graft.similarity.Quantizer.train(
       docs.select(col("doc_id").as("cand_id"),
-        col("embedding").as("cv")), 4)
+        col("embedding").as("cv")), 4).cells
     val docDir = Files.createTempDirectory("semtrained").toString
     val ckpt = Files.createTempDirectory("semtrained_ck").toString
     docs.coalesce(1).write.mode("append").parquet(docDir)
@@ -676,9 +676,9 @@ class DocStreamSpec extends SparkSpec {
     val docs = spark.range(3L * nChains)
       .select(col("id").as("doc_id"), array(dims: _*).as("embedding"))
       .localCheckpoint()
-    val centroids = graft.similarity.Ann.trainCentroids(
+    val centroids = graft.similarity.Quantizer.train(
       docs.select(col("doc_id").as("cand_id"),
-        col("embedding").as("cv")), 4)
+        col("embedding").as("cv")), 4).cells
     // any streamed labels exercise the `moved` column; greedy per-doc
     // self-labels make every merge visible
     val streamedDf = docs.select(col("doc_id"),

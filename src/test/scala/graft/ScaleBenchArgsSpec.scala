@@ -67,7 +67,29 @@ class ScaleBenchArgsSpec extends AnyFunSuite {
     }
   }
 
-  test("every slot 3..51 has exactly one name") {
-    assert(ScaleBench.StageSlots.values.toSeq.sorted == (3 to 51).toSeq)
+  test("live slots named, retired slots rejected") {
+    val retired = ScaleBench.RetiredSlots.keySet
+    assert(retired == Set(23, 24, 25, 26, 41))
+    // every live slot 3..51 has exactly one name; retired slots none
+    assert(ScaleBench.StageSlots.values.toSeq.sorted ==
+      (3 to 51).filterNot(retired).toSeq)
+    // a retired name, or a non-zero positional value at a retired slot,
+    // fails loudly and points at the final receipt
+    ScaleBench.RetiredSlots.foreach { case (slot, (name, section)) =>
+      assert(!ScaleBench.StageSlots.contains(name))
+      val byName = intercept[IllegalArgumentException] {
+        ScaleBench.resolveArgs(Array(s"--stage=$name", "n=1000"))
+      }
+      assert(byName.getMessage.contains(section), byName.getMessage)
+      val byPos = intercept[IllegalArgumentException] {
+        ScaleBench.resolveArgs(positional(slot -> "1000"))
+      }
+      assert(byPos.getMessage.contains(s"BASELINE.md \"$section\""),
+        byPos.getMessage)
+    }
+    // zeros at retired slots (every historical positional command for a
+    // live stage) still pass through untouched
+    val live = positional(42 -> "500")
+    assert(ScaleBench.resolveArgs(live) eq live)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
-import graft.similarity.Ann
+import graft.similarity.Quantizer
 
 /** Round-11 semantic-dedup scale hygiene: exact-vector pre-collapse,
   * loud cell cap, survivor policy, O(log d) propagation, and the
@@ -235,25 +235,29 @@ class SemanticDedupSpec extends SparkSpec {
   }
 
   test("hierarchical quantizer trains past the flat 256-cell ceiling, deterministically") {
-    // 3000 distinct 8-dim vectors, k = 300 > FlatQuantizerMax: the flat
+    // 3000 distinct 8-dim vectors, k = 300 past the flat bound: the flat
     // driver trainer cannot produce this many centroids from its
     // bounded sample discipline at quality; the two-level path must
-    // return k centroids and survive a repartition byte-identically.
+    // return ≥ k cells and survive a repartition byte-identically.
     val dims = (0 until 8).map(d =>
       (pmod(xxhash64($"id", lit(d)), lit(1000)).cast("double") / 500.0 - 1.0))
     val vecs = spark.range(3000).select($"id".as("cand_id"),
       array(dims: _*).as("cv"))
-    val cents = Ann.trainCentroids(vecs, 300)
-    assert(cents.length == 300)
+    val q = Quantizer.train(vecs, 300) match {
+      case r: Quantizer.Routed => r
+      case other => fail(s"k = 300 trained a ${other.getClass.getSimpleName}")
+    }
+    val cents = q.cells
+    assert(cents.length == q.nCells && q.nCells >= 300)
     assert(cents.forall(_.length == 8))
-    val cents2 = Ann.trainCentroids(vecs.repartition(7), 300)
+    val cents2 = Quantizer.train(vecs.repartition(7), 300).cells
     assert(cents.length == cents2.length)
     cents.zip(cents2).zipWithIndex.foreach { case ((a, b), i) =>
       assert(java.util.Arrays.equals(a, b), s"centroid $i differs by layout")
     }
-    // the trained cells genuinely spread: assignment occupies well past
-    // the flat ceiling's reach for this corpus
-    val occupied = Ann.assignCells(vecs, cents)
+    // the trained cells genuinely spread: routed assignment occupies
+    // well past the flat ceiling's reach for this corpus
+    val occupied = q.assign(vecs)
       .select("cell").distinct().count()
     assert(occupied > 150, s"only $occupied cells occupied")
   }
@@ -262,7 +266,7 @@ class SemanticDedupSpec extends SparkSpec {
     // hand-built quantizer: two orthogonal branches, two subs each —
     // routing is unambiguous, so O(sqrt k) routing must agree with the
     // O(k) flat argmin cell-for-cell, and the scored variants bit-equal
-    val q = Ann.TwoLevelQuantizer(
+    val q = Quantizer.Routed(
       top = Array(Array(1.0, 0.0, 0.0, 0.0), Array(0.0, 0.0, 1.0, 0.0)),
       subs = Array(
         Array(Array(1.0, 0.1, 0.0, 0.0), Array(1.0, -0.1, 0.0, 0.0)),
@@ -278,14 +282,14 @@ class SemanticDedupSpec extends SparkSpec {
     def cells(df: org.apache.spark.sql.DataFrame): Map[Long, Int] =
       df.select("cand_id", "cell").collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val routed = cells(Ann.assignCellsTwoLevel(vecs, q))
+    val routed = cells(q.assign(vecs))
     assert(routed(1L) == 0 && routed(2L) == 1 &&
       routed(3L) == 2 && routed(4L) == 3)
-    assert(routed == cells(Ann.assignCells(vecs, q.flat)))
-    val rs = Ann.assignCellsTwoLevelScored(vecs, q)
+    assert(routed == cells(Quantizer.Flat(q.cells).assign(vecs)))
+    val rs = q.assignScored(vecs)
       .select("cand_id", "cell", "score").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSet
-    val fs = Ann.assignCellsScored(vecs, q.flat)
+    val fs = Quantizer.Flat(q.cells).assignScored(vecs)
       .select("cand_id", "cell", "score").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSet
     assert(rs == fs, s"scored variants diverge: $rs vs $fs")
