@@ -431,25 +431,27 @@ object Profile {
         .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
     val b3 = victims
       .select((col("doc_id") + 3000000L).as("doc_id"), col("text"))
-    val incr = new graft.dedup.IncrementalDedup(
-      new graft.lake.Lake(spark, tmp), threshold = 0.7)
+    val lake = new graft.lake.Lake(spark, tmp)
+    val exact = new graft.dedup.IncrementalDedup.Exact(lake)
+    val mh = new graft.dedup.IncrementalDedup.Minhash(lake, threshold = 0.7)
     step(spark, "exact batch1")(
-      incr.processExactBatch(d, "doc_id", "text", 1L).count())
+      exact.process(d, "doc_id", "text", 1L).count())
     step(spark, "minhash batch1")(
-      incr.processMinhashBatch(d, "doc_id", "text", 1L).count())
-    step(spark, "deleteExactClosed")(
-      incr.deleteExactClosed(victims, "doc_id", "text", 2L))
-    step(spark, "deleteMinhash")(
-      incr.deleteMinhash(victims.select(col("doc_id")), "doc_id", 2L))
+      mh.process(d, "doc_id", "text", 1L).count())
+    step(spark, "exact deleteClosed")(
+      exact.deleteClosed(victims, "doc_id", "text", 2L))
+    step(spark, "minhash delete")(
+      mh.delete(victims.select(col("doc_id")), "doc_id", 2L))
     step(spark, "exact batch2")(
-      incr.processExactBatch(b2, "doc_id", "text", 3L).count())
+      exact.process(b2, "doc_id", "text", 3L).count())
     step(spark, "minhash batch2")(
-      incr.processMinhashBatch(b2, "doc_id", "text", 3L).count())
-    step(spark, "compact")(incr.compact(4L))
+      mh.process(b2, "doc_id", "text", 3L).count())
+    step(spark, "exact compact")(exact.compact(4L))
+    step(spark, "minhash compact")(mh.compact(4L))
     step(spark, "exact batch3")(
-      incr.processExactBatch(b3, "doc_id", "text", 5L).count())
+      exact.process(b3, "doc_id", "text", 5L).count())
     step(spark, "store-state agg")(
-      new graft.lake.Lake(spark, tmp).table(incr.hashTable)
+      lake.table(exact.hashTable)
         .groupBy(col("content_hash"))
         .agg(min(col("keep_id")), sum(col("n_members"))).count())
   }

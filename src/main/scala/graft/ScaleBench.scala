@@ -89,12 +89,12 @@ import graft.pipelines.Quant
   *     arg-45 60k store — plus one over-bound batch that must take
   *     the distributed fallback, proving the dispatcher boundary)
   *  50 takedown dress-rehearsal docs (exact + newline-line stores at
-  *     10M: closed-class deleteExactClosed / deleteNewlineLinesClosed
+  *     10M: closed-class Exact / Lines(Newline) deleteClosed
   *     with THROWING job bounds, fresh-after-delete and
   *     dedup-after-re-ingest witnesses pre AND post compact — the
   *     arg-33/34/35 1M takedown receipts taken a decade up)
   *  51 minhash takedown dress-rehearsal docs (10M store: pre-delete
-  *     twin batch pairs at jaccard 1.0, deleteMinhash is an O(victims)
+  *     twin batch pairs at jaccard 1.0, Minhash.delete is an O(victims)
   *     tombstone append with a THROWING job bound, post-delete and
   *     post-compact twin batches pair ZERO times — current-corpus
   *     retraction at the decade)
@@ -1125,7 +1125,7 @@ object ScaleBench {
       val nKept2 = nKept1 - eSig
       val nNormal = nKept2 - eClone - eContam - eSpanC // incl. doc 0
 
-      val ld = Dedup.lineDedupNewline(kept1b, "doc_id", "text")
+      val ld = Dedup.lineDedup(kept1b, "doc_id", "text", Dedup.Chunker.Newline)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       time(s"curation line dedup ($nKept2 docs, 20-21 lines)", nKept2 * 20L) {
         val c = ld.agg(count(lit(1)), sum($"n_kept")).collect().head
@@ -1883,7 +1883,7 @@ object ScaleBench {
       allS.unpersist()
     }
 
-    // arg-35: lexical takedown receipt — IncrementalDedup.deleteMinhash
+    // arg-35: lexical takedown receipt — IncrementalDedup.Minhash.delete
     // at scale. The race the tombstone path wins: takedown as an
     // O(victims) side-table append vs the O(store) supersede rewrite
     // (the pre-existing alternative, re-ingest's replace path) and vs
@@ -1908,16 +1908,16 @@ object ScaleBench {
       corpusL.count()
       val tmpL = Files.createTempDirectory("graft-lexdel-scale").toString
       val lakeL = new graft.lake.Lake(spark, tmpL)
-      val incrL = new IncrementalDedup(lakeL, threshold = 0.5)
+      val incrL = new IncrementalDedup.Minhash(lakeL, threshold = 0.5)
       time(s"lexical ingest ($nLex docs)", nLex.toLong) {
-        incrL.processMinhashBatch(corpusL, "doc_id", "text", 1L).count()
+        incrL.process(corpusL, "doc_id", "text", 1L).count()
         nLex.toLong
       }
       val victimsL = corpusL.filter(pmod($"doc_id", lit(1000)) === 1)
         .select($"doc_id")
       val nVic = victimsL.count()
       time(s"lexical takedown ($nVic ids, O(victims) append)", nVic) {
-        incrL.deleteMinhash(victimsL, "doc_id", 2L); nVic
+        incrL.delete(victimsL, "doc_id", 2L); nVic
       }
       // batch doc N+k copies stored id (k/2)*1000 + (k%2): even k →
       // retained target, odd k → deleted target
@@ -1930,7 +1930,7 @@ object ScaleBench {
           docText(floor($"id" / 2).cast("long") * 1000L +
             pmod($"id", lit(2))).as("text"))
       time(s"batch vs pending tombstones ($twoK copies)", twoK.toLong) {
-        val r = incrL.processMinhashBatch(b1L, "doc_id", "text", 3L)
+        val r = incrL.process(b1L, "doc_id", "text", 3L)
           .agg(count(lit(1)), count(when(pmod($"id_a", lit(1000)) === 0 &&
             $"id_b" >= 10000000L && $"jaccard" === 1.0, 1))).head()
         require(r.getLong(0) == halfK && r.getLong(1) == halfK,
@@ -1941,7 +1941,7 @@ object ScaleBench {
       time(s"compact (applies takedown, O(store))", nLex.toLong) {
         incrL.compact(4L); nLex.toLong
       }
-      require(!lakeL.exists(incrL.minhashTombTable.name),
+      require(!lakeL.exists(incrL.tombTable.name),
         "tombstones must drain at compact")
       val storedL = lakeL.table(incrL.sigTable).count()
       require(storedL == nLex.toLong + twoK - nVic,
@@ -1952,7 +1952,7 @@ object ScaleBench {
         .select((lit(20000000L) + $"id").as("doc_id"),
           docText($"id" * 1000L + 500L).as("text"))
       time(s"batch post-compact ($halfK copies)", halfK.toLong) {
-        val r = incrL.processMinhashBatch(b2L, "doc_id", "text", 5L)
+        val r = incrL.process(b2L, "doc_id", "text", 5L)
           .agg(count(lit(1)), count(when(pmod($"id_a", lit(1000)) === 500 &&
             $"id_b" >= 20000000L && $"jaccard" === 1.0, 1))).head()
         require(r.getLong(0) == halfK && r.getLong(1) == halfK,
@@ -2668,11 +2668,11 @@ object ScaleBench {
           concat(lit("t"), pmod(xxhash64($"src", lit(p)), lit(1000000L)))): _*)
           .as("text"))
       val tmpM = Files.createTempDirectory("graft-mhserve").toString
-      val incrM = new IncrementalDedup(new graft.lake.Lake(spark, tmpM),
-        prefix = "mhserve")
+      val incrM = new IncrementalDedup.Minhash(
+        new graft.lake.Lake(spark, tmpM), prefix = "mhserve")
       val tM0 = System.nanoTime()
       val (_, ingestM) = graft.JobProfile.profile(spark) {
-        incrM.processMinhashBatch(
+        incrM.process(
           mdocs(spark.range(nMr.toLong).select($"id", $"id".as("src"))),
           "doc_id", "text", version = 1L)
       }
@@ -2686,7 +2686,7 @@ object ScaleBench {
         val tB0 = System.nanoTime()
         val (pairsM, stM) = graft.JobProfile.profile(spark,
           verbose = sys.env.contains("GRAFT_PROFILE_VERBOSE")) {
-          incrM.processMinhashBatch(batchM, "doc_id", "text", 2L + j)
+          incrM.process(batchM, "doc_id", "text", 2L + j)
         }
         val gotM = pairsM.collect()
         require(gotM.length == bM && gotM.forall(r =>
@@ -2720,8 +2720,13 @@ object ScaleBench {
       val bL = 200
       val nBatchesL = 6
       val tmpL = Files.createTempDirectory("graft-lexserve").toString
-      val incrL = new IncrementalDedup(new graft.lake.Lake(spark, tmpL),
-        prefix = "lexserve")
+      // three stores under one prefix — their table names are disjoint
+      val lakeL = new graft.lake.Lake(spark, tmpL)
+      val exactL = new IncrementalDedup.Exact(lakeL, prefix = "lexserve")
+      val linesL = new IncrementalDedup.Lines(lakeL, prefix = "lexserve",
+        chunker = graft.dedup.Dedup.Chunker.Newline)
+      val spanL = new IncrementalDedup.Span(lakeL, prefix = "lexserve",
+        n = 10)
       def ldocs(ids: org.apache.spark.sql.DataFrame) = ids.select(
         $"id".as("doc_id"),
         concat_ws(" ", (0 until 40).map(p =>
@@ -2729,7 +2734,7 @@ object ScaleBench {
           .as("text"))
       // --- exact family ---
       val (_, ingE) = graft.JobProfile.profile(spark) {
-        incrL.processExactBatch(
+        exactL.process(
           ldocs(spark.range(nLx.toLong).select($"id", $"id".as("src"))),
           "doc_id", "text", 1L)
       }
@@ -2744,7 +2749,7 @@ object ScaleBench {
           when($"id" % 2 === 0, ($"id" / 2).cast("long"))
             .otherwise($"id" + 3L * nLx).as("src")))
         val (dupsE, stE) = graft.JobProfile.profile(spark) {
-          incrL.processExactBatch(batchE, "doc_id", "text", 2L + j)
+          exactL.process(batchE, "doc_id", "text", 2L + j)
         }
         require(dupsE.count() == bL / 2,
           s"exact batch $j: expected ${bL / 2} twin dups")
@@ -2761,7 +2766,7 @@ object ScaleBench {
             concat(lit("u"), pmod(xxhash64($"src", lit(p + 50)), lit(1000000L)))): _*))
           .as("text"))
       val (_, ingN) = graft.JobProfile.profile(spark) {
-        incrL.processNewlineLineBatch(
+        linesL.process(
           ndocs(spark.range(nLx.toLong).select($"id", $"id".as("src"))),
           "doc_id", "text", 1L)
       }
@@ -2771,7 +2776,7 @@ object ScaleBench {
         val batchN = ndocs(spark.range(lo, lo + bL).select(
           ($"id" + 2L * nLx).as("id"), ($"id" + 3L * nLx).as("src")))
         val (resN, stN) = graft.JobProfile.profile(spark) {
-          incrL.processNewlineLineBatch(batchN, "doc_id", "text", 2L + j)
+          linesL.process(batchN, "doc_id", "text", 2L + j)
         }
         // every batch doc keeps its unique line, loses the boilerplate
         val accN = resN.agg(sum($"n_lines"), sum($"n_kept")).head()
@@ -2784,7 +2789,7 @@ object ScaleBench {
       // --- span family --- (shifted corpus-wide 12-token boilerplate)
       val spanStore = spanCorpus(nLx.toLong)
       val (_, ingS) = graft.JobProfile.profile(spark) {
-        incrL.processSpanBatch(spanStore, "doc_id", "text", 1L, n = 10)
+        spanL.process(spanStore, "doc_id", "text", 1L)
       }
       println(s"[scale] lex-serve receipt: span ingest $nLx docs $ingS")
       (0 until nBatchesL).foreach { j =>
@@ -2793,7 +2798,7 @@ object ScaleBench {
         // merged 12-token boiler span (n = 10 grams)
         val batchS = spanCorpus(bL.toLong, start = 2L * nLx + j.toLong * bL)
         val (resS, stS) = graft.JobProfile.profile(spark) {
-          incrL.processSpanBatch(batchS, "doc_id", "text", 2L + j, n = 10)
+          spanL.process(batchS, "doc_id", "text", 2L + j)
         }
         val accS = resS.agg(sum($"n_tokens"), sum($"n_kept")).head()
         require(accS.getLong(0) == 40L * bL &&
@@ -3148,11 +3153,11 @@ object ScaleBench {
           concat(lit("t"), pmod(xxhash64($"src", lit(p)), lit(10000000L)))): _*)
           .as("text"))
       val tmpMd = Files.createTempDirectory("graft-mhdecade").toString
-      val incrMd = new IncrementalDedup(new graft.lake.Lake(spark, tmpMd),
-        prefix = "mhdecade")
+      val incrMd = new IncrementalDedup.Minhash(
+        new graft.lake.Lake(spark, tmpMd), prefix = "mhdecade")
       val tMd0 = System.nanoTime()
       val (_, ingestMd) = graft.JobProfile.profile(spark) {
-        incrMd.processMinhashBatch(
+        incrMd.process(
           mdsDocs(spark.range(nMds.toLong).select($"id", $"id".as("src"))),
           "doc_id", "text", version = 1L)
       }
@@ -3166,7 +3171,7 @@ object ScaleBench {
         val tB0 = System.nanoTime()
         val (pairsMd, stMd) = graft.JobProfile.profile(spark,
           verbose = sys.env.contains("GRAFT_PROFILE_VERBOSE")) {
-          incrMd.processMinhashBatch(batchMd, "doc_id", "text", 2L + j)
+          incrMd.process(batchMd, "doc_id", "text", 2L + j)
         }
         val gotMd = pairsMd.collect()
         require(gotMd.length == bMd && gotMd.forall(r =>
@@ -3190,7 +3195,7 @@ object ScaleBench {
               lit(10000000000L)))), " ").as("text"))
       val tOv0 = System.nanoTime()
       val (pairsOv, stOv) = graft.JobProfile.profile(spark) {
-        incrMd.processMinhashBatch(overMd, "doc_id", "text", 10L)
+        incrMd.process(overMd, "doc_id", "text", 10L)
       }
       val nOv = pairsOv.count()
       println(f"[scale] mh-decade receipt: OVER-BOUND batch (300 docs x " +
@@ -3213,8 +3218,8 @@ object ScaleBench {
     // work plus a BOUNDED number of store-scale scans (the closure
     // audit + live-state read), never a rebuild — so its job count is
     // flat in store size, exactly like serving batches. Protocol per
-    // family (exact via deleteExactClosed, newline-line via
-    // deleteNewlineLinesClosed; span is rebuild-only BY DESIGN and its
+    // family (exact and newline-line via deleteClosed; span is
+    // rebuild-only BY DESIGN and its
     // rebuild cost IS the arg-46 ingest receipt; minhash deletes are
     // id-keyed tombstone appends with no content audit — O(batch)
     // trivially, receipted at 1M):
@@ -3232,8 +3237,10 @@ object ScaleBench {
       import graft.dedup.IncrementalDedup
       val bT = 200
       val tmpT = Files.createTempDirectory("graft-tddecade").toString
-      val incrT = new IncrementalDedup(new graft.lake.Lake(spark, tmpT),
-        prefix = "tddecade")
+      val lakeT = new graft.lake.Lake(spark, tmpT)
+      val exactT = new IncrementalDedup.Exact(lakeT, prefix = "tddecade")
+      val linesT = new IncrementalDedup.Lines(lakeT, prefix = "tddecade",
+        chunker = graft.dedup.Dedup.Chunker.Newline)
       def tdocs(ids: org.apache.spark.sql.DataFrame) = ids.select(
         $"id".as("doc_id"),
         concat_ws(" ", (0 until 40).map(p =>
@@ -3256,15 +3263,15 @@ object ScaleBench {
         .localCheckpoint()
       // --- exact family ---
       val (_, ingTd) = graft.JobProfile.profile(spark) {
-        incrT.processExactBatch(
+        exactT.process(
           tdocs(spark.range(nTdd.toLong).select($"id", $"id".as("src"))),
           "doc_id", "text", 1L)
       }
       println(s"[scale] td-decade receipt: exact ingest $nTdd docs $ingTd")
-      require(incrT.processExactBatch(vBatch(20000000L), "doc_id", "text",
+      require(exactT.process(vBatch(20000000L), "doc_id", "text",
           2L).count() == 0L, "victim batch collided with the corpus")
       val (_, delE) = graft.JobProfile.profile(spark) {
-        incrT.deleteExactClosed(vBatch(20000000L), "doc_id", "text", 3L)
+        exactT.deleteClosed(vBatch(20000000L), "doc_id", "text", 3L)
       }
       println(s"[scale] td-decade receipt: exact takedown ($bT victims " +
         s"vs $nTdd store) $delE")
@@ -3274,7 +3281,7 @@ object ScaleBench {
           "measured 30 at a 50k store / 29 at 10M, the r16 addendum-10 " +
           "receipt rows)")
       val (freshE, stFE) = graft.JobProfile.profile(spark) {
-        incrT.processExactBatch(vBatch(21000000L), "doc_id", "text", 4L)
+        exactT.process(vBatch(21000000L), "doc_id", "text", 4L)
       }
       require(freshE.count() == 0L,
         "taken-down exact content still deduped through tombstones")
@@ -3284,36 +3291,34 @@ object ScaleBench {
           "(bound 16: the pending-tombstone anti-join adds two store-" +
           "read jobs over the arg-46 clean-store bound of 12)")
       val (_, cmpE) = graft.JobProfile.profile(spark) {
-        incrT.compact(5L)
+        exactT.compact(5L)
       }
       println(s"[scale] td-decade receipt: compact (store-scale rewrite " +
         s"by design) $cmpE")
       val (dupE, stDE) = graft.JobProfile.profile(spark) {
-        incrT.processExactBatch(vBatch(22000000L), "doc_id", "text", 6L)
+        exactT.process(vBatch(22000000L), "doc_id", "text", 6L)
       }
       require(dupE.count() == bT.toLong,
         "post-compact re-ingest must dedup against the v4 keepers")
       println(s"[scale] td-decade receipt: exact dedup-after-re-ingest " +
         s"$stDE")
-      // --- newline-line family (same store prefix, line tables) ---
+      // --- newline-line family (same prefix, its own line tables) ---
       val (_, ingTn) = graft.JobProfile.profile(spark) {
-        incrT.processNewlineLineBatch(
+        linesT.process(
           tdocs(spark.range(nTdd.toLong).select($"id", $"id".as("src"))),
           "doc_id", "text", 11L)
       }
       println(s"[scale] td-decade receipt: newline ingest $nTdd docs $ingTn")
-      incrT.processNewlineLineBatch(vBatch(30000000L), "doc_id", "text", 12L)
+      linesT.process(vBatch(30000000L), "doc_id", "text", 12L)
       val (_, delN) = graft.JobProfile.profile(spark) {
-        incrT.deleteNewlineLinesClosed(vBatch(30000000L), "doc_id",
-          "text", 13L)
+        linesT.deleteClosed(vBatch(30000000L), "doc_id", "text", 13L)
       }
       println(s"[scale] td-decade receipt: line takedown ($bT victims " +
         s"vs $nTdd store) $delN")
       require(delN.jobs <= 35,
         s"line takedown ran ${delN.jobs} driver jobs (bound 35)")
       val (freshN, stFN) = graft.JobProfile.profile(spark) {
-        incrT.processNewlineLineBatch(vBatch(31000000L), "doc_id",
-          "text", 14L)
+        linesT.process(vBatch(31000000L), "doc_id", "text", 14L)
       }
       val accFN = freshN.agg(sum($"n_lines"), sum($"n_kept")).head()
       require(accFN.getLong(0) == 2L * bT && accFN.getLong(1) == 2L * bT,
@@ -3323,12 +3328,11 @@ object ScaleBench {
         s"post-delete line batch regressed to ${stFN.jobs} jobs " +
           "(pending-tombstone anti-join bound, see the exact arm)")
       val (_, cmpN) = graft.JobProfile.profile(spark) {
-        incrT.compact(15L)
+        linesT.compact(15L)
       }
       println(s"[scale] td-decade receipt: line compact $cmpN")
       val (dupN, stDN) = graft.JobProfile.profile(spark) {
-        incrT.processNewlineLineBatch(vBatch(32000000L), "doc_id",
-          "text", 16L)
+        linesT.process(vBatch(32000000L), "doc_id", "text", 16L)
       }
       val accDN = dupN.agg(sum($"n_lines"), sum($"n_kept")).head()
       require(accDN.getLong(0) == 2L * bT && accDN.getLong(1) == 0L,
@@ -3343,7 +3347,7 @@ object ScaleBench {
     // arg-51: MINHASH takedown at the decade — closes the last decade
     // gap in the takedown receipt matrix (exact/line = arg-50, ANN
     // tombstones = arg-47, SemDeDupIndex re-election 1M = arg-34).
-    // deleteMinhash is CURRENT-CORPUS retraction: an O(victims) id-keyed
+    // Minhash.delete is CURRENT-CORPUS retraction: an O(victims) id-keyed
     // tombstone append with no content audit, so the claim under test
     // is (a) the delete's job count is flat in store size, and (b) the
     // post-delete serving path genuinely un-sees the victims — a twin
@@ -3362,10 +3366,10 @@ object ScaleBench {
           concat(lit("t"), pmod(xxhash64($"src", lit(p)), lit(10000000L)))): _*)
           .as("text"))
       val tmpM = Files.createTempDirectory("graft-mhtddecade").toString
-      val incrM = new IncrementalDedup(new graft.lake.Lake(spark, tmpM),
-        prefix = "mhtd")
+      val incrM = new IncrementalDedup.Minhash(
+        new graft.lake.Lake(spark, tmpM), prefix = "mhtd")
       val (_, ingM) = graft.JobProfile.profile(spark) {
-        incrM.processMinhashBatch(
+        incrM.process(
           mtdocs(spark.range(nMt.toLong).select($"id", $"id".as("src"))),
           "doc_id", "text", 1L)
       }
@@ -3373,8 +3377,7 @@ object ScaleBench {
       def twinBatch(idLo: Long) = mtdocs(spark.range(bM.toLong)
         .select(($"id" + idLo).as("id"), $"id".as("src")))
       val (pre, stPre) = graft.JobProfile.profile(spark) {
-        incrM.processMinhashBatch(twinBatch(20000000L), "doc_id",
-          "text", 2L)
+        incrM.process(twinBatch(20000000L), "doc_id", "text", 2L)
       }
       val preRows = pre.collect()
       require(preRows.length == bM && preRows.forall(_.getDouble(2) == 1.0),
@@ -3387,16 +3390,15 @@ object ScaleBench {
         .unionByName(spark.range(bM.toLong)
           .select(($"id" + 20000000L).as("doc_id")))
       val (_, delM) = graft.JobProfile.profile(spark) {
-        incrM.deleteMinhash(victimIds, "doc_id", 3L)
+        incrM.delete(victimIds, "doc_id", 3L)
       }
-      println(s"[scale] mh-td receipt: deleteMinhash (${2 * bM} victims " +
+      println(s"[scale] mh-td receipt: Minhash.delete (${2 * bM} victims " +
         s"vs $nMt store) $delM")
       require(delM.jobs <= 10,
         s"minhash takedown ran ${delM.jobs} driver jobs (bound 10 — an " +
           "id-keyed tombstone append must not scan the store)")
       val (post, stPost) = graft.JobProfile.profile(spark) {
-        incrM.processMinhashBatch(twinBatch(21000000L), "doc_id",
-          "text", 4L)
+        incrM.process(twinBatch(21000000L), "doc_id", "text", 4L)
       }
       require(post.count() == 0L,
         "post-delete twin batch paired against retracted content")
@@ -3417,8 +3419,7 @@ object ScaleBench {
       // live state AND drained the tombstones without resurrecting the
       // retracted originals)
       val (post2, stPost2) = graft.JobProfile.profile(spark) {
-        incrM.processMinhashBatch(twinBatch(22000000L), "doc_id",
-          "text", 6L)
+        incrM.process(twinBatch(22000000L), "doc_id", "text", 6L)
       }
       val p2 = post2.collect()
       require(p2.length == bM && p2.forall { r =>

@@ -303,7 +303,7 @@ object Dedup {
     // n_members = this BATCH's member count for the hash — the lake
     // store reads Σ over appended rows, so group sizes accumulate
     // additively and the takedown path can audit group closure
-    // ([[graft.dedup.IncrementalDedup.deleteExactClosed]])
+    // ([[graft.dedup.IncrementalDedup.Exact.deleteClosed]])
     val state = canon.select(col("content_hash"),
       col("canonical_id").as("keep_id"), col("n_members"))
     (dups, state)
@@ -1862,121 +1862,105 @@ object Dedup {
           .as("contamination"))
   }
 
+  /** How a line dedup cuts text into lines: each case owns the row-local
+    * (line_no, line)-struct-array expression and the separator that
+    * reassembles the kept lines. The batch ([[lineDedup]]), incremental
+    * ([[lineIncremental]], [[graft.dedup.IncrementalDedup.Lines]]) and
+    * streaming ([[graft.streaming.DocStream.streamingLineDedup]]) paths
+    * all stage lines through the same expression, so they see
+    * bit-identical lines — the batch ≡ stream parity rests on it. Text
+    * with no lines yields NULL, and explode of null emits no rows: the
+    * doc is absent from the result. */
+  sealed trait Chunker {
+    def lines(text: Column): Column
+    def sep: String
+  }
+
+  object Chunker {
+
+    /** Runs of `k` whitespace tokens (the last run per doc may be
+      * shorter) — the SF-testdata form, where documents are single-line
+      * text and k-token runs stand in for lines; x50 oracles it
+      * end-to-end. Chunk i (0-based) covers 1-based token positions
+      * i*k+1 .. i*k+k; token-less text yields NULL (sequence(0,-1) would
+      * descend). Reassembly rejoins with ' '. */
+    final case class Tokens(k: Int = 3) extends Chunker {
+      def lines(text: Column): Column = {
+        val toks = TextFunctions.tokens(text)
+        val kl = lit(k)
+        when(size(toks) > 0, transform(
+          sequence(lit(0), (size(toks) + kl - 1).divide(kl).cast("int") - 1),
+          i => struct(i.as("line_no"),
+            array_join(slice(toks, i * kl + 1, kl), " ").as("line"))))
+      }
+      def sep: String = " "
+    }
+
+    /** Newline lines — the production form on real multi-line text:
+      * split on CRLF, bare CR, or LF — CRLF alternative first so it never
+      * splits into two empty lines. A bare-'\n' split would keep '\r'
+      * inside the line (CRLF docs), and classic-Mac/stray-'\r' endings
+      * would keep whole docs as one line, so the same header under any
+      * ending convention would hash differently and never dedup.
+      * Reassembly rejoins with '\n' — line endings are NORMALIZED, the
+      * standard cleanup semantics. Empty text yields NULL; empty LINES
+      * (blank lines, trailing newline) are kept and dedup like any
+      * content — the first blank line in (doc_id, line_no) order
+      * survives for the docs that contain one. */
+    case object Newline extends Chunker {
+      def lines(text: Column): Column =
+        when(length(text) > 0,
+          transform(split(text, "\r\n|\r|\n"),
+            (ln, i) => struct(i.as("line_no"), ln.as("line"))))
+      def sep: String = "\n"
+    }
+
+    /** Blank-line-separated blocks (2+ newlines after CRLF/CR→LF
+      * normalization) — the RefinedWeb/CCNet dedup granularity between
+      * whole-document and single-line. Endings normalize FIRST (CRLF
+      * alternative before bare CR) so the same paragraph under any
+      * ending convention hashes identically even across its internal
+      * single line breaks. Empty text → NULL.
+      *
+      * Reassembly NORMALIZES: CRLF becomes LF and every 2+-break run
+      * becomes exactly one blank line ('\n\n'), so `text_kept` can
+      * differ from the input even when `n_kept == n_lines` (e.g. a
+      * triple newline, or CRLF endings). Paragraph IDENTITY is what
+      * dedups; separator bytes are presentation. Callers needing
+      * byte-stable untouched docs should compare content keys, not
+      * assume n_kept == n_lines ⇒ identical text. */
+    case object Paragraph extends Chunker {
+      def lines(text: Column): Column = {
+        val norm = regexp_replace(text, "\r\n|\r", "\n")
+        when(length(norm) > 0,
+          transform(split(norm, "\n{2,}"),
+            (p, i) => struct(i.as("line_no"), p.as("line"))))
+      }
+      def sep: String = "\n\n"
+    }
+  }
+
   /** Sub-document (line-level) dedup: remove every line whose exact text
     * already appeared earlier in the corpus — the CCNet/RefinedWeb hygiene
     * step that strips boilerplate (navigation bars, license headers,
     * cookie banners) which repeats across pages without the whole pages
     * being duplicates. "Earlier" = smallest (doc id, line position), so
     * exactly one occurrence of each distinct line survives, including
-    * repeats WITHIN one document. The corpus here has no newlines, so a
-    * "line" is a run of `lineTokens` whitespace tokens (the last run per
-    * doc may be shorter) — swap [[chunkLines]] for split-on-newline when
-    * the data carries real lines.
+    * repeats WITHIN one document. `chunker` decides what a line is
+    * (default: 3-token runs, for the SF testdata that has no newlines).
     *
     * Returns (doc_id, n_lines, n_kept, text_kept): per-doc line counts
     * and the document re-assembled from surviving lines in original
-    * order (empty string when nothing survives; token-less docs absent).
+    * order with the chunker's separator (empty string when nothing
+    * survives; line-less docs absent).
     *
-    * Scale shape: NO join back to the line stream. The arg-min aggregate
-    * carries the line text inside min(struct(doc_id, line_no, line)) —
-    * (doc_id, line_no) is unique per line row, so the text never decides
-    * the ordering — which makes the aggregate's OUTPUT the kept-lines
-    * relation directly. Three map-side-combinable hash aggregates, no
-    * corpus-wide window, no ROW_NUMBER: (1) per-doc line counts; (2)
-    * first-occurrence per md5(line) — 16-byte keys regardless of line
-    * length, the [[exactDuplicates]] discipline; a boilerplate line
-    * repeated a million times leaves each partition ONCE via the partial
-    * aggregate, so key skew never reaches the wire; (3) reassembly
-    * regroups only the SURVIVORS (bounded by distinct content, not
-    * corpus size), left-joined to the counts for all-dropped docs. The
-    * v1 plan — join every line row back to a firsts relation, regroup
-    * the full stream — measured 235 s at 1M docs × 20 lines local[8];
-    * this shape is ~3× faster (ScaleBench arg-14 validates survivor
-    * counts in-run). */
-  /** Row-local line staging shared by [[lineDedup]] and its streaming
-    * twin ([[graft.streaming.DocStream.streamingLineDedup]]): the text's
-    * whitespace tokens chunked into `lineTokens`-token runs as an array
-    * of (line_no, line) structs — pure HOFs, so the identical expression
-    * runs on batch and stream and the two stage bit-identical lines.
-    * Chunk i (0-based) covers 1-based token positions i*k+1 .. i*k+k;
-    * token-less text yields NULL (sequence(0,-1) would descend) — explode
-    * of null emits no rows, which is the wanted "doc absent" semantics. */
-  def chunkLines(text: Column, lineTokens: Int): Column = {
-    val toks = TextFunctions.tokens(text)
-    val k = lit(lineTokens)
-    when(size(toks) > 0, transform(
-      sequence(lit(0), (size(toks) + k - 1).divide(k).cast("int") - 1),
-      i => struct(i.as("line_no"),
-        array_join(slice(toks, i * k + 1, k), " ").as("line"))))
-  }
-
-  /** Newline chunker — the production form on real multi-line text:
-    * split on CRLF, bare CR, or LF — CRLF alternative first so it never
-    * splits into two empty lines. A bare-'\n' split would keep '\r'
-    * inside the line (CRLF docs), and classic-Mac/stray-'\r' endings
-    * would keep whole docs as one line, so the same header under any
-    * ending convention would hash differently and never dedup. Each
-    * line is numbered by position.
-    * Reassembly rejoins with '\n' — line endings are NORMALIZED, the
-    * standard cleanup semantics. Empty text yields NULL (doc absent,
-    * the [[chunkLines]] contract); empty LINES (blank lines, trailing
-    * newline) are kept and dedup like any content — the first blank
-    * line in (doc_id, line_no) order survives for the docs that
-    * contain one. */
-  def splitLines(text: Column): Column =
-    when(length(text) > 0,
-      transform(split(text, "\r\n|\r|\n"),
-        (ln, i) => struct(i.as("line_no"), ln.as("line"))))
-
-  /** Token-run line dedup ([[chunkLines]]) — the SF-testdata form, where
-    * documents are single-line text and k-token runs stand in for lines.
-    * Delegates to [[lineDedupBy]]; x50 oracles it end-to-end. */
+    * Scale shape: no corpus-wide window, no ROW_NUMBER. The keeper
+    * decision is a map-side-combinable count/arg-min aggregate on
+    * md5(line) — 16-byte keys regardless of line length, the
+    * [[exactDuplicates]] discipline — left-joined back to the line
+    * stream, feeding ONE per-doc reassembly aggregate. */
   def lineDedup(df: DataFrame, idCol: String, textCol: String,
-      lineTokens: Int = 3): DataFrame =
-    lineDedupBy(df, idCol, textCol, chunkLines(col(textCol), lineTokens), " ")
-
-  /** Newline line dedup ([[splitLines]]) — the production form for real
-    * multi-line corpora; reassembly rejoins with '\n' so surviving text
-    * keeps its line structure. Same plan shape as [[lineDedup]]. */
-  def lineDedupNewline(df: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    lineDedupBy(df, idCol, textCol, splitLines(col(textCol)), "\n")
-
-  /** Paragraph chunker: blank-line-separated blocks (2+ newlines after
-    * CRLF/CR→LF normalization), each numbered by position — the
-    * RefinedWeb/CCNet dedup granularity between whole-document and
-    * single-line. Endings normalize FIRST (CRLF alternative before bare
-    * CR) so the same paragraph under any ending convention hashes
-    * identically even across its internal single line breaks.
-    * Empty text → NULL (absent), the [[splitLines]] contract. */
-  def splitParagraphs(text: Column): Column = {
-    val norm = regexp_replace(text, "\r\n|\r", "\n")
-    when(length(norm) > 0,
-      transform(split(norm, "\n{2,}"),
-        (p, i) => struct(i.as("line_no"), p.as("line"))))
-  }
-
-  /** Paragraph-level dedup ([[splitParagraphs]]): first corpus occurrence
-    * of each exact paragraph survives; docs reassemble with blank-line
-    * separators. Same aggregate + join-back scale shape as [[lineDedup]].
-    *
-    * Reassembly NORMALIZES: CRLF becomes LF and every 2+-break run
-    * becomes exactly one blank line ('\n\n'), so `text_kept` can differ
-    * from the input even when `n_kept == n_lines` (e.g. a triple
-    * newline, or CRLF endings). That is the standard cleanup semantics —
-    * paragraph IDENTITY is what dedups; separator bytes are
-    * presentation. Callers needing byte-stable untouched docs should
-    * compare content keys, not assume n_kept == n_lines ⇒ identical
-    * text. */
-  def paragraphDedup(df: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    lineDedupBy(df, idCol, textCol, splitParagraphs(col(textCol)), "\n\n")
-
-  /** Core corpus-wide line dedup over any (line_no, line)-struct-array
-    * chunker column — keeper via a duplicated-line hash aggregate
-    * joined back to the line stream; no corpus-wide window. */
-  def lineDedupBy(df: DataFrame, idCol: String, textCol: String,
-      chunker: Column, sep: String): DataFrame = {
+      chunker: Chunker = Chunker.Tokens()): DataFrame = {
     // Keeper decision via a DUPLICATED-LINE hash aggregate left-joined
     // back to the line stream, feeding ONE per-doc reassembly aggregate
     // (round-10 — closes the round-9 single-hot-key window caveat):
@@ -2010,7 +1994,8 @@ object Dedup {
     // its rows through the one groupBy (collect_list skips the null
     // non-keeper entries).
     val lines = df
-      .select(col(idCol).as("doc_id"), explode(chunker).as("ln"))
+      .select(col(idCol).as("doc_id"),
+        explode(chunker.lines(col(textCol))).as("ln"))
       .select(col("doc_id"), col("ln.line_no"), col("ln.line"),
         md5(col("ln.line")).as("line_h"))
     val dup = lines.select(col("doc_id"), col("line_no"), col("line_h"))
@@ -2028,7 +2013,7 @@ object Dedup {
       count(when(col("kept"), 1)).as("n_kept"),
       array_join(transform(array_sort(
           collect_list(when(col("kept"), struct(col("line_no"), col("line"))))),
-        s => s.getField("line")), sep).as("text_kept"))
+        s => s.getField("line")), chunker.sep).as("text_kept"))
   }
 
   /** Incremental line-level dedup: one batch's lines against every line
@@ -2039,10 +2024,11 @@ object Dedup {
     *
     * SEEN-CONTENT semantics ([[exactIncremental]]'s contract): a line
     * that ever appeared dedups all later occurrences, so batch-by-batch
-    * processing equals the whole-corpus [[lineDedupBy]] when ids arrive
-    * in increasing order (the time-ordered ingest case). Within the
-    * batch the same (doc_id, line_no) arg-min as the batch operator
-    * decides the keeper.
+    * processing equals the whole-corpus [[lineDedup]] over the same
+    * chunker when ids arrive in increasing order (the time-ordered
+    * ingest case). Within the batch the same (doc_id, line_no) arg-min as
+    * the batch operator decides the keeper. A store holds the lines of
+    * ONE chunker: the same text cuts into different lines under each.
     *
     * @param priorFirsts (line_h) relation of every line hash already in
     *   the store (extra columns ignored)
@@ -2053,54 +2039,27 @@ object Dedup {
     *   so the append stays batch-sized; re-appending under min-merge
     *   would also be correct, making re-runs idempotent either way). */
   def lineIncremental(newDocs: DataFrame, idCol: String, textCol: String,
-      priorFirsts: DataFrame, lineTokens: Int = 3)
-      : (DataFrame, DataFrame) =
-    lineIncrementalBy(newDocs, idCol, textCol, priorFirsts,
-      chunkLines(col(textCol), lineTokens), " ")
-
-  /** [[lineIncremental]] on the production newline chunker — the
-    * batch-incremental pairing of [[lineDedupNewline]] (reassembly
-    * rejoins with '\n'). Same store contract; a corpus can even mix
-    * chunker granularities against SEPARATE stores. */
-  def lineIncrementalNewline(newDocs: DataFrame, idCol: String,
-      textCol: String, priorFirsts: DataFrame): (DataFrame, DataFrame) =
-    lineIncrementalBy(newDocs, idCol, textCol, priorFirsts,
-      splitLines(col(textCol)), "\n")
-
-  /** [[lineIncremental]] at paragraph granularity — the
-    * batch-incremental pairing of [[paragraphDedup]] (blank-line
-    * separators; endings normalize like the batch operator). */
-  def paragraphIncremental(newDocs: DataFrame, idCol: String,
-      textCol: String, priorFirsts: DataFrame): (DataFrame, DataFrame) =
-    lineIncrementalBy(newDocs, idCol, textCol, priorFirsts,
-      splitParagraphs(col(textCol)), "\n\n")
-
-  /** Core incremental line dedup over any (line_no, line)-struct-array
-    * chunker — [[lineDedupBy]]'s chunker genericity applied to the
-    * incremental contract above. */
-  def lineIncrementalBy(newDocs: DataFrame, idCol: String, textCol: String,
-      priorFirsts: DataFrame, chunker: Column, sep: String)
+      priorFirsts: DataFrame, chunker: Chunker = Chunker.Tokens())
       : (DataFrame, DataFrame) = {
-    val (result, allRows) = lineIncrementalByCounted(
-      newDocs, idCol, textCol, priorFirsts, chunker, sep)
+    val (result, allRows) = lineIncrementalCounted(
+      newDocs, idCol, textCol, priorFirsts, chunker)
     (result, allRows.filter(col("keep_doc").isNotNull)
       .select(col("line_h"), col("keep_doc"), col("keep_line")))
   }
 
-  /** [[lineIncrementalBy]] whose second frame additionally carries the
+  /** [[lineIncremental]] whose second frame additionally carries the
     * batch's per-distinct-line occurrence counts — the store rows the
     * GROUP-CLOSURE AUDIT needs
-    * ([[graft.dedup.IncrementalDedup.deleteLinesClosed]]): one row per
+    * ([[graft.dedup.IncrementalDedup.Lines.deleteClosed]]): one row per
     * distinct batch line; lines FIRST SEEN here carry their keeper
     * coordinates, already-seen lines carry NULL coordinates (pure count
     * deltas — Σ n_members over a line's rows is its total ingested
     * occurrences). Derived from the same single aggregate as the plain
     * form, so the batch pays no extra pass. */
-  private[graft] def lineIncrementalByCounted(newDocs: DataFrame,
-      idCol: String, textCol: String,
-      priorFirsts: DataFrame, chunker: Column, sep: String)
-      : (DataFrame, DataFrame) = {
-    // The [[lineDedupBy]] round-10 aggregate + join-back shape with the
+  private[graft] def lineIncrementalCounted(newDocs: DataFrame,
+      idCol: String, textCol: String, priorFirsts: DataFrame,
+      chunker: Chunker): (DataFrame, DataFrame) = {
+    // The [[lineDedup]] round-10 aggregate + join-back shape with the
     // seen-probe moved to PER-DISTINCT-LINE granularity: one
     // map-side-combinable count/arg-min aggregate (over a column-pruned
     // second chunker evaluation) derives (line_h, cnt, keep) for the
@@ -2118,12 +2077,12 @@ object Dedup {
       import org.apache.spark.sql.types._
       val dt = newDocs.schema(idCol).dataType
       require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
-        s"lineIncrementalBy requires an integral id column; " +
+        s"lineIncremental requires an integral id column; " +
           s"'$idCol' is ${dt.simpleString}") // non-integral casts to NULL silently
     }
     val lines = newDocs
       .select(col(idCol).cast("long").as("doc_id"),
-        explode(chunker).as("ln"))
+        explode(chunker.lines(col(textCol))).as("ln"))
       .select(col("doc_id"), col("ln.line_no"), col("ln.line"),
         md5(col("ln.line")).as("line_h"))
     val perH = lines.select(col("doc_id"), col("line_no"), col("line_h"))
@@ -2146,7 +2105,7 @@ object Dedup {
       count(when(col("kept"), 1)).as("n_kept"),
       array_join(transform(array_sort(
           collect_list(when(col("kept"), struct(col("line_no"), col("line"))))),
-        s => s.getField("line")), sep).as("text_kept"))
+        s => s.getField("line")), chunker.sep).as("text_kept"))
     // perH is distinct on line_h, so rows are already one-per-line;
     // `keep` is each first-seen line's within-batch keeper occurrence,
     // NULLed for already-seen lines (their row is a pure count delta)

@@ -105,8 +105,8 @@ object TextFunctions {
     * stride convention, so every token is covered and consecutive
     * chunks share (C − S) tokens of context. Zero-token documents emit
     * no chunks. `stride` = `chunkSize` degenerates to disjoint
-    * splitting (the line-chunker family's device, [[graft.dedup.Dedup
-    * .lineDedup]]).
+    * splitting (the token-run line chunker's device,
+    * [[graft.dedup.Dedup.Chunker.Tokens]]).
     *
     * Scale shape: per-row codegen'd array arithmetic (tokens → one
     * `transform` over a chunk-count `sequence` → posexplode) — no

@@ -1921,12 +1921,12 @@ object ExtraQueries {
         import s.implicits._
         val d = t(s, dir, "documents")
         val (rows, schema) = withTempDir(s, "graft-linc") { tmp =>
-          val incr = new graft.dedup.IncrementalDedup(
+          val incr = new graft.dedup.IncrementalDedup.Lines(
             new graft.lake.Lake(s, tmp), prefix = "li")
           val cut = 250L
-          val r1 = incr.processLineBatch(d.filter($"doc_id" < cut),
+          val r1 = incr.process(d.filter($"doc_id" < cut),
             "doc_id", "text", version = 1L)
-          val r2 = incr.processLineBatch(d.filter($"doc_id" >= cut),
+          val r2 = incr.process(d.filter($"doc_id" >= cut),
             "doc_id", "text", version = 2L)
           val out = r1.unionByName(r2).orderBy($"doc_id")
           (out.collect(), out.schema)
@@ -2646,13 +2646,13 @@ object ExtraQueries {
         import s.implicits._
         val d = t(s, dir, "documents")
         val (rows, schema) = withTempDir(s, "graft-spaninc") { tmp =>
-          val incr = new graft.dedup.IncrementalDedup(
-            new graft.lake.Lake(s, tmp), prefix = "sp")
+          val incr = new graft.dedup.IncrementalDedup.Span(
+            new graft.lake.Lake(s, tmp), prefix = "sp", n = 10)
           val cut = 250L
-          val r1 = incr.processSpanBatch(d.filter($"doc_id" < cut),
-            "doc_id", "text", version = 1L, n = 10)
-          val r2 = incr.processSpanBatch(d.filter($"doc_id" >= cut),
-            "doc_id", "text", version = 2L, n = 10)
+          val r1 = incr.process(d.filter($"doc_id" < cut),
+            "doc_id", "text", version = 1L)
+          val r2 = incr.process(d.filter($"doc_id" >= cut),
+            "doc_id", "text", version = 2L)
           val out = r1.unionByName(r2).orderBy($"doc_id")
           (out.collect(), out.schema)
         }
@@ -3225,7 +3225,7 @@ object ExtraQueries {
              |FROM gated g LEFT JOIN dedup d USING (doc_id)
              |ORDER BY g.doc_id""".stripMargin)),
 
-    // PRODUCTION newline line dedup (lineDedupNewline / splitLines)
+    // PRODUCTION newline line dedup (lineDedup on Chunker.Newline)
     // oracled end-to-end (round-10): the sf documents are single-line,
     // so the production chunker was previously spec-covered only. A
     // multi-line corpus is DERIVED deterministically inside the query —
@@ -3239,11 +3239,12 @@ object ExtraQueries {
         import s.implicits._
         val ml = t(s, dir, "documents").select($"doc_id",
           regexp_replace($"text", "(\\S+ \\S+ \\S+) ", "$1\n").as("text"))
-        Dedup.lineDedupNewline(ml, "doc_id", "text").orderBy($"doc_id")
+        Dedup.lineDedup(ml, "doc_id", "text", Dedup.Chunker.Newline)
+          .orderBy($"doc_id")
       },
       Some(x80Oracle)),
 
-    // Paragraph dedup (paragraphDedup / splitParagraphs) oracled
+    // Paragraph dedup (lineDedup on Chunker.Paragraph) oracled
     // end-to-end — the x80 derivation at blank-line granularity: a
     // '\n\n' break after every ninth token makes 9-token paragraphs,
     // and the operator's keeper + '\n\n'-reassembly (separator
@@ -3253,7 +3254,8 @@ object ExtraQueries {
         import s.implicits._
         val ml = t(s, dir, "documents").select($"doc_id",
           regexp_replace($"text", "(\\S+( \\S+){8}) ", "$1\n\n").as("text"))
-        Dedup.paragraphDedup(ml, "doc_id", "text").orderBy($"doc_id")
+        Dedup.lineDedup(ml, "doc_id", "text", Dedup.Chunker.Paragraph)
+          .orderBy($"doc_id")
       },
       Some("""WITH ml AS (
              |  SELECT doc_id, regexp_replace(text, '(\S+( \S+){8}) ',
@@ -3277,7 +3279,7 @@ object ExtraQueries {
              |FROM flag GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
     // Incremental newline line dedup: the x80 corpus arrives as two
-    // id-ordered batches through lineIncrementalNewline (raw store
+    // id-ordered batches through lineIncremental on Chunker.Newline (raw store
     // handoff — newFirsts of batch 1 is batch 2's priorFirsts), and the
     // concatenation must equal the whole-corpus x80 answer — which is
     // exactly what the UNCHANGED x80 SQL recomputes (the x64/x70
@@ -3293,11 +3295,12 @@ object ExtraQueries {
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("line_h",
               org.apache.spark.sql.types.StringType))))
-        val (r1, f1) = Dedup.lineIncrementalNewline(
-          ml.filter($"doc_id" < cut), "doc_id", "text", empty)
-        val (r2, _) = Dedup.lineIncrementalNewline(
+        val (r1, f1) = Dedup.lineIncremental(
+          ml.filter($"doc_id" < cut), "doc_id", "text", empty,
+          Dedup.Chunker.Newline)
+        val (r2, _) = Dedup.lineIncremental(
           ml.filter($"doc_id" >= cut), "doc_id", "text",
-          f1.select($"line_h"))
+          f1.select($"line_h"), Dedup.Chunker.Newline)
         r1.unionByName(r2).orderBy($"doc_id")
       },
       Some(x80Oracle)),
@@ -3561,15 +3564,15 @@ object ExtraQueries {
       },
       None),
 
-    // Lexical-store takedown (IncrementalDedup.deleteExactClosed /
-    // deleteMinhash + compact): a store that ingested the corpus, took
+    // Lexical-store takedown (IncrementalDedup.Exact.deleteClosed /
+    // Minhash.delete + compact): a store that ingested the corpus, took
     // down the victims, and then processed a follow-up batch must be
     // INDISTINGUISHABLE from a store that never ingested them — batch
     // outputs AND merged store state (keeper + member counts). The gate
     // THROWS otherwise. Victims here are HASH-GROUP-CLOSED (every doc
     // sharing a victim's exact text is also a victim) and the r12
     // caller-side bookkeeping boundary is now ENFORCED IN-ENGINE: the
-    // store accumulates per-group member counts, deleteExactClosed
+    // store accumulates per-group member counts, Exact.deleteClosed
     // audits closure against them, and the gate's open-group arm pins
     // that a keeper-victim with a retained same-content member REFUSES
     // loudly (then succeeds when widened to the whole group, truly
@@ -3609,30 +3612,34 @@ object ExtraQueries {
              Seq[org.apache.spark.sql.Row], Seq[(String, Long, Long)],
              org.apache.spark.sql.types.StructType) = {
           val lk = new graft.lake.Lake(s, tmp)
-          val incr = new graft.dedup.IncrementalDedup(lk, threshold = 0.7)
+          // two stores under the one `dedup` prefix: their table names
+          // are disjoint, and each compacts its own tables
+          val exact = new graft.dedup.IncrementalDedup.Exact(lk)
+          val mh = new graft.dedup.IncrementalDedup.Minhash(lk,
+            threshold = 0.7)
           val base = if (takedown) d
             else d.join(victims.select($"doc_id"), Seq("doc_id"), "left_anti")
-          incr.processExactBatch(base, "doc_id", "text", 1L)
-          incr.processMinhashBatch(base, "doc_id", "text", 1L)
+          exact.process(base, "doc_id", "text", 1L)
+          mh.process(base, "doc_id", "text", 1L)
           if (takedown) {
             // the AUDITED takedown (r12 What's-wrong #3 closed): the
             // victims here are hash-group-closed by construction, so
             // the closure audit passes and the delete proceeds
-            incr.deleteExactClosed(victims, "doc_id", "text", 2L)
-            incr.deleteMinhash(victims.select($"doc_id"), "doc_id", 2L)
+            exact.deleteClosed(victims, "doc_id", "text", 2L)
+            mh.delete(victims.select($"doc_id"), "doc_id", 2L)
           }
-          val e2 = incr.processExactBatch(b2, "doc_id", "text", 3L)
+          val e2 = exact.process(b2, "doc_id", "text", 3L)
           val eRows = e2.orderBy($"doc_id").collect().toSeq
-          val mRows = incr.processMinhashBatch(b2, "doc_id", "text", 3L)
+          val mRows = mh.process(b2, "doc_id", "text", 3L)
             .orderBy($"id_a", $"id_b").collect().toSeq
-          if (takedown) incr.compact(4L)
-          val e3 = incr.processExactBatch(b3, "doc_id", "text", 5L)
+          if (takedown) { exact.compact(4L); mh.compact(4L) }
+          val e3 = exact.process(b3, "doc_id", "text", 5L)
             .orderBy($"doc_id").collect().toSeq
           // FULL STORE STATE, not just batch outputs: the takedown
           // store's merged (hash, keeper, member-count) rows must be
           // byte-equal to the never-ingested twin's — the count parity
           // the negative-row accounting exists for
-          val stateRows = lk.table(incr.hashTable)
+          val stateRows = lk.table(exact.hashTable)
             .groupBy($"content_hash")
             .agg(min($"keep_id").as("k"), sum($"n_members").as("n"))
             .orderBy($"content_hash").collect()
@@ -3642,11 +3649,11 @@ object ExtraQueries {
             // collected; store A only): a keeper-victim whose content a
             // retained doc still shares must REFUSE, not un-see
             val sentinelText = "graft x88 open group sentinel"
-            incr.processExactBatch(
+            exact.process(
               Seq((9000001L, sentinelText), (9000002L, sentinelText))
                 .toDF("doc_id", "text"), "doc_id", "text", 6L)
             val threw = try {
-              incr.deleteExactClosed(
+              exact.deleteClosed(
                 Seq((9000001L, sentinelText)).toDF("doc_id", "text"),
                 "doc_id", "text", 7L)
               false
@@ -3659,10 +3666,10 @@ object ExtraQueries {
               "open-group keeper takedown did not fail loudly")
             // widening to the WHOLE group is accepted, and the content
             // is then genuinely un-seen: a fresh ingest becomes keeper
-            incr.deleteExactClosed(
+            exact.deleteClosed(
               Seq((9000001L, sentinelText), (9000002L, sentinelText))
                 .toDF("doc_id", "text"), "doc_id", "text", 8L)
-            val fresh = incr.processExactBatch(
+            val fresh = exact.process(
               Seq((9000003L, sentinelText)).toDF("doc_id", "text"),
               "doc_id", "text", 9L).collect()
             require(fresh.isEmpty,
@@ -4313,17 +4320,17 @@ object ExtraQueries {
         val b2 = victims
           .select(($"doc_id" + 3000000L).as("doc_id"), $"text")
         def run(tmp: String, takedown: Boolean) = {
-          val incr = new graft.dedup.IncrementalDedup(
-            new graft.lake.Lake(s, tmp), prefix = "sp")
+          val incr = new graft.dedup.IncrementalDedup.Span(
+            new graft.lake.Lake(s, tmp), prefix = "sp", n = 10)
           val base = if (takedown) d else retained
-          incr.processSpanBatch(base, "doc_id", "text", 1L, n = 10)
+          incr.process(base, "doc_id", "text", 1L)
           if (takedown) {
             // the documented path: takedown = rebuild the gram store
-            // from the retained corpus (processSpanBatch replay after
-            // dropping the store)
-            incr.rebuildSpans(retained, "doc_id", "text", 2L, n = 10)
+            // from the retained corpus (process replay after dropping
+            // the store)
+            incr.rebuild(retained, "doc_id", "text", 2L)
           }
-          val out = incr.processSpanBatch(b2, "doc_id", "text", 3L, n = 10)
+          val out = incr.process(b2, "doc_id", "text", 3L)
             .orderBy($"doc_id").collect().toSeq
           val grams = new graft.lake.Lake(s, tmp).table(incr.spanTable)
             .select($"h").distinct().orderBy($"h").collect().toSeq
@@ -4349,9 +4356,9 @@ object ExtraQueries {
       None),
 
     // Line-store takedown with the GROUP-CLOSURE AUDIT (round-13 review
-    // item 5 — deleteExactClosed's n_members discipline ported to line
+    // item 5 — the exact store's n_members discipline ported to line
     // granularity): a store that ingested the corpus, took down the
-    // victims through deleteNewlineLinesClosed, and processed a
+    // victims through Lines.deleteClosed on Chunker.Newline, and processed a
     // follow-up batch must be INDISTINGUISHABLE from one that never
     // ingested them — batch outputs AND the merged (line → keeper,
     // Σ count) store state. Victims' lines are made victim-exclusive by
@@ -4359,8 +4366,8 @@ object ExtraQueries {
     // The structural replays that used to run here — the OPEN-arm
     // refusal/widen/fresh sentinel sequence and the post-compact
     // third-batch parity — are fixture replays on the shared
-    // lineBatch/deleteLinesClosedBy core and live in
-    // IncrementalTakedownSpec ("deleteLinesClosed: open keeper-lines
+    // shared closure-audit core and live in
+    // IncrementalTakedownSpec ("Lines.deleteClosed: open keeper-lines
     // refuse, closed takedown equals never-ingested ... post-compact"
     // + the newline-dispatch pin), the x59/x45 slimming precedent
     // (r16: 197 → 103 jobs / 6.3 → 3.5 cpu-s warm). compact itself
@@ -4394,18 +4401,18 @@ object ExtraQueries {
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getString(3))).toSeq
         def lifecycle(tmp: String, takedown: Boolean) = {
-          val incr = new graft.dedup.IncrementalDedup(
-            new graft.lake.Lake(s, tmp), prefix = "lt")
+          val incr = new graft.dedup.IncrementalDedup.Lines(
+            new graft.lake.Lake(s, tmp), prefix = "lt",
+            chunker = graft.dedup.Dedup.Chunker.Newline)
           val base = if (takedown) docs
             else docs.join(victims.select($"doc_id"), Seq("doc_id"),
               "left_anti")
-          incr.processNewlineLineBatch(base, "doc_id", "text", 1L)
+          incr.process(base, "doc_id", "text", 1L)
           if (takedown)
-            incr.deleteNewlineLinesClosed(victims, "doc_id", "text", 2L)
+            incr.deleteClosed(victims, "doc_id", "text", 2L)
           // victims' re-ingested copies must come back FRESH (their
           // lines un-seen) in BOTH stores
-          val o2 = rows(incr.processNewlineLineBatch(b2, "doc_id",
-            "text", 3L))
+          val o2 = rows(incr.process(b2, "doc_id", "text", 3L))
           // compact is LOAD-BEARING for the state compare below: it
           // reads the RAW lineTable, and only compaction physically
           // drops A's tombstoned keepers + count-compensation rows

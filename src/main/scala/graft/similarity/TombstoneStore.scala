@@ -76,6 +76,34 @@ private[graft] object TombstoneStore {
       "left_anti")
   }
 
+  /** Opens a compaction's physical apply of `t`: false when nothing
+    * pends (an existing-but-empty table — a pre-guard [[delete]] that
+    * appended an empty batch — is drained here, keeping the no-join
+    * serving path instead of NPEing on the null max); otherwise requires
+    * `version` to exceed every pending tombstone version and returns
+    * true. The crash-safety ordering (rewrite, THEN drop) only holds when
+    * the rewrite's stamp exceeds every pending tombstone's: a stale stamp
+    * would leave rewritten rows at version ≤ some tombstone, so a crash
+    * between replace and drop serves an empty store. `version` is
+    * caller-supplied with no other monotonicity check, so every store
+    * that rewrites under pending tombstones calls this before its first
+    * rewrite ([[applyTo]], [[graft.dedup.IncrementalDedup]]'s compact). */
+  def beginApply(lake: Lake, t: TableDef, version: Long): Boolean = {
+    if (!pending(lake, t)) return false
+    val maxRow = lake.table(t, keepVersion = true)
+      .agg(max(col(Lake.Version))).head
+    if (maxRow.isNullAt(0)) {
+      lake.drop(t.name)
+      return false
+    }
+    val maxTomb = maxRow.getLong(0)
+    require(version > maxTomb,
+      s"${t.name}: compaction version $version must exceed every pending " +
+        s"tombstone version (max pending: $maxTomb) — a crash between " +
+        "rewrite and drain would otherwise kill the rewritten rows")
+    true
+  }
+
   /** Apply pending tombstones to `vectorTable` and drain the side table —
     * the maintenance-cadence physical delete (crash ordering in the
     * object scaladoc). Also performs the PK compaction, so index
@@ -83,27 +111,7 @@ private[graft] object TombstoneStore {
   def applyTo(lake: Lake, t: TableDef, vectorTable: TableDef,
       version: Long): Unit = {
     lake.optimize(vectorTable)
-    if (!pending(lake, t)) return
-    // the crash-safety ordering (rewrite, THEN drop) only holds when the
-    // rewrite's stamp exceeds every pending tombstone's: a stale stamp
-    // would leave rewritten rows at version ≤ some tombstone, so a crash
-    // between replace and drop serves an empty store. Fail loudly here
-    // instead — version is caller-supplied with no other monotonicity
-    // check on this path.
-    val maxRow = lake.table(t, keepVersion = true)
-      .agg(max(col(Lake.Version))).head
-    if (maxRow.isNullAt(0)) {
-      // an existing-but-empty tombstone table (a pre-guard delete() that
-      // appended an empty batch): nothing pends — drain the husk and
-      // keep the no-join serving path instead of NPEing on the null max
-      lake.drop(t.name)
-      return
-    }
-    val maxTomb = maxRow.getLong(0)
-    require(version > maxTomb,
-      s"${t.name}: compaction version $version must exceed every pending " +
-        s"tombstone version (max pending: $maxTomb) — a crash between " +
-        "rewrite and drain would otherwise kill the rewritten rows")
+    if (!beginApply(lake, t, version)) return
     val live = filterLive(lake, t,
       lake.table(vectorTable, keepVersion = true)).drop(Lake.Version)
     lake.replace(vectorTable, live, version)

@@ -174,12 +174,13 @@ object DocStream {
 
   /** Streaming line-level dedup: per arriving document, one row PER LINE
     * with the keep/drop decision — the streaming twin of
-    * [[graft.dedup.Dedup.lineDedup]]'s keep logic. Lines are staged by
-    * the SAME row-local [[graft.dedup.Dedup.chunkLines]] expression as
-    * the batch path, so the two see bit-identical lines; under
-    * ascending-doc_id arrival the decisions match the batch operator's
-    * min-(doc_id, line_no) rule exactly (DocStreamSpec pins it, including
-    * reassembly parity of text_kept).
+    * [[graft.dedup.Dedup.lineDedup]]'s keep logic over the same
+    * [[graft.dedup.Dedup.Chunker]]. Lines are staged by the SAME
+    * row-local `chunker.lines` expression as the batch path, so the two
+    * see bit-identical lines; under ascending-doc_id arrival the
+    * decisions match the batch operator's min-(doc_id, line_no) rule
+    * exactly (DocStreamSpec pins it per chunker, including reassembly
+    * parity of text_kept with the chunker's separator).
     *
     * Keyed state: ONE (doc_id, line_no) pair per distinct line md5 — the
     * first occurrence seen so far. Like [[streamingExactDedup]], a
@@ -192,27 +193,37 @@ object DocStream {
     * Streaming restricts in Append mode.
     *
     * Input columns: doc_id LONG, text STRING. */
-  def streamingLineDedup(docs: Dataset[Row], lineTokens: Int = 3): DataFrame =
-    streamingLineDedupBy(docs,
-      graft.dedup.Dedup.chunkLines(
-        org.apache.spark.sql.functions.col("text"), lineTokens))
-
-  /** [[streamingLineDedup]] on the production newline chunker
-    * ([[graft.dedup.Dedup.splitLines]]) — the batch/stream pairing of
-    * [[graft.dedup.Dedup.lineDedupNewline]]. */
-  def streamingLineDedupNewline(docs: Dataset[Row]): DataFrame =
-    streamingLineDedupBy(docs,
-      graft.dedup.Dedup.splitLines(
-        org.apache.spark.sql.functions.col("text")))
-
-  /** [[streamingLineDedup]] at paragraph granularity
-    * ([[graft.dedup.Dedup.splitParagraphs]]) — the batch/stream pairing
-    * of [[graft.dedup.Dedup.paragraphDedup]], completing the
-    * batch/incremental/streaming × token-run/newline/paragraph matrix. */
-  def streamingParagraphDedup(docs: Dataset[Row]): DataFrame =
-    streamingLineDedupBy(docs,
-      graft.dedup.Dedup.splitParagraphs(
-        org.apache.spark.sql.functions.col("text")))
+  def streamingLineDedup(docs: Dataset[Row],
+      chunker: graft.dedup.Dedup.Chunker = graft.dedup.Dedup.Chunker.Tokens())
+      : DataFrame = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val ord = Ordering.Tuple2[Long, Int]
+    docs
+      .select(col("doc_id"), explode(chunker.lines(col("text"))).as("ln"))
+      .select(col("doc_id"), col("ln.line_no").as("line_no"),
+        col("ln.line").as("line"), md5(col("ln.line")).as("line_h"))
+      .as[(Long, Int, String, String)]
+      .groupByKey(_._4)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+        (_: String, rows: Iterator[(Long, Int, String, String)],
+            state: GroupState[(Long, Int)]) => {
+          var first = state.getOption.getOrElse((Long.MaxValue, Int.MaxValue))
+          // (doc_id, line_no) order inside the micro-batch mirrors the
+          // batch path's arg-min: the smallest occurrence is the keeper
+          val out = rows.toSeq.sortBy(r => (r._1, r._2))(ord).map {
+            case (d, no, line, _) =>
+              val kept = ord.lt((d, no), first)
+              if (kept) first = (d, no)
+              (d, no, line, kept)
+          }
+          state.update(first)
+          out.iterator
+        })
+      .toDF("doc_id", "line_no", "line", "kept")
+  }
 
   /** Streaming exact-substring span dedup: per arriving document, one
     * row PER FULL n-token RUN with the keep/drop decision — the
@@ -448,39 +459,5 @@ object DocStream {
       dab += a(i) * b(i); daa += a(i) * a(i); dbb += b(i) * b(i); i += 1
     }
     dab / (math.sqrt(daa) * math.sqrt(dbb))
-  }
-
-  /** Core of the streaming line dedups over any (line_no, line)-struct
-    * chunker — the same expression the batch path stages, so batch and
-    * stream emit bit-identical lines. */
-  def streamingLineDedupBy(docs: Dataset[Row],
-      chunker: org.apache.spark.sql.Column): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val ord = Ordering.Tuple2[Long, Int]
-    docs
-      .select(col("doc_id"), explode(chunker).as("ln"))
-      .select(col("doc_id"), col("ln.line_no").as("line_no"),
-        col("ln.line").as("line"), md5(col("ln.line")).as("line_h"))
-      .as[(Long, Int, String, String)]
-      .groupByKey(_._4)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: String, rows: Iterator[(Long, Int, String, String)],
-            state: GroupState[(Long, Int)]) => {
-          var first = state.getOption.getOrElse((Long.MaxValue, Int.MaxValue))
-          // (doc_id, line_no) order inside the micro-batch mirrors the
-          // batch path's arg-min: the smallest occurrence is the keeper
-          val out = rows.toSeq.sortBy(r => (r._1, r._2))(ord).map {
-            case (d, no, line, _) =>
-              val kept = ord.lt((d, no), first)
-              if (kept) first = (d, no)
-              (d, no, line, kept)
-          }
-          state.update(first)
-          out.iterator
-        })
-      .toDF("doc_id", "line_no", "line", "kept")
   }
 }

@@ -779,7 +779,8 @@ class DedupAnnSpec extends SparkSpec {
       (5L, "x\n\ny"),                               // its blank dups doc4's
       (6L, "")                                      // empty text -> absent
     ).toDF("doc_id", "text")
-    val got = graft.dedup.Dedup.lineDedupNewline(df, "doc_id", "text")
+    val got = graft.dedup.Dedup.lineDedup(df, "doc_id", "text",
+      graft.dedup.Dedup.Chunker.Newline)
       .orderBy($"doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
     assert(got.toSeq == Seq(
@@ -800,7 +801,8 @@ class DedupAnnSpec extends SparkSpec {
       (2L, "intro text\nstill intro\n\nbody C"),  // para 0 dups doc1's
       (3L, "body A")                              // whole doc = doc1's para 1
     ).toDF("doc_id", "text")
-    val got = graft.dedup.Dedup.paragraphDedup(df, "doc_id", "text")
+    val got = graft.dedup.Dedup.lineDedup(df, "doc_id", "text",
+      graft.dedup.Dedup.Chunker.Paragraph)
       .orderBy($"doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
     assert(got.toSeq == Seq(
@@ -822,13 +824,15 @@ class DedupAnnSpec extends SparkSpec {
       (4L, "para a\nsecond line\n\npara c"),   // para 0 dups doc3's
       (5L, "header\rbody three")               // bare-CR line 0 dups doc1's
     ).toDF("doc_id", "text")
-    val lines = graft.dedup.Dedup.lineDedupNewline(df, "doc_id", "text")
+    val lines = graft.dedup.Dedup.lineDedup(df, "doc_id", "text",
+      graft.dedup.Dedup.Chunker.Newline)
       .orderBy($"doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getString(3)))
     assert(lines(0) == (1L, 2L, "header\nbody one"))
     assert(lines(1) == (2L, 1L, "body two")) // "header" deduped cross-ending
     assert(lines(4) == (5L, 1L, "body three")) // bare CR splits + dedups too
-    val paras = graft.dedup.Dedup.paragraphDedup(df, "doc_id", "text")
+    val paras = graft.dedup.Dedup.lineDedup(df, "doc_id", "text",
+      graft.dedup.Dedup.Chunker.Paragraph)
       .orderBy($"doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getString(3)))
     assert(paras(2) == (3L, 2L, "para a\nsecond line\n\npara b"))

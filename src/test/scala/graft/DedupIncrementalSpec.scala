@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dedup.{Dedup, IncrementalDedup}
-import graft.lake.Lake
+import org.apache.spark.sql.types._
+import graft.lake.{Lake, TableDef}
 
 /** Incremental dedup ≡ whole-corpus dedup restricted to the new batch —
   * the property that makes the O(batch)-per-day path trustworthy. */
@@ -114,14 +115,15 @@ class DedupIncrementalSpec extends SparkSpec {
     val TH = 0.3
     val dir = java.nio.file.Files.createTempDirectory("graft-incr-dedup").toString
     val lake = new Lake(spark, dir)
-    val incr = new IncrementalDedup(lake, threshold = TH)
+    val exact = new IncrementalDedup.Exact(lake)
+    val incr = new IncrementalDedup.Minhash(lake, threshold = TH)
     val exactGot = (1 to 3).flatMap { n =>
-      incr.processExactBatch(batch(n), "doc_id", "text", version = n.toLong)
+      exact.process(batch(n), "doc_id", "text", version = n.toLong)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
     }.toSet
     assert(exactGot == Set((5L, 1L), (7L, 3L), (9L, 1L)))
     val mhGot = (1 to 3).map { n =>
-      pairsSet(incr.processMinhashBatch(batch(n), "doc_id", "text",
+      pairsSet(incr.process(batch(n), "doc_id", "text",
         version = n.toLong))
     }
     val full = pairsSet(Dedup.minhashNearDuplicates(corpus, "doc_id", "text",
@@ -137,12 +139,12 @@ class DedupIncrementalSpec extends SparkSpec {
     assert(mhGot.reduce(_ ++ _) == full) // every pair lands exactly once overall
     // corrective re-run of the latest batch: stored state for its ids is
     // superseded, results identical to the first run, stores not duplicated
-    val rerun = pairsSet(incr.processMinhashBatch(batch(3), "doc_id", "text",
+    val rerun = pairsSet(incr.process(batch(3), "doc_id", "text",
       version = 99L))
     assert(rerun == mhGot(2))
     val sigCount = lake.table(incr.sigTable).count()
     assert(sigCount == 12L, s"sig store should hold one row per doc, got $sigCount")
-    val exactRerun = incr.processExactBatch(batch(3), "doc_id", "text", 99L)
+    val exactRerun = exact.process(batch(3), "doc_id", "text", 99L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exactRerun == Set((9L, 1L))) // same dups as the first run
   }
@@ -150,15 +152,15 @@ class DedupIncrementalSpec extends SparkSpec {
   test("line batches: seen-ever drops, batch-ordered == whole-corpus, idempotent state") {
     val dir = java.nio.file.Files.createTempDirectory("linc").toString
     val lake = new Lake(spark, dir)
-    val incr = new IncrementalDedup(lake, prefix = "li")
+    val incr = new IncrementalDedup.Lines(lake, prefix = "li")
     // 3-token chunker: doc lines are 3-token runs (the x50 staging)
     val b1 = Seq(1L -> "a b c d e f", 2L -> "a b c x y z").toDF("doc_id", "text")
     val b2 = Seq(3L -> "d e f q r s", 4L -> "x y z").toDF("doc_id", "text")
     def rows(df: DataFrame) = df.orderBy($"doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
-    val r1 = rows(incr.processLineBatch(b1, "doc_id", "text", version = 1L))
+    val r1 = rows(incr.process(b1, "doc_id", "text", version = 1L))
     assert(r1 == Seq((1L, 2L, 2L, "a b c d e f"), (2L, 2L, 1L, "x y z")))
-    val r2 = rows(incr.processLineBatch(b2, "doc_id", "text", version = 2L))
+    val r2 = rows(incr.process(b2, "doc_id", "text", version = 2L))
     // "d e f" first at (1,1), "x y z" first at (2,1) -> dropped here
     assert(r2 == Seq((3L, 2L, 1L, "q r s"), (4L, 1L, 0L, "")))
     // batch-ordered incremental == whole-corpus lineDedup on the union
@@ -171,14 +173,14 @@ class DedupIncrementalSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1), r.getInt(2)))
     assert(stored.length == 4 && stored.map(_._1).distinct.length == 4)
     // total ingested occurrences per line are summable (the
-    // deleteLinesClosed evidence): 6 lines occurred across both batches
+    // Lines.deleteClosed evidence): 6 lines occurred across both batches
     assert(lake.table(incr.lineTable).agg(sum($"n_members")).head
       .getLong(0) == 7L) // b1: abc×2, def, xyz; b2: def, qrs, xyz
     // crash-and-rerun: reprocessing batch 2 adds NO keeper rows (its
     // lines are all seen; the rerun's count deltas over-count, which
     // the closure audit treats as refuse-don't-guess), and reports
     // everything as dup — the documented seen-content semantics
-    val r2again = rows(incr.processLineBatch(b2, "doc_id", "text", 3L))
+    val r2again = rows(incr.process(b2, "doc_id", "text", 3L))
     assert(lake.table(incr.lineTable)
       .filter($"keep_doc".isNotNull).count() == 4L)
     assert(r2again.forall(_._3 == 0L))
@@ -187,15 +189,17 @@ class DedupIncrementalSpec extends SparkSpec {
   test("lake-backed paragraph batches == whole-corpus paragraphDedup") {
     val dir = java.nio.file.Files.createTempDirectory("pginc").toString
     val lake = new Lake(spark, dir)
-    val incr = new IncrementalDedup(lake, prefix = "pg") // dedicated prefix
+    val incr = new IncrementalDedup.Lines(lake, prefix = "pg",
+      chunker = Dedup.Chunker.Paragraph)
     val b1 = Seq(1L -> "shared para\n\nuniq one",
       2L -> "uniq two\n\nshared para").toDF("doc_id", "text")
     val b2 = Seq(3L -> "shared para\n\nuniq three").toDF("doc_id", "text")
     def rows(df: DataFrame) = df.orderBy($"doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
-    val r1 = rows(incr.processParagraphBatch(b1, "doc_id", "text", 1L))
-    val r2 = rows(incr.processParagraphBatch(b2, "doc_id", "text", 2L))
-    val full = rows(Dedup.paragraphDedup(b1.unionByName(b2), "doc_id", "text"))
+    val r1 = rows(incr.process(b1, "doc_id", "text", 1L))
+    val r2 = rows(incr.process(b2, "doc_id", "text", 2L))
+    val full = rows(Dedup.lineDedup(b1.unionByName(b2), "doc_id", "text",
+      Dedup.Chunker.Paragraph))
     assert((r1 ++ r2).sortBy(_._1) == full.sortBy(_._1))
     assert(r2 == Seq((3L, 2L, 1L, "uniq three"))) // store-seen para drops
     // store: one KEEPER row per distinct paragraph ever seen
@@ -204,7 +208,7 @@ class DedupIncrementalSpec extends SparkSpec {
   }
 
   test("newline/paragraph incremental: batch-ordered == whole-corpus") {
-    // the round-10 lineIncrementalBy generalization: the production
+    // the round-10 chunker generalization: the production
     // chunkers' incremental twins must equal their batch operators on
     // id-ordered batches (the lineIncremental contract, per chunker)
     val b1 = Seq(1L -> "head\nshared line\nuniq one",
@@ -218,34 +222,36 @@ class DedupIncrementalSpec extends SparkSpec {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("line_h",
           org.apache.spark.sql.types.StringType))))
-    val (n1, nf1) = Dedup.lineIncrementalNewline(b1, "doc_id", "text", empty)
-    val (n2, _) = Dedup.lineIncrementalNewline(b2, "doc_id", "text",
-      nf1.select($"line_h"))
-    val fullN = rows(Dedup.lineDedupNewline(
-      b1.unionByName(b2), "doc_id", "text"))
+    val nl = Dedup.Chunker.Newline
+    val (n1, nf1) = Dedup.lineIncremental(b1, "doc_id", "text", empty, nl)
+    val (n2, _) = Dedup.lineIncremental(b2, "doc_id", "text",
+      nf1.select($"line_h"), nl)
+    val fullN = rows(Dedup.lineDedup(
+      b1.unionByName(b2), "doc_id", "text", nl))
     assert((rows(n1) ++ rows(n2)).sortBy(_._1) == fullN.sortBy(_._1))
     // "shared line" and "head" dedup across batches through the store
     assert(rows(n2).head._3 == 1L, "store-seen lines must drop in batch 2")
-    val (p1, pf1) = Dedup.paragraphIncremental(b1, "doc_id", "text", empty)
-    val (p2, _) = Dedup.paragraphIncremental(b2, "doc_id", "text",
-      pf1.select($"line_h"))
-    val fullP = rows(Dedup.paragraphDedup(
-      b1.unionByName(b2), "doc_id", "text"))
+    val pg = Dedup.Chunker.Paragraph
+    val (p1, pf1) = Dedup.lineIncremental(b1, "doc_id", "text", empty, pg)
+    val (p2, _) = Dedup.lineIncremental(b2, "doc_id", "text",
+      pf1.select($"line_h"), pg)
+    val fullP = rows(Dedup.lineDedup(
+      b1.unionByName(b2), "doc_id", "text", pg))
     assert((rows(p1) ++ rows(p2)).sortBy(_._1) == fullP.sortBy(_._1))
   }
 
   test("span batches: seen-ever removes all occurrences, batch-ordered == whole-corpus") {
     val dir = java.nio.file.Files.createTempDirectory("spinc").toString
     val lake = new Lake(spark, dir)
-    val incr = new IncrementalDedup(lake, prefix = "sp")
+    val incr = new IncrementalDedup.Span(lake, prefix = "sp", n = 3)
     val b1 = Seq(1L -> "a b c d e", 2L -> "x a b c y").toDF("doc_id", "text")
     val b2 = Seq(3L -> "q a b c r", 4L -> "m n o p v").toDF("doc_id", "text")
     def rows(df: DataFrame) = df.orderBy($"doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
-    val r1 = rows(incr.processSpanBatch(b1, "doc_id", "text", version = 1L, n = 3))
+    val r1 = rows(incr.process(b1, "doc_id", "text", version = 1L))
     // "a b c" keeper at (1,1); doc 2's occurrence (positions 2-4) removed
     assert(r1 == Seq((1L, 5L, 5L, "a b c d e"), (2L, 5L, 2L, "x y")))
-    val r2 = rows(incr.processSpanBatch(b2, "doc_id", "text", version = 2L, n = 3))
+    val r2 = rows(incr.process(b2, "doc_id", "text", version = 2L))
     // "a b c" is store-seen -> removed from doc 3; doc 4 untouched
     assert(r2 == Seq((3L, 5L, 2L, "q r"), (4L, 5L, 5L, "m n o p v")))
     // batch-ordered incremental == whole-corpus operator on the union
@@ -255,7 +261,7 @@ class DedupIncrementalSpec extends SparkSpec {
     // store: one row per distinct gram ever seen (5 from b1, 5 from b2)
     assert(lake.table(incr.spanTable).count() == 10L)
     // crash-and-rerun: store unchanged, result lossy (all covered again)
-    val r2again = rows(incr.processSpanBatch(b2, "doc_id", "text", 3L, n = 3))
+    val r2again = rows(incr.process(b2, "doc_id", "text", 3L))
     assert(lake.table(incr.spanTable).count() == 10L)
     assert(r2again.map(_._3) == Seq(0L, 0L))
   }
@@ -264,22 +270,65 @@ class DedupIncrementalSpec extends SparkSpec {
     val TH = 0.3
     val dir = java.nio.file.Files.createTempDirectory("graft-incr-dedup2").toString
     val lake = new Lake(spark, dir)
-    val incr = new IncrementalDedup(lake, threshold = TH)
-    incr.processMinhashBatch(batch(1), "doc_id", "text", 1L)
-    incr.processMinhashBatch(batch(2), "doc_id", "text", 2L)
+    val incr = new IncrementalDedup.Minhash(lake, threshold = TH)
+    incr.process(batch(1), "doc_id", "text", 1L)
+    incr.process(batch(2), "doc_id", "text", 2L)
     // doc 5 is corrected to entirely different content (disjoint token
     // vocabulary — the doc() generator's sequences are cyclic shifts of
     // each other, so another doc() call would still be a near-dup): its
     // old shingles (≡ doc 1's) must vanish from the store.
     val corrected = Seq(5L -> (1 to 12).map(i => s"z$i").mkString(" "))
       .toDF("doc_id", "text")
-    incr.processMinhashBatch(corrected, "doc_id", "text", 3L)
-    val p3 = pairsSet(incr.processMinhashBatch(batch(3), "doc_id", "text", 4L))
+    incr.process(corrected, "doc_id", "text", 3L)
+    val p3 = pairsSet(incr.process(batch(3), "doc_id", "text", 4L))
     assert(p3.exists(p => p._1 == 1L && p._2 == 9L)) // 9 still matches 1
     assert(!p3.exists(p => p._1 == 5L || p._2 == 5L)) // 5 no longer similar
     // and the store holds only doc 5's NEW shingles
     val sh5 = lake.table(incr.shingleTable).filter($"id" === 5L).count()
     val freshSh5 = Dedup.shingleHashes(corrected, "doc_id", "text", 3).count()
     assert(sh5 == freshSh5)
+  }
+
+  test("on-disk layout is pinned per store: table names, schemas, " +
+      "partition and primary keys") {
+    // literals, not the code's own definitions: a lake written before the
+    // store fold must keep opening, so no table may drift
+    val lake = new Lake(spark,
+      java.nio.file.Files.createTempDirectory("incrLayout").toString)
+    def cols(fs: (String, DataType)*) =
+      StructType(fs.map { case (n, t) => StructField(n, t) })
+    val hashes = TableDef("dedup_content_hashes", cols(
+      "content_hash" -> StringType, "keep_id" -> LongType,
+      "n_members" -> LongType))
+    val lines = TableDef("dedup_line_hashes", cols("line_h" -> StringType,
+      "keep_doc" -> LongType, "keep_line" -> IntegerType,
+      "n_members" -> LongType))
+    val grams = TableDef("dedup_span_grams", cols("h" -> LongType),
+      primaryKeys = Seq("h"))
+    val sigs = TableDef("dedup_minhash_sigs", cols(Seq("id" -> LongType) ++
+      (0 until 16).map(i => s"m$i" -> LongType) :+ ("n_sh" -> LongType): _*))
+    val shingles = TableDef("dedup_shingles",
+      cols("id" -> LongType, "h" -> LongType))
+    val tombExact = TableDef("dedup_exact_tombstones",
+      cols("keep_id" -> LongType), primaryKeys = Seq("keep_id"))
+    val tombLine = TableDef("dedup_line_tombstones",
+      cols("keep_doc" -> LongType), primaryKeys = Seq("keep_doc"))
+    val tombMh = TableDef("dedup_mh_tombstones", cols("id" -> LongType),
+      primaryKeys = Seq("id"))
+    val exact = new IncrementalDedup.Exact(lake)
+    val line = new IncrementalDedup.Lines(lake)
+    val span = new IncrementalDedup.Span(lake)
+    val mh = new IncrementalDedup.Minhash(lake)
+    assert(exact.tables == Seq(hashes, tombExact))
+    assert(line.tables == Seq(lines, tombLine))
+    assert(span.tables == Seq(grams))
+    assert(mh.tables == Seq(sigs, shingles, tombMh))
+    // x88's shape: Exact and Minhash under one prefix own disjoint tables
+    assert(exact.tables.map(_.name).intersect(mh.tables.map(_.name)).isEmpty)
+    // an explicit prefix renames every table and nothing else
+    val named = new IncrementalDedup.Lines(lake, prefix = "lc",
+      chunker = Dedup.Chunker.Paragraph)
+    assert(named.tables == Seq(lines.copy(name = "lc_line_hashes"),
+      tombLine.copy(name = "lc_line_tombstones")))
   }
 }

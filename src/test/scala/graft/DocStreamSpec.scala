@@ -379,7 +379,8 @@ class DocStreamSpec extends SparkSpec {
     val stream = spark.readStream.schema(StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType))))
       .parquet(docDir)
-    val q = DocStream.streamingLineDedupNewline(stream).writeStream
+    val q = DocStream.streamingLineDedup(stream, Dedup.Chunker.Newline)
+      .writeStream
       .outputMode("append")
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         b.collect().foreach(r => collected.add(
@@ -396,8 +397,8 @@ class DocStreamSpec extends SparkSpec {
         (d, sorted.size.toLong, sorted.count(_._4).toLong,
           sorted.filter(_._4).map(_._3).mkString("\n"))
     }.toSet
-    val expect = Dedup.lineDedupNewline(docs.toDF("doc_id", "text"),
-        "doc_id", "text")
+    val expect = Dedup.lineDedup(docs.toDF("doc_id", "text"),
+        "doc_id", "text", Dedup.Chunker.Newline)
       .collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
     assert(gotByDoc == expect)
@@ -417,7 +418,8 @@ class DocStreamSpec extends SparkSpec {
     val stream = spark.readStream.schema(StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType))))
       .parquet(docDir)
-    val q = DocStream.streamingParagraphDedup(stream).writeStream
+    val q = DocStream.streamingLineDedup(stream, Dedup.Chunker.Paragraph)
+      .writeStream
       .outputMode("append")
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         b.collect().foreach(r => collected.add(
@@ -434,8 +436,8 @@ class DocStreamSpec extends SparkSpec {
         (d, sorted.size.toLong, sorted.count(_._4).toLong,
           sorted.filter(_._4).map(_._3).mkString("\n\n"))
     }.toSet
-    val expect = Dedup.paragraphDedup(docs.toDF("doc_id", "text"),
-        "doc_id", "text")
+    val expect = Dedup.lineDedup(docs.toDF("doc_id", "text"),
+        "doc_id", "text", Dedup.Chunker.Paragraph)
       .collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
     assert(gotByDoc == expect)

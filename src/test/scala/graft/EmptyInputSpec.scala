@@ -121,8 +121,10 @@ class EmptyInputSpec extends SparkSpec {
       d, "doc_id", "text", Seq("a")).count() == 0)
     assert(graft.functions.TextFunctions.bigramLogScore(
       d, "doc_id", "text", minCount = 5L).count() == 0)
-    assert(graft.dedup.Dedup.lineDedupNewline(d, "doc_id", "text").count() == 0)
-    assert(graft.dedup.Dedup.paragraphDedup(d, "doc_id", "text").count() == 0)
+    assert(graft.dedup.Dedup.lineDedup(d, "doc_id", "text",
+      graft.dedup.Dedup.Chunker.Newline).count() == 0)
+    assert(graft.dedup.Dedup.lineDedup(d, "doc_id", "text",
+      graft.dedup.Dedup.Chunker.Paragraph).count() == 0)
     // a corpus whose every doc is token-less: bm25's avgdl stat has no
     // rows to average — must yield an empty result, not a null-division
     // row
@@ -163,9 +165,9 @@ class EmptyInputSpec extends SparkSpec {
     // incremental span batch over an empty batch: empty result, empty
     // store append, no throw
     val dir = java.nio.file.Files.createTempDirectory("spemempty").toString
-    val incr = new graft.dedup.IncrementalDedup(
-      new graft.lake.Lake(spark, dir), prefix = "se")
-    assert(incr.processSpanBatch(d, "doc_id", "text", 1L, n = 3).count() == 0)
+    val incr = new graft.dedup.IncrementalDedup.Span(
+      new graft.lake.Lake(spark, dir), prefix = "se", n = 3)
+    assert(incr.process(d, "doc_id", "text", 1L).count() == 0)
     assert(spark.read.parquet(s"$dir/se_span_grams").count() == 0)
   }
 

@@ -19,7 +19,7 @@ import graft.functions.TextFunctions
   * AQE can skew-split the join-back but not a window). The keeper side
   * deliberately RE-EVALUATES its subtree column-pruned rather than
   * materializing it (localCheckpoint and exchange-reuse sharing both
-  * measured worse — see the lineDedupBy/spanNonKeepers scaladoc), so
+  * measured worse — see the lineDedup/spanNonKeepers comments), so
   * the pinned counts below include exactly two evaluations. A refactor
   * that reintroduces a keeper window (hot-key hazard) or adds a third
   * evaluation keeps every value oracle green while breaking the scale
@@ -66,7 +66,7 @@ class PlanShapeSpec extends SparkSpec {
     // exactly TWO chunker explodes: the text-carrying stream and the
     // keeper aggregate's column-pruned evaluation (hashes only — the
     // deliberate recompute-over-materialize trade documented on
-    // lineDedupBy). 3+ means an extra evaluation crept in.
+    // lineDedup). 3+ means an extra evaluation crept in.
     assert(g == 2, s"expected 2 generates (text + pruned keeper " +
       s"evaluations), got $g")
   }
