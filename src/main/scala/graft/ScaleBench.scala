@@ -2462,7 +2462,7 @@ object ScaleBench {
       idxJ.build(allJ.filter($"vec_id" < nJr.toLong),
         "vec_id", "embedding", 1L)
       val tI0 = System.nanoTime()
-      val (_, ingest) = graft.JobProfile.profile(spark) {
+      val (_, ingest) = graft.obs.Trace.record(spark) {
         idxJ.append(allJ.filter($"vec_id" < nJr.toLong),
           "vec_id", "embedding", 2L)
       }
@@ -2473,15 +2473,14 @@ object ScaleBench {
         val lo = nJr.toLong + j.toLong * bJ
         val hi = lo + bJ
         val tB0 = System.nanoTime()
-        val (_, st) = graft.JobProfile.profile(spark,
-          verbose = sys.env.contains("GRAFT_PROFILE_VERBOSE")) {
+        val (_, st) = graft.obs.Trace.record(spark) {
           idxJ.append(allJ.filter($"vec_id" >= lo && $"vec_id" < hi),
             "vec_id", "embedding", 3L + j)
         }
         println(f"[scale] sem-append receipt: batch $j ($bJ vecs vs " +
           f"$nJr store) $st wall=${(System.nanoTime() - tB0) / 1e9}%.1f s")
-        require(st.jobs <= 26,
-          s"serving-path append regressed to ${st.jobs} driver jobs " +
+        require(st.total.jobs <= 26,
+          s"serving-path append regressed to ${st.total.jobs} driver jobs " +
             "(bound 26; the round-14 driver pair generation measures " +
             "20: bounded probes + label view + two lake writes + AQE " +
             "stages of the store-side joins — pair generation AND " +
@@ -2671,7 +2670,7 @@ object ScaleBench {
       val incrM = new IncrementalDedup.Minhash(
         new graft.lake.Lake(spark, tmpM), prefix = "mhserve")
       val tM0 = System.nanoTime()
-      val (_, ingestM) = graft.JobProfile.profile(spark) {
+      val (_, ingestM) = graft.obs.Trace.record(spark) {
         incrM.process(
           mdocs(spark.range(nMr.toLong).select($"id", $"id".as("src"))),
           "doc_id", "text", version = 1L)
@@ -2684,8 +2683,7 @@ object ScaleBench {
         val batchM = mdocs(spark.range(lo, lo + bM)
           .select(($"id" + nMr.toLong * 2).as("id"), $"id".as("src")))
         val tB0 = System.nanoTime()
-        val (pairsM, stM) = graft.JobProfile.profile(spark,
-          verbose = sys.env.contains("GRAFT_PROFILE_VERBOSE")) {
+        val (pairsM, stM) = graft.obs.Trace.record(spark) {
           incrM.process(batchM, "doc_id", "text", 2L + j)
         }
         val gotM = pairsM.collect()
@@ -2696,8 +2694,8 @@ object ScaleBench {
             s"got ${gotM.length}")
         println(f"[scale] mh-serve receipt: batch $j ($bM twins vs " +
           f"$nMr store) $stM wall=${(System.nanoTime() - tB0) / 1e9}%.1f s")
-        require(stM.jobs <= 26,
-          s"minhash serving batch regressed to ${stM.jobs} driver jobs " +
+        require(stM.total.jobs <= 26,
+          s"minhash serving batch regressed to ${stM.total.jobs} driver jobs " +
             "(bound 26; the driver-local path measures 21 — banding, " +
             "cap, candidates and verify contribute ZERO jobs)")
       }
@@ -2733,7 +2731,7 @@ object ScaleBench {
           concat(lit("t"), pmod(xxhash64($"src", lit(p)), lit(1000000L)))): _*)
           .as("text"))
       // --- exact family ---
-      val (_, ingE) = graft.JobProfile.profile(spark) {
+      val (_, ingE) = graft.obs.Trace.record(spark) {
         exactL.process(
           ldocs(spark.range(nLx.toLong).select($"id", $"id".as("src"))),
           "doc_id", "text", 1L)
@@ -2748,14 +2746,14 @@ object ScaleBench {
           // hashes) to double and break twin equality
           when($"id" % 2 === 0, ($"id" / 2).cast("long"))
             .otherwise($"id" + 3L * nLx).as("src")))
-        val (dupsE, stE) = graft.JobProfile.profile(spark) {
+        val (dupsE, stE) = graft.obs.Trace.record(spark) {
           exactL.process(batchE, "doc_id", "text", 2L + j)
         }
         require(dupsE.count() == bL / 2,
           s"exact batch $j: expected ${bL / 2} twin dups")
         println(s"[scale] lex-serve receipt: exact batch $j $stE")
-        require(stE.jobs <= 12,
-          s"exact serving batch regressed to ${stE.jobs} driver jobs")
+        require(stE.total.jobs <= 12,
+          s"exact serving batch regressed to ${stE.total.jobs} driver jobs")
       }
       // --- newline-line family --- (one shared line planted per doc)
       def ndocs(ids: org.apache.spark.sql.DataFrame) = ids.select(
@@ -2765,7 +2763,7 @@ object ScaleBench {
           concat_ws(" ", (0 until 10).map(p =>
             concat(lit("u"), pmod(xxhash64($"src", lit(p + 50)), lit(1000000L)))): _*))
           .as("text"))
-      val (_, ingN) = graft.JobProfile.profile(spark) {
+      val (_, ingN) = graft.obs.Trace.record(spark) {
         linesL.process(
           ndocs(spark.range(nLx.toLong).select($"id", $"id".as("src"))),
           "doc_id", "text", 1L)
@@ -2775,7 +2773,7 @@ object ScaleBench {
         val lo = j.toLong * bL
         val batchN = ndocs(spark.range(lo, lo + bL).select(
           ($"id" + 2L * nLx).as("id"), ($"id" + 3L * nLx).as("src")))
-        val (resN, stN) = graft.JobProfile.profile(spark) {
+        val (resN, stN) = graft.obs.Trace.record(spark) {
           linesL.process(batchN, "doc_id", "text", 2L + j)
         }
         // every batch doc keeps its unique line, loses the boilerplate
@@ -2783,12 +2781,12 @@ object ScaleBench {
         require(accN.getLong(0) == 2L * bL && accN.getLong(1) == bL,
           s"newline batch $j accounting ${accN} != (${2 * bL}, $bL)")
         println(s"[scale] lex-serve receipt: newline batch $j $stN")
-        require(stN.jobs <= 12,
-          s"newline serving batch regressed to ${stN.jobs} driver jobs")
+        require(stN.total.jobs <= 12,
+          s"newline serving batch regressed to ${stN.total.jobs} driver jobs")
       }
       // --- span family --- (shifted corpus-wide 12-token boilerplate)
       val spanStore = spanCorpus(nLx.toLong)
-      val (_, ingS) = graft.JobProfile.profile(spark) {
+      val (_, ingS) = graft.obs.Trace.record(spark) {
         spanL.process(spanStore, "doc_id", "text", 1L)
       }
       println(s"[scale] lex-serve receipt: span ingest $nLx docs $ingS")
@@ -2797,7 +2795,7 @@ object ScaleBench {
         // boiler grams are seen: every batch doc loses exactly the
         // merged 12-token boiler span (n = 10 grams)
         val batchS = spanCorpus(bL.toLong, start = 2L * nLx + j.toLong * bL)
-        val (resS, stS) = graft.JobProfile.profile(spark) {
+        val (resS, stS) = graft.obs.Trace.record(spark) {
           spanL.process(batchS, "doc_id", "text", 2L + j)
         }
         val accS = resS.agg(sum($"n_tokens"), sum($"n_kept")).head()
@@ -2813,8 +2811,8 @@ object ScaleBench {
         // run C: 48-62 cpu-s vs ~505-892 in r16) and the decade run is
         // GC-warning-free. The bound still catches an O(store) job
         // regression.
-        require(stS.jobs <= 20,
-          s"span serving batch regressed to ${stS.jobs} driver jobs")
+        require(stS.total.jobs <= 20,
+          s"span serving batch regressed to ${stS.total.jobs} driver jobs")
       }
       val pL = new org.apache.hadoop.fs.Path(tmpL)
       pL.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2859,7 +2857,7 @@ object ScaleBench {
       val idxA = new IvfIndex(lakeA, CellCodec.Pq(m = 8, ksub = 16),
         nLists = 4096)
       time(s"ann-serve build ($nAnr vecs, 4096 cells)", nAnr.toLong) {
-        val (_, st) = graft.JobProfile.profile(spark) {
+        val (_, st) = graft.obs.Trace.record(spark) {
           idxA.build(corpusA(0L, nAnr.toLong), "vec_id", "embedding", 1L)
         }
         println(s"[scale] ann-serve receipt: build $st")
@@ -2868,14 +2866,14 @@ object ScaleBench {
       (0 until 6).foreach { j =>
         val lo = nAnr.toLong + j * 1000L
         val tB = System.nanoTime()
-        val (_, st) = graft.JobProfile.profile(spark) {
+        val (_, st) = graft.obs.Trace.record(spark) {
           idxA.append(corpusA(lo, lo + 1000L), "vec_id", "embedding",
             2L + j)
         }
         println(f"[scale] ann-serve receipt: append $j (1000 vecs) $st " +
           f"wall=${(System.nanoTime() - tB) / 1e9}%.1f s")
-        require(st.jobs <= 26,
-          s"IVF-PQ serving append regressed to ${st.jobs} driver jobs " +
+        require(st.total.jobs <= 26,
+          s"IVF-PQ serving append regressed to ${st.total.jobs} driver jobs " +
             "(bound 26; measured 20)")
       }
       // recall arm: 48-query panel vs in-run brute truth. The noise-.05
@@ -2950,12 +2948,12 @@ object ScaleBench {
       val vLo = nAnr.toLong - 1000L
       val victimsA = spark.range(vLo, nAnr.toLong)
         .select($"id".as("vec_id"))
-      val (_, stD) = graft.JobProfile.profile(spark) {
+      val (_, stD) = graft.obs.Trace.record(spark) {
         idxA.delete(victimsA, "vec_id", 10L)
       }
       println(s"[scale] ann-serve receipt: delete 1000 $stD")
-      require(stD.jobs <= 6,
-        s"O(victims) delete regressed to ${stD.jobs} driver jobs")
+      require(stD.total.jobs <= 6,
+        s"O(victims) delete regressed to ${stD.total.jobs} driver jobs")
       val preD = idxA.search(panelA, "vec_id", "embedding", k = 5,
           nProbe = 8, rerank = 100)
         .orderBy($"query_id", $"rank").collect()
@@ -2963,7 +2961,7 @@ object ScaleBench {
           r.getLong(2) >= vLo && r.getLong(2) < nAnr.toLong),
         "tombstoned victim served in post-delete search")
       val tC = System.nanoTime()
-      val (_, stC) = graft.JobProfile.profile(spark) { idxA.compact(11L) }
+      val (_, stC) = graft.obs.Trace.record(spark) { idxA.compact(11L) }
       println(f"[scale] ann-serve receipt: compact $stC " +
         f"wall=${(System.nanoTime() - tC) / 1e9}%.1f s")
       val postD = idxA.search(panelA, "vec_id", "embedding", k = 5,
@@ -3156,7 +3154,7 @@ object ScaleBench {
       val incrMd = new IncrementalDedup.Minhash(
         new graft.lake.Lake(spark, tmpMd), prefix = "mhdecade")
       val tMd0 = System.nanoTime()
-      val (_, ingestMd) = graft.JobProfile.profile(spark) {
+      val (_, ingestMd) = graft.obs.Trace.record(spark) {
         incrMd.process(
           mdsDocs(spark.range(nMds.toLong).select($"id", $"id".as("src"))),
           "doc_id", "text", version = 1L)
@@ -3169,8 +3167,7 @@ object ScaleBench {
         val batchMd = mdsDocs(spark.range(lo, lo + bMd)
           .select(($"id" + nMds.toLong * 2).as("id"), $"id".as("src")))
         val tB0 = System.nanoTime()
-        val (pairsMd, stMd) = graft.JobProfile.profile(spark,
-          verbose = sys.env.contains("GRAFT_PROFILE_VERBOSE")) {
+        val (pairsMd, stMd) = graft.obs.Trace.record(spark) {
           incrMd.process(batchMd, "doc_id", "text", 2L + j)
         }
         val gotMd = pairsMd.collect()
@@ -3181,8 +3178,8 @@ object ScaleBench {
             s"jaccard 1.0, got ${gotMd.length}")
         println(f"[scale] mh-decade receipt: batch $j ($bMd twins vs " +
           f"$nMds store) $stMd wall=${(System.nanoTime() - tB0) / 1e9}%.1f s")
-        require(stMd.jobs <= 26,
-          s"decade serving batch regressed to ${stMd.jobs} driver jobs " +
+        require(stMd.total.jobs <= 26,
+          s"decade serving batch regressed to ${stMd.total.jobs} driver jobs " +
             "(bound 26 — job count must stay flat from the arg-45 60k " +
             "store to this one)")
       }
@@ -3194,7 +3191,7 @@ object ScaleBench {
             concat(lit("s"), pmod(xxhash64($"id", i, lit(42)),
               lit(10000000000L)))), " ").as("text"))
       val tOv0 = System.nanoTime()
-      val (pairsOv, stOv) = graft.JobProfile.profile(spark) {
+      val (pairsOv, stOv) = graft.obs.Trace.record(spark) {
         incrMd.process(overMd, "doc_id", "text", 10L)
       }
       val nOv = pairsOv.count()
@@ -3203,8 +3200,8 @@ object ScaleBench {
         f"wall=${(System.nanoTime() - tOv0) / 1e9}%.1f s pairs=$nOv")
       require(nOv == 0L,
         s"over-bound batch emitted $nOv pairs against a disjoint store")
-      require(stOv.jobs > 26,
-        s"over-bound batch ran only ${stOv.jobs} jobs — the dispatcher " +
+      require(stOv.total.jobs > 26,
+        s"over-bound batch ran only ${stOv.total.jobs} jobs — the dispatcher " +
           "did not take the distributed fallback (silent truncation?)")
       val pMd = new org.apache.hadoop.fs.Path(tmpMd)
       pMd.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -3262,7 +3259,7 @@ object ScaleBench {
         .select(($"id" + idLo).as("id"), $"id".as("src")))
         .localCheckpoint()
       // --- exact family ---
-      val (_, ingTd) = graft.JobProfile.profile(spark) {
+      val (_, ingTd) = graft.obs.Trace.record(spark) {
         exactT.process(
           tdocs(spark.range(nTdd.toLong).select($"id", $"id".as("src"))),
           "doc_id", "text", 1L)
@@ -3270,32 +3267,32 @@ object ScaleBench {
       println(s"[scale] td-decade receipt: exact ingest $nTdd docs $ingTd")
       require(exactT.process(vBatch(20000000L), "doc_id", "text",
           2L).count() == 0L, "victim batch collided with the corpus")
-      val (_, delE) = graft.JobProfile.profile(spark) {
+      val (_, delE) = graft.obs.Trace.record(spark) {
         exactT.deleteClosed(vBatch(20000000L), "doc_id", "text", 3L)
       }
       println(s"[scale] td-decade receipt: exact takedown ($bT victims " +
         s"vs $nTdd store) $delE")
-      require(delE.jobs <= 35,
-        s"exact takedown ran ${delE.jobs} driver jobs (bound 35 — the " +
+      require(delE.total.jobs <= 35,
+        s"exact takedown ran ${delE.total.jobs} driver jobs (bound 35 — the " +
           "closure audit must stay a bounded number of store scans; " +
           "measured 30 at a 50k store / 29 at 10M, the r16 addendum-10 " +
           "receipt rows)")
-      val (freshE, stFE) = graft.JobProfile.profile(spark) {
+      val (freshE, stFE) = graft.obs.Trace.record(spark) {
         exactT.process(vBatch(21000000L), "doc_id", "text", 4L)
       }
       require(freshE.count() == 0L,
         "taken-down exact content still deduped through tombstones")
       println(s"[scale] td-decade receipt: exact fresh-after-delete $stFE")
-      require(stFE.jobs <= 16,
-        s"post-delete serving batch regressed to ${stFE.jobs} jobs " +
+      require(stFE.total.jobs <= 16,
+        s"post-delete serving batch regressed to ${stFE.total.jobs} jobs " +
           "(bound 16: the pending-tombstone anti-join adds two store-" +
           "read jobs over the arg-46 clean-store bound of 12)")
-      val (_, cmpE) = graft.JobProfile.profile(spark) {
+      val (_, cmpE) = graft.obs.Trace.record(spark) {
         exactT.compact(5L)
       }
       println(s"[scale] td-decade receipt: compact (store-scale rewrite " +
         s"by design) $cmpE")
-      val (dupE, stDE) = graft.JobProfile.profile(spark) {
+      val (dupE, stDE) = graft.obs.Trace.record(spark) {
         exactT.process(vBatch(22000000L), "doc_id", "text", 6L)
       }
       require(dupE.count() == bT.toLong,
@@ -3303,35 +3300,35 @@ object ScaleBench {
       println(s"[scale] td-decade receipt: exact dedup-after-re-ingest " +
         s"$stDE")
       // --- newline-line family (same prefix, its own line tables) ---
-      val (_, ingTn) = graft.JobProfile.profile(spark) {
+      val (_, ingTn) = graft.obs.Trace.record(spark) {
         linesT.process(
           tdocs(spark.range(nTdd.toLong).select($"id", $"id".as("src"))),
           "doc_id", "text", 11L)
       }
       println(s"[scale] td-decade receipt: newline ingest $nTdd docs $ingTn")
       linesT.process(vBatch(30000000L), "doc_id", "text", 12L)
-      val (_, delN) = graft.JobProfile.profile(spark) {
+      val (_, delN) = graft.obs.Trace.record(spark) {
         linesT.deleteClosed(vBatch(30000000L), "doc_id", "text", 13L)
       }
       println(s"[scale] td-decade receipt: line takedown ($bT victims " +
         s"vs $nTdd store) $delN")
-      require(delN.jobs <= 35,
-        s"line takedown ran ${delN.jobs} driver jobs (bound 35)")
-      val (freshN, stFN) = graft.JobProfile.profile(spark) {
+      require(delN.total.jobs <= 35,
+        s"line takedown ran ${delN.total.jobs} driver jobs (bound 35)")
+      val (freshN, stFN) = graft.obs.Trace.record(spark) {
         linesT.process(vBatch(31000000L), "doc_id", "text", 14L)
       }
       val accFN = freshN.agg(sum($"n_lines"), sum($"n_kept")).head()
       require(accFN.getLong(0) == 2L * bT && accFN.getLong(1) == 2L * bT,
         s"taken-down lines not fresh: $accFN != (${2 * bT}, ${2 * bT})")
       println(s"[scale] td-decade receipt: line fresh-after-delete $stFN")
-      require(stFN.jobs <= 16,
-        s"post-delete line batch regressed to ${stFN.jobs} jobs " +
+      require(stFN.total.jobs <= 16,
+        s"post-delete line batch regressed to ${stFN.total.jobs} jobs " +
           "(pending-tombstone anti-join bound, see the exact arm)")
-      val (_, cmpN) = graft.JobProfile.profile(spark) {
+      val (_, cmpN) = graft.obs.Trace.record(spark) {
         linesT.compact(15L)
       }
       println(s"[scale] td-decade receipt: line compact $cmpN")
-      val (dupN, stDN) = graft.JobProfile.profile(spark) {
+      val (dupN, stDN) = graft.obs.Trace.record(spark) {
         linesT.process(vBatch(32000000L), "doc_id", "text", 16L)
       }
       val accDN = dupN.agg(sum($"n_lines"), sum($"n_kept")).head()
@@ -3368,7 +3365,7 @@ object ScaleBench {
       val tmpM = Files.createTempDirectory("graft-mhtddecade").toString
       val incrM = new IncrementalDedup.Minhash(
         new graft.lake.Lake(spark, tmpM), prefix = "mhtd")
-      val (_, ingM) = graft.JobProfile.profile(spark) {
+      val (_, ingM) = graft.obs.Trace.record(spark) {
         incrM.process(
           mtdocs(spark.range(nMt.toLong).select($"id", $"id".as("src"))),
           "doc_id", "text", 1L)
@@ -3376,7 +3373,7 @@ object ScaleBench {
       println(s"[scale] mh-td receipt: ingest $nMt docs $ingM")
       def twinBatch(idLo: Long) = mtdocs(spark.range(bM.toLong)
         .select(($"id" + idLo).as("id"), $"id".as("src")))
-      val (pre, stPre) = graft.JobProfile.profile(spark) {
+      val (pre, stPre) = graft.obs.Trace.record(spark) {
         incrM.process(twinBatch(20000000L), "doc_id", "text", 2L)
       }
       val preRows = pre.collect()
@@ -3389,26 +3386,26 @@ object ScaleBench {
       val victimIds = spark.range(bM.toLong).select($"id".as("doc_id"))
         .unionByName(spark.range(bM.toLong)
           .select(($"id" + 20000000L).as("doc_id")))
-      val (_, delM) = graft.JobProfile.profile(spark) {
+      val (_, delM) = graft.obs.Trace.record(spark) {
         incrM.delete(victimIds, "doc_id", 3L)
       }
       println(s"[scale] mh-td receipt: Minhash.delete (${2 * bM} victims " +
         s"vs $nMt store) $delM")
-      require(delM.jobs <= 10,
-        s"minhash takedown ran ${delM.jobs} driver jobs (bound 10 — an " +
+      require(delM.total.jobs <= 10,
+        s"minhash takedown ran ${delM.total.jobs} driver jobs (bound 10 — an " +
           "id-keyed tombstone append must not scan the store)")
-      val (post, stPost) = graft.JobProfile.profile(spark) {
+      val (post, stPost) = graft.obs.Trace.record(spark) {
         incrM.process(twinBatch(21000000L), "doc_id", "text", 4L)
       }
       require(post.count() == 0L,
         "post-delete twin batch paired against retracted content")
       println(s"[scale] mh-td receipt: post-delete twin batch $stPost")
-      require(stPost.jobs <= 30,
-        s"post-delete serving batch regressed to ${stPost.jobs} jobs " +
+      require(stPost.total.jobs <= 30,
+        s"post-delete serving batch regressed to ${stPost.total.jobs} jobs " +
           "(bound 30: the clean-store serving BOUND of 26 — arg-45/49, " +
           "measured 21-23 flat to 10M — plus the pending-tombstone " +
           "anti-join's extra store scans)")
-      val (_, cmpM) = graft.JobProfile.profile(spark) {
+      val (_, cmpM) = graft.obs.Trace.record(spark) {
         incrM.compact(5L)
       }
       println(s"[scale] mh-td receipt: compact (store-scale by design) " +
@@ -3418,7 +3415,7 @@ object ScaleBench {
       // copies — the dedup-after-re-ingest witness (compact preserved
       // live state AND drained the tombstones without resurrecting the
       // retracted originals)
-      val (post2, stPost2) = graft.JobProfile.profile(spark) {
+      val (post2, stPost2) = graft.obs.Trace.record(spark) {
         incrM.process(twinBatch(22000000L), "doc_id", "text", 6L)
       }
       val p2 = post2.collect()

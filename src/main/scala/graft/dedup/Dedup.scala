@@ -73,10 +73,9 @@ object Dedup {
     // retired derivation shuffled every TOKEN row into a per-doc window
     // (exchange + sort + two leads + row_number + a partition max) and
     // then paid a second corpus-wide exchange for the (id, h) distinct;
-    // at 2M docs / 116M shingle rows that was 2,280 cpu-s — ~90% of the
-    // whole minhash pipeline — and the reason the 2M-doc c8/c32 receipt
-    // measured FLAT (the two corpus-wide exchanges bound the pipeline,
-    // guide §2.4). This form has NO shuffle at all: per-doc distinct ≡
+    // those two corpus-wide exchanges bounded the whole minhash pipeline
+    // (BASELINE.md "Production tracer" keeps the 2M-doc receipt). This
+    // form has NO shuffle at all: per-doc distinct ≡
     // the old global (id, h) distinct because h was already deduped
     // within each id, and hash parity is exact by construction
     // (DedupAnnSpec pins kernel ≡ the retired window form on empty/

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.lake.{Lake, TableDef}
+import graft.obs.Trace
 import graft.similarity.TombstoneStore
 
 /** Lake-backed incremental dedup stores: dedupe each arriving batch
@@ -44,6 +45,9 @@ import graft.similarity.TombstoneStore
   * tombstones version-aware, `compact` applies them physically and
   * drains. IncrementalTakedownSpec pins never-ingested equivalence; the
   * x88 driver gate replays the lifecycle on the real corpus.
+  *
+  * Each public lifecycle operation is a [[Trace.span]] named
+  * `dedup.<store>.<op>` and tagged with the prefix.
   */
 sealed abstract class IncrementalDedup(lake: Lake, prefix: String) {
 
@@ -64,6 +68,9 @@ sealed abstract class IncrementalDedup(lake: Lake, prefix: String) {
     * exceed every pending tombstone, so a crash between a rewrite and
     * its drain leaves only no-op tombstones. */
   def compact(version: Long = System.currentTimeMillis()): Unit
+
+  protected def traced[T](op: String)(body: => T): T =
+    Trace.span(lake.session, s"dedup.$op", prefix)(body)
 
   protected def state(t: TableDef): DataFrame = {
     lake.create(t, replace = false)
@@ -260,7 +267,7 @@ object IncrementalDedup {
       * appeared under a smaller id; appends this batch's hash groups to
       * the store (min-merge makes the append idempotent). */
     def process(newDocs: DataFrame, idCol: String, textCol: String,
-        version: Long): DataFrame = {
+        version: Long): DataFrame = traced("exact.process") {
       val docs = newDocs.withColumn(idCol, col(idCol).cast(LongType))
       val store = stateLive(hashTable, tombTable)
         .groupBy(col("content_hash")).agg(min(col("keep_id")).as("keep_id"))
@@ -286,21 +293,23 @@ object IncrementalDedup {
       * monotonic contract) — a crashed batch RE-RUN after a takedown of
       * its own rows would re-seed them, like any out-of-order replay. */
     def delete(ids: DataFrame, idCol: String, version: Long): Unit =
-      TombstoneStore.delete(lake, tombTable, ids, idCol, version)
+      traced("exact.delete")(
+        TombstoneStore.delete(lake, tombTable, ids, idCol, version))
 
     /** [[delete]] with the group-closure audit (the base class's
       * `auditedDelete`): the caller passes the
       * victims' DOCUMENTS (ids + every text version each id was ingested
       * under), keyed by content hash. */
     def deleteClosed(docs: DataFrame, idCol: String, textCol: String,
-        version: Long): Unit =
+        version: Long): Unit = traced("exact.deleteClosed") {
       auditedDelete(docs.select(col(idCol).cast(LongType).as("__vid"),
           md5(col(textCol)).as("content_hash")),
         "content_hash", hashTable, tombTable, Seq("keep_id"), "content",
         retainKeeper = true, version)
+    }
 
-    def compact(version: Long): Unit =
-      applyTombstones(tombTable, Seq(hashTable), version)
+    def compact(version: Long): Unit = traced("exact.compact")(
+      applyTombstones(tombTable, Seq(hashTable), version))
   }
 
   /** Line-level store over one [[Dedup.Chunker]]
@@ -344,7 +353,7 @@ object IncrementalDedup {
       * coordinates for first-seen lines plus count deltas for re-seen
       * ones. */
     def process(newDocs: DataFrame, idCol: String, textCol: String,
-        version: Long): DataFrame = {
+        version: Long): DataFrame = traced("lines.process") {
       val (result, counted) = Dedup.lineIncrementalCounted(
         newDocs, idCol, textCol,
         stateLive(lineTable, tombTable).filter(col("keep_doc").isNotNull),
@@ -363,33 +372,37 @@ object IncrementalDedup {
       * may refuse (loudly — the audit errs toward refusal); pick one
       * takedown discipline per store. */
     def delete(ids: DataFrame, idCol: String, version: Long): Unit =
-      TombstoneStore.delete(lake, tombTable, ids, idCol, version)
+      traced("lines.delete")(
+        TombstoneStore.delete(lake, tombTable, ids, idCol, version))
 
     /** [[delete]] with the group-closure audit (the base class's
       * `auditedDelete`) per line: the victims' DOCUMENTS are cut by this
       * store's chunker, and per line whose keeper is a victim the stored
       * occurrence count must equal the victims'. */
     def deleteClosed(docs: DataFrame, idCol: String, textCol: String,
-        version: Long): Unit =
+        version: Long): Unit = traced("lines.deleteClosed") {
       auditedDelete(docs
           .select(col(idCol).cast(LongType).as("__vid"),
             explode(chunker.lines(col(textCol))).as("__ln"))
           .select(col("__vid"), md5(col("__ln.line")).as("line_h")),
         "line_h", lineTable, tombTable, keepers, "line",
         retainKeeper = false, version)
+    }
 
     /** Count-preserving merge (NOT a PK compaction — that would drop
       * count-delta rows): one row per line with its keeper coordinates
       * and summed occurrences; zero-sum keeperless husks (fully
       * taken-down lines) drop physically here. */
-    def compact(version: Long): Unit = if (lake.exists(lineTable.name)) {
-      val applying = TombstoneStore.beginApply(lake, tombTable, version)
-      val mergedLines = mergeKeys(stateLive(lineTable, tombTable), "line_h",
-          keepers)
-        .select(col("line_h"), col("__k.keep_doc").as("keep_doc"),
-          col("__k.keep_line").as("keep_line"), col("n_members"))
-      lake.replace(lineTable, mergedLines, version)
-      if (applying) lake.drop(tombTable.name)
+    def compact(version: Long): Unit = traced("lines.compact") {
+      if (lake.exists(lineTable.name)) {
+        val applying = TombstoneStore.beginApply(lake, tombTable, version)
+        val mergedLines = mergeKeys(stateLive(lineTable, tombTable),
+            "line_h", keepers)
+          .select(col("line_h"), col("__k.keep_doc").as("keep_doc"),
+            col("__k.keep_line").as("keep_line"), col("n_members"))
+        lake.replace(lineTable, mergedLines, version)
+        if (applying) lake.drop(tombTable.name)
+      }
     }
   }
 
@@ -418,7 +431,7 @@ object IncrementalDedup {
     def tables: Seq[TableDef] = Seq(spanTable)
 
     def process(newDocs: DataFrame, idCol: String, textCol: String,
-        version: Long): DataFrame = {
+        version: Long): DataFrame = traced("span.process") {
       val (result, newGrams) = Dedup.spanIncremental(
         newDocs, idCol, textCol, state(spanTable), n)
       val out = materialize(result)
@@ -436,13 +449,13 @@ object IncrementalDedup {
       * reconstruct documents).
       * @return the replay's per-doc result over the retained corpus */
     def rebuild(retained: DataFrame, idCol: String, textCol: String,
-        version: Long): DataFrame = {
+        version: Long): DataFrame = traced("span.rebuild") {
       lake.drop(spanTable.name)
       process(retained, idCol, textCol, version)
     }
 
-    def compact(version: Long): Unit =
-      if (lake.exists(spanTable.name)) lake.optimize(spanTable)
+    def compact(version: Long): Unit = traced("span.compact")(
+      if (lake.exists(spanTable.name)) lake.optimize(spanTable))
   }
 
   /** MinHash+LSH near-dup store. `<prefix>_minhash_sigs` (id,
@@ -482,7 +495,7 @@ object IncrementalDedup {
       * signatures/shingles to the store (append for fresh ids; rewrite
       * when the batch re-ingests known ids). */
     def process(newDocs: DataFrame, idCol: String, textCol: String,
-        version: Long): DataFrame = {
+        version: Long): DataFrame = traced("minhash.process") {
       // cast ONCE at the state boundary: the tables declare Long ids, and
       // a caller's int batch must not write mixed-type parquet into them
       val docs = newDocs.withColumn(idCol, col(idCol).cast(LongType))
@@ -524,9 +537,10 @@ object IncrementalDedup {
       * its dead rows stay anti-joined out, so no supersede rewrite
       * triggers. */
     def delete(ids: DataFrame, idCol: String, version: Long): Unit =
-      TombstoneStore.delete(lake, tombTable, ids, idCol, version)
+      traced("minhash.delete")(
+        TombstoneStore.delete(lake, tombTable, ids, idCol, version))
 
-    def compact(version: Long): Unit =
-      applyTombstones(tombTable, Seq(sigTable, shingleTable), version)
+    def compact(version: Long): Unit = traced("minhash.compact")(
+      applyTombstones(tombTable, Seq(sigTable, shingleTable), version))
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.VectorFunctions.asDouble
 import graft.lake.{Lake, TableDef}
+import graft.obs.Trace
 import graft.similarity.{Quantizer, QuantizerStore}
 
 /** Persisted/incremental SemDeDup: train the coarse quantizer ONCE,
@@ -52,6 +53,9 @@ import graft.similarity.{Quantizer, QuantizerStore}
   * batches shift the distribution the frozen centroids were trained
   * on; two vectors above threshold can drift into DIFFERENT cells and
   * never pair. Recovery is a [[build]] re-run + full re-append.
+  *
+  * Each public lifecycle operation is a [[Trace.span]] named
+  * `semdedup.<op>`, tagged with the prefix.
   */
 class SemDeDupIndex(lake: Lake, prefix: String = "semdedup",
     nClusters: Int = 64, threshold: Double = 0.95,
@@ -118,6 +122,9 @@ class SemDeDupIndex(lake: Lake, prefix: String = "semdedup",
     rows.toSeq.toDF("doc_id", "cluster_id", "cell")
   }
 
+  private def traced[T](op: String)(body: => T): T =
+    Trace.span(lake.session, s"semdedup.$op", prefix)(body)
+
   private def vecs(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val t = df.schema(idCol).dataType
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
@@ -133,7 +140,7 @@ class SemDeDupIndex(lake: Lake, prefix: String = "semdedup",
     * append it in any batch decomposition" is ONE code path with ONE
     * semantics. */
   def build(trainCorpus: DataFrame, idCol: String, vecCol: String,
-      version: Long): Unit = {
+      version: Long): Unit = traced("build") {
     invalidateQuantizer()
     val spark = trainCorpus.sparkSession
     val c = vecs(trainCorpus, idCol, vecCol)
@@ -183,7 +190,7 @@ class SemDeDupIndex(lake: Lake, prefix: String = "semdedup",
     *         assignment — what [[assignments]] will serve from the
     *         label table */
   def append(newDocs: DataFrame, idCol: String, vecCol: String,
-      version: Long): DataFrame = {
+      version: Long): DataFrame = traced("append") {
     val batch = quantizer().assignScored(
       vecs(newDocs, idCol, vecCol)
         .select(col("doc_id").as("cand_id"), col("cv")))
@@ -427,37 +434,38 @@ class SemDeDupIndex(lake: Lake, prefix: String = "semdedup",
     * [[delete]]'s re-labeling composes with it for free: the surviving
     * members' max is the re-elected canonical. Clusters are identical
     * under both policies. */
-  def assignments(keepPolicy: String = "min-id"): DataFrame = {
-    require(Seq("min-id", "farthest").contains(keepPolicy),
-      s"$prefix: keepPolicy must be 'min-id' or 'farthest', got '$keepPolicy'")
-    val live = lake.latest(labelTable).filter(col("cluster_id").isNotNull)
-    if (keepPolicy == "min-id")
-      live.select(col("doc_id"), col("cluster_id"),
-        when(col("doc_id") === col("cluster_id"), 1).otherwise(0)
-          .as("is_canonical"))
-    else {
-      // plain column-pruned read, NOT latest(): the PK window would
-      // drag cv through its tie-break. Version-aware tombstone filter
-      // leaves exactly one live row per doc (a revived doc's old row is
-      // tombstone-dead by the version rule; compact removes it).
-      val ts = graft.similarity.TombstoneStore
-      val tombs = ts.pending(lake, tombTable)
-      val raw = lake.table(vectorTable, keepVersion = tombs)
-      val scores = (if (tombs) ts.filterLive(lake, tombTable, raw)
-          .drop(graft.lake.Lake.Version)
-        else raw)
-        .select(col("doc_id"), col("score"))
-      val labeled = live.join(scores, Seq("doc_id"))
-      val keep = labeled.groupBy(col("cluster_id"))
-        .agg(max(struct(col("score"), (-col("doc_id")).as("negid")))
-          .as("__keep"))
-        .select(col("cluster_id"), (-col("__keep.negid")).as("__keep_id"))
-      labeled.join(keep, Seq("cluster_id"))
-        .select(col("doc_id"), col("cluster_id"),
-          when(col("doc_id") === col("__keep_id"), 1).otherwise(0)
+  def assignments(keepPolicy: String = "min-id"): DataFrame =
+    traced("assignments") {
+      require(Seq("min-id", "farthest").contains(keepPolicy),
+        s"$prefix: keepPolicy must be 'min-id' or 'farthest', got '$keepPolicy'")
+      val live = lake.latest(labelTable).filter(col("cluster_id").isNotNull)
+      if (keepPolicy == "min-id")
+        live.select(col("doc_id"), col("cluster_id"),
+          when(col("doc_id") === col("cluster_id"), 1).otherwise(0)
             .as("is_canonical"))
+      else {
+        // plain column-pruned read, NOT latest(): the PK window would
+        // drag cv through its tie-break. Version-aware tombstone filter
+        // leaves exactly one live row per doc (a revived doc's old row is
+        // tombstone-dead by the version rule; compact removes it).
+        val ts = graft.similarity.TombstoneStore
+        val tombs = ts.pending(lake, tombTable)
+        val raw = lake.table(vectorTable, keepVersion = tombs)
+        val scores = (if (tombs) ts.filterLive(lake, tombTable, raw)
+            .drop(graft.lake.Lake.Version)
+          else raw)
+          .select(col("doc_id"), col("score"))
+        val labeled = live.join(scores, Seq("doc_id"))
+        val keep = labeled.groupBy(col("cluster_id"))
+          .agg(max(struct(col("score"), (-col("doc_id")).as("negid")))
+            .as("__keep"))
+          .select(col("cluster_id"), (-col("__keep.negid")).as("__keep_id"))
+        labeled.join(keep, Seq("cluster_id"))
+          .select(col("doc_id"), col("cluster_id"),
+            when(col("doc_id") === col("__keep_id"), 1).otherwise(0)
+              .as("is_canonical"))
+      }
     }
-  }
 
   /** Drift recovery in one call: snapshot the stored corpus, retrain
     * the quantizer on it ([[build]] — tables reset), and replay the
@@ -471,7 +479,7 @@ class SemDeDupIndex(lake: Lake, prefix: String = "semdedup",
     * materialized (localCheckpoint) because build swaps the table it
     * reads. Inherently O(corpus), by design.
     * @return the re-converged full assignment ([[append]]'s contract) */
-  def rebuild(version: Long): DataFrame = {
+  def rebuild(version: Long): DataFrame = traced("rebuild") {
     val ts = graft.similarity.TombstoneStore
     val raw = lake.table(vectorTable, keepVersion = true)
     val snap = (if (ts.pending(lake, tombTable))
@@ -509,65 +517,67 @@ class SemDeDupIndex(lake: Lake, prefix: String = "semdedup",
     * ignored — takedown is idempotent. A later [[append]] of a deleted
     * id at a higher version revives it through the normal ingest path.
     * @return the updated served assignment ([[append]]'s contract) */
-  def delete(ids: DataFrame, idCol: String, version: Long): DataFrame = {
-    val ts = graft.similarity.TombstoneStore
-    val dt = ids.schema(idCol).dataType
-    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
-      s"$prefix: id column '$idCol' must be integral, got $dt")
-    val reqIds = ids.select(col(idCol).cast(LongType).as("doc_id")).distinct()
-    val live = lake.latest(labelTable)
-      .filter(col("cluster_id").isNotNull).localCheckpoint()
-    val victims = live.join(reqIds, Seq("doc_id"), "left_semi")
-      .localCheckpoint() // batch-bounded
-    if (victims.isEmpty) return assignments()
-    ts.delete(lake, tombTable, victims.select(col("doc_id")), "doc_id",
-      version)
-    val touched = victims.select(col("cluster_id")).distinct()
-    val members = live.join(touched, Seq("cluster_id"), "left_semi")
-    val survivors = members.join(reqIds, Seq("doc_id"), "left_anti")
-    // cell-pruned re-read of ONLY the affected components' cells (the
-    // label rows carry them — no store-wide scan to locate victims).
-    // Version-aware tombstone filter, NOT a raw read: a doc deleted and
-    // later revived (re-appended at a higher version) before compact()
-    // still has its stale vector row on disk, and both rows pass the
-    // survivors semi-join — the dead embedding would enter pairing and
-    // could phantom-merge survivor clusters. filterLive leaves exactly
-    // one live row per doc (a stale row exists only while its
-    // higher-version tombstone pends; compact physically removes both —
-    // the rebuild()/assignments('farthest') invariant). Tombstones are
-    // pending by construction here: this call just wrote the victims'.
-    val cells = members.select(col("cell")).distinct()
-      .collect().map(_.getInt(0))
-    val sv = ts.filterLive(lake, tombTable,
-        lake.tableSlice(vectorTable,
-            cells.toIndexedSeq.map(c => s"cell=$c"), keepVersion = true)
-          .filter(col("cell").isin(cells.toIndexedSeq: _*)))
-      .drop(graft.lake.Lake.Version)
-      .join(survivors.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .select(col("doc_id").as("cand_id"), col("cv"), col("cell"))
-    val pairs = Dedup.semanticPairsAssigned(
-      sv.withColumn("__new", lit(true)), "__new", threshold, maxCell)
-    // driver fast path below the propagation bound — the [[append]]
-    // rationale verbatim (survivors are O(affected components); pairs
-    // here are COMPLETE within components, so no star edges needed)
-    val lim = Dedup.DriverPropagationMax
-    val survRows = DriverBatch.takeBounded(
-      survivors.select(col("doc_id"), col("cell")), lim)
-    val pairRows = survRows.flatMap(_ => DriverBatch.takeBounded(
-      pairs.select(col("id_a"), col("id_b")), 2 * lim))
-    val relabeled = if (pairRows.isDefined)
-      localDelta(ids.sparkSession,
-        survRows.get.iterator.map(r => (r.getLong(0), r.getInt(1))),
-        pairRows.get.iterator.map(r => (r.getLong(0), r.getLong(1))))
-    else Dedup.clusterAssignments(
-        survivors.select(col("doc_id")), "doc_id", pairs, maxRounds)
-      .join(survivors.select(col("doc_id"), col("cell")), Seq("doc_id"))
-      .select(col("doc_id"), col("cluster_id"), col("cell"))
-    val markers = victims.select(col("doc_id"),
-      lit(null).cast(LongType).as("cluster_id"), col("cell"))
-    lake.append(labelTable, relabeled.unionByName(markers), version)
-    assignments()
-  }
+  def delete(ids: DataFrame, idCol: String, version: Long): DataFrame =
+    traced("delete") {
+      val ts = graft.similarity.TombstoneStore
+      val dt = ids.schema(idCol).dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
+        s"$prefix: id column '$idCol' must be integral, got $dt")
+      val reqIds = ids.select(col(idCol).cast(LongType).as("doc_id")).distinct()
+      val live = lake.latest(labelTable)
+        .filter(col("cluster_id").isNotNull).localCheckpoint()
+      val victims = live.join(reqIds, Seq("doc_id"), "left_semi")
+        .localCheckpoint() // batch-bounded
+      if (victims.isEmpty) assignments() else {
+        ts.delete(lake, tombTable, victims.select(col("doc_id")), "doc_id",
+          version)
+        val touched = victims.select(col("cluster_id")).distinct()
+        val members = live.join(touched, Seq("cluster_id"), "left_semi")
+        val survivors = members.join(reqIds, Seq("doc_id"), "left_anti")
+        // cell-pruned re-read of ONLY the affected components' cells (the
+        // label rows carry them — no store-wide scan to locate victims).
+        // Version-aware tombstone filter, NOT a raw read: a doc deleted and
+        // later revived (re-appended at a higher version) before compact()
+        // still has its stale vector row on disk, and both rows pass the
+        // survivors semi-join — the dead embedding would enter pairing and
+        // could phantom-merge survivor clusters. filterLive leaves exactly
+        // one live row per doc (a stale row exists only while its
+        // higher-version tombstone pends; compact physically removes both —
+        // the rebuild()/assignments('farthest') invariant). Tombstones are
+        // pending by construction here: this call just wrote the victims'.
+        val cells = members.select(col("cell")).distinct()
+          .collect().map(_.getInt(0))
+        val sv = ts.filterLive(lake, tombTable,
+            lake.tableSlice(vectorTable,
+                cells.toIndexedSeq.map(c => s"cell=$c"), keepVersion = true)
+              .filter(col("cell").isin(cells.toIndexedSeq: _*)))
+          .drop(graft.lake.Lake.Version)
+          .join(survivors.select(col("doc_id")), Seq("doc_id"), "left_semi")
+          .select(col("doc_id").as("cand_id"), col("cv"), col("cell"))
+        val pairs = Dedup.semanticPairsAssigned(
+          sv.withColumn("__new", lit(true)), "__new", threshold, maxCell)
+        // driver fast path below the propagation bound — the [[append]]
+        // rationale verbatim (survivors are O(affected components); pairs
+        // here are COMPLETE within components, so no star edges needed)
+        val lim = Dedup.DriverPropagationMax
+        val survRows = DriverBatch.takeBounded(
+          survivors.select(col("doc_id"), col("cell")), lim)
+        val pairRows = survRows.flatMap(_ => DriverBatch.takeBounded(
+          pairs.select(col("id_a"), col("id_b")), 2 * lim))
+        val relabeled = if (pairRows.isDefined)
+          localDelta(ids.sparkSession,
+            survRows.get.iterator.map(r => (r.getLong(0), r.getInt(1))),
+            pairRows.get.iterator.map(r => (r.getLong(0), r.getLong(1))))
+        else Dedup.clusterAssignments(
+            survivors.select(col("doc_id")), "doc_id", pairs, maxRounds)
+          .join(survivors.select(col("doc_id"), col("cell")), Seq("doc_id"))
+          .select(col("doc_id"), col("cluster_id"), col("cell"))
+        val markers = victims.select(col("doc_id"),
+          lit(null).cast(LongType).as("cluster_id"), col("cell"))
+        lake.append(labelTable, relabeled.unionByName(markers), version)
+        assignments()
+      }
+    }
 
   /** Maintenance-cadence compaction: PK-compacts the vector table and
     * applies/drains pending [[delete]] tombstones
@@ -578,16 +588,17 @@ class SemDeDupIndex(lake: Lake, prefix: String = "semdedup",
     * victim's newest row), so marker removal needs the delete-bearing
     * [[Lake.replace]] rewrite, paid only when markers exist. The served
     * [[assignments]] view is unchanged throughout. */
-  def compact(version: Long = System.currentTimeMillis()): Unit = {
-    graft.similarity.TombstoneStore.applyTo(
-      lake, tombTable, vectorTable, version)
-    lake.optimize(labelTable)
-    val hasMarkers = !lake.table(labelTable)
-      .filter(col("cluster_id").isNull).isEmpty
-    if (hasMarkers)
-      lake.replace(labelTable,
-        lake.table(labelTable).filter(col("cluster_id").isNotNull), version)
-  }
+  def compact(version: Long = System.currentTimeMillis()): Unit =
+    traced("compact") {
+      graft.similarity.TombstoneStore.applyTo(
+        lake, tombTable, vectorTable, version)
+      lake.optimize(labelTable)
+      val hasMarkers = !lake.table(labelTable)
+        .filter(col("cluster_id").isNull).isEmpty
+      if (hasMarkers)
+        lake.replace(labelTable,
+          lake.table(labelTable).filter(col("cluster_id").isNotNull), version)
+    }
 }
 
 object SemDeDupIndex {

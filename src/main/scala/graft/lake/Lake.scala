@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.obs.Trace
 
 /** Table definition mirroring the reference lakehouse catalog entries
   * (bear-lake `create(name, schema, partition_keys, primary_keys, mode)`,
@@ -30,10 +31,19 @@ final case class TableDef(
   *  - optimize can be scoped to the partitions an append touched
   *    (`optimize(t, touched)`) so daily upserts rewrite one year, not the
   *    whole history — the difference between O(day) and O(100 TB) writes.
+  *
+  * Every public table operation is a [[Trace.span]] named `lake.<op>` and
+  * tagged with its table (`create(t, replace = true)` is a `lake.replace`).
   */
 class Lake(spark: SparkSession, root: String) {
 
   private val VERSION = Lake.Version
+
+  /** The session this lake reads and writes through. */
+  private[graft] def session: SparkSession = spark
+
+  private def span[T](op: String, table: String)(body: => T): T =
+    Trace.span(spark, s"lake.$op", table)(body)
 
   def path(name: String): String = s"$root/$name"
 
@@ -44,17 +54,19 @@ class Lake(spark: SparkSession, root: String) {
   /** Create (replace drops existing data; skip is create-if-absent).
     * An empty seed write materializes the schema so `table()` always
     * resolves. Returns true if the table was (re)created. */
-  def create(t: TableDef, replace: Boolean = false): Boolean = {
-    if (exists(t.name)) {
-      if (!replace) return false
-      fs.delete(new Path(path(t.name)), true)
+  def create(t: TableDef, replace: Boolean = false): Boolean =
+    span(if (replace) "replace" else "create", t.name) {
+      val present = exists(t.name)
+      if (present && replace) fs.delete(new Path(path(t.name)), true)
+      if (present && !replace) false
+      else {
+        val empty = spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          t.schema.add(VERSION, org.apache.spark.sql.types.LongType))
+        writer(empty, t).mode(SaveMode.Overwrite).parquet(path(t.name))
+        true
+      }
     }
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      t.schema.add(VERSION, org.apache.spark.sql.types.LongType))
-    writer(empty, t).mode(SaveMode.Overwrite).parquet(path(t.name))
-    true
-  }
 
   /** `clusterWrites` shuffles rows onto their partition key before the
     * partitioned write. Without it each upstream task opens one file per
@@ -80,15 +92,17 @@ class Lake(spark: SparkSession, root: String) {
     * appended — parquet leaves no data files) resolve to an empty frame
     * with the declared schema. */
   def table(t: TableDef, keepVersion: Boolean = false): DataFrame =
-    try {
-      val df = spark.read.parquet(path(t.name))
-      if (keepVersion) df else df.drop(VERSION)
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          if (keepVersion) t.schema.add(VERSION, org.apache.spark.sql.types.LongType)
-          else t.schema)
+    span("read", t.name) {
+      try {
+        val df = spark.read.parquet(path(t.name))
+        if (keepVersion) df else df.drop(VERSION)
+      } catch {
+        case _: org.apache.spark.sql.AnalysisException =>
+          spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            if (keepVersion) t.schema.add(VERSION, org.apache.spark.sql.types.LongType)
+            else t.schema)
+      }
     }
 
   /** Partition-scoped read — [[optimize]]'s basePath idiom as a SERVING
@@ -100,7 +114,7 @@ class Lake(spark: SparkSession, root: String) {
     * cell may simply hold no vectors); all-missing resolves to an empty
     * frame with the declared schema, like [[table]] on a missing table. */
   def tableSlice(t: TableDef, partitions: Seq[String],
-      keepVersion: Boolean = false): DataFrame = {
+      keepVersion: Boolean = false): DataFrame = span("read", t.name) {
     val existing = partitions.filter(p =>
       fs.exists(new Path(s"${path(t.name)}/$p")))
     if (existing.isEmpty)
@@ -118,8 +132,10 @@ class Lake(spark: SparkSession, root: String) {
   /** Append rows. `version` defaults to current time; pass explicitly for
     * deterministic tests. Later versions win at optimize(). */
   def append(t: TableDef, df: DataFrame, version: Long = System.currentTimeMillis()): Unit =
-    writer(df.withColumn(VERSION, lit(version)), t)
-      .mode(SaveMode.Append).parquet(path(t.name))
+    span("append", t.name) {
+      writer(df.withColumn(VERSION, lit(version)), t)
+        .mode(SaveMode.Append).parquet(path(t.name))
+    }
 
   /** Merge-on-read view: one row per primary key — the newest
     * `__version`, ties broken exactly like [[optimize]] — computed at
@@ -130,21 +146,20 @@ class Lake(spark: SparkSession, root: String) {
     * remains the write-time compaction that bounds this view's input —
     * run it on the maintenance cadence, not per append. Empty/missing
     * tables resolve to an empty frame like [[table]]. */
-  def latest(t: TableDef): DataFrame = {
+  def latest(t: TableDef): DataFrame = span("read", t.name) {
     require(t.primaryKeys.nonEmpty, s"${t.name}: latest() needs primary keys")
-    val src =
-      try spark.read.parquet(path(t.name))
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          return spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], t.schema)
-      }
-    val tieBreak = src.columns
-      .filterNot(c => t.primaryKeys.contains(c) || c == VERSION).sorted
-    val w = Window.partitionBy(t.primaryKeys.map(col): _*)
-      .orderBy(col(VERSION).desc +: tieBreak.map(col(_).desc): _*)
-    src.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn", VERSION)
+    val read =
+      try Some(spark.read.parquet(path(t.name)))
+      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    read.fold(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], t.schema)) { src =>
+      val tieBreak = src.columns
+        .filterNot(c => t.primaryKeys.contains(c) || c == VERSION).sorted
+      val w = Window.partitionBy(t.primaryKeys.map(col): _*)
+        .orderBy(col(VERSION).desc +: tieBreak.map(col(_).desc): _*)
+      src.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn", VERSION)
+    }
   }
 
   /** Upsert-by-compaction (reference `optimize()`,
@@ -152,11 +167,16 @@ class Lake(spark: SparkSession, root: String) {
     * `__version`, ties broken by the remaining columns so the survivor is
     * deterministic. `partitions` scopes the rewrite (e.g. Seq("year=2024"))
     * for incremental daily upserts. */
-  def optimize(t: TableDef, partitions: Seq[String] = Nil): Unit = {
-    require(t.primaryKeys.nonEmpty, s"${t.name}: optimize needs primary keys")
-    // ignore named partitions that don't exist yet (e.g. first day of a year)
-    val existing = partitions.filter(p => fs.exists(new Path(s"${path(t.name)}/$p")))
-    if (partitions.nonEmpty && existing.isEmpty) return
+  def optimize(t: TableDef, partitions: Seq[String] = Nil): Unit =
+    span("optimize", t.name) {
+      require(t.primaryKeys.nonEmpty, s"${t.name}: optimize needs primary keys")
+      // ignore named partitions that don't exist yet (e.g. first day of a year)
+      val existing = partitions.filter(p => fs.exists(new Path(s"${path(t.name)}/$p")))
+      if (partitions.isEmpty || existing.nonEmpty) rewrite(t, partitions, existing)
+    }
+
+  private def rewrite(t: TableDef, partitions: Seq[String],
+      existing: Seq[String]): Unit = {
     val src =
       if (partitions.isEmpty) spark.read.parquet(path(t.name))
       else {
@@ -186,11 +206,12 @@ class Lake(spark: SparkSession, root: String) {
 
   /** Reference upsert idiom: create-if-absent, append, compact
     * (e.g. stock_prices_flow.py:99-121). */
-  def upsert(t: TableDef, df: DataFrame, version: Long = System.currentTimeMillis()): Unit = {
-    create(t, replace = false)
-    append(t, df, version)
-    optimize(t)
-  }
+  def upsert(t: TableDef, df: DataFrame, version: Long = System.currentTimeMillis()): Unit =
+    span("upsert", t.name) {
+      create(t, replace = false)
+      append(t, df, version)
+      optimize(t)
+    }
 
   /** Replace a table's contents wholesale via the same temp-write + swap
     * discipline as [[optimize]] — `df` MAY read from the table being
@@ -198,13 +219,14 @@ class Lake(spark: SparkSession, root: String) {
     * moved aside). For row-level updates prefer [[upsert]]; this is for
     * delete-bearing rewrites (PK compaction can't drop a stale row whose
     * PK vanished from the new data). */
-  def replace(t: TableDef, df: DataFrame, version: Long = System.currentTimeMillis()): Unit = {
-    val tmp = new Path(path(t.name) + "__replace_tmp")
-    fs.delete(tmp, true)
-    writer(df.withColumn(VERSION, lit(version)), t)
-      .mode(SaveMode.Overwrite).parquet(tmp.toString)
-    swapInto(tmp, new Path(path(t.name)))
-  }
+  def replace(t: TableDef, df: DataFrame, version: Long = System.currentTimeMillis()): Unit =
+    span("replace", t.name) {
+      val tmp = new Path(path(t.name) + "__replace_tmp")
+      fs.delete(tmp, true)
+      writer(df.withColumn(VERSION, lit(version)), t)
+        .mode(SaveMode.Overwrite).parquet(tmp.toString)
+      swapInto(tmp, new Path(path(t.name)))
+    }
 
   /** Move `tmp` into place at `dst` without a lose-the-table window: the
     * old data is renamed ASIDE (not deleted) before tmp moves in, so a
@@ -228,7 +250,8 @@ class Lake(spark: SparkSession, root: String) {
   /** Remove a table entirely (directory delete) — for transient side
     * tables whose empty state should restore the no-table fast path
     * (e.g. a drained tombstone store), not for data tables. */
-  def drop(name: String): Unit = fs.delete(new Path(path(name)), true)
+  def drop(name: String): Unit =
+    span("drop", name)(fs.delete(new Path(path(name)), true))
 }
 
 object Lake {

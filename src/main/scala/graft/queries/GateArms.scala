@@ -3,6 +3,8 @@ package graft.queries
 import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService,
   Executors, TimeUnit, TimeoutException}
 import scala.concurrent.duration._
+import org.apache.spark.sql.SparkSession
+import graft.obs.Trace
 
 /** Concurrent gate arms: independent lifecycles (separate temp lakes, or
   * read-only arms over shared persisted relations) run as concurrent
@@ -13,7 +15,11 @@ import scala.concurrent.duration._
   * its name at once — without waiting on arms still running — and a
   * wedged arm fails the gate after [[Timeout]] with the pending arms'
   * names instead of hanging it. Either way `shutdownNow` interrupts
-  * whatever is still running. */
+  * whatever is still running.
+  *
+  * Each arm runs as a [[Trace.span]] under its name: the pool's threads
+  * are created inside [[run]], so they inherit the caller's current span
+  * and each arm's jobs attribute to its own span. */
 private[graft] object GateArms {
 
   /** Generous on purpose: gate arms take seconds at the contract scale
@@ -24,11 +30,14 @@ private[graft] object GateArms {
     * `meanwhile` runs on the calling thread after every arm has started
     * (x39 materializes its shared truth relation there). */
   def run[A](arms: Seq[(String, () => A)], meanwhile: => Unit = ()): Seq[A] = {
+    val spark = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
     val pool = Executors.newFixedThreadPool(arms.length)
     try {
       val done = new ExecutorCompletionService[A](pool)
       val futs = arms.map { case (name, arm) =>
-        name -> done.submit(new Callable[A] { def call(): A = arm() })
+        name -> done.submit(new Callable[A] {
+          def call(): A = spark.fold(arm())(Trace.span(_, name)(arm()))
+        })
       }
       meanwhile
       val deadline = System.nanoTime() + Timeout.toNanos

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.lake.{Lake, TableDef}
+import graft.obs.Trace
 
 /** Incremental DSIR: lake-backed hashed-ngram bucket counts, so a daily
   * ingest updates the importance model with O(batch) work instead of
@@ -32,6 +33,9 @@ import graft.lake.{Lake, TableDef}
   * [[weights]] never touch documents again — they read only the bounded
   * count relations; [[weights]] scores any frame through the shared
   * [[Dsir.weightsAgainstModel]] broadcast join.
+  *
+  * Each public lifecycle operation is a [[Trace.span]] named
+  * `dsir.<op>`, tagged with the prefix.
   */
 class DsirStore(lake: Lake, prefix: String = "dsir", hexChars: Int = 3) {
   // the store materializes and sums 16^hexChars-row count relations per
@@ -46,6 +50,9 @@ class DsirStore(lake: Lake, prefix: String = "dsir", hexChars: Int = 3) {
     StructType(Seq(StructField("bucket", StringType),
       StructField("cnt", LongType))))
 
+  private def traced[T](op: String)(body: => T): T =
+    Trace.span(lake.session, s"dsir.$op", prefix)(body)
+
   private def delta(docs: DataFrame, idCol: String, textCol: String,
       sign: Int): DataFrame =
     Dsir.bucketCounts(docs, textCol, hexChars, "cnt")
@@ -54,14 +61,14 @@ class DsirStore(lake: Lake, prefix: String = "dsir", hexChars: Int = 3) {
   /** Fold a raw-pool batch into the model: O(batch) — one hash
     * aggregate over the batch's features, one ≤ 16^hexChars-row append. */
   def appendRaw(docs: DataFrame, idCol: String, textCol: String,
-      version: Long): Unit = {
+      version: Long): Unit = traced("appendRaw") {
     invalidate()
     lake.append(rawTable, delta(docs, idCol, textCol, 1), version)
   }
 
   /** Fold a target-sample batch in — same shape as [[appendRaw]]. */
   def appendTarget(docs: DataFrame, idCol: String, textCol: String,
-      version: Long): Unit = {
+      version: Long): Unit = traced("appendTarget") {
     invalidate()
     lake.append(targetTable, delta(docs, idCol, textCol, 1), version)
   }
@@ -72,14 +79,14 @@ class DsirStore(lake: Lake, prefix: String = "dsir", hexChars: Int = 3) {
     * precisely why its deletes are O(victims). After this, [[model]]
     * equals a pool that never ingested the victims, byte-for-byte. */
   def deleteRaw(docs: DataFrame, idCol: String, textCol: String,
-      version: Long): Unit = {
+      version: Long): Unit = traced("deleteRaw") {
     invalidate()
     lake.append(rawTable, delta(docs, idCol, textCol, -1), version)
   }
 
   /** Same exact-negation takedown for the target sample. */
   def deleteTarget(docs: DataFrame, idCol: String, textCol: String,
-      version: Long): Unit = {
+      version: Long): Unit = traced("deleteTarget") {
     invalidate()
     lake.append(targetTable, delta(docs, idCol, textCol, -1), version)
   }
@@ -169,14 +176,14 @@ class DsirStore(lake: Lake, prefix: String = "dsir", hexChars: Int = 3) {
     * [[Dsir.importanceWeights]] contract (docs scored against counts
     * that INCLUDE whatever of them was appended). */
   def weights(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    Dsir.weightsAgainstModel(docs, model(docs.sparkSession),
-      idCol, textCol, hexChars)
+    traced("weights")(Dsir.weightsAgainstModel(docs, model(docs.sparkSession),
+      idCol, textCol, hexChars))
 
   /** Collapse the delta relations (one summed row per bucket, dropping
     * zeroed-out buckets) — the maintenance-cadence compaction bounding
     * merge-on-read input by live buckets instead of append count. The
     * served model is unchanged. */
-  def compact(version: Long = System.currentTimeMillis()): Unit = {
+  def compact(version: Long = System.currentTimeMillis()): Unit = traced("compact") {
     invalidate()
     Seq(rawTable, targetTable).foreach { t =>
       if (lake.exists(t.name)) {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.VectorFunctions.asDouble
 import graft.lake.{Lake, TableDef}
+import graft.obs.Trace
 
 /** Persisted IVF index: train the coarse quantizer (and the codec's
   * quantizer — [[CellCodec]]) ONCE, keep the cell-assigned corpus in a
@@ -42,7 +43,9 @@ import graft.lake.{Lake, TableDef}
   * quantizers were trained on — recall decays gradually; [[rebuild]] is
   * the recovery (the x39-style recall gate is the drift detector).
   *
-  * `prefix` defaults to the codec's (ivf / ivfpq / ivfsq).
+  * `prefix` defaults to the codec's (ivf / ivfpq / ivfsq). Each public
+  * lifecycle operation is a [[Trace.span]] named `ivf.<op>`, tagged with
+  * the prefix.
   */
 class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
 
@@ -72,6 +75,9 @@ class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
   /** The codec's trained parameters (codebooks, SQ bounds); None for Flat. */
   val auxTable: Option[TableDef] = codec.auxTable(prefix)
 
+  private def traced[T](op: String)(body: => T): T =
+    Trace.span(lake.session, s"ivf.$op", prefix)(body)
+
   private def vecs(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val t = df.schema(idCol).dataType
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
@@ -93,7 +99,7 @@ class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
     * quantizer in either regime, so every later [[append]]/[[search]]
     * serves it from disk. */
   def build(corpus: DataFrame, idCol: String, vecCol: String,
-      version: Long): Unit = {
+      version: Long): Unit = traced("build") {
     val spark = corpus.sparkSession
     val c = vecs(corpus, idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -125,7 +131,7 @@ class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
     * direct compact agree on the surviving row. A re-ingested id's OLD
     * stored row remains until [[compact]] supersedes it by version. */
   def append(newVecs: DataFrame, idCol: String, vecCol: String,
-      version: Long): Unit = {
+      version: Long): Unit = traced("append") {
     val quant = loadQuantizer()
     val frozen = codec.load(lake, prefix)
     val assigned = frozen.encode(quant.assign(vecs(newVecs, idCol, vecCol)))
@@ -148,7 +154,7 @@ class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
     * superseded re-ingested rows do not re-enter, then materializes the
     * snapshot (localCheckpoint) because [[build]] swaps the very table it
     * reads. Inherently O(corpus) — the cost of a fresh build, by design. */
-  def rebuild(version: Long): Unit = {
+  def rebuild(version: Long): Unit = traced("rebuild") {
     compact()
     val snap = lake.table(vectorTable)
       .select(col("cand_id"), col("cv").as("embedding"))
@@ -164,7 +170,7 @@ class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
     * a HIGHER version revives it (the lake's supersede rule). No stored
     * data is read or rewritten here. */
   def delete(ids: DataFrame, idCol: String, version: Long): Unit =
-    TombstoneStore.delete(lake, tombTable, ids, idCol, version)
+    traced("delete")(TombstoneStore.delete(lake, tombTable, ids, idCol, version))
 
   /** Primary-key compaction of the vector table: one row per cand_id,
     * newest version wins ([[Lake.optimize]]), then pending [[delete]]
@@ -175,7 +181,7 @@ class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
     * maintenance cadence (the reference's daily `optimize()` idiom), not
     * per append. */
   def compact(version: Long = System.currentTimeMillis()): Unit =
-    TombstoneStore.applyTo(lake, tombTable, vectorTable, version)
+    traced("compact")(TombstoneStore.applyTo(lake, tombTable, vectorTable, version))
 
   /** Approximate top-k for a query batch, reading only the probed cells'
     * partitions. With `rerank` > k (compressed codecs only — Flat scores
@@ -183,7 +189,7 @@ class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
     * |Q|·rerank shortlist through broadcast joins against the same pruned
     * partitions ([[Ann.refine]]). */
   def search(queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      nProbe: Int = 2, rerank: Int = 0): DataFrame = {
+      nProbe: Int = 2, rerank: Int = 0): DataFrame = traced("search") {
     requireRerank(rerank)
     val quant = loadQuantizer()
     val score = codec.load(lake, prefix).scorer(queries, idCol, vecCol)
@@ -262,7 +268,7 @@ class IvfIndex(lake: Lake, codec: CellCodec, nLists: Int, prefix: String) {
     * serving stays viable at 2^14+ cells. */
   def searchAdaptive(queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nProbeMin: Int = 2, nProbeMax: Int = 8,
-      rerank: Int = 0): DataFrame = {
+      rerank: Int = 0): DataFrame = traced("searchAdaptive") {
     require(nProbeMin >= 1 && nProbeMin <= nProbeMax,
       s"need 1 <= nProbeMin <= nProbeMax, got ($nProbeMin, $nProbeMax)")
     requireRerank(rerank)
