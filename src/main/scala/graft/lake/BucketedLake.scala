@@ -1,7 +1,6 @@
 package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Bucketed variant of the lakehouse sink (SURVEY.md §2.1 S2-S4 at scale).
@@ -24,7 +23,7 @@ import org.apache.spark.sql.functions._
   */
 class BucketedLake(spark: SparkSession, database: String = "graft") {
 
-  private val VERSION = "__version"
+  private val VERSION = Lake.Version
 
   spark.sql(s"CREATE DATABASE IF NOT EXISTS $database")
 
@@ -55,15 +54,8 @@ class BucketedLake(spark: SparkSession, database: String = "graft") {
     * the same compaction rule as [[Lake.optimize]], but over the bucketed
     * layout the window needs NO exchange: each bucket already holds every
     * row of its keys. */
-  def compacted(t: TableDef): DataFrame = {
-    val src = spark.table(qualified(t.name))
-    val tieBreak = src.columns
-      .filterNot(c => t.primaryKeys.contains(c)).sorted
-    val w = Window.partitionBy(t.primaryKeys.map(col): _*)
-      .orderBy(col(VERSION).desc +: tieBreak.map(col(_).desc): _*)
-    src.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn", VERSION)
-  }
+  def compacted(t: TableDef): DataFrame =
+    Lake.newestPerKey(spark.table(qualified(t.name)), t.primaryKeys).drop(VERSION)
 
   def drop(t: TableDef): Unit =
     spark.sql(s"DROP TABLE IF EXISTS ${qualified(t.name)}")

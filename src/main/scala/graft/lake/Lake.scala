@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 import graft.obs.Trace
 
 /** Table definition mirroring the reference lakehouse catalog entries
@@ -19,18 +19,29 @@ final case class TableDef(
     clusterWrites: Boolean = false)
 
 /** Parquet lakehouse layer (SURVEY.md §2.1 S1-S4): schema-declared tables,
-  * year partitioning, append inserts, and upsert-by-compaction
-  * (`optimize()` = primary-key dedup keeping the newest version).
+  * year partitioning, append inserts, and upsert as ONE merge-write.
   *
   * Scale design:
   *  - data is laid out `root/<table>/<partitionKey>=<value>/...parquet`, so
   *    Catalyst prunes partitions on `WHERE year = ...` for free;
-  *  - every append stamps a monotonically increasing `__version`; optimize
+  *  - every write stamps a `__version`; one rule ([[Lake.newestPerKey]])
   *    keeps, per primary key, the row from the newest version (window
   *    row_number, one hash shuffle on the PK);
-  *  - optimize can be scoped to the partitions an append touched
-  *    (`optimize(t, touched)`) so daily upserts rewrite one year, not the
-  *    whole history — the difference between O(day) and O(100 TB) writes.
+  *  - [[upsert]] runs that rule over existing ∪ incoming in one plan and
+  *    writes the result once (tmp write + swap) — the reference's
+  *    create → insert → `optimize()` (stock_prices_flow.py:99-121) without
+  *    the seed write or the re-read of the rows just appended. Scoped to
+  *    the partitions a daily batch touches (`partitions = Seq("year=…")`),
+  *    it reads and rewrites one year, not the whole history — the
+  *    difference between O(day) and O(100 TB) writes;
+  *  - [[optimize]] is the same rule as a maintenance op over what
+  *    [[append]] left on disk (the stores' delta tables).
+  *
+  * Crash semantics: every rewrite lands in a tmp directory first and is
+  * swapped in by renames that move the old data ASIDE (`<t>__old`) before
+  * the new data moves in. A failure before the swap leaves the old table
+  * unchanged; a crash between the two renames leaves only `<t>__old`,
+  * which every write and [[exists]] restore before they look at `<t>`.
   *
   * Every public table operation is a [[Trace.span]] named `lake.<op>` and
   * tagged with its table (`create(t, replace = true)` is a `lake.replace`).
@@ -45,25 +56,45 @@ class Lake(spark: SparkSession, root: String) {
   private def span[T](op: String, table: String)(body: => T): T =
     Trace.span(spark, s"lake.$op", table)(body)
 
+  /** A write op's span; the table is recovered first (see [[recover]]). */
+  private def write[T](op: String, t: TableDef)(body: => T): T =
+    span(op, t.name) { recover(t.name); body }
+
   def path(name: String): String = s"$root/$name"
 
   private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def exists(name: String): Boolean = fs.exists(new Path(path(name)))
+  def exists(name: String): Boolean = {
+    recover(name)
+    fs.exists(new Path(path(name)))
+  }
+
+  /** Recover on open: a crash between [[swapInto]]'s two renames leaves
+    * only `<name>__old`, the sole surviving copy. Move it back before
+    * anything reads `<name>` as missing (and seeds or swaps over it). */
+  private def recover(name: String): Unit = {
+    val dst = new Path(path(name))
+    val aside = new Path(path(name) + "__old")
+    if (!fs.exists(dst) && fs.exists(aside) && !fs.rename(aside, dst))
+      throw new java.io.IOException(s"recover: failed to restore $aside")
+  }
+
+  /** Declared schema plus the hidden version column. */
+  private def stored(t: TableDef) = t.schema.add(VERSION, LongType)
+
+  private def empty(schema: StructType) =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** Create (replace drops existing data; skip is create-if-absent).
     * An empty seed write materializes the schema so `table()` always
     * resolves. Returns true if the table was (re)created. */
   def create(t: TableDef, replace: Boolean = false): Boolean =
-    span(if (replace) "replace" else "create", t.name) {
+    write(if (replace) "replace" else "create", t) {
       val present = exists(t.name)
       if (present && replace) fs.delete(new Path(path(t.name)), true)
       if (present && !replace) false
       else {
-        val empty = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          t.schema.add(VERSION, org.apache.spark.sql.types.LongType))
-        writer(empty, t).mode(SaveMode.Overwrite).parquet(path(t.name))
+        writer(empty(stored(t)), t).mode(SaveMode.Overwrite).parquet(path(t.name))
         true
       }
     }
@@ -98,10 +129,7 @@ class Lake(spark: SparkSession, root: String) {
         if (keepVersion) df else df.drop(VERSION)
       } catch {
         case _: org.apache.spark.sql.AnalysisException =>
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            if (keepVersion) t.schema.add(VERSION, org.apache.spark.sql.types.LongType)
-            else t.schema)
+          empty(if (keepVersion) stored(t) else t.schema)
       }
     }
 
@@ -115,24 +143,22 @@ class Lake(spark: SparkSession, root: String) {
     * frame with the declared schema, like [[table]] on a missing table. */
   def tableSlice(t: TableDef, partitions: Seq[String],
       keepVersion: Boolean = false): DataFrame = span("read", t.name) {
-    val existing = partitions.filter(p =>
-      fs.exists(new Path(s"${path(t.name)}/$p")))
-    if (existing.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        if (keepVersion) t.schema.add(VERSION, org.apache.spark.sql.types.LongType)
-        else t.schema)
+    val existing = partDirs(t, partitions)
+    if (existing.isEmpty) empty(if (keepVersion) stored(t) else t.schema)
     else {
-      val df = spark.read.option("basePath", path(t.name))
-        .parquet(existing.map(p => s"${path(t.name)}/$p"): _*)
+      val df = spark.read.option("basePath", path(t.name)).parquet(existing: _*)
       if (keepVersion) df else df.drop(VERSION)
     }
   }
 
+  /** The directories of the named partitions of `t` that exist. */
+  private def partDirs(t: TableDef, partitions: Seq[String]): Seq[String] =
+    partitions.map(p => s"${path(t.name)}/$p").filter(d => fs.exists(new Path(d)))
+
   /** Append rows. `version` defaults to current time; pass explicitly for
     * deterministic tests. Later versions win at optimize(). */
   def append(t: TableDef, df: DataFrame, version: Long = System.currentTimeMillis()): Unit =
-    span("append", t.name) {
+    write("append", t) {
       writer(df.withColumn(VERSION, lit(version)), t)
         .mode(SaveMode.Append).parquet(path(t.name))
     }
@@ -151,67 +177,91 @@ class Lake(spark: SparkSession, root: String) {
     val read =
       try Some(spark.read.parquet(path(t.name)))
       catch { case _: org.apache.spark.sql.AnalysisException => None }
-    read.fold(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], t.schema)) { src =>
-      val tieBreak = src.columns
-        .filterNot(c => t.primaryKeys.contains(c) || c == VERSION).sorted
-      val w = Window.partitionBy(t.primaryKeys.map(col): _*)
-        .orderBy(col(VERSION).desc +: tieBreak.map(col(_).desc): _*)
-      src.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn", VERSION)
-    }
+    read.fold(empty(t.schema))(Lake.newestPerKey(_, t.primaryKeys).drop(VERSION))
   }
 
-  /** Upsert-by-compaction (reference `optimize()`,
-    * stock_prices_flow.py:121): keep one row per primary key — the highest
-    * `__version`, ties broken by the remaining columns so the survivor is
-    * deterministic. `partitions` scopes the rewrite (e.g. Seq("year=2024"))
-    * for incremental daily upserts. */
+  /** PK compaction (reference `optimize()`, stock_prices_flow.py:121) as a
+    * maintenance op over what [[append]] left on disk: keep one row per
+    * primary key by [[Lake.newestPerKey]]. `partitions` scopes the rewrite
+    * (e.g. Seq("year=2024")); named partitions that don't exist yet are
+    * ignored. */
   def optimize(t: TableDef, partitions: Seq[String] = Nil): Unit =
-    span("optimize", t.name) {
+    write("optimize", t) {
       require(t.primaryKeys.nonEmpty, s"${t.name}: optimize needs primary keys")
-      // ignore named partitions that don't exist yet (e.g. first day of a year)
-      val existing = partitions.filter(p => fs.exists(new Path(s"${path(t.name)}/$p")))
-      if (partitions.isEmpty || existing.nonEmpty) rewrite(t, partitions, existing)
+      val dirs = if (partitions.isEmpty) Seq(path(t.name)) else partDirs(t, partitions)
+      if (dirs.nonEmpty)
+        compact(t, spark.read.option("basePath", path(t.name)).parquet(dirs: _*), partitions)
     }
 
-  private def rewrite(t: TableDef, partitions: Seq[String],
-      existing: Seq[String]): Unit = {
-    val src =
-      if (partitions.isEmpty) spark.read.parquet(path(t.name))
-      else {
-        // partition-scoped read keeps the partition column via basePath
-        spark.read.option("basePath", path(t.name))
-          .parquet(existing.map(p => s"${path(t.name)}/$p"): _*)
-      }
-    val tieBreak = src.columns.filterNot(c => t.primaryKeys.contains(c)).sorted
-    val w = Window.partitionBy(t.primaryKeys.map(col): _*)
-      .orderBy(col(VERSION).desc +: tieBreak.map(col(_).desc): _*)
-    val deduped = src.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+  /** Upsert as ONE merge-write: [[Lake.newestPerKey]] over the existing
+    * rows ∪ `df` stamped with `version`, written once to a tmp directory
+    * and swapped in ([[optimize]]'s rule and swap, without the seed write,
+    * the append or the re-read). The dedup runs even into an absent table
+    * (a batch can repeat a key); an empty batch into an absent table still
+    * leaves an empty table that `table()` resolves. `df` MAY read the
+    * target table. Existing rows are read against the declared schema and
+    * aligned with `df` by column name.
+    *
+    * `partitions` (e.g. Seq("year=2024"), single partition key) scopes the
+    * merge: only those existing partitions are read, and each partition
+    * the write produced is swapped in — a new one simply moves in. A row
+    * landing in an EXISTING partition outside the scope would drop that
+    * partition's other rows, so that throws before any swap and leaves the
+    * table unchanged. Any failure before the swap leaves the old table and
+    * its rows unchanged; re-running the upsert converges. */
+  def upsert(t: TableDef, df: DataFrame, version: Long = System.currentTimeMillis(),
+      partitions: Seq[String] = Nil): Unit =
+    if (partitions.isEmpty) upsert(t, df, version) else merge(t, df, version, partitions)
 
-    // rewrite via temp dir + atomic-ish swap (can't overwrite while reading)
-    val tmp = new Path(path(t.name) + s"__compact_tmp")
-    fs.delete(tmp, true)
-    writer(deduped, t).mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (partitions.isEmpty) {
-      swapInto(tmp, new Path(path(t.name)))
-    } else {
-      existing.foreach { p =>
-        swapInto(new Path(s"$tmp/$p"), new Path(s"${path(t.name)}/$p"))
-      }
-      fs.delete(tmp, true)
-    }
+  /** The unscoped [[upsert]] — the form subclasses override. */
+  def upsert(t: TableDef, df: DataFrame, version: Long): Unit =
+    merge(t, df, version, Nil)
+
+  private def merge(t: TableDef, df: DataFrame, version: Long,
+      partitions: Seq[String]): Unit = write("upsert", t) {
+    require(t.primaryKeys.nonEmpty, s"${t.name}: upsert needs primary keys")
+    require(partitions.isEmpty || t.partitionKeys.size == 1,
+      s"${t.name}: a scoped upsert needs exactly one partition key")
+    val cols = stored(t).fieldNames.map(col)
+    val incoming = df.withColumn(VERSION, lit(version)).select(cols: _*)
+    val present = exists(t.name)
+    val scope = if (present) partitions.distinct else Nil
+    val dirs = if (!present) Nil
+      else if (scope.isEmpty) Seq(path(t.name)) else partDirs(t, scope)
+    compact(t, if (dirs.isEmpty) incoming else spark.read.schema(stored(t))
+      .option("basePath", path(t.name)).parquet(dirs: _*)
+      .select(cols: _*).unionByName(incoming), scope)
   }
 
-  /** Reference upsert idiom: create-if-absent, append, compact
-    * (e.g. stock_prices_flow.py:99-121). */
-  def upsert(t: TableDef, df: DataFrame, version: Long = System.currentTimeMillis()): Unit =
-    span("upsert", t.name) {
-      create(t, replace = false)
-      append(t, df, version)
-      optimize(t)
+  /** Write [[Lake.newestPerKey]] of `src` to a tmp directory (the table
+    * can't be overwritten while it is read) and swap it in: the whole
+    * table when `scope` is empty, else each partition the write produced.
+    * A produced partition outside `scope` that already exists throws
+    * before any swap (the tmp holds only part of its rows). */
+  private def compact(t: TableDef, src: DataFrame, scope: Seq[String]): Unit = {
+    val dst = new Path(path(t.name))
+    val tmp = stage(t, Lake.newestPerKey(src, t.primaryKeys), "__compact_tmp")
+    val moves = if (scope.isEmpty) Seq(tmp -> dst) else fs.listStatus(tmp).toSeq
+      .filter(_.isDirectory).map(s => s.getPath -> new Path(dst, s.getPath.getName))
+    val outside = moves.map(_._2).filter(d =>
+      scope.nonEmpty && !scope.contains(d.getName) && fs.exists(d))
+    if (outside.nonEmpty) {
+      fs.delete(tmp, true)
+      throw new IllegalArgumentException(s"${t.name}: rows land in existing " +
+        s"partitions ${outside.map(_.getName).sorted.mkString(", ")} outside " +
+        s"the scope ${scope.mkString(", ")}; table unchanged")
     }
+    moves.foreach { case (from, to) => swapInto(from, to) }
+    fs.delete(tmp, true)
+  }
+
+  /** Write `df` into `<t><suffix>`, a fresh tmp directory, and return it. */
+  private def stage(t: TableDef, df: DataFrame, suffix: String): Path = {
+    val tmp = new Path(path(t.name) + suffix)
+    fs.delete(tmp, true)
+    writer(df, t).mode(SaveMode.Overwrite).parquet(tmp.toString)
+    tmp
+  }
 
   /** Replace a table's contents wholesale via the same temp-write + swap
     * discipline as [[optimize]] — `df` MAY read from the table being
@@ -220,12 +270,9 @@ class Lake(spark: SparkSession, root: String) {
     * delete-bearing rewrites (PK compaction can't drop a stale row whose
     * PK vanished from the new data). */
   def replace(t: TableDef, df: DataFrame, version: Long = System.currentTimeMillis()): Unit =
-    span("replace", t.name) {
-      val tmp = new Path(path(t.name) + "__replace_tmp")
-      fs.delete(tmp, true)
-      writer(df.withColumn(VERSION, lit(version)), t)
-        .mode(SaveMode.Overwrite).parquet(tmp.toString)
-      swapInto(tmp, new Path(path(t.name)))
+    write("replace", t) {
+      swapInto(stage(t, df.withColumn(VERSION, lit(version)), "__replace_tmp"),
+        new Path(path(t.name)))
     }
 
   /** Move `tmp` into place at `dst` without a lose-the-table window: the
@@ -257,4 +304,19 @@ class Lake(spark: SparkSession, root: String) {
 object Lake {
   /** The hidden per-row version column every write stamps. */
   private[graft] val Version = "__version"
+
+  /** The newest-per-key rule every compaction and merge view applies: one
+    * row per `keys`, the highest `__version` first, ties broken by the
+    * remaining columns, sorted by name and descending, so the survivor is
+    * deterministic. `__version` is not repeated among the tie-break
+    * columns: as the first sort key it already ties wherever a later
+    * position could consult it, so the order is the same either way.
+    * Keeps `__version`; callers that serve rows drop it. */
+  private[graft] def newestPerKey(src: DataFrame, keys: Seq[String]): DataFrame = {
+    val tieBreak = src.columns.filterNot(c => keys.contains(c) || c == Version).sorted
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col(Version).desc +: tieBreak.map(col(_).desc): _*)
+    src.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
+  }
 }

@@ -480,13 +480,14 @@ object PortfolioOptimizer {
     alphas.select(col("date")).distinct()
       .join(combined.select(col("date")).distinct(), Seq("date"), "left_anti")
 
-  /** portfolio_weights table rows from the combined fan-out result. */
+  /** portfolio_weights table rows from the combined fan-out result.
+    * Unsorted, like `metrics`: their consumer is the lake upsert, whose
+    * merge re-partitions on the primary key. */
   def weights(combined: DataFrame): DataFrame = {
     val s = combined.sparkSession
     import s.implicits._
     combined.filter(!$"is_metric")
       .select($"ticker", $"date", year($"date").as("year"), $"weight")
-      .orderBy($"date", $"ticker")
   }
 
   /** portfolio_metrics table rows from the combined fan-out result. */
@@ -495,6 +496,5 @@ object PortfolioOptimizer {
     import s.implicits._
     combined.filter($"is_metric")
       .select($"date", $"lambda", $"active_risk", $"qp_converged")
-      .orderBy($"date")
   }
 }

@@ -19,8 +19,9 @@ final case class TradingRun(
   * replacement for the reference's Prefect flow chain
   * (/root/reference/pipelines/__main__.py:22-35): each stage is a pure
   * function over catalog tables, chained in dependency order, with
-  * idempotent upsert writes (create-if-absent + append + PK-dedup
-  * compaction).
+  * idempotent upsert writes: each is ONE merge-write (existing ∪ new rows,
+  * newest row per primary key, written once — [[Lake.upsert]]), scoped to
+  * the touched year partitions on the daily path.
   *
   * External ingestion (brokerage bars, Wikipedia constituents, NYSE
   * calendar) arrives as staged DataFrames — the engine's contract starts at
@@ -222,16 +223,11 @@ class Orchestrator(
     open
   }
 
-  /** Create-if-absent + append + compaction scoped to the touched year
-    * partitions (empty `years` ⇒ unpartitioned table, full compact). */
-  private def upsertScoped(t: graft.lake.TableDef, df: DataFrame, years: Seq[Int]): Unit = {
-    lake.create(t)
-    lake.append(t, df)
-    lake.optimize(t, years.distinct.sorted.map(y => s"year=$y"))
+  /** The year partitions spanning `dates` — a daily upsert's scope. */
+  private def years(dates: java.sql.Date*): Seq[String] = {
+    val ys = dates.map(_.toLocalDate.getYear)
+    (ys.min to ys.max).map(y => s"year=$y")
   }
-
-  private def yearsBetween(start: java.sql.Date, end: java.sql.Date): Seq[Int] =
-    start.toLocalDate.getYear to end.toLocalDate.getYear
 
   /** stock_prices_flow.py:134-151 / etf_prices (same shape): the daily
     * price upsert, gated on market-open. The reference fetches only
@@ -241,11 +237,10 @@ class Orchestrator(
   def runPricesDaily(yesterday: java.sql.Date,
       stockBars: DataFrame, etfBars: DataFrame): Boolean = {
     if (!marketOpen(yesterday)) return false
-    val yearPart = Seq(yesterday.toLocalDate.getYear)
     def day(df: DataFrame) = df.filter($"date" === lit(yesterday))
       .withColumn("year", year($"date"))
-    upsertScoped(Catalog.stockPrices, day(stockBars), yearPart)
-    upsertScoped(Catalog.etfPrices, day(etfBars), yearPart)
+    lake.upsert(Catalog.stockPrices, day(stockBars), partitions = years(yesterday))
+    lake.upsert(Catalog.etfPrices, day(etfBars), partitions = years(yesterday))
     true
   }
 
@@ -261,7 +256,7 @@ class Orchestrator(
     val er = lake.table(Catalog.etfReturns)
       .filter($"date".between(lit(start), lit(yesterday)))
     val cov = Quant.factorCovariances(er, window, halfLife)
-    upsertScoped(Catalog.factorCovariances, cov, yearsBetween(start, yesterday))
+    lake.upsert(Catalog.factorCovariances, cov, partitions = years(start, yesterday))
     true
   }
 
@@ -277,9 +272,8 @@ class Orchestrator(
         .select($"date", $"ticker", $"return"),
         Seq("date", "ticker"), "left")
     val w = Quant.benchmarkWeights(universeReturns)
-    upsertScoped(Catalog.benchmarkWeights, w,
-      Seq(yesterday.toLocalDate.getYear))
-    // benchmark_returns is unpartitioned (one row per date) — full compact
+    lake.upsert(Catalog.benchmarkWeights, w, partitions = years(yesterday))
+    // benchmark_returns is unpartitioned (one row per date) — full merge
     lake.upsert(Catalog.benchmarkReturns, Quant.benchmarkReturns(universeReturns, w))
     true
   }
@@ -295,7 +289,7 @@ class Orchestrator(
       .filter($"date".between(lit(start), lit(yesterday)))
     val b = Quant.betas(sr, br, window, halfLife)
       .filter($"date" === lit(yesterday))
-    upsertScoped(Catalog.betas, b, Seq(yesterday.toLocalDate.getYear))
+    lake.upsert(Catalog.betas, b, partitions = years(yesterday))
     true
   }
 
@@ -312,8 +306,8 @@ class Orchestrator(
       at(Catalog.factorCovariances).na.drop(Seq("covariance")),
       at(Catalog.idioVol).na.drop(Seq("idio_vol")),
       targetActiveRisk).cache()
-    upsertScoped(Catalog.portfolioWeights, PortfolioOptimizer.weights(combined),
-      Seq(yesterday.toLocalDate.getYear))
+    lake.upsert(Catalog.portfolioWeights, PortfolioOptimizer.weights(combined),
+      partitions = years(yesterday))
     lake.upsert(Catalog.portfolioMetrics, PortfolioOptimizer.metrics(combined))
     combined.unpersist()
     true
@@ -407,7 +401,7 @@ class Orchestrator(
 
   /** The reference's daily incremental pattern (SURVEY §2.11 / §4
     * "key-range incremental recomputation"): recompute only the trailing
-    * `lookback` trading days, slice to the target date, upsert — compaction
+    * `lookback` trading days, slice to the target date, upsert — the merge
     * scoped to the touched year partition. This is what makes the daily
     * DAG O(window), not O(history), at any table size.
     *
@@ -419,13 +413,10 @@ class Orchestrator(
     val sr = lake.table(Catalog.stockReturns).filter($"date".between(lit(dates), lit(endDate)))
     val er = lake.table(Catalog.etfReturns).filter($"date".between(lit(dates), lit(endDate)))
     val (loadings, idio) = Quant.factorModel(sr, er, factors, window, halfLife)
-    val yearPart = Seq(s"year=${endDate.toLocalDate.getYear}")
-    lake.create(Catalog.factorLoadings)
-    lake.append(Catalog.factorLoadings, loadings.filter($"date" === lit(endDate)))
-    lake.optimize(Catalog.factorLoadings, yearPart)
-    lake.create(Catalog.idioVol)
-    lake.append(Catalog.idioVol, idio.filter($"date" === lit(endDate)))
-    lake.optimize(Catalog.idioVol, yearPart)
+    lake.upsert(Catalog.factorLoadings, loadings.filter($"date" === lit(endDate)),
+      partitions = years(endDate))
+    lake.upsert(Catalog.idioVol, idio.filter($"date" === lit(endDate)),
+      partitions = years(endDate))
   }
 
   /** reversal_flow.py:163-194 — the daily reversal chain. Note the
@@ -442,8 +433,11 @@ class Orchestrator(
     val iv = lake.table(Catalog.idioVol)
       .filter($"date".between(lit(startDate), lit(endDate)))
     import org.apache.spark.storage.StorageLevel
+    // the z-score sums in the slice's row order: sorting the one-date slice
+    // keeps the daily scores bit-stable (reversalSignals itself is unsorted)
     val signals = Quant.reversalSignals(sr, signalWindow)
-      .filter($"date" === lit(endDate)).persist(StorageLevel.MEMORY_AND_DISK)
+      .filter($"date" === lit(endDate)).orderBy($"ticker")
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val scores = Quant.reversalScores(signals).filter($"date" === lit(endDate))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val alphas = Quant.reversalAlphas(scores, iv, ic)
@@ -452,12 +446,9 @@ class Orchestrator(
     // the whole chain is (each stage preserves rows), and the persists keep
     // the guard counts + the writes from recomputing the chain
     require(alphas.count() > 0, "No values found!")
-    val yearPart = Seq(s"year=${endDate.toLocalDate.getYear}")
     Seq((Catalog.signals, signals), (Catalog.scores, scores),
       (Catalog.alphas, alphas)).foreach { case (t, df) =>
-      lake.create(t)
-      lake.append(t, df)
-      lake.optimize(t, yearPart)
+      lake.upsert(t, df, partitions = years(endDate))
       df.unpersist()
     }
   }

@@ -11,6 +11,12 @@ import graft.ops.{RollingOls, TimeSeries}
   * every rolling/EWM op matches the Polars/pandas semantics golden-tested
   * in ScalaTest (null until window full; EWM adjust=True, half-life form).
   *
+  * Outputs that only feed a lake upsert are left unsorted: the upsert's
+  * merge re-partitions on the primary key, so a global sort there would be
+  * a sampling job and a range shuffle whose order nothing keeps. Frames
+  * written by replace + append (returns) keep their sort, which sets the
+  * files' row order.
+  *
   * Citations: /root/reference/pipelines/{returns,factor_model,
   * factor_covariances,reversal,benchmark,betas}_flow.py.
   */
@@ -76,7 +82,6 @@ object Quant {
     val loadings = long
       .withColumn("loading", GraftFunctions.ewm_mean($"loading_raw", halfLife).over(wl))
       .select($"ticker", $"date", year($"date").as("year"), $"factor", $"loading")
-      .orderBy($"ticker", $"factor", $"date")
 
     // idio vol: rolling std of residual, EWM smoothed
     val wt = Window.partitionBy($"ticker").orderBy($"date")
@@ -84,7 +89,6 @@ object Quant {
       .withColumn("vol_raw", TimeSeries.rollingStd($"residual", wt, window))
       .withColumn("idio_vol", GraftFunctions.ewm_mean($"vol_raw", halfLife).over(wt))
       .select($"ticker", $"date", year($"date").as("year"), $"idio_vol")
-      .orderBy($"ticker", $"date")
     (loadings, idio)
   }
 
@@ -129,7 +133,6 @@ object Quant {
     cov
       .withColumn("covariance", GraftFunctions.ewm_mean($"cov_raw", halfLife).over(w))
       .select($"date", year($"date").as("year"), $"factor_1", $"factor_2", $"covariance")
-      .orderBy($"factor_1", $"factor_2", $"date")
   }
 
   /** reversal_flow.py:12-29: 21-day reversal signal, null-guarded, long. */
@@ -143,7 +146,6 @@ object Quant {
         TimeSeries.rollingSum(log1p($"return"), w, windowSize)
           .multiply(-1).as("value"))
       .na.drop()
-      .orderBy($"ticker", $"date")
   }
 
   /** reversal_flow.py:33-43: GLOBAL panel z-score (no per-date grouping —
@@ -167,7 +169,6 @@ object Quant {
       .select($"ticker", $"date", year($"date").as("year"),
         lit(signalName).as("signal"),
         (lit(ic) * $"score" * $"idio_vol").as("alpha"))
-      .orderBy($"ticker", $"date")
   }
 
   /** benchmark_flow.py:11-30: equal weights 1/N per date over the
@@ -177,7 +178,6 @@ object Quant {
     import s.implicits._
     universeReturns.select($"ticker", $"date", year($"date").as("year"),
         TimeSeries.equalWeight(Seq("date")).as("weight"))
-      .orderBy($"ticker", $"date")
   }
 
   def benchmarkReturns(universeReturns: DataFrame, weights: DataFrame): DataFrame = {
@@ -187,7 +187,6 @@ object Quant {
       .join(universeReturns.select($"ticker", $"date", $"return"),
         Seq("date", "ticker"), "left")
       .groupBy($"date").agg(sum($"return" * $"weight").as("return"))
-      .orderBy($"date")
   }
 
   /** betas_flow.py:14-72: per-ticker rolling single-factor OLS beta vs the
@@ -217,7 +216,6 @@ object Quant {
       .withColumn("predicted_beta", GraftFunctions.ewm_mean($"historical_beta", halfLife).over(wb))
       .select($"ticker", $"date", year($"date").as("year"),
         $"historical_beta", $"predicted_beta")
-      .orderBy($"ticker", $"date")
   }
 
   /** calendar_flow helpers (utils/calendar.py): last market date and the

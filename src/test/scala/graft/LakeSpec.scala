@@ -6,7 +6,9 @@ import graft.lake.{Lake, TableDef}
 import org.apache.spark.sql.types._
 
 /** Lake layer: create modes, append, PK-dedup optimize (global and
-  * partition-scoped), version-wins upsert semantics. */
+  * partition-scoped), version-wins upsert semantics, the one-write
+  * merge upsert (scope, failure and empty-input cases) and recovery of a
+  * half-swapped table. */
 class LakeSpec extends SparkSpec {
   import spark.implicits._
 
@@ -103,5 +105,121 @@ class LakeSpec extends SparkSpec {
       .toDF("ticker", "date", "year", "close"), version = 2L)
     val rows = lake.table(prices).collect()
     assert(rows.length == 1 && rows(0).getAs[Double]("close") == 99.0)
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.select("ticker", "date", "year", "close").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getDouble(3)))
+      .sortBy(r => (r._2, r._1)).toSeq
+
+  private def batch(rs: (String, String, Int, Double)*) =
+    rs.toDF("ticker", "date", "year", "close")
+
+  test("merge upsert: old rows plus new, newest version wins, exact-tie " +
+      "duplicate keeps optimize's survivor") {
+    val lake = freshLake
+    lake.upsert(prices, batch(("A", "2024-01-02", 2024, 10.0),
+      ("B", "2024-01-02", 2024, 20.0)), version = 1L)
+    // one batch repeats key C twice exactly and key D with two closes
+    lake.upsert(prices, batch(("A", "2024-01-02", 2024, 11.0),
+      ("C", "2024-01-03", 2024, 30.0), ("C", "2024-01-03", 2024, 30.0),
+      ("D", "2024-01-03", 2024, 1.0), ("D", "2024-01-03", 2024, 2.0)),
+      version = 2L)
+    // an older version does not beat the stored row
+    lake.upsert(prices, batch(("B", "2024-01-02", 2024, 99.0)), version = 0L)
+    val merged = rows(lake.table(prices))
+    assert(merged == Seq(("A", "2024-01-02", 2024, 11.0),
+      ("B", "2024-01-02", 2024, 20.0), ("C", "2024-01-03", 2024, 30.0),
+      ("D", "2024-01-03", 2024, 2.0)))
+    // the same batches through create + append + optimize keep the same rows
+    val ref = freshLake
+    ref.create(prices)
+    ref.append(prices, batch(("A", "2024-01-02", 2024, 10.0),
+      ("B", "2024-01-02", 2024, 20.0)), version = 1L)
+    ref.append(prices, batch(("A", "2024-01-02", 2024, 11.0),
+      ("C", "2024-01-03", 2024, 30.0), ("C", "2024-01-03", 2024, 30.0),
+      ("D", "2024-01-03", 2024, 1.0), ("D", "2024-01-03", 2024, 2.0)),
+      version = 2L)
+    ref.append(prices, batch(("B", "2024-01-02", 2024, 99.0)), version = 0L)
+    ref.optimize(prices)
+    assert(rows(ref.table(prices)) == merged)
+  }
+
+  test("scoped merge upsert rewrites only the named partitions; a new " +
+      "partition moves in") {
+    val lake = freshLake
+    lake.upsert(prices, batch(("A", "2023-06-01", 2023, 1.0),
+      ("A", "2024-01-02", 2024, 10.0)), version = 1L)
+    val before2023 = new java.io.File(lake.path("prices"), "year=2023")
+      .listFiles().map(_.getName).toSet
+    lake.upsert(prices, batch(("A", "2024-01-02", 2024, 12.0),
+      ("B", "2024-01-03", 2024, 5.0), ("A", "2025-01-02", 2025, 7.0)),
+      version = 2L, partitions = Seq("year=2024"))
+    assert(rows(lake.table(prices)) == Seq(("A", "2023-06-01", 2023, 1.0),
+      ("A", "2024-01-02", 2024, 12.0), ("B", "2024-01-03", 2024, 5.0),
+      ("A", "2025-01-02", 2025, 7.0)))
+    // the out-of-scope partition's files were not rewritten
+    assert(new java.io.File(lake.path("prices"), "year=2023")
+      .listFiles().map(_.getName).toSet == before2023)
+  }
+
+  test("scoped merge upsert landing in an existing partition outside the " +
+      "scope throws and leaves the table unchanged") {
+    val lake = freshLake
+    lake.upsert(prices, batch(("A", "2023-06-01", 2023, 1.0),
+      ("A", "2024-01-02", 2024, 10.0)), version = 1L)
+    val before = rows(lake.table(prices))
+    val e = intercept[IllegalArgumentException] {
+      lake.upsert(prices, batch(("A", "2024-01-02", 2024, 12.0),
+        ("B", "2023-06-01", 2023, 2.0)), version = 2L,
+        partitions = Seq("year=2024"))
+    }
+    assert(e.getMessage.contains("year=2023"))
+    assert(rows(lake.table(prices)) == before)
+  }
+
+  test("empty merge upsert into an absent table leaves an empty, " +
+      "resolvable table") {
+    val lake = freshLake
+    assert(!lake.exists("prices"))
+    lake.upsert(prices, batch(), version = 1L)
+    assert(lake.exists("prices"))
+    val df = lake.table(prices)
+    assert(df.count() == 0)
+    assert(df.columns.toSet == Set("ticker", "date", "year", "close"))
+    // and a later upsert merges into the seed-only table cleanly
+    lake.upsert(prices, batch(("A", "2024-01-02", 2024, 10.0)), version = 2L)
+    assert(rows(lake.table(prices)) == Seq(("A", "2024-01-02", 2024, 10.0)))
+  }
+
+  test("merge upsert whose input fails mid-write leaves the old rows") {
+    val lake = freshLake
+    lake.upsert(prices, batch(("A", "2024-01-02", 2024, 10.0),
+      ("B", "2024-01-02", 2024, 20.0)), version = 1L)
+    val before = rows(lake.table(prices))
+    val failing = batch(("C", "2024-01-03", 2024, 1.0))
+      .withColumn("close", raise_error(lit("planted write failure")).cast("double"))
+    val e = intercept[Exception](lake.upsert(prices, failing, version = 2L))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("planted write failure")))
+    assert(rows(lake.table(prices)) == before)
+    // re-running with good input converges
+    lake.upsert(prices, batch(("C", "2024-01-03", 2024, 1.0)), version = 3L)
+    assert(rows(lake.table(prices)).map(_._1) == Seq("A", "B", "C"))
+  }
+
+  test("a half-swapped table (only <t>__old left) is restored before the " +
+      "next upsert") {
+    val lake = freshLake
+    lake.upsert(prices, batch(("A", "2024-01-02", 2024, 10.0),
+      ("B", "2024-01-02", 2024, 20.0)), version = 1L)
+    // a crash between the swap's two renames: the table moved aside, the
+    // new data never moved in
+    val dst = new java.io.File(lake.path("prices"))
+    assert(dst.renameTo(new java.io.File(lake.path("prices") + "__old")))
+    lake.upsert(prices, batch(("C", "2024-01-03", 2024, 30.0)), version = 2L)
+    assert(rows(lake.table(prices)) == Seq(("A", "2024-01-02", 2024, 10.0),
+      ("B", "2024-01-02", 2024, 20.0), ("C", "2024-01-03", 2024, 30.0)))
+    assert(!new java.io.File(lake.path("prices") + "__old").exists())
   }
 }

@@ -5,6 +5,7 @@ import java.sql.Date
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.lake.{Catalog, Lake}
+import graft.obs.Trace
 import graft.pipelines.Orchestrator
 
 /** The five round-3 daily incremental flows (prices gate, factor
@@ -17,7 +18,9 @@ import graft.pipelines.Orchestrator
   *    statistic exactly at the end date (their EWM smoothing is
   *    deliberately scoped to the daily window, mirroring the reference's
   *    reversal-flow scoping subtlety — see Orchestrator scaladoc);
-  *  - every daily upsert is idempotent under PK compaction.
+  *  - every daily upsert is idempotent under PK compaction;
+  *  - `runAll` stays inside a job budget on a fresh lake AND re-run over
+  *    the lake it left, and the re-run leaves the same rows.
   *
   * Reference: factor_covariances_flow.py:89-110, benchmark_flow.py:95-113,
   * betas_flow.py:119-142, portfolio_weights_flow.py:212-240,
@@ -299,5 +302,45 @@ class OrchestratorDailySpec extends SparkSpec {
     val saturday = Date.valueOf("2024-03-02")
     assert(o2.runTradingDaily(saturday, 100000.0, notionals, rawOrders).isEmpty)
     assert(delivered.size == 1)
+  }
+
+  test("runAll job budget on a fresh lake and a re-run; the re-run keeps the rows") {
+    val l = new Lake(spark, Files.createTempDirectory("rerun_lake").toString)
+    val o = new Orchestrator(spark, l, factors, window = window, halfLife = 5.0)
+    def run() = Trace.record(spark)(o.runAll(dates.toDF("date"),
+      tickers.toDF("ticker"), Seq.empty[(Date, String, String)]
+        .toDF("effective_date", "ticker", "action"),
+      bars(tickers), bars(factors)))._2
+    // each table's rows keyed by primary key (values compared to 1e-12 —
+    // shuffle order may move the last bit of a sum between runs)
+    def snapshot() = Catalog.all.filter(t => l.exists(t.name)).map { t =>
+      val df = l.table(t)
+      val cols = t.primaryKeys ++ df.columns.filterNot(t.primaryKeys.contains)
+      val rs = df.select(cols.map(col): _*).collect()
+        .map(r => r.toSeq.take(t.primaryKeys.size) -> r.toSeq.drop(t.primaryKeys.size))
+      t.name -> (rs.length, rs.toMap)
+    }.toMap
+    def same(a: Any, b: Any) = (a, b) match {
+      case (x: Double, y: Double) => approxEqual(x, y, 1e-12)
+      case _ => a == b
+    }
+    val fresh = run()
+    val first = snapshot()
+    val again = run()
+    val second = snapshot()
+    // measured at the one-write upsert: 99 and 106 jobs (create + append +
+    // optimize upserts took 165 and 152)
+    assert(fresh.total.jobs <= 99, s"fresh runAll: ${fresh.total.jobs} jobs")
+    assert(again.total.jobs <= 106, s"re-run runAll: ${again.total.jobs} jobs")
+    assert(first.keySet == second.keySet && first.size == Catalog.all.size - 1)
+    first.foreach { case (name, (n, rows)) =>
+      val (n2, rows2) = second(name)
+      assert(n == rows.size && n2 == n && rows2.keySet == rows.keySet,
+        s"$name: row count or keys changed on re-run")
+      rows.foreach { case (k, v) =>
+        assert(v.zip(rows2(k)).forall { case (a, b) => same(a, b) },
+          s"$name: $k changed on re-run: $v vs ${rows2(k)}")
+      }
+    }
   }
 }

@@ -40,14 +40,25 @@ class TraceSpec extends SparkSpec {
     val lake = new Lake(spark, Files.createTempDirectory("trace-parity").toString)
     val t = TableDef("t", StructType(Seq(StructField("k", LongType),
       StructField("v", LongType))), primaryKeys = Seq("k"))
+    val rows = Seq((1L, 10L), (2L, 20L), (1L, 11L)).toDF("k", "v")
+    // the upsert the serial job profile measured: create + append + optimize
     val up = Trace.record(spark) {
-      lake.upsert(t, Seq((1L, 10L), (2L, 20L), (1L, 11L)).toDF("k", "v"), 1L)
+      lake.create(t)
+      lake.append(t, rows, 1L)
+      lake.optimize(t)
     }
     assert(counts(up) == ((5, 7, 15L)))
     assert(up._2.children.map(c => (c.name, c.tag)) ==
-      Seq(("lake.upsert", "t"), ("trace.drain", "")))
-    assert(up._2.children.head.children.map(_.name) ==
-      Seq("lake.create", "lake.append", "lake.optimize"))
+      Seq(("lake.create", "t"), ("lake.append", "t"), ("lake.optimize", "t"),
+        ("trace.drain", "")))
+    // the merge-write upsert of the same rows: one span, one write, fewer jobs
+    val merged = Trace.record(spark) {
+      lake.upsert(t.copy(name = "u"), rows, 1L)
+    }
+    assert(counts(merged) == ((2, 4, 9L)))
+    assert(merged._2.children.map(c => (c.name, c.tag)) ==
+      Seq(("lake.upsert", "u"), ("trace.drain", "")))
+    assert(merged._2.children.head.children.isEmpty)
   }
 
   test("each concurrent gate arm attributes to its own span") {
