@@ -67,7 +67,7 @@ final class Span private[obs] (val id: Long, val name: String,
 /** The engine's span tracer. A span is a named region of the calling
   * thread; the thread's innermost open span is the id in the `graft.span`
   * Spark local property, so every job the thread submits carries it, and
-  * threads created under a span (each [[graft.queries.GateArms]] arm's
+  * threads created under a span (each [[graft.dag.GateArms]] arm's
   * pool thread) inherit a copy and attribute to their own arm.
   *
   * Recording is on exactly inside [[record]], which opens the root span

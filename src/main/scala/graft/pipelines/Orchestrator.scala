@@ -2,7 +2,8 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.lake.{Catalog, Lake}
+import graft.dag.GateArms
+import graft.lake.{Catalog, Lake, TableDef}
 import graft.opt.PortfolioOptimizer
 
 /** The frames produced by one daily trading run (trading_flow.py's task
@@ -18,10 +19,20 @@ final case class TradingRun(
 /** The full daily DAG as plain Scala orchestration — the Spark-first
   * replacement for the reference's Prefect flow chain
   * (/root/reference/pipelines/__main__.py:22-35): each stage is a pure
-  * function over catalog tables, chained in dependency order, with
-  * idempotent upsert writes: each is ONE merge-write (existing ∪ new rows,
-  * newest row per primary key, written once — [[Lake.upsert]]), scoped to
-  * the touched year partitions on the daily path.
+  * function over catalog tables with idempotent upsert writes: each is ONE
+  * merge-write (existing ∪ new rows, newest row per primary key, written
+  * once — [[Lake.upsert]]), scoped to the touched year partitions on the
+  * daily path.
+  *
+  * [[runAll]] and [[runAllDaily]] schedule the stages from their declared
+  * table reads and writes ([[Orchestrator.Flow]]): a flow starts, on its
+  * own driver thread and inside a `pipelines.<flow>` [[graft.obs.Trace]]
+  * span, once every flow that writes a table it reads has finished, so
+  * the three branches after returns (factor model → reversal, factor
+  * covariances, benchmark → betas) and the calendar → universe chain run
+  * beside each other ([[graft.dag.GateArms]]). The first flow to fail is
+  * rethrown with its own exception; flows still running are cancelled and
+  * a flow whose input's producer failed never starts.
   *
   * External ingestion (brokerage bars, Wikipedia constituents, NYSE
   * calendar) arrives as staged DataFrames — the engine's contract starts at
@@ -82,7 +93,8 @@ class Orchestrator(
     * any data scale. */
   private final case class CalScalars(
       lastAll: java.sql.Date, starts: Map[Int, java.sql.Date])
-  private var calCache: Option[(java.sql.Date, Set[Int], CalScalars)] = None
+  // filled on the calling thread (the daily gate) before the flows fan out
+  @volatile private var calCache: Option[(java.sql.Date, Set[Int], CalScalars)] = None
 
   private def calScalars(end: java.sql.Date, lookbacks: Set[Int]): CalScalars =
     calCache match {
@@ -453,32 +465,76 @@ class Orchestrator(
     }
   }
 
-  /** The whole daily chain in dependency order. */
+  /** The DAG's flows and what each declares it reads and writes; the
+    * daily forms (`daily = Some(yesterday)`) replace the backfill bodies
+    * where the reference has a *_daily_flow. A flow may re-read a table
+    * it writes (reversal reads back its signals and scores); only reads
+    * of another flow's tables order it. */
+  private[graft] def flows(
+      daily: Option[java.sql.Date],
+      calendarDates: DataFrame,
+      currentConstituents: DataFrame,
+      changes: DataFrame,
+      stockBars: DataFrame,
+      etfBars: DataFrame): Seq[Orchestrator.Flow] = {
+    import Catalog._
+    import Orchestrator.Flow
+    def either(backfill: => Unit)(day: java.sql.Date => Any): () => Unit =
+      () => daily.fold(backfill)(d => { day(d); () })
+    Seq(
+      Flow("calendar", Nil, Seq(calendar), () => runCalendar(calendarDates)),
+      Flow("universe", Seq(calendar), Seq(universe),
+        () => runUniverse(currentConstituents, changes)),
+      Flow("prices", Nil, Seq(stockPrices, etfPrices),
+        either(runPrices(stockBars, etfBars))(runPricesDaily(_, stockBars, etfBars))),
+      Flow("returns", Seq(stockPrices, etfPrices), Seq(stockReturns, etfReturns),
+        () => runReturns()),
+      Flow("factor_model", Seq(stockReturns, etfReturns), Seq(factorLoadings, idioVol),
+        either(runFactorModel())(runFactorModelDaily)),
+      Flow("factor_covariances", Seq(etfReturns), Seq(factorCovariances),
+        either(runFactorCovariances())(runFactorCovariancesDaily)),
+      Flow("reversal", Seq(stockReturns, idioVol), Seq(signals, scores, alphas),
+        either(runReversal())(runReversalDaily(_))),
+      Flow("benchmark", Seq(universe, stockReturns), Seq(benchmarkWeights, benchmarkReturns),
+        either(runBenchmark())(runBenchmarkDaily)),
+      Flow("betas", Seq(stockReturns, benchmarkReturns), Seq(betas),
+        either(runBetas())(runBetasDaily)),
+      Flow("portfolio",
+        Seq(alphas, benchmarkWeights, factorLoadings, factorCovariances, idioVol),
+        Seq(portfolioWeights, portfolioMetrics),
+        either(runPortfolioWeights())(runPortfolioWeightsDaily)))
+  }
+
+  /** Run `fs`, each once every flow writing a table it reads has finished;
+    * the first failure surfaces as the failing flow's own exception. */
+  private def runFlows(fs: Seq[Orchestrator.Flow]): Unit = {
+    def arm(f: Orchestrator.Flow) = s"pipelines.${f.name}"
+    val writer = fs.flatMap(f => f.writes.map(_.name -> f)).toMap
+    require(writer.size == fs.map(_.writes.size).sum, "a table has two writing flows")
+    try GateArms.run(fs.map(f => arm(f) -> f.body), after = fs.map(f => arm(f) ->
+      f.reads.flatMap(t => writer.get(t.name)).filter(_ ne f).map(arm).toSet).toMap)
+    catch { case e: GateArms.ArmFailed => throw e.getCause }
+  }
+
+  /** The whole backfill DAG ([[flows]]), scheduled from its reads and
+    * writes. */
   def runAll(
       calendarDates: DataFrame,
       currentConstituents: DataFrame,
       changes: DataFrame,
       stockBars: DataFrame,
-      etfBars: DataFrame): Unit = {
-    runCalendar(calendarDates)
-    runUniverse(currentConstituents, changes)
-    runPrices(stockBars, etfBars)
-    runReturns()
-    runFactorModel()
-    runFactorCovariances()
-    runReversal()
-    runBenchmark()
-    runBetas()
-    runPortfolioWeights()
-  }
+      etfBars: DataFrame): Unit =
+    runFlows(flows(None, calendarDates, currentConstituents, changes, stockBars, etfBars))
 
-  /** __main__.py:22-35 `daily_flow`: the whole daily chain in the
-    * reference's dependency order — calendar and universe rebuild
-    * (backfill-mode even in the daily chain, __main__.py:24-25), returns
-    * rebuild (replace-mode, __main__.py:28), and the gated incremental
-    * flows. The market-open gate is checked once here; in the reference
-    * each flow re-checks the identical predicate. Returns false (and
-    * touches no fact table) when yesterday wasn't a trading day. */
+  /** __main__.py:22-35 `daily_flow`: the calendar rebuild, the market-open
+    * gate, then the rest of the daily DAG ([[flows]]) scheduled from its
+    * reads and writes — the universe rebuild (backfill-mode even in the
+    * daily chain, __main__.py:24-25), returns rebuild (replace-mode,
+    * __main__.py:28) and the gated incremental flows. The gate is checked
+    * once here (in the reference each flow re-checks the identical
+    * predicate; here their re-checks read the scalars it cached). Returns
+    * false — having rebuilt only the calendar and the universe, touching
+    * no fact table — when yesterday wasn't a trading day. */
   def runAllDaily(
       yesterday: java.sql.Date,
       calendarDates: DataFrame,
@@ -488,17 +544,18 @@ class Orchestrator(
       etfBars: DataFrame): Boolean = guarded("daily_flow") {
     // the reference attaches the failure hook to the TOP-LEVEL daily flow
     // (__main__.py:22) — one payload per failed chain, not one per stage
-    runCalendar(calendarDates)
-    runUniverse(currentConstituents, changes)
-    if (!marketOpen(yesterday)) return false
-    runPricesDaily(yesterday, stockBars, etfBars)
-    runReturns()
-    runFactorModelDaily(yesterday)
-    runFactorCovariancesDaily(yesterday)
-    runReversalDaily(yesterday)
-    runBenchmarkDaily(yesterday)
-    runBetasDaily(yesterday)
-    runPortfolioWeightsDaily(yesterday)
-    true
+    val (cal, rest) = flows(Some(yesterday), calendarDates, currentConstituents,
+      changes, stockBars, etfBars).partition(_.name == "calendar")
+    runFlows(cal)
+    val open = marketOpen(yesterday)
+    runFlows(if (open) rest else rest.filter(_.name == "universe"))
+    open
   }
+}
+
+object Orchestrator {
+  /** One flow of the daily DAG: its name (its span is `pipelines.<name>`),
+    * the [[Catalog]] tables it reads and writes, and its body. */
+  final case class Flow(name: String, reads: Seq[TableDef], writes: Seq[TableDef],
+      body: () => Unit)
 }

@@ -180,13 +180,21 @@ object Quant {
         TimeSeries.equalWeight(Seq("date")).as("weight"))
   }
 
+  /** Σ w·r per date, added in ticker order whatever the input's
+    * partitioning: a grouped sum adds in arrival order, which the plan
+    * and the partitioning decide, and a double sum's last bits depend on
+    * that order. Nulls are skipped; a date with none but nulls is null. */
   def benchmarkReturns(universeReturns: DataFrame, weights: DataFrame): DataFrame = {
     val s = universeReturns.sparkSession
     import s.implicits._
+    val byDate = Window.partitionBy($"date").orderBy($"ticker")
     weights.select($"ticker", $"date", $"weight")
       .join(universeReturns.select($"ticker", $"date", $"return"),
         Seq("date", "ticker"), "left")
-      .groupBy($"date").agg(sum($"return" * $"weight").as("return"))
+      .select($"date", sum($"return" * $"weight").over(byDate.rowsBetween(
+          Window.unboundedPreceding, Window.unboundedFollowing)).as("return"),
+        row_number().over(byDate).as("__rn"))
+      .filter($"__rn" === 1).drop("__rn")
   }
 
   /** betas_flow.py:14-72: per-ticker rolling single-factor OLS beta vs the

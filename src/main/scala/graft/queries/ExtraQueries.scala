@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
+import graft.dag.GateArms
 import graft.dedup.Dedup
 import graft.functions.{Bpe, TextFunctions}
 import graft.pipelines.Universe

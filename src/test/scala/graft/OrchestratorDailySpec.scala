@@ -2,10 +2,11 @@ package graft
 
 import java.nio.file.Files
 import java.sql.Date
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.lake.{Catalog, Lake}
-import graft.obs.Trace
+import graft.lake.{Catalog, Lake, TableDef}
+import graft.obs.{Span, Trace}
 import graft.pipelines.Orchestrator
 
 /** The five round-3 daily incremental flows (prices gate, factor
@@ -20,7 +21,13 @@ import graft.pipelines.Orchestrator
   *    reversal-flow scoping subtlety — see Orchestrator scaladoc);
   *  - every daily upsert is idempotent under PK compaction;
   *  - `runAll` stays inside a job budget on a fresh lake AND re-run over
-  *    the lake it left, and the re-run leaves the same rows.
+  *    the lake it left, and the re-run leaves the same rows;
+  *  - the concurrent `runAll` / `runAllDaily` read and write exactly what
+  *    each flow declares, read a table only after its producer wrote it,
+  *    and leave every table raw-bit equal to the serial composition of
+  *    the public flow calls; a failed flow delivers one payload with its
+  *    own error, its dependents never start, and a healthy re-run
+  *    converges.
   *
   * Reference: factor_covariances_flow.py:89-110, benchmark_flow.py:95-113,
   * betas_flow.py:119-142, portfolio_weights_flow.py:212-240,
@@ -341,6 +348,199 @@ class OrchestratorDailySpec extends SparkSpec {
         assert(v.zip(rows2(k)).forall { case (a, b) => same(a, b) },
           s"$name: $k changed on re-run: $v vs ${rows2(k)}")
       }
+    }
+  }
+
+  private def emptyChanges = Seq.empty[(Date, String, String)]
+    .toDF("effective_date", "ticker", "action")
+  private def runAllOn(o: Orchestrator): Unit =
+    o.runAll(dates.toDF("date"), tickers.toDF("ticker"), emptyChanges,
+      bars(tickers), bars(factors))
+  private def runAllDailyOn(o: Orchestrator, day: Date): Boolean =
+    o.runAllDaily(day, dates.toDF("date"), tickers.toDF("ticker"), emptyChanges,
+      bars(tickers), bars(factors))
+  private def declared(o: Orchestrator, daily: Boolean) =
+    o.flows(if (daily) Some(yesterday) else None, dates.toDF("date"),
+      tickers.toDF("ticker"), emptyChanges, bars(tickers), bars(factors))
+
+  /** Every table's rows, sorted, doubles as their raw bits. */
+  private def rawRows(l: Lake): Map[String, Seq[String]] =
+    Catalog.all.filter(t => l.exists(t.name)).map { t =>
+      val df = l.table(t)
+      t.name -> df.select(df.columns.sorted.map(col): _*).collect().toSeq
+        .map(_.toSeq.map {
+          case d: Double => java.lang.Double.doubleToRawLongBits(d).toHexString
+          case v => String.valueOf(v)
+        }.mkString("|")).sorted
+    }.toMap
+
+  /** The public flow calls in the pre-scheduler serial order, on a fresh
+    * lake: rows after the backfill, then after one daily chain. */
+  private lazy val serialRows: (Map[String, Seq[String]], Map[String, Seq[String]]) = {
+    val l = new Lake(spark, Files.createTempDirectory("serial_lake").toString)
+    val o = new Orchestrator(spark, l, factors, window = window, halfLife = 5.0)
+    o.runCalendar(dates.toDF("date"))
+    o.runUniverse(tickers.toDF("ticker"), emptyChanges)
+    o.runPrices(bars(tickers), bars(factors))
+    o.runReturns()
+    o.runFactorModel()
+    o.runFactorCovariances()
+    o.runReversal()
+    o.runBenchmark()
+    o.runBetas()
+    o.runPortfolioWeights()
+    val backfill = rawRows(l)
+    o.runCalendar(dates.toDF("date"))
+    o.runUniverse(tickers.toDF("ticker"), emptyChanges)
+    assert(o.marketOpen(yesterday))
+    assert(o.runPricesDaily(yesterday, bars(tickers), bars(factors)))
+    o.runReturns()
+    o.runFactorModelDaily(yesterday)
+    assert(o.runFactorCovariancesDaily(yesterday))
+    o.runReversalDaily(yesterday)
+    assert(o.runBenchmarkDaily(yesterday))
+    assert(o.runBetasDaily(yesterday))
+    assert(o.runPortfolioWeightsDaily(yesterday))
+    (backfill, rawRows(l))
+  }
+
+  import OrchestratorDailySpec.{Op, RecordingLake}
+
+  /** Run `body` recorded; the span tree and each lake op with the flow
+    * whose `pipelines.<flow>` span it ran under ("" outside every flow). */
+  private def observe[T](l: RecordingLake)(body: => T): (T, Span, Seq[(String, Op)]) = {
+    l.log.clear()
+    val (r, root) = Trace.record(spark)(body)
+    val flowOf = root.children.filter(_.name.startsWith("pipelines."))
+      .flatMap(c => c.walk.map(_.id.toString -> c.name.stripPrefix("pipelines.")))
+      .toMap
+    (r, root, l.log.asScala.toSeq.map(op => flowOf.getOrElse(op.span, "") -> op))
+  }
+
+  /** Each flow wrote exactly what it declares and read exactly what it
+    * declares (plus tables it wrote itself); each read of another flow's
+    * table started after that flow's last write of it ended. */
+  private def assertDeclared(fs: Seq[Orchestrator.Flow], seen: Seq[(String, Op)]): Unit = {
+    val ran = seen.map(_._1).filter(_.nonEmpty).toSet
+    assert(ran == fs.map(_.name).toSet, s"flows seen: $ran")
+    fs.foreach { f =>
+      val ops = seen.filter(_._1 == f.name).map(_._2)
+      val writes = ops.filter(_.kind != "read").map(_.table).toSet
+      val reads = ops.filter(_.kind == "read").map(_.table).toSet
+      assert(writes == f.writes.map(_.name).toSet, s"${f.name} wrote $writes")
+      assert(reads -- writes == f.reads.map(_.name).toSet, s"${f.name} read $reads")
+    }
+    val producer = fs.flatMap(f => f.writes.map(_.name -> f.name)).toMap
+    for ((f, r) <- seen if r.kind == "read"; p <- producer.get(r.table) if p != f) {
+      val written = seen.collect { case (`p`, w) if w.kind != "read" && w.table == r.table => w.endNs }
+      assert(written.nonEmpty && r.startNs >= written.max,
+        s"$f read ${r.table} before $p finished writing it")
+    }
+  }
+
+  private lazy val recorded = {
+    val l = new RecordingLake(spark, Files.createTempDirectory("flows_lake").toString)
+    val o = new Orchestrator(spark, l, factors, window = window, halfLife = 5.0)
+    val backfill = observe(l)(runAllOn(o))
+    val backfillRows = rawRows(l)
+    val closed = observe(l)(runAllDailyOn(o, Date.valueOf(yesterday.toLocalDate.plusDays(1))))
+    val daily = observe(l)(runAllDailyOn(o, yesterday))
+    (o, backfill, backfillRows, closed, daily, rawRows(l))
+  }
+
+  test("runAll / runAllDaily read and write exactly the tables each flow declares, " +
+      "each read after its producer's write; one pipelines.<flow> span per flow") {
+    val (o, (_, root, seen), _, (open, _, closedSeen), (ran, _, dailySeen), _) = recorded
+    val fs = declared(o, daily = false)
+    assertDeclared(fs, seen)
+    assert(seen.forall(_._1.nonEmpty), "a lake op outside every flow")
+    // one child span per flow (plus the drain); the flows carry every job
+    assert(root.children.map(_.name).sorted ==
+      (fs.map("pipelines." + _.name) :+ "trace.drain").sorted)
+    assert(root.self.jobs == 0 &&
+      root.children.map(_.total.jobs).sum == root.total.jobs && root.total.jobs > 0)
+    // daily: the calendar, the gate's one calendar read on the calling
+    // thread, then the declared DAG; a closed day rebuilds only the
+    // calendar and the universe
+    assert(ran && !open)
+    val dfs = declared(o, daily = true)
+    assertDeclared(dfs, dailySeen)
+    assertDeclared(dfs.filter(f => f.name == "calendar" || f.name == "universe"), closedSeen)
+    Seq(dailySeen, closedSeen).foreach(s =>
+      assert(s.filter(_._1.isEmpty).map(o => (o._2.kind, o._2.table)) == Seq(("read", "calendar"))))
+  }
+
+  test("runAll and runAllDaily leave every table raw-bit equal to the serial flow calls") {
+    val (serialBackfill, serialDaily) = serialRows
+    val (_, _, backfillRows, _, _, dailyRows) = recorded
+    Seq(backfillRows -> serialBackfill, dailyRows -> serialDaily).foreach { case (got, want) =>
+      assert(got.keySet == want.keySet)
+      want.foreach { case (t, rows) => assert(got(t) == rows, s"$t differs from the serial run") }
+    }
+  }
+
+  test("a failed flow: one payload with its own error, its dependents never start, " +
+      "and a healthy re-run converges to the serial rows") {
+    val l = new RecordingLake(spark, Files.createTempDirectory("fail_lake").toString)
+    val delivered = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val o = new Orchestrator(spark, l, factors, window = window, halfLife = 5.0,
+      onFlowFailure = Some(delivered.add(_)))
+    runAllOn(o)
+    l.failUpsertOf = Some(Catalog.idioVol.name)
+    val (e, root, seen) = observe(l)(intercept[UnsupportedOperationException] {
+      runAllDailyOn(o, yesterday)
+    })
+    assert(e.getMessage == "planted failure: upsert of idio_vol")
+    assert(delivered.size == 1)
+    val payload = delivered.peek()
+    assert(payload.contains("Flow Failed: daily_flow"))
+    assert(payload.contains("*Error Type:* `UnsupportedOperationException`"))
+    assert(payload.contains("planted failure: upsert of idio_vol"))
+    val started = root.children.map(_.name).toSet
+    assert(started("pipelines.factor_model"))
+    assert(!started("pipelines.reversal") && !started("pipelines.portfolio"), started)
+    assert(!seen.exists { case (f, op) => f == "reversal" || f == "portfolio" ||
+      (op.kind == "read" && Set("idio_vol", "alphas").contains(op.table)) })
+    l.failUpsertOf = None
+    assert(runAllDailyOn(o, yesterday))
+    val got = rawRows(l)
+    val want = serialRows._2
+    assert(got.keySet == want.keySet)
+    want.foreach { case (t, rows) => assert(got(t) == rows, s"$t differs from the serial run") }
+  }
+}
+
+object OrchestratorDailySpec {
+  /** One lake call: its kind, table, the calling thread's span id and its
+    * start and end (`System.nanoTime`). */
+  final case class Op(kind: String, table: String, span: String, startNs: Long, endNs: Long)
+
+  /** A lake that logs every table read and write, and can plant a failure
+    * in the upsert of one table. */
+  final class RecordingLake(spark: SparkSession, root: String) extends Lake(spark, root) {
+    val log = new java.util.concurrent.ConcurrentLinkedQueue[Op]()
+    @volatile var failUpsertOf: Option[String] = None
+
+    private def rec[T](kind: String, t: TableDef)(body: => T): T = {
+      val span = spark.sparkContext.getLocalProperty("graft.span")
+      val t0 = System.nanoTime()
+      try body finally log.add(Op(kind, t.name, span, t0, System.nanoTime()))
+    }
+    override def table(t: TableDef, keepVersion: Boolean): DataFrame =
+      rec("read", t)(super.table(t, keepVersion))
+    override def tableSlice(t: TableDef, partitions: Seq[String],
+        keepVersion: Boolean): DataFrame =
+      rec("read", t)(super.tableSlice(t, partitions, keepVersion))
+    override def latest(t: TableDef): DataFrame = rec("read", t)(super.latest(t))
+    override def create(t: TableDef, replace: Boolean): Boolean =
+      rec("create", t)(super.create(t, replace))
+    override def append(t: TableDef, df: DataFrame, version: Long): Unit =
+      rec("append", t)(super.append(t, df, version))
+    override def upsert(t: TableDef, df: DataFrame, version: Long,
+        partitions: Seq[String]): Unit = rec("upsert", t) {
+      if (failUpsertOf.contains(t.name))
+        throw new UnsupportedOperationException(s"planted failure: upsert of ${t.name}")
+      super.upsert(t, df, version, partitions)
     }
   }
 }

@@ -149,6 +149,24 @@ class QuantPipelineSpec extends SparkSpec {
       r.getAs[Double]("return"), r.getAs[Double]("m"), 1e-9)))
   }
 
+  test("benchmark: Σw·r per date is the same whatever the input partitioning") {
+    // 1 + 1e16 − 1e16 is 0 added in ticker order and 1 added in reverse
+    val rows = for (d <- dates.take(3);
+                    (t, r) <- Seq("A" -> 1.0, "B" -> 1e16, "C" -> -1e16))
+      yield (t, d, r)
+    val ur = rows.toDF("ticker", "date", "return")
+    val w = rows.map { case (t, d, _) => (t, d, 1.0) }.toDF("ticker", "date", "weight")
+    val layouts = Seq(
+      w.repartition(1).sortWithinPartitions($"ticker"),
+      w.repartition(1).sortWithinPartitions($"ticker".desc),
+      w.repartition(3),
+      w.repartition(2, $"ticker"))
+    val sums = layouts.map(l => Quant.benchmarkReturns(ur, l).collect()
+      .map(r => r.getDate(0) -> r.getDouble(1)).toMap)
+    sums.foreach(s => assert(s == sums.head, s"$s vs ${sums.head}"))
+    assert(sums.head.size == 3 && sums.head.values.forall(_ == 0.0), sums.head)
+  }
+
   test("betas: K=1 rolling OLS vs benchmark, EWM predicted, short dropped") {
     val br = Quant.benchmarkReturns(stockReturns,
       Quant.benchmarkWeights(stockReturns))

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.types._
 import graft.lake.{Lake, TableDef}
 import graft.obs.Trace
-import graft.queries.GateArms
+import graft.dag.GateArms
 
 /** The engine's span tracer: root counts equal the old serial job
   * profile's receipts, concurrent gate arms attribute to their own
