@@ -79,16 +79,19 @@ object Dedup {
     // the old global (id, h) distinct because h was already deduped
     // within each id, and hash parity is exact by construction
     // (DedupAnnSpec pins kernel ≡ the retired window form on empty/
-    // whitespace-only/short/duplicate-heavy docs). The n > 0 pre-filter
+    // whitespace-only/short/duplicate-heavy docs). The pre-filter
     // reproduces the old form's zero-token behavior (no token rows ⇒ no
     // shingle rows; the kernel alone would emit the all-sentinel
-    // partial) — the exact predicate the streaming twin uses.
+    // partial): a document has a token exactly when it has a byte outside
+    // the tokenizer's whitespace set (HT..CR and space,
+    // `WhitespaceTokens.isWs`), which a regex finds without building the
+    // token array.
     val hs = org.apache.spark.sql.GraftColumnBridge.column(
       graft.functions.ShingleHashes(
         org.apache.spark.sql.GraftColumnBridge.expression(col("__sh_text")),
         shingleSize))
     df.select(col(idCol).as("id"), col(textCol).as("__sh_text"))
-      .filter(size(graft.functions.TextFunctions.tokens(col("__sh_text"))) > 0)
+      .filter(col("__sh_text").rlike("[^\\x09-\\x0D\\x20]"))
       .select(col("id"), explode(hs).as("h"))
   }
 

@@ -37,11 +37,19 @@ final case class TableDef(
   *  - [[optimize]] is the same rule as a maintenance op over what
   *    [[append]] left on disk (the stores' delta tables).
   *
+  * Reads resolve against the declared schema (plus `__version`), never
+  * by inference: no footer-reading schema job runs per read, every read
+  * of a table has the same columns (data columns in declared order, then
+  * the partition keys), and a file column whose type differs from the
+  * declared one fails the read instead of changing the frame's type.
+  *
   * Crash semantics: every rewrite lands in a tmp directory first and is
-  * swapped in by renames that move the old data ASIDE (`<t>__old`) before
+  * swapped in by renames that move the old data ASIDE (`<t>__old`, or
+  * `<t>/<key>=<value>__old` for one partition of a scoped upsert) before
   * the new data moves in. A failure before the swap leaves the old table
-  * unchanged; a crash between the two renames leaves only `<t>__old`,
-  * which every write and [[exists]] restore before they look at `<t>`.
+  * unchanged; a crash between the two renames leaves only the `__old`
+  * copy, which every write and [[exists]] restore before they look at
+  * `<t>` ([[recover]]).
   *
   * Every public table operation is a [[Trace.span]] named `lake.<op>` and
   * tagged with its table (`create(t, replace = true)` is a `lake.replace`).
@@ -71,16 +79,32 @@ class Lake(spark: SparkSession, root: String) {
 
   /** Recover on open: a crash between [[swapInto]]'s two renames leaves
     * only `<name>__old`, the sole surviving copy. Move it back before
-    * anything reads `<name>` as missing (and seeds or swaps over it). */
+    * anything reads `<name>` as missing (and seeds or swaps over it).
+    * Inside the table the same holds per partition: a scoped upsert's
+    * `<key>=<value>__old` is moved back when its live directory is
+    * missing, and deleted when the swap's second rename already landed. */
   private def recover(name: String): Unit = {
     val dst = new Path(path(name))
-    val aside = new Path(path(name) + "__old")
-    if (!fs.exists(dst) && fs.exists(aside) && !fs.rename(aside, dst))
-      throw new java.io.IOException(s"recover: failed to restore $aside")
+    restore(new Path(path(name) + "__old"), dst)
+    if (fs.exists(dst)) fs.listStatus(dst).map(_.getPath)
+      .filter(p => p.getName.contains("=") && p.getName.endsWith("__old"))
+      .foreach(p => restore(p, new Path(dst, p.getName.stripSuffix("__old"))))
   }
+
+  /** Move the aside copy `aside` back to `live` if `live` is missing;
+    * otherwise it is a stale copy and is deleted. */
+  private def restore(aside: Path, live: Path): Unit =
+    if (fs.exists(aside)) {
+      if (fs.exists(live)) fs.delete(aside, true)
+      else if (!fs.rename(aside, live))
+        throw new java.io.IOException(s"recover: failed to restore $aside")
+    }
 
   /** Declared schema plus the hidden version column. */
   private def stored(t: TableDef) = t.schema.add(VERSION, LongType)
+
+  /** A reader of `t`'s files against its declared schema. */
+  private def reader(t: TableDef) = spark.read.schema(stored(t))
 
   private def empty(schema: StructType) =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -120,12 +144,12 @@ class Lake(spark: SparkSession, root: String) {
   /** Read a table (hidden version column dropped unless `keepVersion` —
     * delta consumers that reconcile against per-row versions, e.g.
     * tombstone filtering, need it). Empty tables (created but never
-    * appended — parquet leaves no data files) resolve to an empty frame
-    * with the declared schema. */
+    * appended — parquet leaves no data files) read as an empty frame with
+    * the declared schema, and so does a missing table. */
   def table(t: TableDef, keepVersion: Boolean = false): DataFrame =
     span("read", t.name) {
       try {
-        val df = spark.read.parquet(path(t.name))
+        val df = reader(t).parquet(path(t.name))
         if (keepVersion) df else df.drop(VERSION)
       } catch {
         case _: org.apache.spark.sql.AnalysisException =>
@@ -146,7 +170,7 @@ class Lake(spark: SparkSession, root: String) {
     val existing = partDirs(t, partitions)
     if (existing.isEmpty) empty(if (keepVersion) stored(t) else t.schema)
     else {
-      val df = spark.read.option("basePath", path(t.name)).parquet(existing: _*)
+      val df = reader(t).option("basePath", path(t.name)).parquet(existing: _*)
       if (keepVersion) df else df.drop(VERSION)
     }
   }
@@ -175,7 +199,7 @@ class Lake(spark: SparkSession, root: String) {
   def latest(t: TableDef): DataFrame = span("read", t.name) {
     require(t.primaryKeys.nonEmpty, s"${t.name}: latest() needs primary keys")
     val read =
-      try Some(spark.read.parquet(path(t.name)))
+      try Some(reader(t).parquet(path(t.name)))
       catch { case _: org.apache.spark.sql.AnalysisException => None }
     read.fold(empty(t.schema))(Lake.newestPerKey(_, t.primaryKeys).drop(VERSION))
   }
@@ -190,7 +214,7 @@ class Lake(spark: SparkSession, root: String) {
       require(t.primaryKeys.nonEmpty, s"${t.name}: optimize needs primary keys")
       val dirs = if (partitions.isEmpty) Seq(path(t.name)) else partDirs(t, partitions)
       if (dirs.nonEmpty)
-        compact(t, spark.read.option("basePath", path(t.name)).parquet(dirs: _*), partitions)
+        compact(t, reader(t).option("basePath", path(t.name)).parquet(dirs: _*), partitions)
     }
 
   /** Upsert as ONE merge-write: [[Lake.newestPerKey]] over the existing
@@ -228,7 +252,7 @@ class Lake(spark: SparkSession, root: String) {
     val scope = if (present) partitions.distinct else Nil
     val dirs = if (!present) Nil
       else if (scope.isEmpty) Seq(path(t.name)) else partDirs(t, scope)
-    compact(t, if (dirs.isEmpty) incoming else spark.read.schema(stored(t))
+    compact(t, if (dirs.isEmpty) incoming else reader(t)
       .option("basePath", path(t.name)).parquet(dirs: _*)
       .select(cols: _*).unionByName(incoming), scope)
   }

@@ -21,6 +21,11 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * memory per task is O(window·K), independent of series length. This is
   * the idiomatic Spark shape for a per-key ordered state machine; it
   * parallelizes across entities, which is the natural axis (500-500k keys).
+  *
+  * [[smoothedFit]] is the factor model and betas on the same buffer and
+  * [[fit]]: the fit, the loadings' EWMs and the residual's rolling std +
+  * EWM in that one pass, raw-bit equal to the window composition of
+  * [[rollingOls]] with Spark's window functions.
   */
 object RollingOls {
 
@@ -63,7 +68,7 @@ object RollingOls {
     * oldest row sits at slot n % window. Logical order makes the float
     * summation independent of the circular offset, which is what lets the
     * chunked and unchunked paths below produce bitwise-identical fits. */
-  private def fit(buf: Array[Array[Double]], n: Int, window: Int,
+  private[graft] def fit(buf: Array[Array[Double]], n: Int, window: Int,
       p: Int): Array[Double] = {
     val xtx = Array.ofDim[Double](p, p)
     val xty = new Array[Double](p)
@@ -178,6 +183,145 @@ object RollingOls {
         Row.fromSeq(r.toSeq ++ extra)
       }
     }(Encoders.row(outSchema))
+  }
+
+  /** The factor model's one pass: per `key`, the exact window fit of
+    * [[rollingOls]] (same buffer, same [[fit]]), each loading's EWM and
+    * the residual's rolling std + EWM, streamed in `order` after ONE
+    * exchange on `key` — no count window, no unpivot, no second window
+    * pass. Outputs are raw-bit equal to the composition they replace
+    * (`Quant.factorModelComposed` / `Quant.betasComposed`):
+    *  - a key with fewer than `window` rows, nulls included, emits nothing
+    *    (its first `window − 1` output rows are held until the count is
+    *    known, so memory stays O(window·K) per task);
+    *  - the EWMs are [[graft.functions.EwmMeanExpr]]'s recurrence: a null
+    *    input only decays the weights;
+    *  - the rolling std is `stddev_samp` over the trailing `window` rows,
+    *    null unless all of them hold a residual, summed oldest → newest
+    *    with Spark's (n, avg, m2) update, as its sliding window frame does.
+    *
+    * Output: `key`, `order`, one column per factor named after it (the
+    * loading's EWM), then `idio_vol` (the std's EWM). With `fittedOnly`
+    * (the betas form) only rows with a fit are emitted, the EWMs run over
+    * those rows alone — the composition's filter-then-window order — and
+    * the raw loadings `b_<f>` take `idio_vol`'s place. */
+  private[graft] def smoothedFit(
+      df: DataFrame,
+      key: String,
+      order: String,
+      yCol: String,
+      factorCols: Seq[String],
+      window: Int,
+      halfLife: Double,
+      fittedOnly: Boolean): DataFrame = {
+    require(window >= 1, s"window ($window) must be ≥ 1")
+    val k = factorCols.length
+    val p = k + 1
+    val in = df.select((Seq(key, order, yCol) ++ factorCols).map(col): _*)
+    def double(name: String) = StructField(name, DoubleType, nullable = true)
+    val outSchema = StructType(Seq(in.schema(key), in.schema(order)) ++
+      factorCols.map(double) ++
+      (if (fittedOnly) factorCols.map(f => double(s"b_$f")) else Seq(double("idio_vol"))))
+    val decay = math.pow(2.0, -1.0 / halfLife) // EwmMeanExpr's literal
+    in.repartition(col(key)).sortWithinPartitions(col(key), col(order))
+      .mapPartitions { rows =>
+        var curKey: Any = null
+        val buf = Array.ofDim[Double](window, p + 1)
+        var n = 0 // valid rows in the fit buffer
+        var seen = 0 // rows of the key, nulls included
+        val pending = new scala.collection.mutable.ArrayBuffer[Row](window)
+        val num = new Array[Double](k)
+        val den = new Array[Double](k)
+        // trailing residuals, slot = row index % window
+        val res = new Array[Double](window)
+        val resOk = new Array[Boolean](window)
+        var resCount = 0 // non-null residuals among the trailing rows
+        var volNum = 0.0
+        var volDen = 0.0
+        rows.flatMap { r =>
+          val rk = r.get(0)
+          if (rk != curKey) {
+            curKey = rk; n = 0; seen = 0; pending.clear()
+            java.util.Arrays.fill(num, 0.0); java.util.Arrays.fill(den, 0.0)
+            java.util.Arrays.fill(resOk, false); resCount = 0
+            volNum = 0.0; volDen = 0.0
+          }
+          val idx = seen
+          seen += 1
+          var valid = !r.isNullAt(2)
+          var j = 0
+          while (j < k) { valid &&= !r.isNullAt(3 + j); j += 1 }
+          var coefs: Array[Double] = null
+          var residual = 0.0
+          if (valid) {
+            val slot = buf(n % window)
+            slot(0) = r.getDouble(2)
+            slot(1) = 1.0
+            j = 0
+            while (j < k) { slot(2 + j) = r.getDouble(3 + j); j += 1 }
+            n += 1
+            if (n >= window) {
+              coefs = fit(buf, n, window, p)
+              var yhat = coefs(0)
+              j = 0
+              while (j < k) { yhat += coefs(1 + j) * slot(2 + j); j += 1 }
+              residual = slot(0) - yhat
+            }
+          }
+          val fitted = coefs != null
+          val emitted = if (fittedOnly && !fitted) None else {
+            val out = new Array[Any](outSchema.length)
+            out(0) = rk
+            out(1) = r.get(1)
+            j = 0
+            while (j < k) {
+              val x = if (fitted) coefs(1 + j) else 0.0
+              num(j) = num(j) * decay + x
+              den(j) = den(j) * decay + (if (fitted) 1.0 else 0.0)
+              if (den(j) > 0.0) out(2 + j) = num(j) / den(j)
+              if (fittedOnly) out(2 + k + j) = x
+              j += 1
+            }
+            if (!fittedOnly) {
+              val slot = idx % window
+              if (resOk(slot)) resCount -= 1
+              resOk(slot) = fitted
+              res(slot) = residual
+              if (fitted) resCount += 1
+              val full = resCount == window && window > 1
+              var vol = 0.0
+              if (full) {
+                // stddev_samp's update over the frame, oldest → newest
+                var cnt = 0.0; var avg = 0.0; var m2 = 0.0
+                var b = 1
+                while (b <= window) {
+                  val x = res((idx + b) % window)
+                  val newN = cnt + 1.0
+                  val delta = x - avg
+                  val deltaN = delta / newN
+                  avg = avg + deltaN
+                  m2 = m2 + delta * (delta - deltaN)
+                  cnt = newN
+                  b += 1
+                }
+                vol = math.sqrt(m2 / (cnt - 1.0))
+              }
+              volNum = volNum * decay + vol
+              volDen = volDen * decay + (if (full) 1.0 else 0.0)
+              if (volDen > 0.0) out(2 + k) = volNum / volDen
+            }
+            Some(Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(out)))
+          }
+          // a key's first window − 1 rows wait until it proves eligible
+          if (seen < window) { pending ++= emitted; Iterator.empty }
+          else if (seen == window) {
+            pending ++= emitted
+            val held = pending.toList
+            pending.clear()
+            held.iterator
+          } else emitted.iterator
+        }
+      }(Encoders.row(outSchema))
   }
 
   /** Scalable per-key 0-based row index — `__vrn` — WITHOUT a

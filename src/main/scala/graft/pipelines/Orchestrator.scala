@@ -28,11 +28,13 @@ final case class TradingRun(
   * table reads and writes ([[Orchestrator.Flow]]): a flow starts, on its
   * own driver thread and inside a `pipelines.<flow>` [[graft.obs.Trace]]
   * span, once every flow that writes a table it reads has finished, so
-  * the three branches after returns (factor model → reversal, factor
+  * the branches after returns (factor model, signals → scores, factor
   * covariances, benchmark → betas) and the calendar → universe chain run
-  * beside each other ([[graft.dag.GateArms]]). The first flow to fail is
-  * rethrown with its own exception; flows still running are cancelled and
-  * a flow whose input's producer failed never starts.
+  * beside each other ([[graft.dag.GateArms]]); only the alpha join waits
+  * for both the factor model's idio vol and the scores. The critical path
+  * is prices → returns → factor model → alphas → portfolio. The first
+  * flow to fail is rethrown with its own exception; flows still running
+  * are cancelled and a flow whose input's producer failed never starts.
   *
   * External ingestion (brokerage bars, Wikipedia constituents, NYSE
   * calendar) arrives as staged DataFrames — the engine's contract starts at
@@ -74,10 +76,11 @@ class Orchestrator(
         throw e
     }
 
-  /** calendar_flow: replace-mode calendar table. */
+  /** calendar_flow: replace-mode calendar table. Like every replace-mode
+    * table (universe, returns), one [[Lake.replace]] write: the new rows
+    * are staged before the old table moves aside, with no seed write. */
   def runCalendar(calendarDates: DataFrame): Unit = {
-    lake.create(Catalog.calendar, replace = true)
-    lake.append(Catalog.calendar, calendarDates.select($"date"))
+    lake.replace(Catalog.calendar, calendarDates.select($"date"))
     calCache = None // the scalars below derive from the table just rewritten
   }
 
@@ -117,10 +120,8 @@ class Orchestrator(
 
   /** universe_flow: membership reconstruction from the change log. */
   def runUniverse(currentConstituents: DataFrame, changes: DataFrame): Unit = {
-    val uni = Universe.reconstruct(currentConstituents, changes,
-      lake.table(Catalog.calendar))
-    lake.create(Catalog.universe, replace = true)
-    lake.append(Catalog.universe, uni)
+    lake.replace(Catalog.universe, Universe.reconstruct(currentConstituents, changes,
+      lake.table(Catalog.calendar)))
   }
 
   /** stock/etf price ingestion: upsert staged bars. */
@@ -132,21 +133,22 @@ class Orchestrator(
 
   /** returns_flow: replace-mode simple returns. */
   def runReturns(): Unit = {
-    val sr = Quant.materializeReturns(lake.table(Catalog.stockPrices))
-    val er = Quant.materializeReturns(lake.table(Catalog.etfPrices))
-    lake.create(Catalog.stockReturns, replace = true)
-    lake.append(Catalog.stockReturns, sr)
-    lake.create(Catalog.etfReturns, replace = true)
-    lake.append(Catalog.etfReturns, er)
+    lake.replace(Catalog.stockReturns, Quant.materializeReturns(lake.table(Catalog.stockPrices)))
+    lake.replace(Catalog.etfReturns, Quant.materializeReturns(lake.table(Catalog.etfPrices)))
   }
 
-  /** factor_model_flow: loadings + idio vol. */
+  /** factor_model_flow: loadings + idio vol, both projections of one
+    * per-ticker pass ([[Quant.factorFit]]), cached for the two upserts:
+    * against refitting for each, that measured 3 jobs fewer and a shorter
+    * flow for about 1 s more task cpu (BASELINE.md "Critical path"). */
   def runFactorModel(): Unit = {
-    val (loadings, idio) = Quant.factorModel(
+    val fit = Quant.factorFit(
       lake.table(Catalog.stockReturns), lake.table(Catalog.etfReturns),
-      factors, window, halfLife)
-    lake.upsert(Catalog.factorLoadings, loadings)
-    lake.upsert(Catalog.idioVol, idio)
+      factors, window, halfLife).cache()
+    try {
+      lake.upsert(Catalog.factorLoadings, Quant.factorLoadings(fit, factors))
+      lake.upsert(Catalog.idioVol, Quant.idioVol(fit))
+    } finally fit.unpersist()
   }
 
   /** factor_covariances_flow. */
@@ -154,19 +156,26 @@ class Orchestrator(
     lake.upsert(Catalog.factorCovariances,
       Quant.factorCovariances(lake.table(Catalog.etfReturns), window, halfLife))
 
-  /** reversal_flow: signal → score → alpha chain. Scoring filters to the
+  /** reversal_flow: signal → score → alpha chain ([[runSignals]], then
+    * [[runAlphas]]). */
+  def runReversal(): Unit = {
+    runSignals()
+    runAlphas()
+  }
+
+  /** reversal_flow's signal and score steps. Scoring filters to the
     * reversal signal rows — the signals table's PK includes the signal name
     * so other signals can coexist without contaminating this z-score. */
-  def runReversal(): Unit = {
-    val signals = Quant.reversalSignals(lake.table(Catalog.stockReturns))
-    lake.upsert(Catalog.signals, signals)
-    val scores = Quant.reversalScores(
-      lake.table(Catalog.signals).filter($"signal" === "reversal"))
-    lake.upsert(Catalog.scores, scores)
-    val alphas = Quant.reversalAlphas(
-      lake.table(Catalog.scores), lake.table(Catalog.idioVol), ic)
-    lake.upsert(Catalog.alphas, alphas)
+  def runSignals(): Unit = {
+    lake.upsert(Catalog.signals, Quant.reversalSignals(lake.table(Catalog.stockReturns)))
+    lake.upsert(Catalog.scores, Quant.reversalScores(
+      lake.table(Catalog.signals).filter($"signal" === "reversal")))
   }
+
+  /** reversal_flow's alpha step: the only one that needs idio vol. */
+  def runAlphas(): Unit =
+    lake.upsert(Catalog.alphas, Quant.reversalAlphas(
+      lake.table(Catalog.scores), lake.table(Catalog.idioVol), ic))
 
   /** benchmark_flow: universe-gated equal-weight benchmark. The left join
     * KEEPS members with a missing return (reference get_universe_returns) —
@@ -468,8 +477,17 @@ class Orchestrator(
   /** The DAG's flows and what each declares it reads and writes; the
     * daily forms (`daily = Some(yesterday)`) replace the backfill bodies
     * where the reference has a *_daily_flow. A flow may re-read a table
-    * it writes (reversal reads back its signals and scores); only reads
-    * of another flow's tables order it. */
+    * it writes (signals reads back its signals); only reads of another
+    * flow's tables order it.
+    *
+    * The backfill splits reversal_flow in two: `signals` (signals →
+    * scores, from stock returns alone) runs beside `factor_model`, and
+    * only `reversal` (the alpha join) waits for idio vol, which keeps the
+    * signal chain off the DAG's critical path. The daily chain keeps one
+    * `reversal` flow ([[runReversalDaily]]): its alphas join the
+    * in-memory one-date scores, because a lake read of `scores` at the end
+    * date would also return backfill rows for tickers the 21-day slice
+    * cannot score. */
   private[graft] def flows(
       daily: Option[java.sql.Date],
       calendarDates: DataFrame,
@@ -481,6 +499,14 @@ class Orchestrator(
     import Orchestrator.Flow
     def either(backfill: => Unit)(day: java.sql.Date => Any): () => Unit =
       () => daily.fold(backfill)(d => { day(d); () })
+    val reversal = daily match {
+      case None => Seq(
+        Flow("signals", Seq(stockReturns), Seq(signals, scores), () => runSignals()),
+        Flow("reversal", Seq(scores, idioVol), Seq(alphas), () => runAlphas()))
+      case Some(d) => Seq(
+        Flow("reversal", Seq(stockReturns, idioVol), Seq(signals, scores, alphas),
+          () => runReversalDaily(d)))
+    }
     Seq(
       Flow("calendar", Nil, Seq(calendar), () => runCalendar(calendarDates)),
       Flow("universe", Seq(calendar), Seq(universe),
@@ -492,9 +518,8 @@ class Orchestrator(
       Flow("factor_model", Seq(stockReturns, etfReturns), Seq(factorLoadings, idioVol),
         either(runFactorModel())(runFactorModelDaily)),
       Flow("factor_covariances", Seq(etfReturns), Seq(factorCovariances),
-        either(runFactorCovariances())(runFactorCovariancesDaily)),
-      Flow("reversal", Seq(stockReturns, idioVol), Seq(signals, scores, alphas),
-        either(runReversal())(runReversalDaily(_))),
+        either(runFactorCovariances())(runFactorCovariancesDaily))
+    ) ++ reversal ++ Seq(
       Flow("benchmark", Seq(universe, stockReturns), Seq(benchmarkWeights, benchmarkReturns),
         either(runBenchmark())(runBenchmarkDaily)),
       Flow("betas", Seq(stockReturns, benchmarkReturns), Seq(betas),

@@ -14,8 +14,8 @@ import graft.ops.{RollingOls, TimeSeries}
   * Outputs that only feed a lake upsert are left unsorted: the upsert's
   * merge re-partitions on the primary key, so a global sort there would be
   * a sampling job and a range shuffle whose order nothing keeps. Frames
-  * written by replace + append (returns) keep their sort, which sets the
-  * files' row order.
+  * written by a replace (returns) keep their sort, which sets the files'
+  * row order.
   *
   * Citations: /root/reference/pipelines/{returns,factor_model,
   * factor_covariances,reversal,benchmark,betas}_flow.py.
@@ -45,6 +45,8 @@ object Quant {
     *    smoothed per (ticker, factor) — leading nulls ride through;
     *  - idio_vol = rolling_std(residual, window) then EWM(hl=60) per ticker.
     *
+    * Both are projections of one per-ticker pass ([[factorFit]]).
+    *
     * @return (factorLoadings(ticker,date,year,factor,loading),
     *          idioVol(ticker,date,year,idio_vol))
     */
@@ -54,15 +56,56 @@ object Quant {
       factors: Seq[String],
       window: Int,
       halfLife: Double = 60.0): (DataFrame, DataFrame) = {
+    val fit = factorFit(stockReturns, etfReturns, factors, window, halfLife)
+    (factorLoadings(fit, factors), idioVol(fit))
+  }
+
+  /** The factor model's one pass ([[RollingOls.smoothedFit]]) over the
+    * panel: per ticker and date, each factor's smoothed loading (a column
+    * named after the factor) and `idio_vol`. */
+  def factorFit(
+      stockReturns: DataFrame,
+      etfReturns: DataFrame,
+      factors: Seq[String],
+      window: Int,
+      halfLife: Double = 60.0): DataFrame =
+    RollingOls.smoothedFit(factorPanel(stockReturns, etfReturns, factors),
+      "ticker", "date", "return", factors, window, halfLife, fittedOnly = false)
+
+  /** [[factorFit]]'s loadings in long form. */
+  def factorLoadings(fit: DataFrame, factors: Seq[String]): DataFrame =
+    fit.unpivot(Array(col("ticker"), col("date")), factors.map(col).toArray,
+        "factor", "loading")
+      .select(col("ticker"), col("date"), year(col("date")).as("year"),
+        col("factor"), col("loading"))
+
+  /** [[factorFit]]'s idio vol. */
+  def idioVol(fit: DataFrame): DataFrame =
+    fit.select(col("ticker"), col("date"), year(col("date")).as("year"), col("idio_vol"))
+
+  /** J2: panel × wide factor returns (small: dates × K — broadcast). */
+  private def factorPanel(stockReturns: DataFrame, etfReturns: DataFrame,
+      factors: Seq[String]): DataFrame = {
+    val wide = etfReturns.groupBy(col("date"))
+      .pivot("ticker", factors).agg(first(col("return")))
+    stockReturns.select(col("ticker"), col("date"), col("return"))
+      .join(broadcast(wide), Seq("date"), "left")
+  }
+
+  /** [[factorModel]] as the window composition it replaced: a count
+    * window, [[RollingOls.rollingOls]], an unpivot with an EWM window per
+    * (ticker, factor), and a rolling std + EWM window per ticker. Kept as
+    * the reference the one-pass operator is tested against. */
+  private[graft] def factorModelComposed(
+      stockReturns: DataFrame,
+      etfReturns: DataFrame,
+      factors: Seq[String],
+      window: Int,
+      halfLife: Double = 60.0): (DataFrame, DataFrame) = {
     val s = stockReturns.sparkSession
     import s.implicits._
     GraftFunctions.register(s)
-
-    // J2: panel × wide factor returns (small: dates × K — broadcast).
-    val wide = etfReturns.groupBy($"date")
-      .pivot("ticker", factors).agg(first($"return"))
-    val panel = stockReturns.select($"ticker", $"date", $"return")
-      .join(broadcast(wide), Seq("date"), "left")
+    val panel = factorPanel(stockReturns, etfReturns, factors)
 
     // drop short tickers (reference drops them from the output entirely)
     val cnt = Window.partitionBy($"ticker")
@@ -200,8 +243,29 @@ object Quant {
   /** betas_flow.py:14-72: per-ticker rolling single-factor OLS beta vs the
     * benchmark (K=1 → the exact RollingOLS kernel, same as the closed
     * covar/var form), short tickers dropped, null betas dropped, EWM(hl=60)
-    * predicted beta. */
+    * predicted beta over the rows that have a beta — the factor model's
+    * one pass with K = 1 ([[RollingOls.smoothedFit]], `fittedOnly`). */
   def betas(
+      stockReturns: DataFrame,
+      benchmarkReturns: DataFrame,
+      window: Int,
+      halfLife: Double = 60.0): DataFrame =
+    RollingOls.smoothedFit(betaPanel(stockReturns, benchmarkReturns),
+        "ticker", "date", "return", Seq("benchmark_return"), window, halfLife,
+        fittedOnly = true)
+      .select(col("ticker"), col("date"), year(col("date")).as("year"),
+        col("b_benchmark_return").as("historical_beta"),
+        col("benchmark_return").as("predicted_beta"))
+
+  private def betaPanel(stockReturns: DataFrame, benchmarkReturns: DataFrame): DataFrame =
+    stockReturns.select(col("ticker"), col("date"), col("return"))
+      .join(broadcast(benchmarkReturns
+        .select(col("date"), col("return").as("benchmark_return"))), Seq("date"), "left")
+
+  /** [[betas]] as the window composition it replaced (count window,
+    * [[RollingOls.rollingOls]], null filter, EWM window); the reference the
+    * one-pass operator is tested against. */
+  private[graft] def betasComposed(
       stockReturns: DataFrame,
       benchmarkReturns: DataFrame,
       window: Int,
@@ -209,9 +273,7 @@ object Quant {
     val s = stockReturns.sparkSession
     import s.implicits._
     GraftFunctions.register(s)
-    val joined = stockReturns.select($"ticker", $"date", $"return")
-      .join(broadcast(benchmarkReturns
-        .select($"date", $"return".as("benchmark_return"))), Seq("date"), "left")
+    val joined = betaPanel(stockReturns, benchmarkReturns)
     val cnt = Window.partitionBy($"ticker")
     val eligible = joined.withColumn("__n", count(lit(1)).over(cnt))
       .filter($"__n" >= window).drop("__n")

@@ -7,8 +7,9 @@ import org.apache.spark.sql.types._
 
 /** Lake layer: create modes, append, PK-dedup optimize (global and
   * partition-scoped), version-wins upsert semantics, the one-write
-  * merge upsert (scope, failure and empty-input cases) and recovery of a
-  * half-swapped table. */
+  * merge upsert (scope, failure and empty-input cases), recovery of a
+  * half-swapped table or partition, and reads against the declared
+  * schema. */
 class LakeSpec extends SparkSpec {
   import spark.implicits._
 
@@ -221,5 +222,79 @@ class LakeSpec extends SparkSpec {
     assert(rows(lake.table(prices)) == Seq(("A", "2024-01-02", 2024, 10.0),
       ("B", "2024-01-02", 2024, 20.0), ("C", "2024-01-03", 2024, 30.0)))
     assert(!new java.io.File(lake.path("prices") + "__old").exists())
+  }
+
+  test("a half-swapped partition (only <t>/year=Y__old left) is restored " +
+      "before the next scoped upsert; a stale copy beside its live one is dropped") {
+    val lake = freshLake
+    lake.upsert(prices, batch(("A", "2023-06-01", 2023, 1.0),
+      ("A", "2024-01-02", 2024, 10.0)), version = 1L)
+    // a crash inside a scoped upsert's swap: year=2024 moved aside, its new
+    // data never moved in
+    def part(name: String) = new java.io.File(lake.path("prices"), name)
+    assert(part("year=2024").renameTo(part("year=2024__old")))
+    lake.upsert(prices, batch(("B", "2024-01-03", 2024, 5.0)), version = 2L,
+      partitions = Seq("year=2024"))
+    val want = Seq(("A", "2023-06-01", 2023, 1.0), ("A", "2024-01-02", 2024, 10.0),
+      ("B", "2024-01-03", 2024, 5.0))
+    assert(rows(lake.table(prices)) == want)
+    assert(!part("year=2024__old").exists())
+    // a crash after the swap's second rename: the aside copy is stale
+    org.apache.commons.io.FileUtils.copyDirectory(part("year=2023"), part("year=2023__old"))
+    assert(lake.exists("prices"))
+    assert(!part("year=2023__old").exists())
+    assert(rows(lake.table(prices)) == want)
+  }
+
+  test("reads resolve against the declared schema: seed-only and missing " +
+      "tables as before, a file column of another type fails the read") {
+    val lake = freshLake
+    // missing: the declared columns, in declared order, no rows
+    assert(lake.table(prices).columns.toSeq == Seq("ticker", "date", "year", "close"))
+    assert(lake.table(prices).isEmpty && lake.latest(prices).isEmpty &&
+      lake.tableSlice(prices, Seq("year=2024")).isEmpty)
+    // seed-only: the same, and the version column on request
+    lake.create(prices)
+    assert(lake.table(prices).columns.toSeq == Seq("ticker", "date", "year", "close"))
+    assert(lake.table(prices, keepVersion = true).columns.toSeq ==
+      Seq("ticker", "date", "year", "close", "__version"))
+    assert(lake.table(prices).isEmpty && lake.latest(prices).isEmpty)
+    // with rows: data columns in declared order, then the partition key
+    lake.upsert(prices, batch(("A", "2024-01-02", 2024, 10.0)), version = 1L)
+    assert(lake.table(prices).columns.toSeq == Seq("ticker", "date", "close", "year"))
+    assert(lake.tableSlice(prices, Seq("year=2024")).columns.toSeq ==
+      Seq("ticker", "date", "close", "year"))
+    // a table whose only file has `close` as a string: inference would read
+    // a string column; against the declared double the read must fail
+    val bad = freshLake
+    Seq(("B", "2024-01-03", "12.5", 2L)).toDF("ticker", "date", "close", "__version")
+      .write.parquet(bad.path("prices") + "/year=2025")
+    val e = intercept[Exception](bad.table(prices).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("close")), e.toString)
+  }
+
+  test("after runAll every Catalog table reads with the declared columns: " +
+      "data columns in declared order, then the partition keys") {
+    import graft.lake.Catalog
+    val lake = freshLake
+    val ds = (0 until 30).map(i => java.sql.Date.valueOf(
+      java.time.LocalDate.of(2024, 3, 4).plusDays(i.toLong)))
+    def bars(ts: Seq[String]) = (for (t <- ts; (d, i) <- ds.zipWithIndex) yield {
+      val c = 50.0 + t.length + math.sin(i + t.hashCode % 7)
+      (t, d, c, c, c, c, 1e6, 1e3, c)
+    }).toDF("ticker", "date", "open", "high", "low", "close", "volume", "trade_count", "vwap")
+    new graft.pipelines.Orchestrator(spark, lake, Seq("SPY"), window = 5, halfLife = 5.0)
+      .runAll(ds.toDF("date"), Seq("AA", "BB", "CC").toDF("ticker"),
+        Seq.empty[(java.sql.Date, String, String)].toDF("effective_date", "ticker", "action"),
+        bars(Seq("AA", "BB", "CC")), bars(Seq("SPY")))
+    Catalog.all.foreach { t =>
+      val cols = t.schema.fieldNames.toSeq
+      val want = cols.filterNot(t.partitionKeys.contains) ++ t.partitionKeys
+      assert(lake.exists(t.name) == (t != Catalog.portfolioHistory), t.name)
+      // a missing table keeps the declared order, as before
+      assert(lake.table(t).columns.toSeq == (if (lake.exists(t.name)) want else cols), t.name)
+    }
+    assert(lake.table(Catalog.universe).columns.toSeq == Seq("date", "ticker", "year"))
   }
 }

@@ -24,6 +24,7 @@ import graft.pipelines.Orchestrator
   *    the lake it left, and the re-run leaves the same rows;
   *  - the concurrent `runAll` / `runAllDaily` read and write exactly what
   *    each flow declares, read a table only after its producer wrote it,
+  *    run no Spark job inside a lake read,
   *    and leave every table raw-bit equal to the serial composition of
   *    the public flow calls; a failed flow delivers one payload with its
   *    own error, its dependents never start, and a healthy re-run
@@ -335,10 +336,13 @@ class OrchestratorDailySpec extends SparkSpec {
     val first = snapshot()
     val again = run()
     val second = snapshot()
-    // measured at the one-write upsert: 99 and 106 jobs (create + append +
-    // optimize upserts took 165 and 152)
-    assert(fresh.total.jobs <= 99, s"fresh runAll: ${fresh.total.jobs} jobs")
-    assert(again.total.jobs <= 106, s"re-run runAll: ${again.total.jobs} jobs")
+    info(s"runAll jobs: fresh ${fresh.total.jobs}, re-run ${again.total.jobs}")
+    // measured 73 and 77 jobs with the one-pass factor model, schema-declared
+    // reads and one write per replace-mode table (the one-write upsert took
+    // 99 and 106, create + append + optimize upserts 165 and 152); the
+    // margin of 3 covers adaptive-execution jobs that vary between runs
+    assert(fresh.total.jobs <= 76, s"fresh runAll: ${fresh.total.jobs} jobs")
+    assert(again.total.jobs <= 80, s"re-run runAll: ${again.total.jobs} jobs")
     assert(first.keySet == second.keySet && first.size == Catalog.all.size - 1)
     first.foreach { case (name, (n, rows)) =>
       val (n2, rows2) = second(name)
@@ -450,7 +454,7 @@ class OrchestratorDailySpec extends SparkSpec {
 
   test("runAll / runAllDaily read and write exactly the tables each flow declares, " +
       "each read after its producer's write; one pipelines.<flow> span per flow") {
-    val (o, (_, root, seen), _, (open, _, closedSeen), (ran, _, dailySeen), _) = recorded
+    val (o, (_, root, seen), _, (open, _, closedSeen), (ran, dailyRoot, dailySeen), _) = recorded
     val fs = declared(o, daily = false)
     assertDeclared(fs, seen)
     assert(seen.forall(_._1.nonEmpty), "a lake op outside every flow")
@@ -459,6 +463,13 @@ class OrchestratorDailySpec extends SparkSpec {
       (fs.map("pipelines." + _.name) :+ "trace.drain").sorted)
     assert(root.self.jobs == 0 &&
       root.children.map(_.total.jobs).sum == root.total.jobs && root.total.jobs > 0)
+    // a read only plans: it resolves against the declared schema, so no
+    // schema-inference job runs on the flow's thread
+    Seq(root, dailyRoot).foreach { r =>
+      val reads = r.walk.filter(_.name == "lake.read").toSeq
+      assert(reads.nonEmpty && reads.forall(_.total.jobs == 0),
+        s"lake.read spans with jobs: ${reads.filter(_.total.jobs > 0).map(_.tag)}")
+    }
     // daily: the calendar, the gate's one calendar read on the calling
     // thread, then the declared DAG; a closed day rebuilds only the
     // calendar and the universe
@@ -534,6 +545,8 @@ object OrchestratorDailySpec {
     override def latest(t: TableDef): DataFrame = rec("read", t)(super.latest(t))
     override def create(t: TableDef, replace: Boolean): Boolean =
       rec("create", t)(super.create(t, replace))
+    override def replace(t: TableDef, df: DataFrame, version: Long): Unit =
+      rec("replace", t)(super.replace(t, df, version))
     override def append(t: TableDef, df: DataFrame, version: Long): Unit =
       rec("append", t)(super.append(t, df, version))
     override def upsert(t: TableDef, df: DataFrame, version: Long,

@@ -183,6 +183,65 @@ class QuantPipelineSpec extends SparkSpec {
       r.getAs[Double]("h"), r.getAs[Double]("p"), 1e-9)))
   }
 
+  /** The parity checks' window: short enough that the 59-date panel sees
+    * the idio vol start, lapse at a null residual and restart. */
+  private val ParityWindow = 8
+
+  /** A seeded panel for the one-pass parity checks: null returns and a
+    * null factor mid-series, a ticker with exactly `ParityWindow` rows and
+    * a short one, over returns dates(1..59). */
+  private lazy val parityPanel: (DataFrame, DataFrame, DataFrame) = {
+    val rnd = new scala.util.Random(20260)
+    val days = dates.drop(1)
+    val fac = for (f <- factors; (d, i) <- days.zipWithIndex)
+      yield (f, d, 2024, if (f == "MTUM" && i == 30) None else Some(rnd.nextGaussian() * 0.01))
+    val facAt = fac.map { case (f, d, _, r) => (f, d) -> r }.toMap
+    val spans = Seq("AAA" -> days, "BBB" -> days, "CCC" -> days.drop(5),
+      "EXACT" -> days.take(ParityWindow), "SHORT" -> days.take(ParityWindow - 1))
+    val stock = for ((t, ds) <- spans; (d, i) <- ds.zipWithIndex) yield {
+      val beta = 0.5 + t.hashCode.abs % 7 * 0.1
+      val r = facAt(("SPY", d)).getOrElse(0.0) * beta + rnd.nextGaussian() * 0.005
+      val gap = (t == "AAA" && (i == 25 || i == 55)) || (t == "BBB" && i % 17 == 3)
+      (t, d, 2024, if (gap) None else Some(r))
+    }
+    val bench = days.zipWithIndex.map { case (d, i) =>
+      (d, if (i == 33) None else Some(rnd.nextGaussian() * 0.008)) }
+    (stock.toDF("ticker", "date", "year", "return"),
+      fac.toDF("ticker", "date", "year", "return"),
+      bench.toDF("date", "return"))
+  }
+
+  /** Rows sorted, doubles as raw bits. */
+  private def rawBits(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(col): _*).collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d).toHexString
+      case v => String.valueOf(v)
+    }.mkString("|")).sorted
+
+  test("one-pass factor model and betas are raw-bit equal to the window " +
+      "compositions, on the full panel and on the daily 2·window slice") {
+    val (stock, etf, bench) = parityPanel
+    val w = ParityWindow
+    val tail = dates.takeRight(2 * w).head
+    val slices = Seq(("full", stock, etf, bench), ("daily slice",
+      stock.filter($"date" >= tail), etf.filter($"date" >= tail), bench.filter($"date" >= tail)))
+    slices.foreach { case (name, s, e, b) =>
+      val (l, iv) = Quant.factorModel(s, e, factors, w, halfLife = 10.0)
+      val (lRef, ivRef) = Quant.factorModelComposed(s, e, factors, w, halfLife = 10.0)
+      val loadings = rawBits(l)
+      assert(loadings == rawBits(lRef), s"$name: factor_loadings differ")
+      assert(rawBits(iv) == rawBits(ivRef), s"$name: idio_vol differ")
+      assert(rawBits(Quant.betas(s, b, w, 10.0)) ==
+        rawBits(Quant.betasComposed(s, b, w, 10.0)), s"$name: betas differ")
+      // the panel exercises what it is meant to: SHORT gone, EXACT kept
+      // (full panel), null loadings and a fitted idio vol present
+      assert(!loadings.exists(_.contains("SHORT")))
+      assert(l.filter($"loading".isNull).count() > 0 && l.filter($"loading".isNotNull).count() > 0)
+      if (name == "full") assert(loadings.exists(_.contains("EXACT")) &&
+        iv.filter($"idio_vol".isNotNull).count() > 0)
+    }
+  }
+
   test("calendar helpers: last market date and trailing dates") {
     val cal = dates.toDF("date")
     assert(Quant.lastMarketDate(cal).collect().head.getDate(0) == dates.last)

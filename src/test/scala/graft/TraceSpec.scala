@@ -41,13 +41,16 @@ class TraceSpec extends SparkSpec {
     val t = TableDef("t", StructType(Seq(StructField("k", LongType),
       StructField("v", LongType))), primaryKeys = Seq("k"))
     val rows = Seq((1L, 10L), (2L, 20L), (1L, 11L)).toDF("k", "v")
-    // the upsert the serial job profile measured: create + append + optimize
+    // the upsert the serial job profile measured: create + append + optimize.
+    // It reported (5, 7, 15); one of those jobs was optimize's one-task
+    // schema-inference read, which a read against the declared schema no
+    // longer runs
     val up = Trace.record(spark) {
       lake.create(t)
       lake.append(t, rows, 1L)
       lake.optimize(t)
     }
-    assert(counts(up) == ((5, 7, 15L)))
+    assert(counts(up) == ((4, 6, 14L)))
     assert(up._2.children.map(c => (c.name, c.tag)) ==
       Seq(("lake.create", "t"), ("lake.append", "t"), ("lake.optimize", "t"),
         ("trace.drain", "")))
